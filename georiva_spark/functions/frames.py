@@ -21,19 +21,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """A small local DataFrame built via pandas/Arrow (JVM-resident
-    data; no Python-worker cost at evaluation). ``schema`` is a DDL
-    string or StructType, exactly as createDataFrame takes it."""
-    if not rows:
+    data; no Python-worker cost at evaluation). ``rows``: tuples, or a
+    pandas frame already in ``schema``'s column order (shipped as-is);
+    ``schema``: a DDL string or StructType, as createDataFrame takes."""
+    import pandas as pd
+    if isinstance(rows, pd.DataFrame):
+        pdf = rows
+    elif not rows:
         return spark.createDataFrame(rows, schema)
-    try:
-        import pandas as pd
+    else:
         ncols = len(rows[0])
         pdf = pd.DataFrame(
             {i: pd.Series((r[i] for r in rows), dtype=object)
              for i in range(ncols)})
         pdf.columns = [f"_c{i}" for i in range(ncols)]
+    try:
         return spark.createDataFrame(pdf, schema=schema)
     except Exception:
         # arrow/pandas could not represent the rows — classic path

@@ -3,8 +3,7 @@ they cannot unpersist before returning (the returned lazy DataFrame
 still reads it, so an immediate unpersist would defeat the cache).
 
 Without a bound, repeated calls in a long-lived session accumulate
-cached blocks for the session's lifetime. The pattern here is the one
-zonal.tag_pixels established for its mask cache: keep at most ONE
+cached blocks for the session's lifetime. The pattern: keep at most ONE
 cached intermediate per (SparkSession, slot) — the next call through
 the same slot unpersists the previous call's cache. Weak-keyed on the
 session so a torn-down session releases its entries. Documented cost:

@@ -4,11 +4,14 @@
 
 Spark-first shape (scale analysis):
 - boundaries are a small dimension (≤ 10⁵ admin polygons, a few hundred MB
-  of GeoJSON worst-case) → driver-parsed once and **broadcast**; the grid
-  (the 100 TB side) is never shuffled for tagging.
-- tagging = bbox prejoin (broadcast nested-loop on range predicates, cheap)
-  followed by an exact pixel-center containment test in an Arrow-batched
-  pandas UDF — the only Python in the path, O(pixels_in_bbox × edges).
+  of GeoJSON worst-case) → driver-parsed once.
+- tagging = Raptor scanline rasterization (*Raptor: Large Scale Analysis
+  of Big Raster and Vector Data*, VLDB 2019): one small job collects the
+  grid's distinct pixel-centre latitudes, the driver pairs each ring's
+  edge crossings along them into lon runs (bit-identical to the even-odd
+  test), and a JVM join on latitude + lon range tags the grid (which is
+  never shuffled under the broadcast gate) — O(Σ rows-in-bbox × edges)
+  driver work instead of O(pixels × edges), no Python on the request path.
 - stats = one groupBy over (boundary, time, variable): map-side partial
   aggregation; one shuffle whose width is #boundaries × #timesteps, not
   #pixels. The reference's one-Celery-task-per-asset loop
@@ -22,13 +25,15 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
+
 from georiva_spark.functions.frames import local_frame
+from georiva_spark.functions.geo import parse_geojson, scanline_runs
 
-from georiva_spark.functions.geo import ParsedGeometry, parse_geojson, points_in_geometry
-
-STAT_COLS = ("mean", "min", "max", "sum", "std", "count")
+RUN_SCHEMA = ("boundary_id long, level int, name string, "
+              "rlat double, lo double, hi double")
 
 
 def _stat_aggs(value: str = "value"):
@@ -53,131 +58,54 @@ def _collect_boundaries(boundaries):
     return [B(*r) for r in boundaries]
 
 
-def _parse_boundaries(rows):
-    """→ (id → ParsedGeometry, bbox rows) — parsed ONCE per call chain
-    (tag_pixels shares this with its size estimate; re-parsing hundreds
-    of MB of admin GeoJSON on the driver twice would double the mask
-    build's driver latency)."""
-    parsed: dict[int, ParsedGeometry] = {}
-    bbox_rows = []
-    for r in rows:
-        g = parse_geojson(r.geometry)
-        if g is None:
-            continue
-        parsed[r.boundary_id] = g
-        w, s, e, n = g.bbox
-        bbox_rows.append((r.boundary_id, r.level, r.name, w, s, e, n))
-    return parsed, bbox_rows
-
-
-def pixel_boundary_mask(grid: DataFrame, boundaries: DataFrame,
-                        pre_parsed=None) -> DataFrame:
-    """(boundary_id, level, name, y, x) pairs for every pixel whose center
-    falls inside a boundary — the distributed form of the reference's mask
-    cache (ingestion/clipper.py:145-163).
-
-    Containment depends only on coordinates, so it is evaluated once per
-    *distinct pixel* (≤ #grid cells, e.g. 25.9 M for the global grid — not
-    per grid row, which at 100 TB is billions). Steps: distinct pixels →
-    broadcast bbox coarse join → exact even-odd test in an Arrow-batched
-    pandas UDF. The resulting mask table is tiny and broadcastable.
-    """
+def boundary_runs(grid: DataFrame, boundaries) -> tuple[DataFrame, int]:
+    """→ (runs frame, run count): every boundary's (boundary_id, level,
+    name, rlat, lo, hi) scanline runs over the grid's distinct pixel-centre
+    latitudes — the reference's mask cache (ingestion/clipper.py:145-163)
+    as one row per pixel-row segment instead of one per pixel. Keyed on
+    the actual latitudes, so curvilinear and projected grids are exact on
+    the same path (they just yield more runs). Null geometry, and geometry
+    with a NaN vertex (its bbox test never passes), yields no runs."""
     spark = grid.sparkSession
-    if pre_parsed is not None:
-        parsed, bbox_rows = pre_parsed
-    else:
-        parsed, bbox_rows = _parse_boundaries(
-            _collect_boundaries(boundaries))
-    if not bbox_rows:
-        return spark.createDataFrame(
-            [], "boundary_id long, level int, name string, y long, x long")
-    bbox_df = local_frame(
-        spark, bbox_rows, "boundary_id long, level int, name string, "
-                          "w double, s double, e double, n double")
-    bc = spark.sparkContext.broadcast(parsed)
-
-    @F.pandas_udf(T.BooleanType())
-    def _inside(lon: pd.Series, lat: pd.Series, bid: pd.Series) -> pd.Series:
-        geoms = bc.value
-        out = pd.Series(False, index=lon.index)
-        for b in bid.unique():
-            g = geoms.get(b)
-            if g is None:
-                continue
-            m = bid == b
-            out[m] = points_in_geometry(lon[m].to_numpy(), lat[m].to_numpy(), g)
-        return out
-
-    pixels = grid.select("y", "x", "lat", "lon").distinct()
-    coarse = pixels.join(
-        F.broadcast(bbox_df),
-        (F.col("lon") >= F.col("w")) & (F.col("lon") <= F.col("e")) &
-        (F.col("lat") >= F.col("s")) & (F.col("lat") <= F.col("n")),
-        "inner")
-    return (coarse.where(_inside(F.col("lon"), F.col("lat"),
-                                 F.col("boundary_id")))
-                  .select("boundary_id", "level", "name", "y", "x"))
+    parsed = [(r, g) for r in _collect_boundaries(boundaries)
+              for g in [parse_geojson(r.geometry)]
+              if g is not None and not np.isnan(g.bbox).any()]
+    runs = []
+    if parsed:
+        s = min(g.bbox[1] for _, g in parsed)
+        n = max(g.bbox[3] for _, g in parsed)
+        lats = np.sort([r.lat for r in grid.where(F.col("lat").between(s, n))
+                        .select("lat").distinct().collect()])
+        runs = [scanline_runs(g, lats) for _, g in parsed]
+    counts = [len(r[0]) for r in runs]
+    if not sum(counts):
+        return spark.createDataFrame([], RUN_SCHEMA), 0
+    meta = np.array([(r.boundary_id, r.level, r.name) for r, _ in parsed],
+                    dtype=object)
+    pdf = pd.DataFrame(np.repeat(meta, counts, axis=0),
+                       columns=["boundary_id", "level", "name"])
+    for k, col in enumerate(("rlat", "lo", "hi")):
+        pdf[col] = np.concatenate([r[k] for r in runs])
+    return local_frame(spark, pdf, RUN_SCHEMA), len(pdf)
 
 
-# one cached big mask PER SparkSession (weak-keyed so a torn-down
-# session releases its entry): unpersisting the previous big mask when
-# a new one arrives bounds cache retention, at the documented cost that
-# a still-unexecuted DataFrame returned from an EARLIER tag_pixels call
-# will recompute its mask (perf, never correctness)
-import weakref
-
-_last_big_mask: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def tag_pixels(grid: DataFrame, boundaries: DataFrame,
-               broadcast_max_mask_rows: int = 2_000_000,
-               assumed_min_res_deg: float = 0.01) -> DataFrame:
-    """Tag each grid row with every boundary containing its pixel center.
-
-    The mask is #distinct-pixels × #containing-boundaries rows. For the
-    common case (reference's max grid is 25.9 M pixels, admin masks are
-    far sparser) it fits comfortably under Spark's broadcast ceiling, so
-    the mask is broadcast and the (big) fact side is never shuffled. But
-    a 0.01-degree global grid (648 M pixels) or a deep multi-level admin
-    set can blow past executor memory and the 8 GB broadcast hard limit,
-    so past ``broadcast_max_mask_rows`` (same 2 M gate as
-    ``regrid._regrid_bilinear``) the join falls back to a shuffle on
-    (y, x) — both paths plan-asserted in tests/test_plan_evidence.py.
-
-    Two-stage decision so the common small-mask case pays ZERO extra
-    Spark jobs: (1) a driver-side upper-bound ESTIMATE — total boundary
-    bbox area in deg² × pixels/deg² at ``assumed_min_res_deg`` (0.01°,
-    the finest grid the reference ecosystem ships; pass the true
-    resolution for finer grids) — broadcasts immediately when under the
-    gate; (2) only when the estimate exceeds the gate is the mask
-    persisted and COUNTED exactly (the count doubles as materializing
-    the reference's mask cache, ingestion/clipper.py:145-163), choosing
-    broadcast vs a (y, x) shuffle join on the real size."""
-    rows = _collect_boundaries(boundaries)
-    parsed, bbox_rows = _parse_boundaries(rows)
-    area = sum(max(0.0, e - w) * max(0.0, n_ - s)
-               for _, _, _, w, s, e, n_ in bbox_rows)
-    est_rows = area / (assumed_min_res_deg * assumed_min_res_deg)
-    mask = pixel_boundary_mask(grid, rows, pre_parsed=(parsed, bbox_rows))
-    if est_rows <= broadcast_max_mask_rows:
-        return grid.join(F.broadcast(mask), on=["y", "x"], how="inner")
-    # big-estimate path: persist so the exact-count job doubles as the
-    # mask-cache materialization — retention is BOUNDED per session:
-    # the session's previous big mask (if any) is unpersisted when its
-    # next one arrives, so a long-lived session holds at most one
-    # cached mask (and concurrent sessions no longer evict each other)
-    sess = grid.sparkSession
-    prev = _last_big_mask.get(sess)
-    if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
-    mask = mask.persist()
-    _last_big_mask[sess] = mask
-    if mask.count() <= broadcast_max_mask_rows:
-        mask = F.broadcast(mask)
-    return grid.join(mask, on=["y", "x"], how="inner")
+def tag_pixels(grid: DataFrame, boundaries,
+               broadcast_max_mask_rows: int = 2_000_000) -> DataFrame:
+    """Tag each grid row with every boundary containing its pixel center
+    (``boundary_id``, ``level``, ``name`` appended to the grid columns)
+    by ``lat = rlat AND lon >= lo AND lon < hi`` against the scanline
+    runs — exactly ``points_in_geometry``'s membership. The run count is
+    exact on the driver: at or under ``broadcast_max_mask_rows`` (the
+    2 M gate ``regrid._regrid_bilinear`` uses) the runs are broadcast and
+    the fact side is never shuffled; past it (deep admin sets over fine
+    or curvilinear grids) a plain join avoids force-broadcasting past
+    executor memory. Both plans: tests/test_plan_evidence.py."""
+    runs, n_runs = boundary_runs(grid, boundaries)
+    if n_runs <= broadcast_max_mask_rows:
+        runs = F.broadcast(runs)
+    inside = ((F.col("lat") == F.col("rlat")) & (F.col("lon") >= F.col("lo"))
+              & (F.col("lon") < F.col("hi")))
+    return grid.join(runs, inside, "inner").drop("rlat", "lo", "hi")
 
 
 def zonal_stats(grid: DataFrame, boundaries: DataFrame,
@@ -185,9 +113,10 @@ def zonal_stats(grid: DataFrame, boundaries: DataFrame,
                 res_deg: float = 0.01) -> DataFrame:
     """A1 — per-boundary stats over valid pixels; boundaries that intersect
     nothing (or have null geometry) yield an all-null stats row, mirroring
-    EMPTY_STATS (geoprocessing/zonal.py:24-27,41-48). ``res_deg`` is the
-    grid resolution the mask-size estimate assumes (see tag_pixels)."""
-    tagged = tag_pixels(grid, boundaries, assumed_min_res_deg=res_deg)
+    EMPTY_STATS (geoprocessing/zonal.py:24-27,41-48). ``res_deg`` is
+    accepted for API compatibility and drives nothing: the scanline runs
+    need no resolution and the broadcast gate counts them exactly."""
+    tagged = tag_pixels(grid, boundaries)
     stats = (tagged.groupBy("boundary_id", *keys)
                    .agg(*_stat_aggs()))
     # Right-join back so empty boundaries appear with all-null stats.
@@ -211,8 +140,9 @@ def zonal_rollup(grid: DataFrame, boundaries: DataFrame,
     once per level. Grouping sets: (level, boundary_id, name, *keys) →
     per-boundary rows; (level, *keys) → level rollups (boundary_id/name
     null). The tagged fact stream aggregates map-side once; the shuffle
-    is #boundaries + #levels wide, never #pixels."""
-    tagged = tag_pixels(grid, boundaries, assumed_min_res_deg=res_deg)
+    is #boundaries + #levels wide, never #pixels. ``res_deg`` is
+    accepted and unused, as in zonal_stats."""
+    tagged = tag_pixels(grid, boundaries)
     cols = ["level", "boundary_id", "name", *keys]
     gs = tagged.groupingSets([cols, ["level", *keys]], *cols)
     return gs.agg(*_stat_aggs())
@@ -229,13 +159,9 @@ def area_timeseries(grid: DataFrame, geometry: str,
         raise ValueError("invalid or null geometry")
     w, s, e, n = g.bbox
     # cheap bbox subset first (P4-before-P6 ordering, service.py:112-116),
-    # then the cached per-pixel mask broadcast-semi-joined onto the series
+    # then the scanline-run tagging; one boundary tags a pixel at most once
     sub = grid.where(F.col("lat").between(s, n) & F.col("lon").between(w, e))
-    boundaries = local_frame(
-        grid.sparkSession, [(1, 0, "area", geometry)],
-        "boundary_id long, level int, name string, geometry string")
-    mask = pixel_boundary_mask(sub, boundaries).select("y", "x")
-    masked = sub.join(F.broadcast(mask), on=["y", "x"], how="left_semi")
+    masked = tag_pixels(sub, [(1, 0, "area", geometry)])
     aggs = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max,
             "std": F.stddev_pop}
     return (masked.groupBy("collection", "variable", "time")

@@ -166,15 +166,9 @@ def ingest_file(spark: SparkSession, path: str,
     plugin = registry.get_for_file(path)
     if plugin is None:
         raise ValueError(f"no format plugin handles {path}")
-    parts = []
-    for variable in plugin.list_variables(spark, path):
-        parts.append(plugin.open_variable(spark, path, variable,
-                                          collection=meta["collection"]))
-    raw = parts[0]
-    for p in parts[1:]:
-        raw = raw.unionByName(p)
-    raw = (raw.withColumn("org", F.lit(meta["org"]))
-              .withColumn("catalog", F.lit(meta["catalog"])))
+    raw = (plugin.open_file(spark, path, collection=meta["collection"])
+           .withColumn("org", F.lit(meta["org"]))
+           .withColumn("catalog", F.lit(meta["catalog"])))
 
     transformed = None
     for b in bindings:

@@ -31,7 +31,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from georiva_spark.operators.stats import collection_extent, global_stats
-from georiva_spark.operators.zonal import pixel_boundary_mask
+from georiva_spark.operators.zonal import tag_pixels
 from georiva_spark.sources.catalog_store import upsert_by_key
 from georiva_spark.sources.grid_store import overwrite_slice
 
@@ -51,12 +51,10 @@ def materialize(grid: DataFrame, *,
     overwritten idempotently; items/collections upserted by key).
     """
     if boundary_geojson is not None:
-        from georiva_spark.functions.frames import local_frame
-        boundaries = local_frame(
-            grid.sparkSession, [(1, 0, "mask", boundary_geojson)],
-            "boundary_id long, level int, name string, geometry string")
-        mask = pixel_boundary_mask(grid, boundaries).select("y", "x")
-        grid = grid.join(F.broadcast(mask), on=["y", "x"], how="left_semi")
+        # one boundary tags a pixel at most once, so the tagged rows are
+        # exactly the grid's rows inside it
+        grid = tag_pixels(grid, [(1, 0, "mask", boundary_geojson)]).drop(
+            "boundary_id", "level", "name")
 
     stats = global_stats(grid, keys=item_keys)
     items = (grid.groupBy(*item_keys)

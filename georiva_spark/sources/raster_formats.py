@@ -27,6 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from georiva_spark.functions.frames import local_frame
 from georiva_spark.schemas import GRID_SCHEMA
 from georiva_spark.sources.registry import register_default
 
@@ -173,6 +174,21 @@ class _BaseFilePlugin:
 
         return (_binary_scan(spark, path).select("path", "content")
                 .mapInPandas(gen, schema=GRID_SCHEMA))
+
+    def open_file(self, spark: SparkSession, path: str, *,
+                  collection: str = "c") -> DataFrame:
+        """Every variable of one file as one frame (one partition) from a
+        single driver decode shipped through Arrow — the ingest path;
+        list_variables + open_variable per variable decode 1 + V times."""
+        row = _binary_scan(spark, path).select("path", "content").head()
+        out = self._decode(row.content, row.path)
+        values, times, transform, variables = out[:4]
+        coords = out[4] if len(out) > 4 else None
+        pdf = pd.concat(
+            [_emit_rows(v, times, name, transform, collection=collection,
+                        coords=coords)
+             for name, v in zip(variables, values)], ignore_index=True)
+        return local_frame(spark, pdf, GRID_SCHEMA).coalesce(1)
 
 
 class NpzGridPlugin(_BaseFilePlugin):

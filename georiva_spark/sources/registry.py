@@ -6,7 +6,7 @@ list_variables / get_timestamps / open_variable — but ``open_variable``
 returns a long-format grid *DataFrame* instead of a numpy array: the scan
 is `binaryFile` + `mapInPandas`, so decoding distributes across executors
 and a directory of thousands of GRIB/NetCDF files becomes one partitioned
-read.
+read. ``open_file`` (ingest) returns every variable from one decode.
 """
 
 from __future__ import annotations
@@ -29,6 +29,8 @@ class FormatPlugin(Protocol):
                        variable: str) -> list: ...
     def open_variable(self, spark: SparkSession, path: str, variable: str,
                       *, timestamp=None, window=None) -> DataFrame: ...
+    def open_file(self, spark: SparkSession, path: str, *,
+                  collection: str = "c") -> DataFrame: ...
 
 
 class FormatRegistry:

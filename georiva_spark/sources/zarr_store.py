@@ -31,6 +31,7 @@ import datetime as dt
 import json
 import os
 import zlib
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -377,6 +378,13 @@ class ZarrStorePlugin:
         t = _read_small_array(store, "time")
         return [dt.datetime.fromtimestamp(float(s), dt.timezone.utc)
                 .replace(tzinfo=None) for s in t]
+
+    def open_file(self, spark: SparkSession, store: str, *,
+                  collection: str = "c") -> DataFrame:
+        """Every data array as one frame (ingest), each chunk-parallel."""
+        parts = [self.open_variable(spark, store, v, collection=collection)
+                 for v in self.list_variables(store)]
+        return reduce(DataFrame.unionByName, parts)
 
     def open_variable(self, spark: SparkSession, store: str, variable: str,
                       *, window: tuple[int, int, int, int] | None = None,

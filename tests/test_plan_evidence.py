@@ -47,18 +47,25 @@ def test_regional_revenue_broadcasts_bounded_dims(spark):
 
 
 def test_zonal_mask_broadcast_no_fact_shuffle_for_tagging(spark):
-    """J3: the mask joins back onto the grid via broadcast — the fact
-    table is not exchanged before the tagging join."""
-    plan = _plan(QUERIES["zonal_stats"](spark, SF))
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    assert "CartesianProduct" not in plan
+    """J3: the scanline runs join onto the grid via broadcast — the fact
+    table is not exchanged before the tagging join — and no Python UDF
+    sits anywhere on the zonal / area request path."""
+    for q in ("zonal_stats", "zonal_rollup", "area_timeseries"):
+        plan = _plan(QUERIES[q](spark, SF))
+        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, q
+        assert "CartesianProduct" not in plan, q
+        assert "ArrowEvalPython" not in plan, q
+        assert "BatchEvalPython" not in plan, q
 
 
 def test_zonal_mask_gate_broadcasts_small_shuffles_large(spark):
-    """J3 at 100× scale: past broadcast_max_mask_rows the mask join
-    falls back to a shuffle on (y, x) instead of force-broadcasting a
-    mask that could exceed the 8 GB broadcast ceiling on a fine grid —
-    goldens unchanged either way (same join, different strategy)."""
+    """J3 at 100× scale: past broadcast_max_mask_rows scanline RUNS the
+    tagging join falls back to a shuffle instead of force-broadcasting
+    a run table that could exceed executor memory on a fine or
+    curvilinear grid — goldens unchanged either way (same join,
+    different strategy). The box tags three of the four pixel rows (the
+    centres on its north edge fall outside under the half-open edge
+    rule), one run each, so a gate of 2 sits under its run count."""
     from georiva_spark.operators import zonal
     g = grid_from_arrays(spark, np.ones((4, 4)), [T0],
                          lat0=0.5, lon0=0.5, res=1.0)
@@ -70,7 +77,7 @@ def test_zonal_mask_gate_broadcasts_small_shuffles_large(spark):
     try:
         small = zonal.tag_pixels(g, b)
         assert "BroadcastHashJoin" in _plan(small)   # hinted
-        large = zonal.tag_pixels(g, b, broadcast_max_mask_rows=4)
+        large = zonal.tag_pixels(g, b, broadcast_max_mask_rows=2)
         plan = _plan(large)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         assert sorted((r.y, r.x) for r in small.collect()) == \
@@ -885,7 +892,7 @@ def test_python_boundary_audit_current():
     documented = {
         "sources/raster_formats.py", "sources/zarr_store.py",
         "sources/warc_codec.py", "sources/mvt_sink.py",
-        "operators/zonal.py", "operators/multimodal.py",
+        "operators/multimodal.py",
         "operators/similarity.py", "operators/dedup.py",
         "operators/textops.py", "streaming/sessions.py",
         "queries_ext.py",
@@ -909,7 +916,7 @@ def test_python_boundary_audit_current():
     # same tripwire pattern that keeps F.udf extinct.
     cdf_re = re.compile(r"\.createDataFrame\(")
     allowed = {
-        "operators/zonal.py": 1,        # empty zonal-stats short-circuit
+        "operators/zonal.py": 1,        # empty scanline-run short-circuit
         "sources/zarr_store.py": 1,     # empty-manifest short-circuit
         "sources/acquisition.py": 2,    # empty fetch ledgers
         "functions/frames.py": 4,       # local_frame itself (+docstring)
