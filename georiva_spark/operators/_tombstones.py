@@ -43,11 +43,11 @@ appended the same max(seq)+1).
 
 Fail-by-name adoption (r13): every retract stamps
 ``georiva.has_tombstones`` / ``georiva.has_doc_tombstones`` on the
-family's stamped index table. A restarted driver whose in-memory
-catalog forgot the rule table ADOPTS its warehouse files
-(:func:`_ensure_registered`); on a warehouse where adoption is
-impossible (non-``file:`` scheme + no metastore) the stamp makes the
-next probe RAISE instead of silently resurrecting dead rows.
+family's stamped index table (through operators/_index_table.py). A
+restarted driver whose in-memory catalog forgot the rule table ADOPTS
+its warehouse files (:func:`_ensure_registered`); on a warehouse where
+adoption is impossible (non-``file:`` scheme + no metastore) the stamp
+makes the next probe RAISE instead of silently resurrecting dead rows.
 
 Reference analog: ``processing/invocation.py:210-247`` — staleness
 is transitive to *everything* derived, including index rows.
@@ -57,17 +57,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from georiva_spark.operators import _index_table
+
 #: separator between the shard name and the content digest inside a
 #: generation tag — unprintable so it can never occur in a shard
 #: name, making shard extraction from a gen unambiguous
 GEN_SEP = "\x1f"
 
-#: rule-table suffix -> (DDL, stamp TBLPROPERTY set at retract time)
+#: rule-table suffix -> (DDL, index stamp set at retract time)
 _RULE_KINDS = {
     "_dead": ("shard STRING, keep_gen STRING, seq BIGINT",
-              "georiva.has_tombstones"),
-    "_dead_docs": ("id BIGINT, seq BIGINT",
-                   "georiva.has_doc_tombstones"),
+              "has_tombstones"),
+    "_dead_docs": ("id BIGINT, seq BIGINT", "has_doc_tombstones"),
 }
 
 
@@ -119,40 +120,21 @@ def _ensure_registered(spark, table: str,
     return False
 
 
-def _stamp(spark, stamp_table: str | None, prop: str,
-           seq: int) -> None:
-    """Record on the family's stamped index table that tombstone
-    rules EXIST (the r13 fail-by-name adoption tripwire — see
-    :func:`_require_adoptable`)."""
-    if stamp_table:
-        spark.sql(f"ALTER TABLE {stamp_table} SET TBLPROPERTIES "
-                  f"('{prop}'='{seq}')")
-
-
 def _require_adoptable(spark, table: str, suffix: str,
-                       stamp_table: str | None) -> None:
+                       stamps: dict | None) -> None:
     """The rule table is neither registered nor adoptable — fine iff
-    nothing was ever retracted. The stamp on the index table is the
-    witness: if it says rules exist, a restarted driver on a
-    warehouse where adoption is impossible (non-``file:`` scheme, no
-    metastore) must FAIL BY NAME here instead of silently resurrecting
-    dead rows at this very probe."""
-    if not stamp_table or not spark.catalog.tableExists(stamp_table):
-        return
+    nothing was ever retracted. The stamp on the index table (its
+    already-read ``stamps``) is the witness: if it says rules exist,
+    a restarted driver on a warehouse where adoption is impossible
+    (non-``file:`` scheme, no metastore) must FAIL BY NAME here
+    instead of silently resurrecting dead rows at this very probe."""
     prop = _RULE_KINDS[suffix][1]
-    try:
-        props = {r.key: r.value for r in
-                 spark.sql(f"SHOW TBLPROPERTIES {stamp_table}")
-                 .collect()}
-    except Exception:
-        # temp-view controls carry no properties (and cannot have
-        # been stamped by a retract) — nothing to witness
-        return
-    if props.get(prop):
+    seq = _index_table.get(stamps or {}, prop)
+    if seq:
         raise ValueError(
-            f"index {table!r} is stamped {prop}={props[prop]} but its "
-            f"{table}{suffix} rule table is neither registered in "
-            f"this session's catalog nor adoptable from the "
+            f"index {table!r} is stamped {_index_table.key(prop)}={seq}"
+            f" but its {table}{suffix} rule table is neither registered"
+            f" in this session's catalog nor adoptable from the "
             f"warehouse ({spark.conf.get('spark.sql.warehouse.dir', '')!r})"
             f" — probing now would silently resurrect retracted rows."
             f" Re-register the rule table (metastore deployments keep"
@@ -213,7 +195,8 @@ def retract(spark, table: str, shard: str, keep_gen: str = "",
                  "shard string, keep_gen string, seq long")
      .write.mode("append").format("parquet").saveAsTable(dead_t))
     spark.catalog.refreshTable(dead_t)
-    _stamp(spark, stamp_table, "georiva.has_tombstones", seq)
+    if stamp_table:
+        _index_table.stamp(spark, stamp_table, {"has_tombstones": seq})
 
 
 def retract_docs(spark, table: str, ids, who: str = "retract_docs",
@@ -240,20 +223,23 @@ def retract_docs(spark, table: str, ids, who: str = "retract_docs",
     (local_frame(spark, [(i, seq) for i in ids], "id long, seq long")
      .write.mode("append").format("parquet").saveAsTable(dead_t))
     spark.catalog.refreshTable(dead_t)
-    _stamp(spark, stamp_table, "georiva.has_doc_tombstones", seq)
+    if stamp_table:
+        _index_table.stamp(spark, stamp_table,
+                           {"has_doc_tombstones": seq})
 
 
 def dead_rules(spark, table: str,
-               stamp_table: str | None = None) -> DataFrame | None:
+               stamps: dict | None = None) -> DataFrame | None:
     """Latest tombstone rule per shard from ``{table}_dead`` (None if
     the index has never retracted anything). Adopts a prior driver
     incarnation's rule files if the in-memory catalog forgot them
     (see _ensure_registered) — a restart must never resurrect dead
-    rows; when adoption is impossible but the index is stamped, fails
-    by name (r13)."""
+    rows; when adoption is impossible but ``stamps`` (the family's
+    stamped index table, read once by the caller through
+    operators/_index_table.py) say rules exist, fails by name (r13)."""
     dead_t = f"{table}_dead"
     if not _ensure_registered(spark, table):
-        _require_adoptable(spark, table, "_dead", stamp_table)
+        _require_adoptable(spark, table, "_dead", stamps)
         return None
     from pyspark.sql import Window
     w = Window.partitionBy("shard").orderBy(F.col("seq").desc())
@@ -265,12 +251,12 @@ def dead_rules(spark, table: str,
 
 
 def dead_doc_rules(spark, table: str,
-                   stamp_table: str | None = None) -> DataFrame | None:
+                   stamps: dict | None = None) -> DataFrame | None:
     """Distinct taken-down ids from ``{table}_dead_docs`` (None if no
     takedown is pending) — same adoption + fail-by-name contract as
     :func:`dead_rules`."""
     if not _ensure_registered(spark, table, "_dead_docs"):
-        _require_adoptable(spark, table, "_dead_docs", stamp_table)
+        _require_adoptable(spark, table, "_dead_docs", stamps)
         return None
     return (spark.table(f"{table}_dead_docs")
             .select(F.col("id").alias("__dead_id")).distinct())
@@ -357,9 +343,8 @@ def clear_rules(spark, table: str,
     if not pending:
         return
     if stamp_table and spark.catalog.tableExists(stamp_table):
-        props = ", ".join(f"'{_RULE_KINDS[s][1]}'" for s in pending)
-        spark.sql(f"ALTER TABLE {stamp_table} UNSET TBLPROPERTIES "
-                  f"IF EXISTS ({props})")
+        _index_table.unstamp(spark, stamp_table,
+                             [_RULE_KINDS[s][1] for s in pending])
     for s in pending:
         spark.sql(f"DROP TABLE IF EXISTS {table}{s}")
         loc = _dead_location(spark, table, s)

@@ -21,6 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from georiva_spark.operators import _index_table
 from georiva_spark.operators.textops import portable_hash64, tokens
 
 
@@ -739,29 +740,26 @@ def hamming_index_write(codes: DataFrame, table: str, path: str,
                           F.col("code").alias("ref")))
         write_bucketed(banded, f"{table}_bands", ["band", "key"],
                        n_buckets, f"{path}/bands", sort=False)
-    codes.sparkSession.sql(
-        f"ALTER TABLE {table}_bands SET TBLPROPERTIES ("
-        f"'georiva.max_hamming'='{max_hamming}', "
-        f"'georiva.bits'='{bits}', "
-        f"'georiva.word_bits'='{word_bits}', "
-        f"'georiva.n_buckets'='{n_buckets}', "
-        f"'georiva.arr'='{int(is_arr)}')")
+    _index_table.stamp(codes.sparkSession, f"{table}_bands", {
+        "max_hamming": max_hamming, "bits": bits,
+        "word_bits": word_bits, "n_buckets": n_buckets,
+        "arr": int(is_arr)})
+
+
+def _hamming_stamps(spark, table: str) -> tuple[dict, dict]:
+    """ONE read of ``{table}_bands``' stamps → (banding parameters,
+    the stamps for the tombstone tripwire)."""
+    stamps = _index_table.props(spark, f"{table}_bands")
+    names = ("max_hamming", "bits", "word_bits", "n_buckets", "arr")
+    return dict(zip(names, _index_table.require(
+        stamps, table, "hamming", *names))), stamps
 
 
 def hamming_index_params(spark, table: str) -> dict:
     """Read the banding parameters :func:`hamming_index_write`
     stamped (raises by name if absent — an unstamped table is not a
     managed Hamming index)."""
-    props = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {table}_bands").collect()}
-    try:
-        return {name: int(props[f"georiva.{name}"])
-                for name in ("max_hamming", "bits", "word_bits",
-                             "n_buckets", "arr")}
-    except KeyError as e:
-        raise ValueError(
-            f"{table!r} is not a stamped hamming index "
-            f"(missing property {e})") from None
+    return _hamming_stamps(spark, table)[0]
 
 
 def hamming_index_probe(new_codes: DataFrame, table: str,
@@ -787,7 +785,7 @@ def hamming_index_probe(new_codes: DataFrame, table: str,
     from georiva_spark.operators._retention import persist_bounded
 
     spark = new_codes.sparkSession
-    p = hamming_index_params(spark, table)
+    p, stamps = _hamming_stamps(spark, table)
     ref, is_arr = _code_ref(new_codes, code_col)
     if bool(p["arr"]) != is_arr:
         raise ValueError(
@@ -823,8 +821,8 @@ def hamming_index_probe(new_codes: DataFrame, table: str,
     # rows
     ib = _live_doc_rows(
         _live_rows(spark.table(f"{table}_ids"),
-                   _dead_rules(spark, table)),
-        _dead_docs(spark, table), "id").select(
+                   _dead_rules(spark, table, stamps)),
+        _dead_docs(spark, table, stamps), "id").select(
         F.col("ref").alias("__rb"), F.col("id").alias("id_old"))
     return (cand.join(da, "__ra").join(ib, "__rb")
             .where(F.col("id_new") != F.col("id_old"))
@@ -865,7 +863,7 @@ def hamming_index_lookup(new_codes: DataFrame, table: str,
     from georiva_spark.operators._retention import persist_bounded
 
     spark = new_codes.sparkSession
-    p = hamming_index_params(spark, table)
+    p, stamps = _hamming_stamps(spark, table)
     _, is_arr = _code_ref(new_codes, code_col)
     if bool(p["arr"]) != is_arr:
         raise ValueError(
@@ -895,8 +893,8 @@ def hamming_index_lookup(new_codes: DataFrame, table: str,
             .dropDuplicates(["__ra", "__rb"]))
     ids_tbl = _live_doc_rows(
         _live_rows(spark.table(f"{table}_ids"),
-                   _dead_rules(spark, table)),
-        _dead_docs(spark, table), "id")
+                   _dead_rules(spark, table, stamps)),
+        _dead_docs(spark, table, stamps), "id")
     if exclude_ids is not None:
         ex = exclude_ids.select(
             F.col(exclude_ids.columns[0]).alias("id"))
@@ -945,7 +943,7 @@ def hamming_index_append(new_codes: DataFrame, table: str,
     from georiva_spark.operators._retention import persist_bounded
 
     spark = new_codes.sparkSession
-    p = hamming_index_params(spark, table)
+    p, stamps = _hamming_stamps(spark, table)
     if "gen" not in spark.table(f"{table}_ids").columns:
         if gen:
             raise ValueError(
@@ -996,8 +994,8 @@ def hamming_index_append(new_codes: DataFrame, table: str,
     # re-admission of the same (ref, id) under the new generation
     existing = (_live_doc_rows(
                     _live_rows(spark.table(f"{table}_ids"),
-                               _dead_rules(spark, table)),
-                    _dead_docs(spark, table), "id")
+                               _dead_rules(spark, table, stamps)),
+                    _dead_docs(spark, table, stamps), "id")
                 .join(delta_ids.select("ref").distinct(), "ref",
                       "left_semi"))
     (delta_ids.join(existing, ["ref", "id"], "left_anti")
@@ -1061,10 +1059,10 @@ def hamming_index_compact(spark, table: str, path: str) -> None:
     from georiva_spark.sources.bucketing import (atomic_swap_table,
                                                  write_bucketed)
 
-    p = hamming_index_params(spark, table)
+    p, stamps = _hamming_stamps(spark, table)
     _validate_single_writer(spark, table)
-    dead = _dead_rules(spark, table)
-    ddocs = _dead_docs(spark, table)
+    dead = _dead_rules(spark, table, stamps)
+    ddocs = _dead_docs(spark, table, stamps)
     live_ids = _live_doc_rows(
         _live_rows(spark.table(f"{table}_ids"), dead), ddocs, "id")
     bands_tbl = spark.table(f"{table}_bands")
@@ -1079,13 +1077,8 @@ def hamming_index_compact(spark, table: str, path: str) -> None:
                    f"{table}_ids_compact", "ref",
                    p["n_buckets"], f"{path}/ids", sort=False,
                    one_file_per_bucket=True)
-    spark.sql(
-        f"ALTER TABLE {table}_bands_compact SET TBLPROPERTIES ("
-        f"'georiva.max_hamming'='{p['max_hamming']}', "
-        f"'georiva.bits'='{p['bits']}', "
-        f"'georiva.word_bits'='{p['word_bits']}', "
-        f"'georiva.n_buckets'='{p['n_buckets']}', "
-        f"'georiva.arr'='{p['arr']}')")
+    _index_table.stamp(spark, f"{table}_bands_compact",
+                       _index_table.params(stamps))
     for suffix in ("bands", "ids"):
         atomic_swap_table(spark, f"{table}_{suffix}")
     if dead is not None or ddocs is not None:
@@ -1292,8 +1285,8 @@ def line_dedup(docs: DataFrame, *, delim: str = "\n", max_line_df: int = 1,
 # Hamming and IVF families — operators/_tombstones.py is the one
 # implementation
 from georiva_spark.operators._tombstones import (  # noqa: E402
-    GEN_SEP, dead_doc_rules as _dead_docs_impl,
-    dead_rules as _dead_rules_impl, live_doc_rows as _live_doc_rows,
+    GEN_SEP, dead_doc_rules as _dead_docs,
+    dead_rules as _dead_rules, live_doc_rows as _live_doc_rows,
     live_rows as _live_rows, make_gen as index_gen,
     retract as _retract, retract_docs as _retract_docs,
     validate_single_writer as _validate_single_writer,
@@ -1352,31 +1345,29 @@ def minhash_index_write(docs: DataFrame, table: str, path: str,
     # stamp the signature parameters on the index so a probe with
     # mismatched params fails loudly instead of silently generating
     # wrong bucket keys / garbage est_jaccard
-    docs.sparkSession.sql(
-        f"ALTER TABLE {table}_bands SET TBLPROPERTIES ("
-        f"'georiva.num_hashes'='{num_hashes}', "
-        f"'georiva.bands'='{bands}', 'georiva.n'='{n}', "
-        f"'georiva.n_buckets'='{n_buckets}', "
-        f"'georiva.text_col'='{text_col}', "
-        f"'georiva.portable'='{int(portable)}')")
+    _index_table.stamp(docs.sparkSession, f"{table}_bands", {
+        "num_hashes": num_hashes, "bands": bands, "n": n,
+        "n_buckets": n_buckets, "text_col": text_col,
+        "portable": int(portable)})
+
+
+def _minhash_stamps(spark, table: str) -> tuple[dict, dict]:
+    """ONE read of ``{table}_bands``' stamps → (signature parameters,
+    the stamps for the tombstone tripwire)."""
+    stamps = _index_table.props(spark, f"{table}_bands")
+    names = ("num_hashes", "bands", "n", "n_buckets")
+    out = dict(zip(names, _index_table.require(
+        stamps, table, "minhash", *names)))
+    out["text_col"] = _index_table.get(stamps, "text_col", "text")
+    out["portable"] = _index_table.get(stamps, "portable") == "1"
+    return out, stamps
 
 
 def minhash_index_params(spark, table: str) -> dict[str, int]:
     """Read the signature parameters minhash_index_write stamped on
     ``{table}_bands`` (raises if absent — an unstamped table is not a
     managed index)."""
-    props = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {table}_bands").collect()}
-    try:
-        out = {name: int(props[f"georiva.{name}"])
-               for name in ("num_hashes", "bands", "n", "n_buckets")}
-        out["text_col"] = props.get("georiva.text_col", "text")
-        out["portable"] = bool(int(props.get("georiva.portable", "0")))
-        return out
-    except KeyError as e:
-        raise ValueError(
-            f"{table!r} is not a stamped minhash index "
-            f"(missing property {e})") from None
+    return _minhash_stamps(spark, table)[0]
 
 
 def minhash_index_append(docs: DataFrame, table: str,
@@ -1486,16 +1477,6 @@ def minhash_index_retract_docs(spark, table: str, doc_ids) -> None:
                   stamp_table=f"{table}_bands")
 
 
-def _dead_rules(spark, table: str) -> DataFrame | None:
-    return _dead_rules_impl(spark, table,
-                            stamp_table=f"{table}_bands")
-
-
-def _dead_docs(spark, table: str) -> DataFrame | None:
-    return _dead_docs_impl(spark, table,
-                           stamp_table=f"{table}_bands")
-
-
 def minhash_index_has_gen(spark, table: str, gen: str) -> bool:
     """True if ``gen`` was already appended to the index — the replay
     guard of a generation-tagged growth loop (a gen is deterministic
@@ -1534,10 +1515,10 @@ def minhash_index_compact(spark, table: str, path: str) -> None:
     from georiva_spark.sources.bucketing import (atomic_swap_table,
                                                  write_bucketed)
 
-    p = minhash_index_params(spark, table)
+    p, stamps = _minhash_stamps(spark, table)
     _validate_single_writer(spark, table)
-    dead = _dead_rules(spark, table)
-    ddocs = _dead_docs(spark, table)
+    dead = _dead_rules(spark, table, stamps)
+    ddocs = _dead_docs(spark, table, stamps)
 
     def live(df):
         return _live_doc_rows(_live_rows(df, dead), ddocs, "doc_id")
@@ -1552,13 +1533,8 @@ def minhash_index_compact(spark, table: str, path: str) -> None:
                    one_file_per_bucket=True)
     # stamp BEFORE the swap: a probe that lands on the staged table at
     # any intermediate state must already see valid parameters
-    spark.sql(
-        f"ALTER TABLE {table}_bands_compact SET TBLPROPERTIES ("
-        f"'georiva.num_hashes'='{p['num_hashes']}', "
-        f"'georiva.bands'='{p['bands']}', 'georiva.n'='{p['n']}', "
-        f"'georiva.n_buckets'='{p['n_buckets']}', "
-        f"'georiva.text_col'='{p['text_col']}', "
-        f"'georiva.portable'='{int(p['portable'])}')")
+    _index_table.stamp(spark, f"{table}_bands_compact",
+                       _index_table.params(stamps))
     for suffix in ("bands", "sigs"):
         atomic_swap_table(spark, f"{table}_{suffix}")
     if dead is not None or ddocs is not None:
@@ -1594,12 +1570,9 @@ def minhash_index_probe(new_docs: DataFrame, table: str,
     from pyspark import StorageLevel
 
     spark = new_docs.sparkSession
-    try:
-        props = {r.key: r.value for r in
-                 spark.sql(f"SHOW TBLPROPERTIES {table}_bands").collect()}
-    except Exception:
-        props = {}
-    stored = {name: props.get(f"georiva.{name}")
+    stamps = _index_table.props(spark, f"{table}_bands",
+                                missing_ok=True)
+    stored = {name: _index_table.get(stamps, name)
               for name in ("num_hashes", "bands", "n")}
     if any(v is not None for v in stored.values()):
         asked = {"num_hashes": num_hashes, "bands": bands, "n": n}
@@ -1614,7 +1587,7 @@ def minhash_index_probe(new_docs: DataFrame, table: str,
     # the stamp's hash family is authoritative: a portable index must
     # be probed with portable delta signatures or every est_jaccard
     # is garbage (and vice versa)
-    portable = bool(int(props.get("georiva.portable", "0")))
+    portable = _index_table.get(stamps, "portable") == "1"
     from georiva_spark.operators._retention import persist_bounded
     sig_new = persist_bounded(
         minhash_signatures(new_docs, num_hashes=num_hashes, n=n,
@@ -1628,8 +1601,8 @@ def minhash_index_probe(new_docs: DataFrame, table: str,
     # doc_ids (r13) are filtered out of BOTH index sides via the
     # broadcast-tiny tombstone rules — a probe never matches content
     # that no longer exists
-    dead = _dead_rules(spark, table)
-    ddocs = _dead_docs(spark, table)
+    dead = _dead_rules(spark, table, stamps)
+    ddocs = _dead_docs(spark, table, stamps)
     idx = _live_doc_rows(
         _live_rows(spark.table(f"{table}_bands"), dead),
         ddocs, "doc_id")

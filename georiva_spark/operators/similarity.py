@@ -12,6 +12,7 @@ import itertools
 
 from georiva_spark.functions import fastexpr
 from georiva_spark.functions.vectors import cosine_similarity, dot
+from georiva_spark.operators import _index_table
 from georiva_spark.operators._tombstones import clear_rules
 from georiva_spark.operators.textops import portable_hash64
 
@@ -320,21 +321,52 @@ def _gen_cols(spark, table: str, gen: str, who: str) -> list:
     return [F.lit(gen).alias("gen")]
 
 
-def _live_table(spark, table: str) -> DataFrame:
+#: quantizer sidecar suffix -> (key column, vector column): bounded
+#: model state, row ``key = i`` holding vector i
+_SIDECARS = {"_centroids": ("cell", "embedding"),
+             "_codebook": ("code", "embedding"),
+             "_rotation": ("i", "row")}
+
+
+def _write_sidecars(spark, table: str, path: str, vecs: dict,
+                    version: int, staged: str = "") -> None:
+    """Write each quantizer sidecar ``{table}{suffix}{staged}`` (at
+    ``{path}{suffix}``) from ``vecs`` (suffix -> vectors) and stamp
+    it with the quantizer ``version`` its main table carries."""
+    for suffix, vs in vecs.items():
+        key, col = _SIDECARS[suffix]
+        name = f"{table}{suffix}{staged}"
+        (local_frame(spark, list(enumerate(vs)),
+                     f"{key} int, {col} array<double>")
+         .write.mode("overwrite").format("parquet")
+         .option("path", f"{path}{suffix}").saveAsTable(name))
+        _index_table.stamp(spark, name, {"quantizer_version": version})
+
+
+def _read_sidecar(spark, table: str, suffix: str) -> list:
+    """The vectors of the sidecar ``{table}{suffix}`` in key order."""
+    key, col = _SIDECARS[suffix]
+    rows = spark.table(f"{table}{suffix}").collect()
+    return [list(map(float, r[col]))
+            for r in sorted(rows, key=lambda r: r[key])]
+
+
+def _live_table(spark, table: str, stamps: dict) -> DataFrame:
     """The index table with tombstoned generations (r12) AND
     taken-down vec_ids (r13) filtered out — the shared T5 machinery,
     operators/_tombstones.py: broadcast anti-joins of the bounded
-    ``{table}_dead`` / ``{table}_dead_docs`` rule tables. Partition
-    pruning on ``cell`` is unaffected (the filters sit above the
-    scan), and unversioned layouts pass through untouched."""
+    ``{table}_dead`` / ``{table}_dead_docs`` rule tables, with the
+    table's already-read ``stamps`` as the adoption tripwire's
+    witness. Partition pruning on ``cell`` is unaffected (the filters
+    sit above the scan), and unversioned layouts pass through
+    untouched."""
     from georiva_spark.operators._tombstones import (dead_doc_rules,
                                                      dead_rules,
                                                      live_doc_rows,
                                                      live_rows)
     return live_doc_rows(
-        live_rows(spark.table(table),
-                  dead_rules(spark, table, stamp_table=table)),
-        dead_doc_rules(spark, table, stamp_table=table), "vec_id")
+        live_rows(spark.table(table), dead_rules(spark, table, stamps)),
+        dead_doc_rules(spark, table, stamps), "vec_id")
 
 
 def ivf_index_retract(spark, table: str, shard: str,
@@ -429,6 +461,13 @@ def ivf_index_write(emb: DataFrame, table: str, path: str,
     The quantizer parameters are stamped as TBLPROPERTIES so probes
     and appends can validate what they are joining against.
 
+    Rebuilding a LIVE index (an existing ``table``) is
+    writer-exclusive: the write DROPs the table first (to uncache
+    dependent persisted plans), so from that drop until the final
+    stamp a concurrent probe or append finds no table, or an
+    unstamped one. Quiesce readers for the rebuild, or build under a
+    new name.
+
     ``gen`` (r12) tags every row's generation (``index_gen(shard,
     digest)`` from operators/dedup.py — the tombstone machinery is
     shared across the index triad) so a re-crawled embedding shard
@@ -454,21 +493,12 @@ def ivf_index_write(emb: DataFrame, table: str, path: str,
     emb.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
     (assigned.write.mode("overwrite").format("parquet")
      .partitionBy("cell").option("path", path).saveAsTable(table))
-    cdf = local_frame(
-        emb.sparkSession, [(i, c) for i, c in enumerate(cents)],
-        "cell int, embedding array<double>")
-    (cdf.write.mode("overwrite").format("parquet")
-     .option("path", f"{path}_centroids")
-     .saveAsTable(f"{table}_centroids"))
-    emb.sparkSession.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES ("
-        f"'georiva.n_centroids'='{n_centroids}', "
-        f"'georiva.train_iters'='{train_iters}', "
-        f"'georiva.train_sample_ppm'='{train_sample_ppm or 0}', "
-        f"'georiva.quantizer_version'='1')")
-    emb.sparkSession.sql(
-        f"ALTER TABLE {table}_centroids SET TBLPROPERTIES ("
-        f"'georiva.quantizer_version'='1')")
+    _write_sidecars(emb.sparkSession, table, path,
+                    {"_centroids": cents}, 1)
+    _index_table.stamp(emb.sparkSession, table, {
+        "n_centroids": n_centroids, "train_iters": train_iters,
+        "train_sample_ppm": train_sample_ppm or 0,
+        "quantizer_version": 1})
 
 
 def ivf_index_append(emb: DataFrame, table: str,
@@ -483,11 +513,10 @@ def ivf_index_append(emb: DataFrame, table: str,
     :func:`ivf_index_retract` (T5); tagged appends into an
     unversioned pre-r12 layout fail by name."""
     spark = emb.sparkSession
-    _check_quantizer_sync(spark, table, ("_centroids",))
+    _index_table.check_quantizer_sync(
+        spark, table, _index_table.props(spark, table), ("_centroids",))
     gen_cols = _gen_cols(spark, table, gen, "ivf_index_append")
-    rows = spark.table(f"{table}_centroids").collect()
-    cents = [list(map(float, r.embedding))
-             for r in sorted(rows, key=lambda r: r.cell)]
+    cents = _read_sidecar(spark, table, "_centroids")
     if not cents:
         raise ValueError(f"{table!r} has no centroid sidecar — not an "
                          f"ivf_index_write index")
@@ -545,44 +574,29 @@ def ivf_index_compact(spark, table: str, path: str,
     from georiva_spark.operators._tombstones import \
         validate_single_writer
     validate_single_writer(spark, table)
-    stamps = {r.key: r.value for r in
-              spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-              if r.key.startswith("georiva.")}
+    stamps = _index_table.props(spark, table)
+    params = _index_table.params(stamps)
     if retrain_iters > 0:
-        if "georiva.pq_m" in stamps:
+        if "pq_m" in params:
             raise ValueError(
                 "ivf_index_compact: a PQ index stores no float "
                 "embeddings to retrain from — use "
                 "ivf_pq_index_compact(emb=..., retrain_iters=...)")
-        k = int(stamps.get("georiva.n_centroids", "0"))
-        if not k:
-            raise ValueError(
-                f"{table!r} has no n_centroids stamp — not a managed "
-                f"IVF index")
-        corpus = _live_table(spark, table).drop("cell")
+        k, = _index_table.require(stamps, table, "IVF", "n_centroids")
+        corpus = _live_table(spark, table, stamps).drop("cell")
         cents = kmeans_centroids(corpus, k=k, iters=retrain_iters,
                                  sample_ppm=train_sample_ppm)
         staged = corpus.withColumn("cell", _argmin_cell(cents))
-        ver = str(int(stamps.get("georiva.quantizer_version", "1")) + 1)
-        stamps["georiva.train_iters"] = str(retrain_iters)
-        stamps["georiva.train_sample_ppm"] = str(train_sample_ppm or 0)
-        stamps["georiva.quantizer_version"] = ver
+        ver = int(params.get("quantizer_version", "1")) + 1
+        params.update(train_iters=retrain_iters,
+                      train_sample_ppm=train_sample_ppm or 0,
+                      quantizer_version=ver)
         (staged.write.mode("overwrite").format("parquet")
          .partitionBy("cell").option("path", path)
          .saveAsTable(f"{table}_compact"))
-        cdf = local_frame(
-            spark, [(i, c) for i, c in enumerate(cents)],
-            "cell int, embedding array<double>")
-        (cdf.write.mode("overwrite").format("parquet")
-         .option("path", f"{path}_centroids")
-         .saveAsTable(f"{table}_centroids_compact"))
-        kv = ", ".join(f"'{k2}'='{v}'"
-                       for k2, v in sorted(stamps.items()))
-        spark.sql(f"ALTER TABLE {table}_compact "
-                  f"SET TBLPROPERTIES ({kv})")
-        spark.sql(f"ALTER TABLE {table}_centroids_compact "
-                  f"SET TBLPROPERTIES ("
-                  f"'georiva.quantizer_version'='{ver}')")
+        _write_sidecars(spark, table, path, {"_centroids": cents}, ver,
+                        staged="_compact")
+        _index_table.stamp(spark, f"{table}_compact", params)
         # sidecar FIRST: the crash window (new sidecar + old main) is
         # version-skewed and probes fail by name; main-first would
         # leave new assignments probed with old centroids — silent
@@ -591,7 +605,7 @@ def ivf_index_compact(spark, table: str, path: str,
         # tombstones applied, then cleared
         clear_rules(spark, table, stamp_table=table)
         return
-    cur = _live_table(spark, table)
+    cur = _live_table(spark, table, stamps)
     (cur.repartition("cell")
      .write.mode("overwrite").format("parquet")
      .partitionBy("cell").option("path", path)
@@ -599,10 +613,8 @@ def ivf_index_compact(spark, table: str, path: str,
     # carry the quantizer/PQ stamps onto the staged table BEFORE the
     # swap (atomic_swap_table's contract: every probeable state is
     # param-valid) — works for both the float and the PQ layout
-    if stamps:
-        kv = ", ".join(f"'{k}'='{v}'" for k, v in sorted(stamps.items()))
-        spark.sql(f"ALTER TABLE {table}_compact "
-                  f"SET TBLPROPERTIES ({kv})")
+    if params:
+        _index_table.stamp(spark, f"{table}_compact", params)
     atomic_swap_table(spark, table)
     # tombstones applied, then cleared
     clear_rules(spark, table, stamp_table=table)
@@ -643,18 +655,12 @@ def ivf_pq_index_compact(spark, table: str, path: str,
     from georiva_spark.operators._tombstones import \
         validate_single_writer
     validate_single_writer(spark, table)
-    props = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
-    try:
-        m = int(props["georiva.pq_m"])
-        nbits = int(props["georiva.pq_nbits"])
-        n_centroids = int(props["georiva.n_centroids"])
-    except KeyError as e:
-        raise ValueError(
-            f"{table!r} is not a stamped ivf_pq index "
-            f"(missing property {e})") from None
-    codebook_iters = int(props.get("georiva.pq_codebook_iters", "0"))
-    residual = bool(int(props.get("georiva.pq_residual", "0")))
+    stamps = _index_table.props(spark, table)
+    m, nbits, n_centroids = _index_table.require(
+        stamps, table, "ivf_pq", "pq_m", "pq_nbits", "n_centroids")
+    params = _index_table.params(stamps)
+    codebook_iters = int(params.get("pq_codebook_iters", "0"))
+    residual = params.get("pq_residual") == "1"
     if emb is None:
         raise ValueError(
             "ivf_pq_index_compact: retrain_iters>0 needs the float "
@@ -664,11 +670,11 @@ def ivf_pq_index_compact(spark, table: str, path: str,
     # r13 taken-down vec_ids) and keep each row's generation for the
     # re-encoded table (gen-less layouts still honor doc takedowns)
     gen_map = None
-    live = _live_table(spark, table)
+    live = _live_table(spark, table, stamps)
     if "gen" in live.columns:
         gen_map = live.select("vec_id", "gen")
     emb = emb.join(live.select("vec_id"), "vec_id", "left_semi")
-    opq = props.get("georiva.pq_opq") == "1"
+    opq = params.get("pq_opq") == "1"
     rot = None
     if opq:
         # the rotation is CARRIED, not relearned (same policy as a
@@ -676,7 +682,7 @@ def ivf_pq_index_compact(spark, table: str, path: str,
         # under a fresh basis would silently re-route every probe a
         # user calibrated against) — the retrained quantizer and
         # codebook train in the SAME rotated space the index lives in
-        rot = _load_rotation(spark, table, props)
+        rot = _load_rotation(spark, table)
         emb = emb.select("vec_id", _rotate_expr(rot).alias("embedding"))
     cents = kmeans_centroids(emb, k=n_centroids, iters=retrain_iters,
                              sample_ppm=train_sample_ppm)
@@ -685,10 +691,8 @@ def ivf_pq_index_compact(spark, table: str, path: str,
                                 cents=cents if residual else None,
                                 sample_ppm=train_sample_ppm)
     else:
-        cbrows = spark.table(f"{table}_codebook").collect()
-        cb = [list(map(float, r.embedding))
-              for r in sorted(cbrows, key=lambda r: r.code)]
-    ver = str(int(props.get("georiva.quantizer_version", "1")) + 1)
+        cb = _read_sidecar(spark, table, "_codebook")
+    ver = int(params.get("quantizer_version", "1")) + 1
     assigned = _pq_encode_frame(emb, cents, cb, m, nbits, residual)
     if gen_map is not None:
         assigned = (assigned.join(gen_map, "vec_id")
@@ -696,37 +700,14 @@ def ivf_pq_index_compact(spark, table: str, path: str,
     (assigned.write.mode("overwrite").format("parquet")
      .partitionBy("cell").option("path", path)
      .saveAsTable(f"{table}_compact"))
-    cdf = local_frame(
-        spark, [(i, c) for i, c in enumerate(cents)],
-        "cell int, embedding array<double>")
-    (cdf.write.mode("overwrite").format("parquet")
-     .option("path", f"{path}_centroids")
-     .saveAsTable(f"{table}_centroids_compact"))
-    cbdf = local_frame(
-        spark, [(j, c) for j, c in enumerate(cb)],
-        "code int, embedding array<double>")
-    (cbdf.write.mode("overwrite").format("parquet")
-     .option("path", f"{path}_codebook")
-     .saveAsTable(f"{table}_codebook_compact"))
-    stamps = {k2: v for k2, v in props.items()
-              if k2.startswith("georiva.")}
-    stamps["georiva.train_iters"] = str(retrain_iters)
-    stamps["georiva.train_sample_ppm"] = str(train_sample_ppm or 0)
-    stamps["georiva.quantizer_version"] = ver
-    sidecars = ["_centroids", "_codebook"]
+    sidecars = {"_centroids": cents, "_codebook": cb}
     if opq:
-        rdf = local_frame(
-            spark, [(i, r) for i, r in enumerate(rot)],
-            "i int, row array<double>")
-        (rdf.write.mode("overwrite").format("parquet")
-         .option("path", f"{path}_rotation")
-         .saveAsTable(f"{table}_rotation_compact"))
-        sidecars.append("_rotation")
-    kv = ", ".join(f"'{k2}'='{v}'" for k2, v in sorted(stamps.items()))
-    spark.sql(f"ALTER TABLE {table}_compact SET TBLPROPERTIES ({kv})")
-    for sc in sidecars:
-        spark.sql(f"ALTER TABLE {table}{sc}_compact SET TBLPROPERTIES ("
-                  f"'georiva.quantizer_version'='{ver}')")
+        sidecars["_rotation"] = rot
+    _write_sidecars(spark, table, path, sidecars, ver, staged="_compact")
+    params.update(train_iters=retrain_iters,
+                  train_sample_ppm=train_sample_ppm or 0,
+                  quantizer_version=ver)
+    _index_table.stamp(spark, f"{table}_compact", params)
     for sc in sidecars:
         atomic_swap_table(spark, f"{table}{sc}")
     atomic_swap_table(spark, table)
@@ -756,17 +737,19 @@ def ivf_index_probe(spark, table: str, query_vec, k: int = 5,
 
     from georiva_spark.functions.vectors import cosine_similarity
 
-    _check_quantizer_sync(spark, table, ("_centroids",))
-    cents = {int(r.cell): np.asarray(r.embedding, dtype=np.float64)
-             for r in spark.table(f"{table}_centroids").collect()}
+    stamps = _index_table.props(spark, table)
+    _index_table.check_quantizer_sync(spark, table, stamps,
+                                      ("_centroids",))
+    cents = np.asarray(_read_sidecar(spark, table, "_centroids"),
+                       dtype=np.float64)
     q = np.asarray(list(query_vec), dtype=np.float64)
     order = sorted((float(((c - q) ** 2).sum()), cell)
-                   for cell, c in cents.items())
+                   for cell, c in enumerate(cents))
     probe_cells = [cell for _, cell in order[:nprobe]]
 
     qlit = F.expr(fastexpr.darr(q))
     cos = cosine_similarity(F.col("embedding"), qlit)
-    scan = _live_table(spark, table).where(
+    scan = _live_table(spark, table, stamps).where(
         F.col("cell").isin(probe_cells))
     if candidate_filter is not None:
         scan = scan.where(candidate_filter)
@@ -834,10 +817,10 @@ def ivf_index_probe_batch(spark, table: str, queries: DataFrame,
     from georiva_spark.functions.vectors import cosine_similarity
     from georiva_spark.operators._retention import persist_bounded
 
-    _check_quantizer_sync(spark, table, ("_centroids",))
-    rows = spark.table(f"{table}_centroids").collect()
-    cents = [list(map(float, r.embedding))
-             for r in sorted(rows, key=lambda r: r.cell)]
+    stamps = _index_table.props(spark, table)
+    _index_table.check_quantizer_sync(spark, table, stamps,
+                                      ("_centroids",))
+    cents = _read_sidecar(spark, table, "_centroids")
     if not cents:
         raise ValueError(f"{table!r} has no centroid sidecar")
 
@@ -856,7 +839,7 @@ def ivf_index_probe_batch(spark, table: str, queries: DataFrame,
     # once before the static filter reads it.
     n_queries, live_cells = _fanout_gate(probed)
     cos = cosine_similarity(F.col("embedding"), F.col("qe"))
-    scan = _live_table(spark, table).where(
+    scan = _live_table(spark, table, stamps).where(
         F.col("cell").isin(live_cells))
     if candidate_filter is not None:
         scan = scan.where(candidate_filter)
@@ -1008,42 +991,6 @@ def _pq_encode_frame(emb: DataFrame, cents: list[list[float]],
         vec_col = "_v"
     packed = _pq_pack_expr(vec_col, cb, m, nbits, sub)
     return assigned.select("vec_id", packed.alias("pq_code"), "cell")
-
-
-def _check_quantizer_sync(spark, table: str,
-                          sidecars: tuple[str, ...],
-                          props: dict | None = None) -> None:
-    """Fail by name when the main index table and a quantizer sidecar
-    carry DIFFERENT ``georiva.quantizer_version`` stamps — the crash
-    window of a RETRAINING compaction (sidecars swap before the main
-    table so every probeable state is either consistent or detectably
-    skewed). A skew means routing would use centroids the stored cell
-    assignment was not built with — silently wrong recall — so probes
-    and appends refuse instead. Recovery: re-run the interrupted
-    ``*_index_compact(retrain_iters=…)`` (it re-stages from the
-    surviving main table / corpus) or finish the pending
-    :func:`~georiva_spark.sources.bucketing.atomic_swap_table`.
-    Unversioned tables (pre-r8 indexes) are exempt. ``props``: the
-    main table's already-fetched TBLPROPERTIES — callers that just
-    read them skip a second catalog round trip (r13)."""
-    def ver(t: str):
-        p = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {t}").collect()}
-        return p.get("georiva.quantizer_version")
-
-    main = (props.get("georiva.quantizer_version")
-            if props is not None else ver(table))
-    if main is None:
-        return
-    for sc in sidecars:
-        v = ver(f"{table}{sc}")
-        if v is not None and v != main:
-            raise ValueError(
-                f"{table!r}: quantizer version skew — table is "
-                f"v{main} but {table}{sc} is v{v}; a retraining "
-                f"compaction was interrupted between the sidecar and "
-                f"main swaps. Re-run the compact (it re-stages) or "
-                f"finish the pending atomic swap.")
 
 
 def _train_sample(corpus: DataFrame, sample_ppm: int | None,
@@ -1369,18 +1316,11 @@ def _rotate_expr(R: list[list[float]], col: str = "embedding"):
     return F.expr(fastexpr.rotate_sql(R, col=col))
 
 
-def _load_rotation(spark, table: str,
-                   props: dict | None = None):
-    """The index's stamped OPQ rotation, or None for a plain PQ
-    index. The sidecar is d rows — model state, like the codebook."""
-    if props is None:
-        props = {r.key: r.value for r in
-                 spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
-    if props.get("georiva.pq_opq") != "1":
-        return None
-    rows = spark.table(f"{table}_rotation").collect()
-    return [list(map(float, r.row))
-            for r in sorted(rows, key=lambda r: r.i)]
+def _load_rotation(spark, table: str):
+    """The OPQ rotation of an index stamped ``pq_opq`` — callers
+    check the stamp. The sidecar is d rows — model state, like the
+    codebook."""
+    return _read_sidecar(spark, table, "_rotation")
 
 
 def ivf_pq_index_write(emb: DataFrame, table: str, path: str,
@@ -1473,7 +1413,9 @@ def ivf_pq_index_write(emb: DataFrame, table: str, path: str,
     ≤ 62 (the sub-64-bit packing convention — DuckDB's ``1 << p``
     overflows at 63). All quantizer/codebook provenance
     (n_centroids, train_iters, m, nbits, codebook_iters, residual)
-    is stamped as TBLPROPERTIES and validated at probe/append."""
+    is stamped as TBLPROPERTIES and validated at probe/append. A live
+    rebuild is writer-exclusive, for the DROP-first reason given in
+    :func:`ivf_index_write`."""
     if m * nbits > 62:
         raise ValueError(
             f"ivf_pq_index_write: m={m} × nbits={nbits} = {m * nbits} "
@@ -1544,40 +1486,16 @@ def ivf_pq_index_write(emb: DataFrame, table: str, path: str,
     (assigned.write.mode("overwrite").format("parquet")
      .partitionBy("cell").option("path", path).saveAsTable(table))
     spark = emb.sparkSession
-    cdf = local_frame(
-        spark, [(i, c) for i, c in enumerate(cents)],
-        "cell int, embedding array<double>")
-    (cdf.write.mode("overwrite").format("parquet")
-     .option("path", f"{path}_centroids")
-     .saveAsTable(f"{table}_centroids"))
-    cbdf = local_frame(
-        spark, [(j, c) for j, c in enumerate(cb)],
-        "code int, embedding array<double>")
-    (cbdf.write.mode("overwrite").format("parquet")
-     .option("path", f"{path}_codebook")
-     .saveAsTable(f"{table}_codebook"))
-    sidecars = ["_centroids", "_codebook"]
+    sidecars = {"_centroids": cents, "_codebook": cb}
     if rot is not None:
-        rdf = local_frame(
-            spark, [(i, r) for i, r in enumerate(rot)],
-            "i int, row array<double>")
-        (rdf.write.mode("overwrite").format("parquet")
-         .option("path", f"{path}_rotation")
-         .saveAsTable(f"{table}_rotation"))
-        sidecars.append("_rotation")
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES ("
-        f"'georiva.n_centroids'='{n_centroids}', "
-        f"'georiva.train_iters'='{train_iters}', "
-        f"'georiva.train_sample_ppm'='{train_sample_ppm or 0}', "
-        f"'georiva.pq_m'='{m}', 'georiva.pq_nbits'='{nbits}', "
-        f"'georiva.pq_codebook_iters'='{codebook_iters}', "
-        f"'georiva.pq_residual'='{int(residual)}', "
-        f"'georiva.pq_opq'='{int(opq)}', "
-        f"'georiva.quantizer_version'='1')")
-    for sc in sidecars:
-        spark.sql(f"ALTER TABLE {table}{sc} SET TBLPROPERTIES ("
-                  f"'georiva.quantizer_version'='1')")
+        sidecars["_rotation"] = rot
+    _write_sidecars(spark, table, path, sidecars, 1)
+    _index_table.stamp(spark, table, {
+        "n_centroids": n_centroids, "train_iters": train_iters,
+        "train_sample_ppm": train_sample_ppm or 0, "pq_m": m,
+        "pq_nbits": nbits, "pq_codebook_iters": codebook_iters,
+        "pq_residual": int(residual), "pq_opq": int(opq),
+        "quantizer_version": 1})
 
 
 def ivf_pq_index_append(emb: DataFrame, table: str,
@@ -1595,33 +1513,16 @@ def ivf_pq_index_append(emb: DataFrame, table: str,
     :func:`ivf_index_retract` (T5)."""
     spark = emb.sparkSession
     gen_cols = _gen_cols(spark, table, gen, "ivf_pq_index_append")
-    props = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
-    try:
-        m = int(props["georiva.pq_m"])
-        nbits = int(props["georiva.pq_nbits"])
-    except KeyError as e:
-        raise ValueError(
-            f"{table!r} is not a stamped ivf_pq index "
-            f"(missing property {e})") from None
-    residual = bool(int(props.get("georiva.pq_residual", "0")))
-    opq = props.get("georiva.pq_opq") == "1"
-    _check_quantizer_sync(spark, table,
-                          ("_centroids", "_codebook")
-                          + (("_rotation",) if opq else ()),
-                          props=props)
-    crows = spark.table(f"{table}_centroids").collect()
-    cents = [list(map(float, r.embedding))
-             for r in sorted(crows, key=lambda r: r.cell)]
+    m, nbits, residual, opq = _pq_stamps(
+        spark, table, _index_table.props(spark, table))
+    cents = _read_sidecar(spark, table, "_centroids")
     if not cents:
         raise ValueError(f"{table!r} has no centroid sidecar")
-    cbrows = spark.table(f"{table}_codebook").collect()
-    cb = [list(map(float, r.embedding))
-          for r in sorted(cbrows, key=lambda r: r.code)]
+    cb = _read_sidecar(spark, table, "_codebook")
     if opq:
         # an OPQ index lives entirely in rotated space — the delta
         # rotates with the INDEX'S OWN stamped rotation before encode
-        rot = _load_rotation(spark, table, props)
+        rot = _load_rotation(spark, table)
         emb = emb.select("vec_id", _rotate_expr(rot).alias("embedding"))
 
     assigned = _pq_encode_frame(emb, cents, cb, m, nbits, residual) \
@@ -1661,37 +1562,24 @@ def ivf_pq_index_probe(spark, table: str, query_vec, k: int = 5,
     ``candidate_filter`` — selective filters warrant larger nprobe."""
     import numpy as np
 
-    props = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
-    try:
-        m = int(props["georiva.pq_m"])
-        nbits = int(props["georiva.pq_nbits"])
-    except KeyError as e:
-        raise ValueError(
-            f"{table!r} is not a stamped ivf_pq index "
-            f"(missing property {e})") from None
-    residual = bool(int(props.get("georiva.pq_residual", "0")))
-    opq = props.get("georiva.pq_opq") == "1"
+    stamps = _index_table.props(spark, table)
+    m, nbits, residual, opq = _pq_stamps(spark, table, stamps)
     ncw = 1 << nbits
 
-    _check_quantizer_sync(spark, table,
-                          ("_centroids", "_codebook")
-                          + (("_rotation",) if opq else ()),
-                          props=props)
-    cents = {int(r.cell): np.asarray(r.embedding, dtype=np.float64)
-             for r in spark.table(f"{table}_centroids").collect()}
+    cents = np.asarray(_read_sidecar(spark, table, "_centroids"),
+                       dtype=np.float64)
     q = np.asarray(list(query_vec), dtype=np.float64)
     if opq:
         # the index lives in rotated space; rotate the query into it
         # (driver-side d×d matvec — model-sized, like the routing)
-        q = np.asarray(_load_rotation(spark, table, props),
+        q = np.asarray(_load_rotation(spark, table),
                        dtype=np.float64) @ q
     order = sorted((float(((c - q) ** 2).sum()), cell)
-                   for cell, c in cents.items())
+                   for cell, c in enumerate(cents))
     probe_cells = [cell for _, cell in order[:nprobe]]
 
-    cb = {int(r.code): np.asarray(r.embedding, dtype=np.float64)
-          for r in spark.table(f"{table}_codebook").collect()}
+    cb = np.asarray(_read_sidecar(spark, table, "_codebook"),
+                    dtype=np.float64)
     dim = len(cb[0])
     sub = dim // m
 
@@ -1714,7 +1602,7 @@ def ivf_pq_index_probe(spark, table: str, query_vec, k: int = 5,
     else:
         adc = F.expr(adc_for(q))
 
-    scan = _live_table(spark, table).where(
+    scan = _live_table(spark, table, stamps).where(
         F.col("cell").isin(probe_cells))
     if candidate_ids is not None:
         ids = candidate_ids.select(
@@ -1791,7 +1679,22 @@ def _pq_adc_score(m: int, nbits: int, ncw: int):
     return adc
 
 
-def _pq_params(spark, table: str, props: dict, queries: DataFrame):
+def _pq_stamps(spark, table: str, stamps: dict):
+    """The PQ parameters from the main table's already-read
+    ``stamps``, validated (fail by name when unstamped) and
+    version-synced with every quantizer sidecar the index carries.
+    → (m, nbits, residual, opq)."""
+    m, nbits = _index_table.require(stamps, table, "ivf_pq",
+                                    "pq_m", "pq_nbits")
+    residual = _index_table.get(stamps, "pq_residual") == "1"
+    opq = _index_table.get(stamps, "pq_opq") == "1"
+    _index_table.check_quantizer_sync(
+        spark, table, stamps,
+        ("_centroids", "_codebook") + (("_rotation",) if opq else ()))
+    return m, nbits, residual, opq
+
+
+def _pq_params(spark, table: str, stamps: dict, queries: DataFrame):
     """Shared head of the PQ probe family: validate the stamp + sync,
     load the centroid/codebook sidecars, and rotate the queries into
     index space for an OPQ index. ONE definition (the batch probe and
@@ -1800,34 +1703,20 @@ def _pq_params(spark, table: str, props: dict, queries: DataFrame):
     → (m, nbits, residual, ncw, cents, cb, sub, queries)."""
     import numpy as np
 
-    try:
-        m = int(props["georiva.pq_m"])
-        nbits = int(props["georiva.pq_nbits"])
-    except KeyError as e:
-        raise ValueError(
-            f"{table!r} is not a stamped ivf_pq index "
-            f"(missing property {e})") from None
-    opq = props.get("georiva.pq_opq") == "1"
-    _check_quantizer_sync(spark, table,
-                          ("_centroids", "_codebook")
-                          + (("_rotation",) if opq else ()),
-                          props=props)
+    m, nbits, residual, opq = _pq_stamps(spark, table, stamps)
     if opq:
         # the index lives in rotated space — rotate every query
         # in-row against the stamped rotation before routing/ADC
-        rot = _load_rotation(spark, table, props)
+        rot = _load_rotation(spark, table)
         queries = queries.withColumn("embedding", _rotate_expr(rot))
-    crows = spark.table(f"{table}_centroids").collect()
-    cents = [list(map(float, r.embedding))
-             for r in sorted(crows, key=lambda r: r.cell)]
+    cents = _read_sidecar(spark, table, "_centroids")
     if not cents:
         raise ValueError(f"{table!r} has no centroid sidecar")
-    cbrows = spark.table(f"{table}_codebook").collect()
-    cb = [np.asarray(r.embedding, dtype=np.float64)
-          for r in sorted(cbrows, key=lambda r: r.code)]
+    cb = [np.asarray(c, dtype=np.float64)
+          for c in _read_sidecar(spark, table, "_codebook")]
     dim = len(cb[0])
-    return (m, nbits, bool(int(props.get("georiva.pq_residual", "0"))),
-            1 << nbits, cents, cb, dim // m, queries)
+    return (m, nbits, residual, 1 << nbits, cents, cb, dim // m,
+            queries)
 
 
 def ivf_pq_index_probe_batch(spark, table: str, queries: DataFrame,
@@ -1859,10 +1748,9 @@ def ivf_pq_index_probe_batch(spark, table: str, queries: DataFrame,
     from georiva_spark.operators._retention import persist_bounded
     from pyspark import StorageLevel
 
-    props = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
+    stamps = _index_table.props(spark, table)
     m, nbits, residual, ncw, cents, cb, sub, queries = _pq_params(
-        spark, table, props, queries)
+        spark, table, stamps, queries)
 
     cells = F.expr(fastexpr.route_cells_sql("embedding", cents, nprobe))
 
@@ -1890,7 +1778,7 @@ def ivf_pq_index_probe_batch(spark, table: str, queries: DataFrame,
     # returns gate count + probed-cell union together (r13)
     n_queries, live_cells = _fanout_gate(probed)
     adc = _pq_adc_score(m, nbits, ncw)
-    scan = _live_table(spark, table).where(
+    scan = _live_table(spark, table, stamps).where(
         F.col("cell").isin(live_cells))
     if candidate_ids is not None:
         ids = candidate_ids.select(
@@ -2035,17 +1923,16 @@ def _grid_probe_settings(spark, table: str, props: dict,
     from georiva_spark.functions.vectors import cosine_similarity
     from georiva_spark.operators._retention import persist_bounded
 
-    is_pq = "georiva.pq_m" in props
+    is_pq = _index_table.get(props, "pq_m") is not None
     max_np = max(int(n) for n in nprobes)
     queries_orig = queries
     if is_pq:
         m, nbits, residual, ncw, cents, cb, sub, queries = _pq_params(
             spark, table, props, queries)
     else:
-        _check_quantizer_sync(spark, table, ("_centroids",))
-        crows = spark.table(f"{table}_centroids").collect()
-        cents = [list(map(float, r.embedding))
-                 for r in sorted(crows, key=lambda r: r.cell)]
+        _index_table.check_quantizer_sync(spark, table, props,
+                                          ("_centroids",))
+        cents = _read_sidecar(spark, table, "_centroids")
         if not cents:
             raise ValueError(f"{table!r} has no centroid sidecar")
     cells = F.expr(fastexpr.route_cells_sql("embedding", cents,
@@ -2069,7 +1956,7 @@ def _grid_probe_settings(spark, table: str, props: dict,
             fan.select("q_id", "qe", "__pos", "cell"),
             "ann_recall_estimate.probed", StorageLevel.MEMORY_AND_DISK)
     n_queries, live_cells = _fanout_gate(probed)
-    scan = _live_table(spark, table).where(
+    scan = _live_table(spark, table, props).where(
         F.col("cell").isin(live_cells))
     small = n_queries <= max_broadcast_queries
     if small:
@@ -2138,9 +2025,11 @@ def _grid_probe_settings(spark, table: str, props: dict,
             # without the hint the per-setting semi joins over the two
             # cached frames planned as SortMergeJoins (4 in the
             # ann_tune_pq after-plan) — broadcast keeps the shared
-            # rescored frame unshuffled per setting (guide §3.1)
-            got = (rescored.join(F.broadcast(sel),
-                                 ["q_id", "vec_id"], "left_semi")
+            # rescored frame unshuffled per setting (guide §3.1), under
+            # the same max_broadcast_queries gate as the other hints
+            if small:
+                sel = F.broadcast(sel)
+            got = (rescored.join(sel, ["q_id", "vec_id"], "left_semi")
                    .withColumn("_r", F.row_number().over(w2))
                    .where(F.col("_r") <= k).select("q_id", "vec_id"))
             out.append((np_, sl, got))
@@ -2187,9 +2076,8 @@ def ann_recall_estimate(spark, table: str, k: int = 5,
 
     from georiva_spark.operators._retention import persist_bounded
 
-    props = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
-    is_pq = "georiva.pq_m" in props
+    props = _index_table.props(spark, table)
+    is_pq = _index_table.get(props, "pq_m") is not None
     if not 0 < sample_ppm <= 1_000_000:
         raise ValueError(
             f"ann_recall_estimate: sample_ppm={sample_ppm} must be "
@@ -2202,7 +2090,7 @@ def ann_recall_estimate(spark, table: str, k: int = 5,
         raise ValueError(
             "ann_recall_estimate: shortlist applies to PQ refine "
             "probes; a float index probes exactly at stage 1")
-    corpus = (emb if is_pq else _live_table(spark, table)) \
+    corpus = (emb if is_pq else _live_table(spark, table, props)) \
         .select("vec_id", "embedding")
     h = F.md5(F.concat_ws(":", F.lit(salt),
                           F.col("vec_id").cast("string")))
@@ -2298,19 +2186,13 @@ def ann_tune(spark, table: str, target_recall: float, k: int = 5,
         raise ValueError(
             f"ann_tune: target_recall={target_recall} must be in "
             f"(0, 1]")
-    props = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
-    try:
-        n_cents = int(props["georiva.n_centroids"])
-    except KeyError:
-        raise ValueError(
-            f"ann_tune: {table!r} is not a stamped IVF index "
-            f"(missing georiva.n_centroids)") from None
+    props = _index_table.props(spark, table)
+    n_cents, = _index_table.require(props, table, "IVF", "n_centroids")
     rows = ann_recall_estimate(
         spark, table, k=k, nprobes=nprobes, sample_ppm=sample_ppm,
         emb=emb, shortlist=shortlist, salt=salt,
         max_broadcast_queries=max_broadcast_queries)
-    n = F.broadcast(_live_table(spark, table)
+    n = F.broadcast(_live_table(spark, table, props)
                     .agg(F.count(F.lit(1)).alias("__n")))
     per_probe = F.expr(f"(__n + {n_cents} - 1) div {n_cents}")
     cost = (F.col("nprobe").cast("long") * per_probe
@@ -2352,8 +2234,8 @@ def _measured_candidates(spark, table: str, props: dict,
     the bounded C-row cell histogram, and averages per query — every
     frame here is bounded by the sample or by C, and the one corpus
     touch is the histogram's map-side-combined count."""
-    is_pq = "georiva.pq_m" in props
-    corpus = (emb if is_pq else _live_table(spark, table)) \
+    is_pq = _index_table.get(props, "pq_m") is not None
+    corpus = (emb if is_pq else _live_table(spark, table, props)) \
         .select("vec_id", "embedding")
     h = F.md5(F.concat_ws(":", F.lit(salt),
                           F.col("vec_id").cast("string")))
@@ -2361,17 +2243,15 @@ def _measured_candidates(spark, table: str, props: dict,
         % 1_000_000
     queries = corpus.where(bucket < sample_ppm) \
         .select(F.col("vec_id").alias("q_id"), "embedding")
-    if props.get("georiva.pq_opq") == "1":
-        rot = _load_rotation(spark, table, props)
+    if _index_table.get(props, "pq_opq") == "1":
+        rot = _load_rotation(spark, table)
         queries = queries.withColumn("embedding", _rotate_expr(rot))
-    crows = spark.table(f"{table}_centroids").collect()
-    cents = [list(map(float, r.embedding))
-             for r in sorted(crows, key=lambda r: r.cell)]
+    cents = _read_sidecar(spark, table, "_centroids")
     maxnp = max(int(np_) for np_ in nprobes)
     cells = F.expr(fastexpr.route_cells_sql("embedding", cents, maxnp))
     fan = queries.select("q_id",
                          F.posexplode(cells).alias("__pos", "cell"))
-    sizes = (_live_table(spark, table).groupBy("cell")
+    sizes = (_live_table(spark, table, props).groupBy("cell")
              .agg(F.count(F.lit(1)).alias("__sz")))
     np_df = local_frame(spark, [(int(np_),) for np_ in nprobes],
                         "nprobe int")

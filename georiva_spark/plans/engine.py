@@ -430,9 +430,8 @@ class DerivationEngine:
     #: the next job's tasks back-fill executors freed by the current
     #: job's tail (guide §2.6 "overlap independent jobs") — 2-4 in
     #: flight is enough to hide the per-job submit+commit latency
-    #: without executor contention; parameterised for deployments.
-    unit_write_slots = int(os.environ.get(
-        "GEORIVA_ENGINE_WRITE_SLOTS", "4"))
+    #: without executor contention.
+    unit_write_slots = 4
 
     def _run_level(self, cands: list) -> tuple[list, list]:
         """Run one level of independent (recipe, unit, origin)
@@ -486,7 +485,7 @@ class DerivationEngine:
         writes = [(uh, out_df) for (_, uh, out_df, *_rest) in deferred]
         if not writes:
             return
-        if len(writes) == 1 or self.unit_write_slots <= 1:
+        if len(writes) == 1:
             for uh, out_df in writes:
                 self._write_output(uh, out_df)
             return
@@ -951,7 +950,5 @@ class DerivationEngine:
         path with the same inputs is idempotent (replaceWhere analog)."""
         if self.output_dir is None or out_df is None:
             return
-        path = os.path.join(self.output_dir, f"unit={uh}")
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        out_df.write.mode("overwrite").parquet(path)
+        out_df.write.mode("overwrite").parquet(
+            os.path.join(self.output_dir, f"unit={uh}"))

@@ -449,6 +449,7 @@ def takedown_report(spark: SparkSession, ids, *,
     Everything is one bounded aggregation per surface with the id
     list pushed to the scans; the result is a small DataFrame (rows
     bounded by surfaces × shards), safe to collect."""
+    from georiva_spark.operators import _index_table
     from georiva_spark.operators._tombstones import (dead_doc_rules,
                                                      dead_rules,
                                                      live_doc_rows,
@@ -500,25 +501,24 @@ def takedown_report(spark: SparkSession, ids, *,
                      None, None)],
             "surface string, target string, shard string, "
             "n_rows long, n_tokens long, n_files long"))
+    # each index's stamps, read once, witness its tombstone tripwire
+    # (a missing table has none)
     for t in minhash_indexes:
+        st = _index_table.props(spark, f"{t}_bands", missing_ok=True)
         live = live_doc_rows(
-            live_rows(spark.table(f"{t}_sigs"),
-                      dead_rules(spark, t,
-                                 stamp_table=f"{t}_bands")),
-            dead_doc_rules(spark, t, stamp_table=f"{t}_bands"),
-            "doc_id")
+            live_rows(spark.table(f"{t}_sigs"), dead_rules(spark, t, st)),
+            dead_doc_rules(spark, t, st), "doc_id")
         parts.append(row_agg(live, "minhash", t, "doc_id"))
     for t in ivf_indexes:
         from georiva_spark.operators.similarity import _live_table
-        parts.append(row_agg(_live_table(spark, t), "ivf", t,
+        st = _index_table.props(spark, t, missing_ok=True)
+        parts.append(row_agg(_live_table(spark, t, st), "ivf", t,
                              "vec_id"))
     for t in hamming_indexes:
+        st = _index_table.props(spark, f"{t}_bands", missing_ok=True)
         live = live_doc_rows(
-            live_rows(spark.table(f"{t}_ids"),
-                      dead_rules(spark, t,
-                                 stamp_table=f"{t}_bands")),
-            dead_doc_rules(spark, t, stamp_table=f"{t}_bands"),
-            "id")
+            live_rows(spark.table(f"{t}_ids"), dead_rules(spark, t, st)),
+            dead_doc_rules(spark, t, st), "id")
         parts.append(row_agg(live, "hamming", t, "id"))
     dead = F.expr(larr(ids))
     for p in token_layouts:

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from georiva_spark.operators import _index_table
 from georiva_spark.operators.similarity import (ivf_index_append,
                                                 ivf_index_compact,
                                                 ivf_index_probe_batch,
@@ -78,9 +79,8 @@ def start_ann_stream(emb_stream: DataFrame, table: str, out_dir: str,
     if not spark.table(f"{table}_centroids").head(1):   # fail fast
         raise ValueError(f"{table!r} has no centroid sidecar — not an "
                          f"ivf_index_write index")
-    props = {r.key: r.value for r in
-             spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
-    is_pq = "georiva.pq_m" in props
+    is_pq = _index_table.get(_index_table.props(spark, table),
+                             "pq_m") is not None
     probe = ivf_pq_index_probe_batch if is_pq else ivf_index_probe_batch
     append = ivf_pq_index_append if is_pq else ivf_index_append
     if retrain_emb is not None and not (is_pq and retrain_iters > 0):

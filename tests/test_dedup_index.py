@@ -840,6 +840,69 @@ def _recover_swap(spark, table):
             spark.sql(f"DROP TABLE {leftover}")
 
 
+def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
+                                                  monkeypatch):
+    """One probe call reads each table's stamps (SHOW TBLPROPERTIES —
+    a catalog round trip) at most once: the read is passed on
+    to the parameter checks, the quantizer-version check and the
+    tombstone tripwire instead of being repeated by each of them."""
+    import collections
+
+    import numpy as np
+
+    from georiva_spark.operators import similarity
+
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in rng.normal(size=8)]) for i in range(64)],
+        "vec_id long, embedding array<double>")
+    codes = spark.createDataFrame([(1, 0b1111), (2, 0b0111)],
+                                  "media_id long, code long")
+    dedup.minhash_index_write(_docs(spark, [(1, BASE)]), "t_once_mh",
+                              str(tmp_path / "mh"), n_buckets=4)
+    dedup.hamming_index_write(codes, "t_once_hm", str(tmp_path / "hm"),
+                              max_hamming=2, bits=64, n_buckets=4)
+    similarity.ivf_index_write(emb, "t_once_iv", str(tmp_path / "iv"),
+                               n_centroids=4)
+    similarity.ivf_pq_index_write(emb, "t_once_pq", str(tmp_path / "pq"),
+                                  n_centroids=4, m=4, nbits=4,
+                                  train_iters=1)
+    qs = emb.where("vec_id < 3").selectExpr("vec_id as q_id",
+                                            "embedding")
+    calls = {
+        "minhash_index_probe": lambda: dedup.minhash_index_probe(
+            _docs(spark, [(9, BASE)]), "t_once_mh", threshold=0.4),
+        "hamming_index_probe": lambda: dedup.hamming_index_probe(
+            codes, "t_once_hm"),
+        "ivf_index_probe_batch": lambda: similarity.ivf_index_probe_batch(
+            spark, "t_once_iv", qs, k=2),
+        "ivf_pq_index_probe": lambda: similarity.ivf_pq_index_probe(
+            spark, "t_once_pq", [0.0] * 8, k=2),
+    }
+    real_sql = type(spark).sql
+    reads = collections.Counter()
+
+    def counting(self, stmt, *a, **k):
+        if stmt.startswith("SHOW TBLPROPERTIES"):
+            reads[stmt.split()[2]] += 1
+        return real_sql(self, stmt, *a, **k)
+
+    monkeypatch.setattr(type(spark), "sql", counting)
+    try:
+        for name, call in calls.items():
+            reads.clear()
+            call().collect()
+            assert reads, name
+            assert max(reads.values()) == 1, (name, dict(reads))
+    finally:
+        monkeypatch.setattr(type(spark), "sql", real_sql)
+        for t in ("t_once_mh_bands", "t_once_mh_sigs", "t_once_hm_bands",
+                  "t_once_hm_ids", "t_once_iv", "t_once_iv_centroids",
+                  "t_once_pq", "t_once_pq_centroids",
+                  "t_once_pq_codebook"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_minhash_compact_crash_leaves_probeable_index(spark, tmp_path,
                                                       monkeypatch):
     """Crash-atomicity of the compaction swap: inject a failure before
@@ -1198,10 +1261,14 @@ def test_index_rewrite_with_live_grid_cache_is_safe(spark, tmp_path):
     ivf_pq_index_write overwrite of the SAME table then died mid-drop
     with TABLE_OR_VIEW_NOT_FOUND (PruneFileSourcePartitions →
     requireTableExists while the overwrite re-touched the dependent
-    cache entries). The writers now DROP-and-uncache first; rebuilding
-    with a live estimate in between must succeed and reproduce the
-    identical recall grid (which also proves the post-drop overwrite
-    clears the previous build's files)."""
+    cache entries). The writers now DROP-and-uncache first. Rebuilding
+    into the SAME path with a live estimate in between — what a
+    repeated setup does — must succeed, reproduce the identical recall
+    grid, and leave exactly the new build on disk: the post-drop
+    overwrite clears the previous build's files, so the row count is
+    the corpus size and every cell directory is a live cell."""
+    from pathlib import Path
+
     import numpy as np
 
     from georiva_spark.operators import similarity
@@ -1212,32 +1279,41 @@ def test_index_rewrite_with_live_grid_cache_is_safe(spark, tmp_path):
         [(i, [float(v) for v in rng.normal(size=d)]) for i in range(n)],
         "vec_id long, embedding array<double>")
     t, tpq = "t_rblx", "t_rblxpq"
+
+    def one_build(table, path):
+        assert spark.table(table).count() == n
+        cells = {f"cell={r.cell}" for r in
+                 spark.table(table).select("cell").distinct().collect()}
+        assert {p.name for p in Path(path).glob("cell=*")} == cells
+
     try:
-        def grid(rep):
-            similarity.ivf_index_write(emb, t, str(tmp_path / f"i{rep}"),
+        def grid():
+            similarity.ivf_index_write(emb, t, str(tmp_path / "i"),
                                        n_centroids=4, train_iters=1)
+            one_build(t, tmp_path / "i")
             return sorted(
                 (r.nprobe, r.hits, r.recall) for r in
                 similarity.ann_recall_estimate(
                     spark, t, k=3, nprobes=(1, 2),
                     sample_ppm=120_000).collect())
 
-        def grid_pq(rep):
+        def grid_pq():
             similarity.ivf_pq_index_write(
-                emb, tpq, str(tmp_path / f"p{rep}"), n_centroids=4,
+                emb, tpq, str(tmp_path / "p"), n_centroids=4,
                 m=4, nbits=4, train_iters=1)
+            one_build(tpq, tmp_path / "p")
             return sorted(
                 (r.nprobe, r.shortlist, r.hits, r.recall) for r in
                 similarity.ann_recall_estimate(
                     spark, tpq, k=3, nprobes=(1, 2), emb=emb,
                     shortlist=(5, 10), sample_ppm=120_000).collect())
 
-        first = grid(0)
+        first = grid()
         # the estimate's cand/ranked persists are still live here —
         # the rebuild is the crash repro
-        assert grid(1) == first
-        first_pq = grid_pq(0)
-        assert grid_pq(1) == first_pq
+        assert grid() == first
+        first_pq = grid_pq()
+        assert grid_pq() == first_pq
     finally:
         for s in ("", "_centroids"):
             spark.sql(f"DROP TABLE IF EXISTS {t}{s}")

@@ -933,6 +933,41 @@ def test_python_boundary_audit_current():
         f"allowlist ONLY for empty-frame short-circuits.")
 
 
+def test_index_stamp_audit_current():
+    """Index parameter stamps have ONE home: operators/_index_table.py
+    is the only module whose code spells a TBLPROPERTIES statement.
+    Every other index family reads and writes its stamps through it —
+    a hand-rolled SHOW/ALTER … TBLPROPERTIES anywhere else fails here.
+    Docstrings and comments may still name the mechanism."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "georiva_spark"
+    home = pkg / "operators" / "_index_table.py"
+    assert "TBLPROPERTIES" in home.read_text()
+    found = []
+    for py in sorted(pkg.rglob("*.py")):
+        if py == home:
+            continue
+        tree = ast.parse(py.read_text())
+        docstrings = {
+            id(node.body[0].value) for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef,
+                                 ast.FunctionDef, ast.AsyncFunctionDef))
+            and node.body and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)}
+        found += [f"{py.relative_to(pkg)}:{node.lineno}"
+                  for node in ast.walk(tree)
+                  if isinstance(node, ast.Constant)
+                  and isinstance(node.value, str)
+                  and "TBLPROPERTIES" in node.value.upper()
+                  and id(node) not in docstrings]
+    assert not found, (
+        f"TBLPROPERTIES statements outside operators/_index_table.py: "
+        f"{found} — read stamps with _index_table.props and write them "
+        f"with _index_table.stamp")
+
+
 def test_corpus_pipeline_composition_keeps_plan_shapes(spark):
     """The end-to-end crawl→strip→gopher→line-dedup→minhash-probe
     composition must not break any stage's plan contract when chained
@@ -1126,7 +1161,10 @@ def test_refine_grid_semi_joins_broadcast_selection(spark, tmp_path):
     is model-sized (sample queries × shortlist rows) and must
     broadcast — without the hint the two cached frames planned as
     SortMergeJoins, re-shuffling the shared frame once per grid
-    setting (4 SMJ in the pre-fix ann_tune_pq plan)."""
+    setting (4 SMJ in the pre-fix ann_tune_pq plan). The hint obeys
+    max_broadcast_queries like every other hint in the grid: past the
+    gate (0, with Spark's own auto-broadcast off) no per-setting semi
+    join may plan as a BroadcastHashJoin, and the grid is unchanged."""
     import numpy as np
 
     from georiva_spark.operators import similarity
@@ -1137,18 +1175,33 @@ def test_refine_grid_semi_joins_broadcast_selection(spark, tmp_path):
         [(i, [float(v) for v in rng.normal(size=d)]) for i in range(n)],
         "vec_id long, embedding array<double>")
     t = "t_plan_grid"
+    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+
+    def grid(gate):
+        est = similarity.ann_recall_estimate(
+            spark, t, k=3, nprobes=(1, 2), emb=emb,
+            shortlist=(5, 10), sample_ppm=120_000,
+            max_broadcast_queries=gate)
+        plan = est._jdf.queryExecution().executedPlan().toString()
+        semis = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
+        assert semis
+        return est, plan, semis
+
     try:
         similarity.ivf_pq_index_write(emb, t, str(tmp_path / "g"),
                                       n_centroids=4, m=4, nbits=4,
                                       train_iters=1)
-        est = similarity.ann_recall_estimate(
-            spark, t, k=3, nprobes=(1, 2), emb=emb,
-            shortlist=(5, 10), sample_ppm=120_000)
-        plan = est._jdf.queryExecution().executedPlan().toString()
+        est, plan, semis = grid(10_000)
         assert "SortMergeJoin" not in plan
-        semis = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
-        assert semis and all("BroadcastHashJoin" in ln for ln in semis)
+        assert all("BroadcastHashJoin" in ln for ln in semis)
         assert "CartesianProduct" not in plan
+        want = sorted(est.collect())
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        est, _, semis = grid(0)
+        assert not any("BroadcastHashJoin" in ln for ln in semis)
+        assert sorted(est.collect()) == want
     finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
         for s in ("", "_centroids", "_codebook"):
             spark.sql(f"DROP TABLE IF EXISTS {t}{s}")
+
