@@ -2072,11 +2072,21 @@ def ann_recall_estimate(spark, table: str, k: int = 5,
     = min(k, N−1), so starved corpora don't deflate the score).
     → (nprobe, shortlist, k, n_queries, truth_rows, hits, recall),
     one row per setting."""
+    return _recall_estimate(spark, table, _index_table.props(spark, table),
+                            k, nprobes, sample_ppm, emb, shortlist, salt,
+                            max_broadcast_queries)
+
+
+def _recall_estimate(spark, table: str, props: dict, k: int,
+                     nprobes: tuple, sample_ppm: int,
+                     emb: DataFrame | None, shortlist, salt: str,
+                     max_broadcast_queries: int) -> DataFrame:
+    """:func:`ann_recall_estimate` over the main table's stamps
+    ``props``, already read once by the caller."""
     from pyspark import StorageLevel
 
     from georiva_spark.operators._retention import persist_bounded
 
-    props = _index_table.props(spark, table)
     is_pq = _index_table.get(props, "pq_m") is not None
     if not 0 < sample_ppm <= 1_000_000:
         raise ValueError(
@@ -2188,10 +2198,8 @@ def ann_tune(spark, table: str, target_recall: float, k: int = 5,
             f"(0, 1]")
     props = _index_table.props(spark, table)
     n_cents, = _index_table.require(props, table, "IVF", "n_centroids")
-    rows = ann_recall_estimate(
-        spark, table, k=k, nprobes=nprobes, sample_ppm=sample_ppm,
-        emb=emb, shortlist=shortlist, salt=salt,
-        max_broadcast_queries=max_broadcast_queries)
+    rows = _recall_estimate(spark, table, props, k, nprobes, sample_ppm,
+                            emb, shortlist, salt, max_broadcast_queries)
     n = F.broadcast(_live_table(spark, table, props)
                     .agg(F.count(F.lit(1)).alias("__n")))
     per_probe = F.expr(f"(__n + {n_cents} - 1) div {n_cents}")

@@ -381,15 +381,14 @@ class DerivationEngine:
 
         item_id = self._register_item(out_item, uh, ih, prev)
         if _defer is not None:
-            # batched dispatch (r14, guide §2.6): the caller runs this
-            # unit's write job concurrently with its level siblings and
-            # then finalizes (lineage → completed → chain) in this same
-            # phase-1 order — identical per-unit commit markers and
-            # ledger rows, the serial write wall collapsed.
+            # batched dispatch (r14, guide §2.6): the caller writes this
+            # unit's output in one job with its level siblings and then
+            # finalizes (lineage → completed → chain) in this same
+            # phase-1 order — identical per-unit outputs and ledger rows.
             _defer.append((rec, uh, out_df, out_item, item_id,
                            resolved, ih, recipe))
             return rec
-        self._write_output(uh, out_df)
+        self._write_units([(uh, out_df)])
         rec = self._finalize_completed(rec, recipe, resolved, ih,
                                        item_id)
         self._chain_from([(out_item, item_id)])
@@ -425,25 +424,19 @@ class DerivationEngine:
         return self._mark(rec, "completed")
 
     # ---- batched dispatch (r14 optimization, guide §2.6) -----------------
-    #: concurrent unit-write jobs per level. The driver submits the
-    #: independent ready units' write jobs from a small thread pool so
-    #: the next job's tasks back-fill executors freed by the current
-    #: job's tail (guide §2.6 "overlap independent jobs") — 2-4 in
-    #: flight is enough to hide the per-job submit+commit latency
-    #: without executor contention.
-    unit_write_slots = 4
-
     def _run_level(self, cands: list) -> tuple[list, list]:
         """Run one level of independent (recipe, unit, origin)
         candidates: phase 1 (resolve → hash-skip → transform →
         register) strictly serial in candidate order — item ids, seqs
-        and catalog mutations stay deterministic — then every deferred
-        unit WRITE concurrently, then finalization (lineage →
-        completed event) back in phase-1 order. A duplicate unit_hash
-        inside one level (two completions chaining the same merge) is
-        postponed until after the level commits, where it skips on
-        input_hash exactly as it would have serially. Returns
-        (records, chain seeds)."""
+        and catalog mutations stay deterministic — then ONE write of
+        every deferred unit output (`_write_units`), then finalization
+        (lineage → completed event) back in phase-1 order. A failed
+        level write commits no unit of the level: their ledger rows
+        stay `running` and the reclaim sweep re-runs them
+        idempotently. A duplicate unit_hash inside one level (two
+        completions chaining the same merge) is postponed until after
+        the level commits, where it skips on input_hash exactly as it
+        would have serially. Returns (records, chain seeds)."""
         out: list[RunRecord] = []
         deferred: list = []
         postponed: list = []
@@ -459,7 +452,8 @@ class DerivationEngine:
             out.append(rec)
             if len(deferred) > n_before:
                 pending.add(uh)
-        self._execute_writes(deferred)
+        self._write_units([(uh, out_df)
+                           for (_, uh, out_df, *_rest) in deferred])
         seeds = []
         for (rec, uh, out_df, out_item, item_id, resolved, ih,
              recipe) in deferred:
@@ -473,43 +467,12 @@ class DerivationEngine:
             out.append(self.run_unit(recipe, unit, origin=origin))
         return out, seeds
 
-    def _execute_writes(self, deferred: list) -> None:
-        """The level's unit-write Spark jobs, `unit_write_slots` in
-        flight (guide §2.6). Job submission releases the GIL in py4j
-        socket waits, so plain driver threads overlap the jobs; all
-        ledger/catalog mutation stays on the caller's thread. The
-        first failure re-raises after every in-flight write settles —
-        crash-equivalent to a serial failure (completed siblings keep
-        their output, their `completed` event simply never lands, and
-        the reclaim sweep re-runs them idempotently)."""
-        writes = [(uh, out_df) for (_, uh, out_df, *_rest) in deferred]
-        if not writes:
-            return
-        if len(writes) == 1:
-            for uh, out_df in writes:
-                self._write_output(uh, out_df)
-            return
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(
-                max_workers=min(self.unit_write_slots,
-                                len(writes))) as pool:
-            futs = [pool.submit(self._write_output, uh, out_df)
-                    for uh, out_df in writes]
-            err = None
-            for f in futs:
-                try:
-                    f.result()
-                except Exception as e:  # noqa: BLE001
-                    err = err or e
-            if err is not None:
-                raise err
-
     def _chain_from(self, seeds: list) -> None:
         """derivation.completed → downstream dispatch, level by level
         (BFS): each level's candidates across ALL seeds run as one
         `_run_level` batch, so independent downstream products (e.g.
         the datacard and token-manifest partials of one clean shard)
-        write concurrently. Level order equals the serial recursion's
+        are written together. Level order equals the serial recursion's
         input sets — a unit triggered at level n sees exactly the
         items levels < n completed — so outputs and input hashes are
         identical to the depth-first engine's. Depth-capped per level
@@ -944,11 +907,39 @@ class DerivationEngine:
         })
         return item_id
 
-    def _write_output(self, uh: str, out_df: DataFrame) -> None:
-        """Deterministic overwrite of the unit's output partition — the
-        Spark replacement for the reference's run lock: rewriting the same
-        path with the same inputs is idempotent (replaceWhere analog)."""
-        if self.output_dir is None or out_df is None:
+    def _write_units(self, outputs: list) -> None:
+        """Deterministic overwrite of each unit's output partition
+        ``unit=<hash>`` — the Spark replacement for the reference's run
+        lock: rewriting the same partition with the same inputs is
+        idempotent (replaceWhere analog). The (unit hash, frame) pairs
+        that share an output schema are written as ONE job: tagged with
+        their unit, unioned and written with dynamic partition
+        overwrite, which replaces exactly the partitions that receive
+        rows. An empty output receives none and would keep its old
+        rows, so every frame carries an Observation row count (no extra
+        job) and a unit that observed 0 rows is then overwritten with
+        its schema alone — the only way to express an empty
+        partition."""
+        if self.output_dir is None:
             return
-        out_df.write.mode("overwrite").parquet(
-            os.path.join(self.output_dir, f"unit={uh}"))
+        from pyspark.sql import Observation, functions as F
+        groups: dict[str, list] = {}
+        for uh, out_df in outputs:
+            if out_df is not None:
+                groups.setdefault(out_df.schema.simpleString(),
+                                  []).append((uh, out_df))
+        for group in groups.values():
+            counted, level = [], None
+            for uh, out_df in group:
+                obs = Observation()
+                counted.append((uh, out_df, obs))
+                tagged = (out_df.observe(obs, F.count(F.lit(1)).alias("n"))
+                          .withColumn("unit", F.lit(uh)))
+                level = tagged if level is None else level.unionByName(tagged)
+            (level.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("unit").parquet(self.output_dir))
+            for uh, out_df, obs in counted:
+                if obs.get["n"] == 0:
+                    out_df.limit(0).write.mode("overwrite").parquet(
+                        os.path.join(self.output_dir, f"unit={uh}"))

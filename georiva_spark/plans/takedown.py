@@ -57,7 +57,8 @@ from pyspark.sql import functions as F
 
 from georiva_spark.functions.fastexpr import in_longs, larr
 from georiva_spark.plans.engine import DerivationEngine, Trigger
-from georiva_spark.sources.commit import (atomic_write_json,
+from georiva_spark.sources.commit import (atomic_replace,
+                                          atomic_write_json,
                                           backend_for, read_token_json)
 
 __all__ = ["clear_hold", "corpus_takedown", "expire_shards",
@@ -178,16 +179,10 @@ def corpus_takedown(spark: SparkSession, corpus_dir: str,
                           {"digest": digest, "n_ids": len(ids),
                            "shards": dispatch, "completed": False},
                           who="corpus_takedown")
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        try:
-            (_prune_frame(corpus, affected, ids)
-             .write.mode("overwrite").partitionBy("shard")
-             .parquet(corpus_dir))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           old)
+        (_prune_frame(corpus, affected, ids)
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("shard").parquet(corpus_dir))
 
     pruned = spark.read.parquet(corpus_dir)
     digests = {r.shard: r for r in pruned
@@ -341,7 +336,7 @@ def expire_shards(spark: SparkSession, corpus_dir: str,
         if os.path.isdir(pdir):
             tomb = os.path.join(corpus_dir,
                                 f"_expired_{uuid.uuid4().hex[:8]}")
-            os.rename(pdir, tomb)
+            atomic_replace(pdir, tomb, who="expire_shards")
             shutil.rmtree(tomb, ignore_errors=True)
         if item is not None:
             affected = engine.invalidate_downstream([item["item_id"]])

@@ -5563,8 +5563,8 @@ def q_corpus_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact dedup) and chains the corpus-wide datacard +
     token-shard-manifest products through the declared DAG (T2) —
     dispatched as ONE batched level per stage (r14, guide §2.6), so
-    the independent unit writes overlap and each merge runs once over
-    the level's partials instead of once per arrival;
+    the independent units share each level's write and each merge
+    runs once over the level's partials instead of once per arrival;
     re-dispatching the last shard skips on input_hash (T3, exercised
     in-query). The chain is INCREMENTAL by construction (r11): each
     arrival computes per-shard PARTIALS (stats + generation-local
@@ -5932,15 +5932,9 @@ def q_takedown_hold(spark: SparkSession, sf_dir: str) -> DataFrame:
     redelivered = (sh1.unionByName(fresh)
                    .withColumn("shard", F.lit("shard-1")))
     admitted = hold_filter(redelivered, ht, "doc_id")
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                   "dynamic")
-    try:
-        (admitted.write.mode("overwrite").partitionBy("shard")
-         .parquet(corp))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       old)
+    (admitted.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("shard").parquet(corp))
     # the ingest stream's commit: checksum over ADMITTED content,
     # item update, engine dispatch (commit_shards' exact formula)
     d = (spark.read.parquet(corp)

@@ -26,16 +26,11 @@ def overwrite_slice(grid: DataFrame, path: str) -> None:
     """Deterministic partition overwrite (the replaceWhere/T3 idempotency
     primitive): dynamic partition-overwrite replaces exactly the partitions
     present in ``grid``, leaving the rest of the table untouched."""
-    spark = grid.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (grid.withColumn("date", F.to_date("time"))
-             .write.mode("overwrite")
-             .partitionBy("collection", "variable", "date")
-             .parquet(path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (grid.withColumn("date", F.to_date("time"))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("collection", "variable", "date")
+         .parquet(path))
 
 
 def read_grid(spark: SparkSession, path: str, *,

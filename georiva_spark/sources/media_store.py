@@ -41,17 +41,11 @@ def overwrite_media_slice(media: DataFrame, path: str,
     """Dynamic partition overwrite: replaces exactly the (kind, bucket)
     partitions present in ``media`` — re-ingesting a crawl batch is
     idempotent without touching the rest of the table."""
-    spark = media.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (with_bucket(media, n_buckets)
-         .write.mode("overwrite")
-         .partitionBy("kind", "bucket")
-         .parquet(path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (with_bucket(media, n_buckets)
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("kind", "bucket")
+     .parquet(path))
 
 
 def read_media(spark: SparkSession, path: str,

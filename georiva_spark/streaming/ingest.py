@@ -78,7 +78,7 @@ def start_grid_ingest(spark: SparkSession, landing_dir: str, grid_dir: str,
                 triggers.append(Trigger("staging_item", item))
             # one batched dispatch per micro-batch (r14, guide §2.6):
             # the slices are independent staging items, so their unit
-            # writes overlap instead of queueing one job at a time
+            # outputs share each level's write instead of one job each
             if triggers:
                 engine.dispatch_for_triggers(
                     triggers, origin=f"stream-batch-{batch_id}")
@@ -356,19 +356,9 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
                     f"redeliver atomically and opt in with "
                     f"recrawl='recompute', or use the "
                     f"manifest-committed start_corpus_deliveries")
-        # the conf must be set on the MICRO-BATCH's cloned session —
-        # foreachBatch writes run there, not on the outer session
-        # (the same per-session trap as the r7 relation-cache lesson)
-        bsp = batch.sparkSession
-        old = bsp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        bsp.conf.set("spark.sql.sources.partitionOverwriteMode",
-                     "dynamic")
-        try:
-            (batch.write.mode("overwrite").partitionBy("shard")
-             .parquet(corpus_dir))
-        finally:
-            bsp.conf.set("spark.sql.sources.partitionOverwriteMode",
-                         old)
+        (batch.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("shard").parquet(corpus_dir))
         ordered = sorted(digests, key=lambda r: r.shard)
         triggers = []
         for d in ordered:
@@ -387,11 +377,11 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
             triggers.append(Trigger("staging_item", item))
         # one batched engine dispatch for the micro-batch's shards
         # (r14, guide §2.6): the crawl shards are independent staging
-        # items — their clean/partial writes overlap, and the chained
-        # corpus-wide merges run ONCE over all of them instead of once
-        # per shard. The index/layout growth below is a separate
-        # surface with no engine dependency, so hoisting it after the
-        # dispatch loop reorders nothing it observes.
+        # items — their clean/partial units share each level's write,
+        # and the chained corpus-wide merges run ONCE over all of them
+        # instead of once per shard. The index/layout growth below is a
+        # separate surface with no engine dependency, so hoisting it
+        # after the dispatch loop reorders nothing it observes.
         if triggers:
             engine.dispatch_for_triggers(
                 triggers, origin=f"corpus-stream-batch-{batch_id}")
@@ -410,10 +400,13 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
                                                          dead_rules,
                                                          live_rows)
         from georiva_spark.operators.dedup import (
-            index_gen, minhash_index_append, minhash_index_has_gen,
-            minhash_index_params, minhash_index_probe,
+            _minhash_stamps, index_gen, minhash_index_append,
+            minhash_index_has_gen, minhash_index_probe,
             minhash_index_retract)
         gen = index_gen(shard, digest)
+        # one stamp read: the probe parameters and the tombstone
+        # tripwire's evidence that rules exist
+        p, stamps = _minhash_stamps(spark, neardup_table)
         # the guard reads on the SERVING session (refreshed after
         # every append below — the streaming/_loop.py contract);
         # appends write bands first, sigs last, so gen-in-sigs
@@ -434,7 +427,7 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
             # does not re-fire).
             sigs = live_rows(
                 spark.table(f"{neardup_table}_sigs"),
-                dead_rules(spark, neardup_table))
+                dead_rules(spark, neardup_table, stamps))
             stale = (sigs.where(
                 (F.substring_index("gen", GEN_SEP, 1) == shard)
                 & (F.col("gen") != gen)).limit(1).count() > 0)
@@ -445,7 +438,6 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
                 minhash_index_retract(spark, neardup_table, shard,
                                       keep_gen=gen)
                 spark.catalog.refreshTable(f"{neardup_table}_dead")
-        p = minhash_index_params(spark, neardup_table)
         ids = docs.select("doc_id")
         pairs = minhash_index_probe(
             docs, neardup_table, threshold=neardup_threshold,

@@ -736,6 +736,56 @@ def test_neardup_retraction_replay_safe_without_catalog(spark,
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_neardup_stream_leg_fails_by_name_when_rules_unadoptable(
+        spark, tmp_path, monkeypatch):
+    """The corpus stream's near-dup leg passes its one stamp read to
+    the tombstone tripwire. The unadoptable-restart setup of
+    test_dedup_index's stamp test — a retracted index whose ``_dead``
+    rule table the restarted session can neither find nor adopt — must
+    fail the batch BY NAME before the re-crawl check reads the
+    retracted generation as live, and leave the index unchanged."""
+    import os
+
+    from georiva_spark.operators import _tombstones as tb, dedup
+    from georiva_spark.streaming.ingest import start_corpus_ingest
+
+    land = str(tmp_path / "land")
+    corp = str(tmp_path / "corpus")
+    os.makedirs(land)
+    eng = _mk_engine(spark, corp, str(tmp_path / "out"))
+    seed = spark.createDataFrame(
+        [(1, SEED_TEXT, "en", "web", 1)],
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long")
+    t = "t_crmh4"
+    dedup.minhash_index_write(seed, t, str(tmp_path / "idx"),
+                              n_buckets=4)
+    try:
+        old = spark.createDataFrame(
+            [(10, SEED_TEXT.replace("tonight", "yesterday"))],
+            "doc_id long, text string")
+        dedup.minhash_index_append(old, t,
+                                   gen=dedup.index_gen("sA", "old-1"))
+        dedup.minhash_index_retract(spark, t, "sA")
+        # restart onto an HDFS-style warehouse: the catalog forgot the
+        # rule table AND the location helper cannot reach its files
+        spark.sql(f"DROP TABLE {t}_dead")
+        monkeypatch.setattr(tb, "_dead_location", lambda *a, **k: None)
+        _land(spark, tmp_path, land, "f0", [(11, NOVEL_A)], "sA")
+        q = start_corpus_ingest(
+            spark, land, corp, str(tmp_path / "ck"), eng,
+            max_files_per_trigger=1, available_now=True,
+            neardup_table=t, neardup_out_dir=str(tmp_path / "nd"))
+        with pytest.raises(Exception, match="georiva.has_tombstones"):
+            q.awaitTermination()
+        assert not spark.catalog.tableExists(f"{t}_dead")
+        assert spark.table(f"{t}_sigs").where("doc_id = 11").count() == 0
+    finally:
+        monkeypatch.undo()
+        for x in ("bands", "sigs", "dead"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}_{x}")
+
+
 def test_corpus_deliveries_manifest_mode_survives_file_splits(
         spark, tmp_path):
     """start_corpus_deliveries (r12): the manifest IS the atomic

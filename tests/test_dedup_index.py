@@ -842,10 +842,11 @@ def _recover_swap(spark, table):
 
 def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
                                                   monkeypatch):
-    """One probe call reads each table's stamps (SHOW TBLPROPERTIES —
-    a catalog round trip) at most once: the read is passed on
-    to the parameter checks, the quantizer-version check and the
-    tombstone tripwire instead of being repeated by each of them."""
+    """One probe (or ``ann_tune``) call reads each table's stamps
+    (SHOW TBLPROPERTIES — a catalog round trip) at most once: the
+    read is passed on to the parameter checks, the quantizer-version
+    check and the tombstone tripwire instead of being repeated by
+    each of them."""
     import collections
 
     import numpy as np
@@ -878,6 +879,9 @@ def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
             spark, "t_once_iv", qs, k=2),
         "ivf_pq_index_probe": lambda: similarity.ivf_pq_index_probe(
             spark, "t_once_pq", [0.0] * 8, k=2),
+        "ann_tune": lambda: similarity.ann_tune(
+            spark, "t_once_iv", 0.5, k=2, nprobes=(1, 2),
+            sample_ppm=500_000),
     }
     real_sql = type(spark).sql
     reads = collections.Counter()

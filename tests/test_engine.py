@@ -4,9 +4,12 @@ idempotency skip, hash-change recompute, readiness park + resurrection,
 origin stamping, lineage writes, transitive invalidation, reclaim."""
 
 import datetime as dt
+import json
+import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from georiva_spark.plans import (
     CatalogContext, DerivationEngine, RecipeRegistry, Trigger,
@@ -15,10 +18,14 @@ from georiva_spark.plans.recipes import ClimatologyRecipe, PromotionRecipe
 from georiva_spark.testing import grid_from_arrays, month_starts
 
 
-def _staging_catalog(spark, n_months=24, collection="src", start_year=2020):
-    """One staging item per monthly slice; constant value = year index + 1."""
+def _staging_catalog(spark, n_months=24, collection="src", start_year=2020,
+                     grids=None):
+    """One staging item per monthly slice; constant value = year index + 1.
+    ``grids`` (item id → grid), when given, is filled and stays the
+    loader's source, so a test can re-land a slice."""
     times = month_starts(dt.datetime(start_year, 1, 1), n_months)
-    items, grids = [], {}
+    items = []
+    grids = {} if grids is None else grids
     for i, t in enumerate(times):
         val = float(t.year - start_year + 1)
         items.append({"item_id": i + 1, "collection": collection,
@@ -406,3 +413,98 @@ def test_compaction_preserves_item_id_high_water_mark(spark, tmp_path):
     assert meta["max_item_id"] >= max_item
     eng2 = DerivationEngine(spark, reg, ctx, ledger_dir=led)
     assert eng2._next_item_id > max_item
+
+
+class _AboveHalfRecipe(PromotionRecipe):
+    """Test-local: promotes the first staging item's pixels whose value
+    is above 0.5, so re-landing that item at 0 derives an EMPTY
+    output."""
+    recipe_id = "above_half"
+
+    def enumerate_units(self, ctx):
+        return super().enumerate_units(ctx)[:1]
+
+    def transform(self, spark, unit, resolved):
+        item, df = super().transform(spark, unit, resolved)
+        return item, df.where(F.col("value") > 0.5)
+
+
+@pytest.fixture(scope="module")
+def level_run(spark, tmp_path_factory):
+    """ONE engine writing unit outputs to a real output_dir: a
+    climatology level of three units (value/anomaly/trend — one output
+    schema) and a one-unit ``above_half`` level, run under a job group.
+    Returns (engine, the loader's grids, run records, the jobs that
+    started during the run: grouped and ungrouped)."""
+    grids: dict = {}
+    ctx = _staging_catalog(spark, 24, grids=grids)
+    reg = RecipeRegistry()
+    reg.register(ClimatologyRecipe(
+        "src", "clim", periods=[(2020, 2021)],
+        quantities=["value", "anomaly", "trend"], baseline=(2020, 2020)))
+    reg.register(_AboveHalfRecipe("src", "above"))
+    eng = DerivationEngine(spark, reg, ctx, output_dir=str(
+        tmp_path_factory.mktemp("level_write")))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("engine-level-write", "engine level write")
+    try:
+        recs = eng.run_all()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = {"grouped": set(tracker.getJobIdsForGroup("engine-level-write")),
+            "ungrouped": set(tracker.getJobIdsForGroup(None)) - ungrouped}
+    return eng, grids, recs, jobs
+
+
+def test_level_write_keeps_the_callers_job_group(level_run):
+    """Every unit write runs on the caller's thread: no job started
+    during a multi-unit level lacks the caller's job group (driver
+    pool threads drop PySpark local properties)."""
+    _, _, recs, jobs = level_run
+    assert len(recs) == 4 and {r.status for r in recs} == {"completed"}
+    assert jobs["grouped"]
+    assert not jobs["ungrouped"], sorted(jobs["ungrouped"])
+
+
+def test_level_write_partitions_equal_unit_transforms(spark, level_run):
+    """Each unit's ``unit=<hash>`` read-back equals its transform's
+    output: same columns, same rows."""
+    eng, _, recs, _ = level_run
+    for rec in recs:
+        recipe = eng.registry.get(rec.recipe_id)
+        unit = json.loads(rec.unit_key)
+        _, want = recipe.transform(
+            spark, unit, recipe.resolve_inputs(unit, eng.catalog))
+        got = spark.read.parquet(
+            os.path.join(eng.output_dir, f"unit={rec.unit_hash}"))
+        assert got.columns == want.columns, rec.unit_key
+        assert got.count() == want.count() > 0, rec.unit_key
+        assert got.exceptAll(want).isEmpty(), rec.unit_key
+        assert want.exceptAll(got).isEmpty(), rec.unit_key
+
+
+def test_level_write_rederived_empty_output_reads_empty(spark,
+                                                       level_run):
+    """Dynamic partition overwrite replaces only the partitions that
+    receive rows: a re-derived unit whose new output is EMPTY must read
+    back as 0 rows with the unit's schema — not its old rows, and not
+    a missing path."""
+    from georiva_spark.testing import grid_from_arrays
+
+    eng, grids, recs, _ = level_run
+    above = next(r for r in recs if r.recipe_id == "above_half")
+    path = os.path.join(eng.output_dir, f"unit={above.unit_hash}")
+    old = spark.read.parquet(path)
+    assert old.count() == 4
+    item = eng.catalog.items[0]
+    grids[item["item_id"]] = grid_from_arrays(
+        spark, np.zeros((2, 2)), [item["time"]], collection="src")
+    item["checksum"] = "sha-0-zeroed"
+    redone = [r for r in eng.run_all() if r.recipe_id == "above_half"]
+    assert [r.status for r in redone] == ["completed"]
+    got = spark.read.parquet(path)
+    assert got.count() == 0
+    assert got.schema.simpleString() == old.schema.simpleString()

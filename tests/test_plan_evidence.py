@@ -933,21 +933,17 @@ def test_python_boundary_audit_current():
         f"allowlist ONLY for empty-frame short-circuits.")
 
 
-def test_index_stamp_audit_current():
-    """Index parameter stamps have ONE home: operators/_index_table.py
-    is the only module whose code spells a TBLPROPERTIES statement.
-    Every other index family reads and writes its stamps through it —
-    a hand-rolled SHOW/ALTER … TBLPROPERTIES anywhere else fails here.
-    Docstrings and comments may still name the mechanism."""
+def _package_code(skip=()):
+    """(module path relative to georiva_spark/, parsed AST, ids of its
+    docstring nodes) for every package module not in ``skip`` — the
+    shared walk of the source audits below, which judge code and let
+    docstrings and comments name a mechanism freely."""
     import ast
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "georiva_spark"
-    home = pkg / "operators" / "_index_table.py"
-    assert "TBLPROPERTIES" in home.read_text()
-    found = []
     for py in sorted(pkg.rglob("*.py")):
-        if py == home:
+        if py in skip:
             continue
         tree = ast.parse(py.read_text())
         docstrings = {
@@ -956,16 +952,68 @@ def test_index_stamp_audit_current():
                                  ast.FunctionDef, ast.AsyncFunctionDef))
             and node.body and isinstance(node.body[0], ast.Expr)
             and isinstance(node.body[0].value, ast.Constant)}
-        found += [f"{py.relative_to(pkg)}:{node.lineno}"
-                  for node in ast.walk(tree)
-                  if isinstance(node, ast.Constant)
-                  and isinstance(node.value, str)
-                  and "TBLPROPERTIES" in node.value.upper()
-                  and id(node) not in docstrings]
+        yield py.relative_to(pkg), tree, docstrings
+
+
+def _code_strings(tree, docstrings, needle: str) -> list:
+    """Line numbers of the string constants (docstrings excluded)
+    that contain ``needle``, case-insensitively."""
+    import ast
+    return [node.lineno for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and needle.upper() in node.value.upper()
+            and id(node) not in docstrings]
+
+
+def test_index_stamp_audit_current():
+    """Index parameter stamps have ONE home: operators/_index_table.py
+    is the only module whose code spells a TBLPROPERTIES statement.
+    Every other index family reads and writes its stamps through it —
+    a hand-rolled SHOW/ALTER … TBLPROPERTIES anywhere else fails here.
+    Docstrings and comments may still name the mechanism."""
+    from pathlib import Path
+
+    home = (Path(__file__).resolve().parents[1] / "georiva_spark"
+            / "operators" / "_index_table.py")
+    assert "TBLPROPERTIES" in home.read_text()
+    found = [f"{rel}:{line}"
+             for rel, tree, docs in _package_code(skip=(home,))
+             for line in _code_strings(tree, docs, "TBLPROPERTIES")]
     assert not found, (
         f"TBLPROPERTIES statements outside operators/_index_table.py: "
         f"{found} — read stamps with _index_table.props and write them "
         f"with _index_table.stamp")
+
+
+def test_write_mechanism_audit_current():
+    """One way to write partitions, and no driver thread pools: a
+    partition overwrite names ``.option("partitionOverwriteMode",
+    "dynamic")`` on its own writer — flipping the session-global
+    ``spark.sql.sources.partitionOverwriteMode`` conf races every
+    concurrent writer of the session — and nothing in the package
+    starts a ``ThreadPoolExecutor`` (pool threads drop PySpark local
+    properties, so their jobs lose the caller's job group; the engine
+    writes each level as one partitioned job instead)."""
+    import ast
+
+    found = []
+    for rel, tree, docs in _package_code():
+        found += [f"{rel}:{line} session conf"
+                  for line in _code_strings(
+                      tree, docs, "spark.sql.sources.partitionOverwriteMode")]
+        found += [f"{rel}:{node.lineno} ThreadPoolExecutor"
+                  for node in ast.walk(tree)
+                  if (isinstance(node, ast.Name)
+                      and node.id == "ThreadPoolExecutor")
+                  or (isinstance(node, ast.Attribute)
+                      and node.attr == "ThreadPoolExecutor")
+                  or (isinstance(node, ast.alias)
+                      and node.name == "ThreadPoolExecutor")]
+    assert not found, (
+        f"{found} — write partitions with .option("
+        f"'partitionOverwriteMode', 'dynamic') and submit Spark jobs "
+        f"from the caller's thread")
 
 
 def test_corpus_pipeline_composition_keeps_plan_shapes(spark):
