@@ -819,10 +819,8 @@ def hamming_index_probe(new_codes: DataFrame, table: str,
     # taken-down ids (r13) vanish at the MEMBERSHIP expansion — a
     # band-matched code whose only members are dead yields no pair
     # rows
-    ib = _live_doc_rows(
-        _live_rows(spark.table(f"{table}_ids"),
-                   _dead_rules(spark, table, stamps)),
-        _dead_docs(spark, table, stamps), "id").select(
+    ib = _live_filter(spark, table, stamps, "id")(
+        spark.table(f"{table}_ids")).select(
         F.col("ref").alias("__rb"), F.col("id").alias("id_old"))
     return (cand.join(da, "__ra").join(ib, "__rb")
             .where(F.col("id_new") != F.col("id_old"))
@@ -891,10 +889,8 @@ def hamming_index_lookup(new_codes: DataFrame, table: str,
             .select("__ra", "__rb", ham.alias("hamming"))
             .where(F.col("hamming") <= p["max_hamming"])
             .dropDuplicates(["__ra", "__rb"]))
-    ids_tbl = _live_doc_rows(
-        _live_rows(spark.table(f"{table}_ids"),
-                   _dead_rules(spark, table, stamps)),
-        _dead_docs(spark, table, stamps), "id")
+    ids_tbl = _live_filter(spark, table, stamps, "id")(
+        spark.table(f"{table}_ids"))
     if exclude_ids is not None:
         ex = exclude_ids.select(
             F.col(exclude_ids.columns[0]).alias("id"))
@@ -944,16 +940,8 @@ def hamming_index_append(new_codes: DataFrame, table: str,
 
     spark = new_codes.sparkSession
     p, stamps = _hamming_stamps(spark, table)
-    if "gen" not in spark.table(f"{table}_ids").columns:
-        if gen:
-            raise ValueError(
-                f"hamming_index_append: {table!r} is an unversioned "
-                f"(pre-r12) layout without a gen column — it cannot "
-                f"take generation-tagged appends; rebuild it with "
-                f"hamming_index_write to make shards retractable")
-        gen_cols = []
-    else:
-        gen_cols = [F.lit(gen).alias("gen")]
+    gen_cols = _gen_cols(spark, table, "hamming", gen,
+                         "hamming_index_append")
     ref, is_arr = _code_ref(new_codes, code_col)
     if bool(p["arr"]) != is_arr:
         raise ValueError(
@@ -992,10 +980,8 @@ def hamming_index_append(new_codes: DataFrame, table: str,
     delta_ids = base.select(_code_ref(base, "code")[0].alias("ref"), "id")
     # LIVE rows only: a dead (tombstoned) membership must not block
     # re-admission of the same (ref, id) under the new generation
-    existing = (_live_doc_rows(
-                    _live_rows(spark.table(f"{table}_ids"),
-                               _dead_rules(spark, table, stamps)),
-                    _dead_docs(spark, table, stamps), "id")
+    existing = (_live_filter(spark, table, stamps, "id")(
+                    spark.table(f"{table}_ids"))
                 .join(delta_ids.select("ref").distinct(), "ref",
                       "left_semi"))
     (delta_ids.join(existing, ["ref", "id"], "left_anti")
@@ -1017,20 +1003,7 @@ def hamming_index_retract(spark, table: str, shard: str,
     expansion); :func:`hamming_index_compact` purges them physically,
     drops band rows whose code has no live member left, and clears
     the rules."""
-    if not shard:
-        raise ValueError(
-            "hamming_index_retract: shard must be non-empty — "
-            "retracting the unversioned '' base would tombstone the "
-            "whole index")
-    if "gen" not in spark.table(f"{table}_ids").columns:
-        raise ValueError(
-            f"hamming_index_retract: {table!r} is an unversioned "
-            f"(pre-r12) layout without a gen column — its membership "
-            f"rows carry no generation to retract; rebuild it with "
-            f"hamming_index_write")
-    _retract(spark, table, shard, keep_gen,
-             who="hamming_index_retract",
-             stamp_table=f"{table}_bands")
+    _retract(spark, table, "hamming", shard, keep_gen)
 
 
 def hamming_index_retract_docs(spark, table: str, ids) -> None:
@@ -1041,9 +1014,7 @@ def hamming_index_retract_docs(spark, table: str, ids) -> None:
     :func:`hamming_index_compact` drops it physically). ``ids`` is
     the bounded id list of the request; works on any layout including
     unversioned pre-r12 indexes."""
-    _retract_docs(spark, table, ids,
-                  who="hamming_index_retract_docs",
-                  stamp_table=f"{table}_bands")
+    _retract_docs(spark, table, "hamming", ids)
 
 
 def hamming_index_compact(spark, table: str, path: str) -> None:
@@ -1055,18 +1026,15 @@ def hamming_index_compact(spark, table: str, path: str) -> None:
     whose code has no live member left are dropped (a retracted-only
     code stops generating candidates at all), and the rule table
     clears AFTER both swaps."""
-    from georiva_spark.operators._tombstones import clear_rules
     from georiva_spark.sources.bucketing import (atomic_swap_table,
                                                  write_bucketed)
 
     p, stamps = _hamming_stamps(spark, table)
     _validate_single_writer(spark, table)
-    dead = _dead_rules(spark, table, stamps)
-    ddocs = _dead_docs(spark, table, stamps)
-    live_ids = _live_doc_rows(
-        _live_rows(spark.table(f"{table}_ids"), dead), ddocs, "id")
+    live_ids = _live_filter(spark, table, stamps, "id")(
+        spark.table(f"{table}_ids"))
     bands_tbl = spark.table(f"{table}_bands")
-    if dead is not None or ddocs is not None:
+    if _has_rules(spark, table):
         bands_tbl = bands_tbl.join(
             live_ids.select("ref").distinct(), "ref", "left_semi")
     write_bucketed(bands_tbl,
@@ -1081,9 +1049,8 @@ def hamming_index_compact(spark, table: str, path: str) -> None:
                        _index_table.params(stamps))
     for suffix in ("bands", "ids"):
         atomic_swap_table(spark, f"{table}_{suffix}")
-    if dead is not None or ddocs is not None:
-        # applied-then-cleared (safe order)
-        clear_rules(spark, table, stamp_table=f"{table}_bands")
+    # applied-then-cleared (safe order)
+    _clear_rules(spark, table, stamp_table=f"{table}_bands")
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.3,
@@ -1285,10 +1252,10 @@ def line_dedup(docs: DataFrame, *, delim: str = "\n", max_line_df: int = 1,
 # Hamming and IVF families — operators/_tombstones.py is the one
 # implementation
 from georiva_spark.operators._tombstones import (  # noqa: E402
-    GEN_SEP, dead_doc_rules as _dead_docs,
-    dead_rules as _dead_rules, live_doc_rows as _live_doc_rows,
-    live_rows as _live_rows, make_gen as index_gen,
-    retract as _retract, retract_docs as _retract_docs,
+    clear_rules as _clear_rules, gen_cols as _gen_cols,
+    has_rules as _has_rules, live_filter as _live_filter,
+    make_gen as index_gen, retract as _retract,
+    retract_docs as _retract_docs,
     validate_single_writer as _validate_single_writer,
 )
 
@@ -1382,18 +1349,17 @@ def minhash_index_append(docs: DataFrame, table: str,
     :func:`minhash_index_retract` can later tombstone them (T5);
     appending a tagged generation into a pre-r12 unversioned layout
     fails by name (rebuild the index to make it retractable)."""
+    _minhash_append(docs, table,
+                    minhash_index_params(docs.sparkSession, table), gen)
+
+
+def _minhash_append(docs: DataFrame, table: str, p: dict,
+                    gen: str) -> None:
+    """:func:`minhash_index_append` with the signature parameters
+    ``p`` already read from the stamps."""
     spark = docs.sparkSession
-    p = minhash_index_params(spark, table)
-    if "gen" not in spark.table(f"{table}_bands").columns:
-        if gen:
-            raise ValueError(
-                f"minhash_index_append: {table!r} is an unversioned "
-                f"(pre-r12) layout without a gen column — it cannot "
-                f"take generation-tagged appends; rebuild it with "
-                f"minhash_index_write to make shards retractable")
-        gen_cols = []
-    else:
-        gen_cols = [F.lit(gen).alias("gen")]
+    gen_cols = _gen_cols(spark, table, "minhash", gen,
+                         "minhash_index_append")
     from pyspark import StorageLevel
 
     from georiva_spark.operators._retention import persist_bounded
@@ -1419,7 +1385,6 @@ def minhash_index_append(docs: DataFrame, table: str,
     # cached file listing that silently misses the new files (the
     # probe-then-grow loops; relation caches are per-session — the
     # serving session must refresh separately, see streaming/corpus.py)
-    spark = docs.sparkSession
     spark.catalog.refreshTable(f"{table}_bands")
     spark.catalog.refreshTable(f"{table}_sigs")
 
@@ -1444,20 +1409,7 @@ def minhash_index_retract(spark, table: str, shard: str,
     physically and clears the rules. Single-writer: retracts and
     compactions are the stream's to sequence (the same contract as
     appends)."""
-    if not shard:
-        raise ValueError(
-            "minhash_index_retract: shard must be non-empty — "
-            "retracting the unversioned '' base would tombstone the "
-            "whole index")
-    if "gen" not in spark.table(f"{table}_bands").columns:
-        raise ValueError(
-            f"minhash_index_retract: {table!r} is an unversioned "
-            f"(pre-r12) layout without a gen column — its rows carry "
-            f"no generation to retract; rebuild it with "
-            f"minhash_index_write")
-    _retract(spark, table, shard, keep_gen,
-             who="minhash_index_retract",
-             stamp_table=f"{table}_bands")
+    _retract(spark, table, "minhash", shard, keep_gen)
 
 
 def minhash_index_retract_docs(spark, table: str, doc_ids) -> None:
@@ -1472,9 +1424,7 @@ def minhash_index_retract_docs(spark, table: str, doc_ids) -> None:
     band + signature rows physically and clears the rules. Works on
     any layout including unversioned pre-r12 indexes (the filter
     keys on doc_id, not the gen)."""
-    _retract_docs(spark, table, doc_ids,
-                  who="minhash_index_retract_docs",
-                  stamp_table=f"{table}_bands")
+    _retract_docs(spark, table, "minhash", doc_ids)
 
 
 def minhash_index_has_gen(spark, table: str, gen: str) -> bool:
@@ -1517,12 +1467,7 @@ def minhash_index_compact(spark, table: str, path: str) -> None:
 
     p, stamps = _minhash_stamps(spark, table)
     _validate_single_writer(spark, table)
-    dead = _dead_rules(spark, table, stamps)
-    ddocs = _dead_docs(spark, table, stamps)
-
-    def live(df):
-        return _live_doc_rows(_live_rows(df, dead), ddocs, "doc_id")
-
+    live = _live_filter(spark, table, stamps, "doc_id")
     write_bucketed(live(spark.table(f"{table}_bands")),
                    f"{table}_bands_compact", ["band", "bucket"],
                    p["n_buckets"], f"{path}/bands",
@@ -1537,16 +1482,13 @@ def minhash_index_compact(spark, table: str, path: str) -> None:
                        _index_table.params(stamps))
     for suffix in ("bands", "sigs"):
         atomic_swap_table(spark, f"{table}_{suffix}")
-    if dead is not None or ddocs is not None:
-        # clear_rules, NOT a raw DROP (r13, ADVICE): an ADOPTED
-        # (post-restart, external) rule table keeps its files under a
-        # bare DROP, and the next probe's _ensure_registered would
-        # re-adopt the stale rules — permanently tombstoning any later
-        # live generation that isn't the stale keep_gen. clear_rules
-        # removes the location too (applied-then-cleared safe order,
-        # matching hamming_index_compact / ivf_index_compact).
-        from georiva_spark.operators._tombstones import clear_rules
-        clear_rules(spark, table, stamp_table=f"{table}_bands")
+    # clear_rules, NOT a raw DROP (r13, ADVICE): an ADOPTED
+    # (post-restart, external) rule table keeps its files under a bare
+    # DROP, and the next probe would re-adopt the stale rules —
+    # permanently tombstoning any later live generation that isn't the
+    # stale keep_gen (applied-then-cleared safe order, matching
+    # hamming_index_compact / ivf_index_compact)
+    _clear_rules(spark, table, stamp_table=f"{table}_bands")
 
 
 def minhash_index_probe(new_docs: DataFrame, table: str,
@@ -1567,11 +1509,21 @@ def minhash_index_probe(new_docs: DataFrame, table: str,
     mismatch raises instead of silently yielding wrong bucket keys
     (tables without the stamp, e.g. temp-view controls, skip the
     check)."""
+    return _minhash_probe(
+        new_docs, table,
+        _index_table.props(new_docs.sparkSession, f"{table}_bands",
+                           missing_ok=True),
+        threshold, num_hashes, bands, n, text_col)
+
+
+def _minhash_probe(new_docs: DataFrame, table: str, stamps: dict,
+                   threshold: float, num_hashes: int, bands: int, n: int,
+                   text_col: str) -> DataFrame:
+    """:func:`minhash_index_probe` with ``{table}_bands``' stamps
+    already read."""
     from pyspark import StorageLevel
 
     spark = new_docs.sparkSession
-    stamps = _index_table.props(spark, f"{table}_bands",
-                                missing_ok=True)
     stored = {name: _index_table.get(stamps, name)
               for name in ("num_hashes", "bands", "n")}
     if any(v is not None for v in stored.values()):
@@ -1601,20 +1553,15 @@ def minhash_index_probe(new_docs: DataFrame, table: str,
     # doc_ids (r13) are filtered out of BOTH index sides via the
     # broadcast-tiny tombstone rules — a probe never matches content
     # that no longer exists
-    dead = _dead_rules(spark, table, stamps)
-    ddocs = _dead_docs(spark, table, stamps)
-    idx = _live_doc_rows(
-        _live_rows(spark.table(f"{table}_bands"), dead),
-        ddocs, "doc_id")
+    live = _live_filter(spark, table, stamps, "doc_id")
+    idx = live(spark.table(f"{table}_bands"))
     cand = (banded_new.join(idx, ["band", "bucket"])
             .where(F.col("doc_new") != F.col("doc_id"))
             .select("doc_new", F.col("doc_id").alias("doc_old"))
             .dropDuplicates(["doc_new", "doc_old"]))
     a = sig_new.select(F.col("doc_id").alias("doc_new"),
                        F.col("signature").alias("sig_a"))
-    b = _live_doc_rows(
-        _live_rows(spark.table(f"{table}_sigs"), dead),
-        ddocs, "doc_id").select(
+    b = live(spark.table(f"{table}_sigs")).select(
         F.col("doc_id").alias("doc_old"),
         F.col("signature").alias("sig_b"))
     est = (F.size(F.filter(F.zip_with("sig_a", "sig_b",

@@ -12,8 +12,7 @@ import itertools
 
 from georiva_spark.functions import fastexpr
 from georiva_spark.functions.vectors import cosine_similarity, dot
-from georiva_spark.operators import _index_table
-from georiva_spark.operators._tombstones import clear_rules
+from georiva_spark.operators import _index_table, _tombstones
 from georiva_spark.operators.textops import portable_hash64
 
 # centering offset for the portable (md5-derived, 60-bit unsigned) plane
@@ -306,21 +305,6 @@ def _argmin_cell(cents: list[list[float]]):
         [fastexpr.l2_sql("embedding", c) for c in cents])
 
 
-def _gen_cols(spark, table: str, gen: str, who: str) -> list:
-    """The generation-tag column for an index append — empty for an
-    unversioned pre-r12 layout (which refuses TAGGED appends by name:
-    it could never retract them)."""
-    if "gen" not in spark.table(table).columns:
-        if gen:
-            raise ValueError(
-                f"{who}: {table!r} is an unversioned (pre-r12) "
-                f"layout without a gen column — it cannot take "
-                f"generation-tagged appends; rebuild the index to "
-                f"make shards retractable")
-        return []
-    return [F.lit(gen).alias("gen")]
-
-
 #: quantizer sidecar suffix -> (key column, vector column): bounded
 #: model state, row ``key = i`` holding vector i
 _SIDECARS = {"_centroids": ("cell", "embedding"),
@@ -351,24 +335,6 @@ def _read_sidecar(spark, table: str, suffix: str) -> list:
             for r in sorted(rows, key=lambda r: r[key])]
 
 
-def _live_table(spark, table: str, stamps: dict) -> DataFrame:
-    """The index table with tombstoned generations (r12) AND
-    taken-down vec_ids (r13) filtered out — the shared T5 machinery,
-    operators/_tombstones.py: broadcast anti-joins of the bounded
-    ``{table}_dead`` / ``{table}_dead_docs`` rule tables, with the
-    table's already-read ``stamps`` as the adoption tripwire's
-    witness. Partition pruning on ``cell`` is unaffected (the filters
-    sit above the scan), and unversioned layouts pass through
-    untouched."""
-    from georiva_spark.operators._tombstones import (dead_doc_rules,
-                                                     dead_rules,
-                                                     live_doc_rows,
-                                                     live_rows)
-    return live_doc_rows(
-        live_rows(spark.table(table), dead_rules(spark, table, stamps)),
-        dead_doc_rules(spark, table, stamps), "vec_id")
-
-
 def ivf_index_retract(spark, table: str, shard: str,
                       keep_gen: str = "") -> None:
     """Retract a re-crawled embedding shard's DEAD vectors from a
@@ -381,18 +347,7 @@ def ivf_index_retract(spark, table: str, shard: str,
     tuning (:func:`ann_recall_estimate`, :func:`ann_tune`) also see
     only live rows — dead vectors neither serve as queries nor count
     as truth."""
-    from georiva_spark.operators._tombstones import retract
-    if not shard:
-        raise ValueError(
-            "ivf_index_retract: shard must be non-empty — retracting "
-            "the unversioned '' base would tombstone the whole index")
-    if "gen" not in spark.table(table).columns:
-        raise ValueError(
-            f"ivf_index_retract: {table!r} is an unversioned "
-            f"(pre-r12) layout without a gen column — its rows carry "
-            f"no generation to retract; rebuild the index")
-    retract(spark, table, shard, keep_gen, who="ivf_index_retract",
-            stamp_table=table)
+    _tombstones.retract(spark, table, "ivf", shard, keep_gen)
 
 
 def ivf_index_retract_docs(spark, table: str, vec_ids) -> None:
@@ -401,13 +356,11 @@ def ivf_index_retract_docs(spark, table: str, vec_ids) -> None:
     the bounded id list of the request (legal takedown /
     right-to-be-forgotten names items, not crawl shards). Probes,
     recall calibration, and tuning stop seeing the vectors
-    immediately (a second broadcast anti-join in ``_live_table``);
+    immediately (a second broadcast anti-join in the live filter);
     the compactions purge them physically and clear the rules. Works
     on any layout including unversioned pre-r12 indexes (the filter
     keys on vec_id, not the gen)."""
-    from georiva_spark.operators._tombstones import retract_docs
-    retract_docs(spark, table, vec_ids, who="ivf_index_retract_docs",
-                 stamp_table=table)
+    _tombstones.retract_docs(spark, table, "ivf", vec_ids)
 
 
 def ivf_index_write(emb: DataFrame, table: str, path: str,
@@ -515,7 +468,8 @@ def ivf_index_append(emb: DataFrame, table: str,
     spark = emb.sparkSession
     _index_table.check_quantizer_sync(
         spark, table, _index_table.props(spark, table), ("_centroids",))
-    gen_cols = _gen_cols(spark, table, gen, "ivf_index_append")
+    gen_cols = _tombstones.gen_cols(spark, table, "ivf", gen,
+                                    "ivf_index_append")
     cents = _read_sidecar(spark, table, "_centroids")
     if not cents:
         raise ValueError(f"{table!r} has no centroid sidecar — not an "
@@ -571,9 +525,7 @@ def ivf_index_compact(spark, table: str, path: str,
     never be corpus-sized."""
     from georiva_spark.sources.bucketing import atomic_swap_table
 
-    from georiva_spark.operators._tombstones import \
-        validate_single_writer
-    validate_single_writer(spark, table)
+    _tombstones.validate_single_writer(spark, table)
     stamps = _index_table.props(spark, table)
     params = _index_table.params(stamps)
     if retrain_iters > 0:
@@ -583,7 +535,8 @@ def ivf_index_compact(spark, table: str, path: str,
                 "embeddings to retrain from — use "
                 "ivf_pq_index_compact(emb=..., retrain_iters=...)")
         k, = _index_table.require(stamps, table, "IVF", "n_centroids")
-        corpus = _live_table(spark, table, stamps).drop("cell")
+        corpus = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+            spark.table(table)).drop("cell")
         cents = kmeans_centroids(corpus, k=k, iters=retrain_iters,
                                  sample_ppm=train_sample_ppm)
         staged = corpus.withColumn("cell", _argmin_cell(cents))
@@ -603,9 +556,10 @@ def ivf_index_compact(spark, table: str, path: str,
         atomic_swap_table(spark, f"{table}_centroids")
         atomic_swap_table(spark, table)
         # tombstones applied, then cleared
-        clear_rules(spark, table, stamp_table=table)
+        _tombstones.clear_rules(spark, table, stamp_table=table)
         return
-    cur = _live_table(spark, table, stamps)
+    cur = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+        spark.table(table))
     (cur.repartition("cell")
      .write.mode("overwrite").format("parquet")
      .partitionBy("cell").option("path", path)
@@ -617,7 +571,7 @@ def ivf_index_compact(spark, table: str, path: str,
         _index_table.stamp(spark, f"{table}_compact", params)
     atomic_swap_table(spark, table)
     # tombstones applied, then cleared
-    clear_rules(spark, table, stamp_table=table)
+    _tombstones.clear_rules(spark, table, stamp_table=table)
 
 
 def ivf_pq_index_compact(spark, table: str, path: str,
@@ -652,9 +606,7 @@ def ivf_pq_index_compact(spark, table: str, path: str,
     if retrain_iters <= 0:
         ivf_index_compact(spark, table, path)
         return
-    from georiva_spark.operators._tombstones import \
-        validate_single_writer
-    validate_single_writer(spark, table)
+    _tombstones.validate_single_writer(spark, table)
     stamps = _index_table.props(spark, table)
     m, nbits, n_centroids = _index_table.require(
         stamps, table, "ivf_pq", "pq_m", "pq_nbits", "n_centroids")
@@ -670,7 +622,8 @@ def ivf_pq_index_compact(spark, table: str, path: str,
     # r13 taken-down vec_ids) and keep each row's generation for the
     # re-encoded table (gen-less layouts still honor doc takedowns)
     gen_map = None
-    live = _live_table(spark, table, stamps)
+    live = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+        spark.table(table))
     if "gen" in live.columns:
         gen_map = live.select("vec_id", "gen")
     emb = emb.join(live.select("vec_id"), "vec_id", "left_semi")
@@ -712,7 +665,7 @@ def ivf_pq_index_compact(spark, table: str, path: str,
         atomic_swap_table(spark, f"{table}{sc}")
     atomic_swap_table(spark, table)
     # tombstones applied, then cleared
-    clear_rules(spark, table, stamp_table=table)
+    _tombstones.clear_rules(spark, table, stamp_table=table)
 
 
 def ivf_index_probe(spark, table: str, query_vec, k: int = 5,
@@ -749,8 +702,8 @@ def ivf_index_probe(spark, table: str, query_vec, k: int = 5,
 
     qlit = F.expr(fastexpr.darr(q))
     cos = cosine_similarity(F.col("embedding"), qlit)
-    scan = _live_table(spark, table, stamps).where(
-        F.col("cell").isin(probe_cells))
+    scan = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+        spark.table(table)).where(F.col("cell").isin(probe_cells))
     if candidate_filter is not None:
         scan = scan.where(candidate_filter)
     if exclude_vec_id is not None:
@@ -839,8 +792,8 @@ def ivf_index_probe_batch(spark, table: str, queries: DataFrame,
     # once before the static filter reads it.
     n_queries, live_cells = _fanout_gate(probed)
     cos = cosine_similarity(F.col("embedding"), F.col("qe"))
-    scan = _live_table(spark, table, stamps).where(
-        F.col("cell").isin(live_cells))
+    scan = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+        spark.table(table)).where(F.col("cell").isin(live_cells))
     if candidate_filter is not None:
         scan = scan.where(candidate_filter)
     if n_queries <= max_broadcast_queries:
@@ -1512,7 +1465,8 @@ def ivf_pq_index_append(emb: DataFrame, table: str,
     per-session cache hazard). ``gen`` tags the appended rows for
     :func:`ivf_index_retract` (T5)."""
     spark = emb.sparkSession
-    gen_cols = _gen_cols(spark, table, gen, "ivf_pq_index_append")
+    gen_cols = _tombstones.gen_cols(spark, table, "ivf", gen,
+                                    "ivf_pq_index_append")
     m, nbits, residual, opq = _pq_stamps(
         spark, table, _index_table.props(spark, table))
     cents = _read_sidecar(spark, table, "_centroids")
@@ -1602,8 +1556,8 @@ def ivf_pq_index_probe(spark, table: str, query_vec, k: int = 5,
     else:
         adc = F.expr(adc_for(q))
 
-    scan = _live_table(spark, table, stamps).where(
-        F.col("cell").isin(probe_cells))
+    scan = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+        spark.table(table)).where(F.col("cell").isin(probe_cells))
     if candidate_ids is not None:
         ids = candidate_ids.select(
             F.col(candidate_ids.columns[0]).alias("vec_id"))
@@ -1778,8 +1732,8 @@ def ivf_pq_index_probe_batch(spark, table: str, queries: DataFrame,
     # returns gate count + probed-cell union together (r13)
     n_queries, live_cells = _fanout_gate(probed)
     adc = _pq_adc_score(m, nbits, ncw)
-    scan = _live_table(spark, table, stamps).where(
-        F.col("cell").isin(live_cells))
+    scan = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+        spark.table(table)).where(F.col("cell").isin(live_cells))
     if candidate_ids is not None:
         ids = candidate_ids.select(
             F.col(candidate_ids.columns[0]).alias("vec_id"))
@@ -1956,8 +1910,8 @@ def _grid_probe_settings(spark, table: str, props: dict,
             fan.select("q_id", "qe", "__pos", "cell"),
             "ann_recall_estimate.probed", StorageLevel.MEMORY_AND_DISK)
     n_queries, live_cells = _fanout_gate(probed)
-    scan = _live_table(spark, table, props).where(
-        F.col("cell").isin(live_cells))
+    scan = _tombstones.live_filter(spark, table, props, "vec_id")(
+        spark.table(table)).where(F.col("cell").isin(live_cells))
     small = n_queries <= max_broadcast_queries
     if small:
         cand = scan.join(F.broadcast(probed), "cell")
@@ -2100,7 +2054,8 @@ def _recall_estimate(spark, table: str, props: dict, k: int,
         raise ValueError(
             "ann_recall_estimate: shortlist applies to PQ refine "
             "probes; a float index probes exactly at stage 1")
-    corpus = (emb if is_pq else _live_table(spark, table, props)) \
+    corpus = (emb if is_pq else _tombstones.live_filter(
+        spark, table, props, "vec_id")(spark.table(table))) \
         .select("vec_id", "embedding")
     h = F.md5(F.concat_ws(":", F.lit(salt),
                           F.col("vec_id").cast("string")))
@@ -2200,8 +2155,8 @@ def ann_tune(spark, table: str, target_recall: float, k: int = 5,
     n_cents, = _index_table.require(props, table, "IVF", "n_centroids")
     rows = _recall_estimate(spark, table, props, k, nprobes, sample_ppm,
                             emb, shortlist, salt, max_broadcast_queries)
-    n = F.broadcast(_live_table(spark, table, props)
-                    .agg(F.count(F.lit(1)).alias("__n")))
+    n = F.broadcast(_tombstones.live_filter(spark, table, props, "vec_id")(
+        spark.table(table)).agg(F.count(F.lit(1)).alias("__n")))
     per_probe = F.expr(f"(__n + {n_cents} - 1) div {n_cents}")
     cost = (F.col("nprobe").cast("long") * per_probe
             + F.col("shortlist").cast("long"))
@@ -2243,7 +2198,8 @@ def _measured_candidates(spark, table: str, props: dict,
     frame here is bounded by the sample or by C, and the one corpus
     touch is the histogram's map-side-combined count."""
     is_pq = _index_table.get(props, "pq_m") is not None
-    corpus = (emb if is_pq else _live_table(spark, table, props)) \
+    corpus = (emb if is_pq else _tombstones.live_filter(
+        spark, table, props, "vec_id")(spark.table(table))) \
         .select("vec_id", "embedding")
     h = F.md5(F.concat_ws(":", F.lit(salt),
                           F.col("vec_id").cast("string")))
@@ -2259,8 +2215,9 @@ def _measured_candidates(spark, table: str, props: dict,
     cells = F.expr(fastexpr.route_cells_sql("embedding", cents, maxnp))
     fan = queries.select("q_id",
                          F.posexplode(cells).alias("__pos", "cell"))
-    sizes = (_live_table(spark, table, props).groupBy("cell")
-             .agg(F.count(F.lit(1)).alias("__sz")))
+    sizes = (_tombstones.live_filter(spark, table, props, "vec_id")(
+        spark.table(table)).groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("__sz")))
     np_df = local_frame(spark, [(int(np_),) for np_ in nprobes],
                         "nprobe int")
     perq = (fan.join(F.broadcast(sizes), "cell", "left")

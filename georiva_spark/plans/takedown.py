@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from georiva_spark.functions.fastexpr import in_longs, larr
+from georiva_spark.operators import _tombstones
 from georiva_spark.plans.engine import DerivationEngine, Trigger
 from georiva_spark.sources.commit import (atomic_replace,
                                           atomic_write_json,
@@ -78,6 +79,15 @@ def request_digest(ids) -> str:
 def _intent_path(corpus_dir: str, digest: str) -> str:
     # underscore-prefixed sidecar: Spark's parquet listing ignores it
     return posixpath.join(corpus_dir, f"_georiva_takedown_{digest}.json")
+
+
+def _index_legs(minhash_indexes, ivf_indexes, hamming_indexes):
+    """(family, index) for every named index, family by family in
+    the order the legs apply (minhash, ivf, hamming)."""
+    return [(family, t) for family, tables in
+            (("minhash", minhash_indexes), ("ivf", ivf_indexes),
+             ("hamming", hamming_indexes))
+            for t in tables]
 
 
 def _affected_scan(corpus: DataFrame, ids) -> DataFrame:
@@ -297,21 +307,11 @@ def expire_shards(spark: SparkSession, corpus_dir: str,
                        "completed": False},
                       who="expire_shards")
 
-    from georiva_spark.operators.dedup import (hamming_index_retract,
-                                               minhash_index_retract)
-    from georiva_spark.operators.similarity import ivf_index_retract
-    for t in tuple(minhash_indexes):
+    for family, t in _index_legs(minhash_indexes, ivf_indexes,
+                                 hamming_indexes):
         for s in shards:
-            minhash_index_retract(spark, t, s)
-        audit["indexes"][t] = "minhash"
-    for t in tuple(ivf_indexes):
-        for s in shards:
-            ivf_index_retract(spark, t, s)
-        audit["indexes"][t] = "ivf"
-    for t in tuple(hamming_indexes):
-        for s in shards:
-            hamming_index_retract(spark, t, s)
-        audit["indexes"][t] = "hamming"
+            _tombstones.retract(spark, t, family, s)
+        audit["indexes"][t] = family
 
     from georiva_spark.sources.tables import export_token_shards_retire
     for p in tuple(token_layouts):
@@ -445,10 +445,6 @@ def takedown_report(spark: SparkSession, ids, *,
     list pushed to the scans; the result is a small DataFrame (rows
     bounded by surfaces × shards), safe to collect."""
     from georiva_spark.operators import _index_table
-    from georiva_spark.operators._tombstones import (dead_doc_rules,
-                                                     dead_rules,
-                                                     live_doc_rows,
-                                                     live_rows)
 
     ids = sorted({int(i) for i in ids})
     if not ids:
@@ -498,23 +494,13 @@ def takedown_report(spark: SparkSession, ids, *,
             "n_rows long, n_tokens long, n_files long"))
     # each index's stamps, read once, witness its tombstone tripwire
     # (a missing table has none)
-    for t in minhash_indexes:
-        st = _index_table.props(spark, f"{t}_bands", missing_ok=True)
-        live = live_doc_rows(
-            live_rows(spark.table(f"{t}_sigs"), dead_rules(spark, t, st)),
-            dead_doc_rules(spark, t, st), "doc_id")
-        parts.append(row_agg(live, "minhash", t, "doc_id"))
-    for t in ivf_indexes:
-        from georiva_spark.operators.similarity import _live_table
-        st = _index_table.props(spark, t, missing_ok=True)
-        parts.append(row_agg(_live_table(spark, t, st), "ivf", t,
-                             "vec_id"))
-    for t in hamming_indexes:
-        st = _index_table.props(spark, f"{t}_bands", missing_ok=True)
-        live = live_doc_rows(
-            live_rows(spark.table(f"{t}_ids"), dead_rules(spark, t, st)),
-            dead_doc_rules(spark, t, st), "id")
-        parts.append(row_agg(live, "hamming", t, "id"))
+    for family, t in _index_legs(minhash_indexes, ivf_indexes,
+                                 hamming_indexes):
+        stamped, rows, id_col = _tombstones.FAMILIES[family]
+        st = _index_table.props(spark, f"{t}{stamped}", missing_ok=True)
+        live = _tombstones.live_filter(spark, t, st, id_col)(
+            spark.table(f"{t}{rows}"))
+        parts.append(row_agg(live, family, t, id_col))
     dead = F.expr(larr(ids))
     for p in token_layouts:
         bins = (spark.read.option("basePath", p)
@@ -545,7 +531,7 @@ def takedown_report(spark: SparkSession, ids, *,
                     "n_rows", "n_tokens",
                     F.col("n_files").cast("long")))
     if hold_table is not None:
-        if not _ensure_hold_registered(spark, hold_table):
+        if not _tombstones.ensure_registered(spark, hold_table):
             raise ValueError(
                 f"takedown_report: hold table {hold_table!r} does "
                 f"not exist — create it with standing_hold()")
@@ -576,33 +562,9 @@ def takedown_report(spark: SparkSession, ids, *,
 # `prepare`, before probe AND append). Managed like the tombstone
 # rule tables: the warehouse location is ADOPTED across driver
 # restarts (ignoring the files would silently re-admit held content —
-# the same resurrect hazard _tombstones._ensure_registered closes).
-
-
-HOLD_SCHEMA = "id BIGINT, seq BIGINT"
-
-
-def _hold_location(spark: SparkSession, hold_table: str) -> str | None:
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if wh.startswith("file:"):
-        wh = "/" + wh[len("file:"):].lstrip("/")
-    elif "://" in wh:
-        return None
-    import os
-    return os.path.join(wh, hold_table.lower()) if wh else None
-
-
-def _ensure_hold_registered(spark: SparkSession,
-                            hold_table: str) -> bool:
-    import os
-    if spark.catalog.tableExists(hold_table):
-        return True
-    loc = _hold_location(spark, hold_table)
-    if loc and os.path.isdir(loc):
-        spark.sql(f"CREATE TABLE {hold_table} ({HOLD_SCHEMA}) "
-                  f"USING parquet LOCATION '{loc}'")
-        return True
-    return False
+# the same resurrect hazard the tombstone rule tables close). A hold
+# list IS an id-list rule table (operators/_tombstones.py: located,
+# adopted, seq-appended, broadcast-filtered and cleared there).
 
 
 def standing_hold(spark: SparkSession, hold_table: str, ids) -> None:
@@ -613,14 +575,7 @@ def standing_hold(spark: SparkSession, hold_table: str, ids) -> None:
     ids = sorted({int(i) for i in ids})
     if not ids:
         raise ValueError("standing_hold: the hold id list is empty")
-    seq = 0
-    if _ensure_hold_registered(spark, hold_table):
-        seq = (spark.table(hold_table)
-               .agg(F.max("seq")).head()[0] or 0) + 1
-    from georiva_spark.functions.frames import local_frame
-    (local_frame(spark, [(i, seq) for i in ids], HOLD_SCHEMA)
-     .write.mode("append").format("parquet").saveAsTable(hold_table))
-    spark.catalog.refreshTable(hold_table)
+    _tombstones.append_seq(spark, hold_table, [(i,) for i in ids])
 
 
 def hold_filter(df: DataFrame, hold_table: str,
@@ -633,27 +588,19 @@ def hold_filter(df: DataFrame, hold_table: str,
     from a lost warehouse, and silently admitting everything is the
     wrong quiet answer — fail by name instead."""
     spark = df.sparkSession
-    if not _ensure_hold_registered(spark, hold_table):
+    if not _tombstones.ensure_registered(spark, hold_table):
         raise ValueError(
             f"hold_filter: hold table {hold_table!r} does not exist "
             f"and no prior warehouse location is adoptable — create "
             f"it with standing_hold(); an admission path must never "
             f"silently run unfiltered")
-    holds = F.broadcast(spark.table(hold_table)
-                        .select(F.col("id").alias("__held_id"))
-                        .distinct())
-    return (df.join(holds, F.col(id_col) == F.col("__held_id"),
-                    "left_anti"))
+    return _tombstones.drop_ids(df, spark.table(hold_table), id_col)
 
 
 def clear_hold(spark: SparkSession, hold_table: str) -> None:
     """Release every standing hold: drop the table AND its warehouse
     location (leaving files would re-adopt the stale list)."""
-    import shutil
-    loc = _hold_location(spark, hold_table)
-    spark.sql(f"DROP TABLE IF EXISTS {hold_table}")
-    if loc:
-        shutil.rmtree(loc, ignore_errors=True)
+    _tombstones.clear_table(spark, hold_table)
 
 
 def takedown(spark: SparkSession, ids, *,
@@ -717,18 +664,10 @@ def takedown(spark: SparkSession, ids, *,
         standing_hold(spark, hold_table, ids)
         audit["hold"] = hold_table
 
-    from georiva_spark.operators.dedup import (
-        hamming_index_retract_docs, minhash_index_retract_docs)
-    from georiva_spark.operators.similarity import ivf_index_retract_docs
-    for t in minhash_indexes:
-        minhash_index_retract_docs(spark, t, ids)
-        audit["indexes"][t] = "minhash"
-    for t in ivf_indexes:
-        ivf_index_retract_docs(spark, t, ids)
-        audit["indexes"][t] = "ivf"
-    for t in hamming_indexes:
-        hamming_index_retract_docs(spark, t, ids)
-        audit["indexes"][t] = "hamming"
+    for family, t in _index_legs(minhash_indexes, ivf_indexes,
+                                 hamming_indexes):
+        _tombstones.retract_docs(spark, t, family, ids)
+        audit["indexes"][t] = family
 
     if corpus is not None:
         corpus_dir, engine = corpus

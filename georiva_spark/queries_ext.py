@@ -63,10 +63,9 @@ def _sweep_stale_fixtures(spark: SparkSession, base: str,
     cutoff = time.time() - max_age_h * 3600
     app = re.sub(r"[^0-9a-zA-Z]", "",
                  spark.sparkContext.applicationId)[-12:]
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if wh.startswith("file:"):
-        wh = "/" + wh[len("file:"):].lstrip("/")
-    if wh and "://" not in wh and os.path.isdir(wh):
+    from georiva_spark.operators._tombstones import warehouse_path
+    wh = warehouse_path(spark)
+    if wh and os.path.isdir(wh):
         pat = re.compile(
             rf"^{re.escape(base.lower())}_(?!{re.escape(app.lower())})"
             rf"[0-9a-z]+(_bands|_sigs|_ids|_dead|_dead_docs|"

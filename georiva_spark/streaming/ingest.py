@@ -235,22 +235,19 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
             "start_corpus_ingest: neardup_compact_every without "
             "neardup_table compacts nothing")
     if hold_table is not None:
-        from georiva_spark.plans.takedown import _ensure_hold_registered
-        if not _ensure_hold_registered(spark, hold_table):
+        from georiva_spark.operators._tombstones import ensure_registered
+        if not ensure_registered(spark, hold_table):
             raise ValueError(
                 f"start_corpus_ingest: hold table {hold_table!r} "
                 f"does not exist — create it with "
                 f"plans/takedown.standing_hold before launching; an "
                 f"admission path must never silently run unfiltered")
     if neardup_table is not None:
+        from georiva_spark.operators._tombstones import require_gen
         from georiva_spark.operators.dedup import minhash_index_params
         minhash_index_params(spark, neardup_table)  # fail fast on launch
-        if "gen" not in spark.table(f"{neardup_table}_bands").columns:
-            raise ValueError(
-                f"start_corpus_ingest: {neardup_table!r} is an "
-                f"unversioned (pre-r12) index — re-crawled shards "
-                f"could never be retracted; rebuild it with "
-                f"minhash_index_write")
+        require_gen(spark, neardup_table, "minhash", "start_corpus_ingest",
+                    "re-crawled shards could never be retracted")
 
     def _grow_layout(shard: str) -> None:
         import hashlib
@@ -397,15 +394,13 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
     def _neardup_shard(docs: DataFrame, shard: str,
                        digest: str) -> None:
         from georiva_spark.operators._tombstones import (GEN_SEP,
-                                                         dead_rules,
-                                                         live_rows)
+                                                         live_filter)
         from georiva_spark.operators.dedup import (
-            _minhash_stamps, index_gen, minhash_index_append,
-            minhash_index_has_gen, minhash_index_probe,
-            minhash_index_retract)
+            _minhash_append, _minhash_probe, _minhash_stamps, index_gen,
+            minhash_index_has_gen, minhash_index_retract)
         gen = index_gen(shard, digest)
-        # one stamp read: the probe parameters and the tombstone
-        # tripwire's evidence that rules exist
+        # one stamp read per shard: the probe and append parameters and
+        # the tombstone tripwire's evidence that rules exist
         p, stamps = _minhash_stamps(spark, neardup_table)
         # the guard reads on the SERVING session (refreshed after
         # every append below — the streaming/_loop.py contract);
@@ -423,11 +418,14 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
             # probe-visible forever. Instead: any LIVE gen carrying
             # this shard's prefix other than the one about to append
             # IS a dead generation (an already-tombstoned gen is
-            # filtered by live_rows, so an already-applied retract
-            # does not re-fire).
-            sigs = live_rows(
-                spark.table(f"{neardup_table}_sigs"),
-                dead_rules(spark, neardup_table, stamps))
+            # filtered out, so an already-applied retract does not
+            # re-fire). The full live filter also drops doc-tombstoned
+            # rows; that changes the answer only when EVERY row of an
+            # older generation is already taken down — rows that no
+            # probe sees either way, so skipping their retract hides
+            # nothing that was visible.
+            sigs = live_filter(spark, neardup_table, stamps, "doc_id")(
+                spark.table(f"{neardup_table}_sigs"))
             stale = (sigs.where(
                 (F.substring_index("gen", GEN_SEP, 1) == shard)
                 & (F.col("gen") != gen)).limit(1).count() > 0)
@@ -439,9 +437,9 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
                                       keep_gen=gen)
                 spark.catalog.refreshTable(f"{neardup_table}_dead")
         ids = docs.select("doc_id")
-        pairs = minhash_index_probe(
-            docs, neardup_table, threshold=neardup_threshold,
-            num_hashes=p["num_hashes"], bands=p["bands"], n=p["n"])
+        pairs = _minhash_probe(
+            docs, neardup_table, stamps, neardup_threshold,
+            p["num_hashes"], p["bands"], p["n"], "text")
         # a replay whose first attempt already appended would pair
         # this shard's docs against themselves — anti-join own ids
         (pairs.join(ids.withColumnRenamed("doc_id", "doc_old"),
@@ -449,7 +447,7 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
          .write.mode("overwrite")
          .parquet(f"{neardup_out_dir}/shard={shard}"))
         if not applied:
-            minhash_index_append(docs, neardup_table, gen=gen)
+            _minhash_append(docs, neardup_table, p, gen)
             for t in (f"{neardup_table}_bands",
                       f"{neardup_table}_sigs"):
                 spark.catalog.refreshTable(t)

@@ -505,12 +505,16 @@ def test_corpus_stream_rejects_straddled_delivery(spark, tmp_path):
     assert spark.read.parquet(corp).count() == 1
 
 
-def test_corpus_stream_recrawl_retracts_neardup_index(spark, tmp_path):
+def test_corpus_stream_recrawl_retracts_neardup_index(spark, tmp_path,
+                                                      monkeypatch):
     """T5 reaching the persistent MinHash index (r12, the r11
     verdict's top item): a re-crawled shard's dead signatures are
     tombstoned at invalidation — probes no longer match the dead
     content — the replay guard still holds, and compaction purges
-    the dead rows physically."""
+    the dead rows physically. Each committed shard reads the index
+    stamps (SHOW TBLPROPERTIES, a catalog round trip) once: the
+    re-crawl check, the probe and the append share the read."""
+    import collections
     import os
 
     from georiva_spark.operators import dedup
@@ -528,13 +532,30 @@ def test_corpus_stream_recrawl_retracts_neardup_index(spark, tmp_path):
         " n_chars long")
     dedup.minhash_index_write(seed, "t_crmh", str(tmp_path / "idx"),
                               n_buckets=4)
+    real_sql = type(spark).sql
+    reads = collections.Counter()
+
+    def counting(self, stmt, *a, **k):
+        if stmt.startswith("SHOW TBLPROPERTIES"):
+            reads[stmt.split()[2]] += 1
+        return real_sql(self, stmt, *a, **k)
+
     try:
         def run(**kw):
-            q = start_corpus_ingest(
-                spark, land, corp, str(tmp_path / "ck"), eng,
-                max_files_per_trigger=1, available_now=True,
-                neardup_table="t_crmh", neardup_out_dir=nd_out, **kw)
-            q.awaitTermination()
+            reads.clear()
+            monkeypatch.setattr(type(spark), "sql", counting)
+            try:
+                q = start_corpus_ingest(
+                    spark, land, corp, str(tmp_path / "ck"), eng,
+                    max_files_per_trigger=1, available_now=True,
+                    neardup_table="t_crmh", neardup_out_dir=nd_out,
+                    **kw)
+                q.awaitTermination()
+            finally:
+                monkeypatch.setattr(type(spark), "sql", real_sql)
+            # the launch's fail-fast read, then one per committed shard
+            # (each run lands one)
+            assert reads["t_crmh_bands"] == 2, dict(reads)
 
         def pairs(shard):
             p = f"{nd_out}/shard={shard}"
@@ -770,7 +791,7 @@ def test_neardup_stream_leg_fails_by_name_when_rules_unadoptable(
         # restart onto an HDFS-style warehouse: the catalog forgot the
         # rule table AND the location helper cannot reach its files
         spark.sql(f"DROP TABLE {t}_dead")
-        monkeypatch.setattr(tb, "_dead_location", lambda *a, **k: None)
+        monkeypatch.setattr(tb, "warehouse_path", lambda *a, **k: None)
         _land(spark, tmp_path, land, "f0", [(11, NOVEL_A)], "sA")
         q = start_corpus_ingest(
             spark, land, corp, str(tmp_path / "ck"), eng,

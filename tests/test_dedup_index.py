@@ -1968,8 +1968,10 @@ def test_minhash_index_retract_tombstones_then_compact_purges(
 def test_minhash_retract_validation_and_unversioned_guards(
         spark, tmp_path):
     """index_gen rejects empty/sentinel shards; retracting the ''
-    base is refused; a pre-r12 unversioned layout refuses tagged
-    appends by name (rebuild to make it retractable)."""
+    base is refused (before any table lookup); a pre-r12 unversioned
+    layout refuses tagged appends by name (rebuild to make it
+    retractable), and every family's shard retract refuses it too —
+    without writing a rule."""
     with pytest.raises(ValueError, match="non-empty"):
         dedup.index_gen("", "v1")
     with pytest.raises(ValueError, match="GEN_SEP"):
@@ -1977,6 +1979,7 @@ def test_minhash_retract_validation_and_unversioned_guards(
     with pytest.raises(ValueError, match="non-empty"):
         dedup.minhash_index_retract(spark, "t_any", "")
     # hand-build an old (gen-less) layout: bucketed tables + stamp
+    from georiva_spark.operators import similarity
     from georiva_spark.sources.bucketing import write_bucketed
     t = "t_mhold"
     base = _docs(spark, [(1, BASE)])
@@ -1998,6 +2001,23 @@ def test_minhash_retract_validation_and_unversioned_guards(
         with pytest.raises(ValueError, match="unversioned"):
             dedup.minhash_index_append(base, t,
                                        gen=dedup.index_gen("s", "v"))
+        # the same guard on every family's shard retract: a gen-less
+        # Hamming membership table and a gen-less IVF table, built the
+        # old way
+        write_bucketed(
+            spark.createDataFrame([(15, 1)], "ref long, id long"),
+            "t_hmold_ids", "ref", 4, str(tmp_path / "hi"))
+        (spark.createDataFrame([(1, [0.5, 0.5], 0)],
+                               "vec_id long, embedding array<double>, "
+                               "cell int")
+         .write.partitionBy("cell").option("path", str(tmp_path / "iv"))
+         .saveAsTable("t_ivold"))
+        for retract, index in ((dedup.minhash_index_retract, t),
+                               (dedup.hamming_index_retract, "t_hmold"),
+                               (similarity.ivf_index_retract, "t_ivold")):
+            with pytest.raises(ValueError, match="unversioned"):
+                retract(spark, index, "s")
+            assert not spark.catalog.tableExists(f"{index}_dead")
         # untagged appends and probes still work on the old layout
         dedup.minhash_index_append(_docs(spark, [(2, BASE)]), t)
         got = {(r.doc_new, r.doc_old) for r in
@@ -2007,6 +2027,8 @@ def test_minhash_retract_validation_and_unversioned_guards(
     finally:
         for s in ("bands", "sigs"):
             spark.sql(f"DROP TABLE IF EXISTS {t}_{s}")
+        for x in ("t_hmold_ids", "t_ivold"):
+            spark.sql(f"DROP TABLE IF EXISTS {x}")
 
 
 def test_hamming_index_retract_membership_and_compact(spark, tmp_path):
@@ -2169,7 +2191,7 @@ def test_tombstone_rules_survive_driver_restart(spark, tmp_path):
         assert 10 not in hits()
         # ---- simulate a driver restart: catalog entry gone, files
         # still on disk (managed DROP deletes, so park + restore)
-        loc = tb._dead_location(spark, t)
+        loc = tb.warehouse_path(spark, f"{t}_dead")
         assert loc and os.path.isdir(loc)
         shutil.copytree(loc, loc + "_bak")
         spark.sql(f"DROP TABLE {t}_dead")
@@ -2184,7 +2206,7 @@ def test_tombstone_rules_survive_driver_restart(spark, tmp_path):
         shutil.copytree(loc, loc + "_bak")
         spark.sql(f"DROP TABLE {t}_dead")
         shutil.move(loc + "_bak", loc)
-        assert 10 not in hits()               # dead_rules adopted
+        assert 10 not in hits()               # the live filter adopted
         assert spark.catalog.tableExists(f"{t}_dead")
         # clear_rules removes the (now external) adopted location
         tb.clear_rules(spark, t)
@@ -2220,7 +2242,7 @@ def test_minhash_compact_after_adoption_clears_location(spark,
                                    gen=g1)
         dedup.minhash_index_retract(spark, t, "sA")
         # restart: catalog forgets, files survive -> next reader adopts
-        loc = tb._dead_location(spark, t)
+        loc = tb.warehouse_path(spark, f"{t}_dead")
         shutil.copytree(loc, loc + "_bak")
         spark.sql(f"DROP TABLE {t}_dead")
         shutil.move(loc + "_bak", loc)
@@ -2288,7 +2310,7 @@ def test_minhash_retract_docs_takedown(spark, tmp_path):
         assert spark.table(f"{t}_bands").where(
             "doc_id in (2, 3)").count() == 0
         assert not spark.catalog.tableExists(f"{t}_dead_docs")
-        loc = tb._dead_location(spark, t, "_dead_docs")
+        loc = tb.warehouse_path(spark, f"{t}_dead_docs")
         assert loc and not os.path.exists(loc)
         props = {r.key: r.value for r in spark.sql(
             f"SHOW TBLPROPERTIES {t}_bands").collect()}
@@ -2451,7 +2473,7 @@ def test_tombstone_stamp_fails_by_name_when_unadoptable(
         # restart onto an HDFS-style warehouse: catalog forgot the
         # rule table AND the location helper cannot reach its files
         spark.sql(f"DROP TABLE {t}_dead")
-        monkeypatch.setattr(tb, "_dead_location",
+        monkeypatch.setattr(tb, "warehouse_path",
                             lambda *a, **k: None)
         with pytest.raises(ValueError,
                            match="georiva.has_tombstones"):
@@ -2463,7 +2485,7 @@ def test_tombstone_stamp_fails_by_name_when_unadoptable(
                   f"IF EXISTS ('georiva.has_tombstones')")
         dedup.minhash_index_retract_docs(spark, t, [10])
         spark.sql(f"DROP TABLE {t}_dead_docs")
-        monkeypatch.setattr(tb, "_dead_location",
+        monkeypatch.setattr(tb, "warehouse_path",
                             lambda *a, **k: None)
         with pytest.raises(ValueError,
                            match="georiva.has_doc_tombstones"):

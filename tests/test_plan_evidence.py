@@ -986,6 +986,43 @@ def test_index_stamp_audit_current():
         f"with _index_table.stamp")
 
 
+def test_rule_table_audit_current():
+    """Managed id-list tables (tombstone rules, standing holds) have
+    ONE home: operators/_tombstones.py is the only module whose code
+    reads the warehouse dir or spells a LOCATION clause, and the only
+    one that names the live-filter pieces (``live_rows``,
+    ``live_doc_rows``, ``dead_rules``, ``dead_doc_rules``, public or
+    underscored) — every other module filters through
+    ``_tombstones.live_filter`` / ``drop_ids``, so the probe side of
+    the tombstone contract is composed in one place."""
+    import ast
+    from pathlib import Path
+
+    home = (Path(__file__).resolve().parents[1] / "georiva_spark"
+            / "operators" / "_tombstones.py")
+    needles = ("spark.sql.warehouse.dir", "LOCATION '")
+    assert all(n in home.read_text() for n in needles)
+    pieces = {"live_rows", "live_doc_rows", "dead_rules",
+              "dead_doc_rules"}
+    found = []
+    for rel, tree, docs in _package_code(skip=(home,)):
+        for needle in needles:
+            found += [f"{rel}:{line} {needle!r}"
+                      for line in _code_strings(tree, docs, needle)]
+        for node in ast.walk(tree):
+            name = (getattr(node, "id", None)
+                    or getattr(node, "attr", None)
+                    or (node.name if isinstance(
+                        node, (ast.alias, ast.FunctionDef)) else None))
+            if name and name.lstrip("_") in pieces:
+                found.append(f"{rel}:{node.lineno} {name}")
+    assert not found, (
+        f"rule-table mechanics outside operators/_tombstones.py: "
+        f"{found} — locate, adopt and clear managed id-list tables "
+        f"with its warehouse_path / ensure_registered / clear_table, "
+        f"and filter with live_filter / drop_ids")
+
+
 def test_write_mechanism_audit_current():
     """One way to write partitions, and no driver thread pools: a
     partition overwrite names ``.option("partitionOverwriteMode",

@@ -342,11 +342,35 @@ def test_takedown_stream_rejects_empty_request_by_name(spark,
 # hold keeps it out of every ADMISSION path afterward -----------------
 
 
+@pytest.mark.parametrize("wh, want", [
+    ("file:/w", "/w/t_held"),
+    ("file:///w", "/w/t_held"),
+    ("/w", "/w/t_held"),
+    ("w", "w/t_held"),
+    ("s3a://b/w", None),
+])
+def test_warehouse_path_normalises_local_warehouses(wh, want):
+    """The one warehouse-path helper of the managed id-list tables
+    (tombstone rules, standing holds, the fixture sweep): ``file:``
+    and ``file:///`` normalise to a plain path, a relative warehouse
+    stays relative, the table name is lowercased as the catalog
+    stores it, and a non-local scheme has no adoptable location."""
+    from types import SimpleNamespace
+
+    from georiva_spark.operators._tombstones import warehouse_path
+
+    conf = {"spark.sql.warehouse.dir": wh}
+    spark = SimpleNamespace(conf=SimpleNamespace(get=conf.get))
+    assert warehouse_path(spark, "T_Held") == want
+
+
 def test_standing_hold_lifecycle(spark, tmp_path):
     """Create/append/filter/adopt/clear — and the fail-by-name rule:
     an admission path configured with a hold table that does not
     exist must never silently run unfiltered."""
     import shutil
+
+    from georiva_spark.operators._tombstones import warehouse_path
 
     ht = "t_hold_lc"
     docs = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")],
@@ -362,7 +386,7 @@ def test_standing_hold_lifecycle(spark, tmp_path):
                 td.hold_filter(docs, ht, "doc_id").collect()} == {1}
         # restart adoption: catalog forgets, files persist — the
         # filter must re-register the location, never admit held ids
-        loc = td._hold_location(spark, ht)
+        loc = warehouse_path(spark, ht)
         saved = str(tmp_path / "held_files")
         shutil.copytree(loc, saved)
         spark.sql(f"DROP TABLE {ht}")
