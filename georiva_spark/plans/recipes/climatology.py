@@ -1,16 +1,19 @@
 """Climatology recipe family (reference: processing/recipes/climatology.py):
 units = periods × seasons × quantities over a source series collection;
-quantity ∈ {value, anomaly, relative_anomaly, trend}; the transform slices
-calendar years, season-filters, and reduces per pixel with the temporal
-operator library (climatology.py:131-162 → operators/temporal.py here).
+quantity ∈ {value, anomaly, relative_anomaly, trend}; the transform
+season-filters the series and derives every quantity of a (period,
+season) from one per-pixel aggregate of per-year partials
+(climatology.py:131-162), which the units of a level share.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from georiva_spark.functions.scalars import safe_divide
 from georiva_spark.operators import filters, temporal
 from georiva_spark.plans.recipe import (
     CatalogContext, OutputItem, ProductionUnit, ResolvedInput,
@@ -37,6 +40,8 @@ class ClimatologyRecipe:
         self.seasons = list(seasons)
         self.quantities = list(quantities)
         self.baseline = tuple(baseline) if baseline else None
+        # (key, frame) of the last aggregate built; see _aggregate
+        self._shared: tuple | None = None
 
     # ---- unit enumeration (periods × seasons × quantities) ----------------
     def enumerate_units(self, ctx: CatalogContext) -> list[ProductionUnit]:
@@ -102,36 +107,82 @@ class ClimatologyRecipe:
         return out
 
     # ---- pure compute ------------------------------------------------------
-    def _concat(self, inputs: list[ResolvedInput], role: str) -> DataFrame | None:
-        dfs = [r.load() for r in inputs if r.role == role and r.load is not None]
-        if not dfs:
-            return None
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)   # U1 multi-file concat along time
-        return out
+    def _aggregate(self, spark: SparkSession, season: str,
+                   period: tuple[int, int],
+                   resolved: list[ResolvedInput]) -> DataFrame:
+        """Every quantity of a (period, season) from one per-pixel
+        aggregate, so value, anomaly and trend scan the series once
+        (Raptor's one scan per pixel).
+
+        The union of the unit's inputs is season-filtered and reduced to
+        a (pixel, year) partial of Σvalue and count(value); one groupBy
+        over the pixel then sums the period's and the baseline's years
+        with conditional sums and fits the slope of the period's yearly
+        means (numpy ``polyfit(deg=1)`` == covar_pop/var_pop). Years are
+        selected inside that groupBy, never by a filter on the series:
+        Catalyst would push such a filter below the partial and give each
+        quantity its own scan. A pixel gets a row only if it has a
+        pixel-year in the period (the period's summed count is then not
+        null), and every ratio goes through ``safe_divide``: an all-null
+        pixel-year has count 0.
+
+        The last aggregate built stays in one slot, keyed by the session,
+        the season, the period, the baseline and the (item_id, checksum)
+        of every input. A level's units are transformed in
+        ``enumerate_units`` order, quantities innermost, before the level
+        is written once, so its units share one subtree and Spark reuses
+        the partial's exchange across them. The slot holds a lazy plan
+        whose file listings were taken when it was built; it cannot serve
+        a stale listing, because a reused key means every input item has
+        the checksum it had then, and a re-landed or changed item changes
+        its checksum and so misses the slot."""
+        inputs = sorted({r.item_id: r for r in resolved
+                         if r.load is not None}.values(),
+                        key=lambda r: r.item_id)
+        key = (spark, season, period, self.baseline,
+               tuple((r.item_id, r.checksum) for r in inputs))
+        if self._shared is not None and self._shared[0] == key:
+            return self._shared[1]
+        series = filters.season_filter(
+            reduce(DataFrame.unionByName, (r.load() for r in inputs)),
+            season)
+        yearly = (series.groupBy(*temporal.PIXEL_KEY,
+                                 F.year("time").alias("yr"))
+                  .agg(F.sum("value").alias("s"),
+                       F.count("value").alias("n")))
+
+        def mean(years: tuple[int, int] | None) -> Column:
+            if years is None:
+                return F.lit(None).cast("double")
+            inside = F.col("yr").between(*years)
+            return safe_divide(F.sum(F.when(inside, F.col("s"))),
+                               F.sum(F.when(inside, F.col("n"))))
+
+        in_period = F.col("yr").between(*period)
+        year = F.when(in_period, F.col("yr"))
+        diff = F.col("value") - F.col("_base")
+        agg = (yearly.groupBy(*temporal.PIXEL_KEY)
+               .agg(F.sum(F.when(in_period, F.col("n"))).alias("_n"),
+                    mean(period).alias("value"),
+                    mean(self.baseline).alias("_base"),
+                    safe_divide(
+                        F.covar_pop(year, F.when(
+                            in_period, safe_divide(F.col("s"), F.col("n")))),
+                        F.var_pop(year)).alias("trend"))
+               .where(F.col("_n").isNotNull())
+               .select(*temporal.PIXEL_KEY, "value", diff.alias("anomaly"),
+                       safe_divide(diff, F.col("_base"))
+                       .alias("relative_anomaly"), "trend"))
+        self._shared = (key, agg)
+        return agg
 
     def transform(self, spark: SparkSession, unit: ProductionUnit,
                   resolved: list[ResolvedInput]) -> tuple[OutputItem, DataFrame]:
         period = tuple(unit["period"])
         season, quantity = unit["season"], unit["quantity"]
-        series = self._concat(resolved, "series")
-        series = filters.year_window(series, period[0], period[1])
-
-        if quantity == "trend":
-            out = temporal.trend(series, season=season)
-        else:
-            clim = temporal.climatology(series, season=season)
-            if quantity == "value":
-                out = clim
-            else:
-                base_series = self._concat(resolved, "baseline")
-                base_series = filters.year_window(
-                    base_series, self.baseline[0], self.baseline[1])
-                base = temporal.climatology(base_series, season=season)
-                out = temporal.anomaly(clim, base,
-                                       relative=(quantity == "relative_anomaly"))
-        out = out.withColumn("collection", F.lit(self.target_collection))
+        out = (self._aggregate(spark, season, period, resolved)
+               .select(*temporal.PIXEL_KEY, F.col(quantity).alias("value"))
+               .withColumn("collection", F.lit(self.target_collection)))
         item_time = dt.datetime(period[0], 1, 1)
         return (OutputItem(
             collection=self.target_collection, variable=quantity,

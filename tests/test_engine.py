@@ -508,3 +508,188 @@ def test_level_write_rederived_empty_output_reads_empty(spark,
     got = spark.read.parquet(path)
     assert got.count() == 0
     assert got.schema.simpleString() == old.schema.simpleString()
+
+
+# ---- climatology recipe: one aggregate per (period, season) ---------------
+
+def _yearly_catalog(spark, years, values, edit=None, loads=None):
+    """One staging item per calendar year, each loading that year's 12
+    monthly slices of ``values`` (months × H × W, NaN → null). ``edit``
+    (year, frame) → frame post-processes a year's frame; ``loads``
+    (a list), when given, records every loader call."""
+    items, grids = [], {}
+    for i, year in enumerate(years):
+        times = month_starts(dt.datetime(year, 1, 1), 12)
+        g = grid_from_arrays(spark, values[12 * i:12 * (i + 1)], times,
+                             collection="src")
+        grids[i + 1] = edit(year, g) if edit else g
+        items.append({"item_id": i + 1, "collection": "src",
+                      "variable": "v", "time": times[0], "tier": "staging",
+                      "checksum": f"y{year}"})
+
+    def load(it):
+        if loads is not None:
+            loads.append(it["item_id"])
+        return grids[it["item_id"]]
+    return CatalogContext(spark, items, grid_loader=load), grids
+
+
+def _reference_quantity(recipe, unit, resolved):
+    """The climatology composition the recipe replaced: per-role unions,
+    each windowed to its years, reduced by the temporal operators and
+    joined to the baseline."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from georiva_spark.operators import filters, temporal
+
+    def role(name, years):
+        return filters.year_window(reduce(DataFrame.unionByName, [
+            r.load() for r in resolved if r.role == name and r.load]),
+            *years)
+
+    season, quantity = unit["season"], unit["quantity"]
+    series = role("series", unit["period"])
+    if quantity == "trend":
+        out = temporal.trend(series, season=season)
+    else:
+        out = temporal.climatology(series, season=season)
+        if quantity != "value":
+            base = temporal.climatology(role("baseline", recipe.baseline),
+                                        season=season)
+            out = temporal.anomaly(
+                out, base, relative=quantity == "relative_anomaly")
+    return out.withColumn("collection", F.lit(recipe.target_collection))
+
+
+def _same_value(a, b) -> bool:
+    if a is None or b is None:
+        return a is None and b is None
+    if np.isnan(a) or np.isnan(b):
+        return bool(np.isnan(a) and np.isnan(b))
+    return abs(a - b) <= 1e-12 * max(abs(a), abs(b), 1.0)
+
+
+def test_climatology_quantities_equal_the_operator_composition(spark):
+    """Every quantity of every (season, baseline) equals the composition
+    of year_window / climatology / anomaly / trend the recipe replaced:
+    same columns, same rows, nulls and NaNs in the same cells, values
+    within 1e-12 relative. The fixture holds a NaN, a pixel-year that is
+    all null (count 0), a zero baseline, a pixel missing in some years
+    and a pixel that exists only outside the period."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from georiva_spark.plans.recipes.climatology import QUANTITIES
+
+    years = range(2018, 2023)
+    vals = np.random.default_rng(7).normal(10.0, 3.0, (60, 2, 3))
+    vals[24:36, 0, 1] = np.nan        # (0, 1): all null through 2020
+    vals[:48, 0, 2] = 0.0             # (0, 2): zero baseline everywhere
+
+    def edit(year, g):
+        nan_at = ((F.col("y") == 0) & (F.col("x") == 0)
+                  & (F.month("time") == 7) & F.lit(year == 2021))
+        g = g.withColumn("value", F.when(nan_at, F.lit(float("nan")))
+                         .otherwise(F.col("value")))
+        if year in (2018, 2021):      # (1, 0): missing in two years
+            g = g.where(~((F.col("y") == 1) & (F.col("x") == 0)))
+        if year != 2018:              # (1, 1): exists only in 2018
+            g = g.where(~((F.col("y") == 1) & (F.col("x") == 1)))
+        return g
+
+    ctx, _ = _yearly_catalog(spark, years, vals, edit)
+    got, want = [], []
+    # baselines inside, outside and overlapping the period 2019-2022;
+    # value and trend do not read the baseline and are checked once
+    for i, baseline in enumerate(((2020, 2021), (2018, 2018), (2018, 2020))):
+        recipe = ClimatologyRecipe(
+            "src", "clim", periods=[(2019, 2022)],
+            seasons=["annual", "JJA", "DJF"],
+            quantities=list(QUANTITIES) if i == 0 else
+            ["anomaly", "relative_anomaly"], baseline=baseline)
+        for unit in recipe.enumerate_units(ctx):
+            resolved = recipe.resolve_inputs(unit, ctx)
+            _, out = recipe.transform(spark, unit, resolved)
+            ref = _reference_quantity(recipe, unit, resolved)
+            assert out.columns == ref.columns, unit
+            tag = F.lit(json.dumps([baseline, unit]))
+            got.append(out.withColumn("unit", tag))
+            want.append(ref.withColumn("unit", tag))
+    rows = {}
+    for name, frames in (("got", got), ("want", want)):
+        for r in reduce(DataFrame.unionByName, frames).collect():
+            k = (r.unit, r.y, r.x)
+            assert (name, k) not in rows, k
+            rows[(name, k)] = r
+    got_keys = {k for n, k in rows if n == "got"}
+    assert got_keys == {k for n, k in rows if n == "want"}
+    assert all(k[1:] != (1, 1) for k in got_keys)
+    for k in got_keys:
+        g, w = rows[("got", k)], rows[("want", k)]
+        assert g.asDict() | {"value": 0} == w.asDict() | {"value": 0}
+        assert _same_value(g.value, w.value), (k, g, w)
+    # the cells the fixture aims at do occur
+    cells = [rows[("got", k)].value for k in got_keys]
+    assert any(v is None for v in cells)
+    assert any(v is not None and np.isnan(v) for v in cells)
+
+
+def test_climatology_shared_aggregate_slot(spark, tmp_path):
+    """The recipe keeps one aggregate and shares it across a (period,
+    season)'s quantities: each (period, season) loads its inputs once,
+    the slot holds one entry after several of them, two run_all passes in
+    one session write identical outputs, and a changed checksum or a new
+    SparkSession misses the slot and derives afresh."""
+    loads: list = []
+    vals = np.arange(48 * 4, dtype=float).reshape(48, 2, 2) % 17
+    ctx, grids = _yearly_catalog(spark, range(2020, 2024), vals,
+                                 loads=loads)
+    recipe = ClimatologyRecipe(
+        "src", "clim", periods=[(2020, 2021), (2021, 2023)],
+        seasons=["annual", "JJA"], quantities=["value", "anomaly", "trend"],
+        baseline=(2021, 2021))
+    reg = RecipeRegistry()
+    reg.register(recipe)
+    outputs = []
+    for run in range(2):
+        eng = DerivationEngine(spark, reg, ctx,
+                               output_dir=str(tmp_path / f"run{run}"))
+        del loads[:]
+        recs = eng.run_all()
+        assert len(recs) == 12 and {r.status for r in recs} == {"completed"}
+        # 2 + 3 years per season, once for all three quantities
+        assert sorted(loads) == sorted([1, 2] * 2 + [2, 3, 4] * 2)
+        key, _ = recipe._shared
+        assert key[1:3] == ("JJA", (2021, 2023))
+        outputs.append({r.unit_hash: spark.read.parquet(
+            os.path.join(eng.output_dir, f"unit={r.unit_hash}"))
+            for r in recs})
+    for uh, first in outputs[0].items():
+        again = outputs[1][uh]
+        assert first.count() == 4
+        assert first.exceptAll(again).isEmpty(), uh
+        assert again.exceptAll(first).isEmpty(), uh
+
+    unit = {"period": [2020, 2021], "season": "annual", "quantity": "value"}
+
+    def value(session):
+        del loads[:]
+        _, out = recipe.transform(session, unit,
+                                  recipe.resolve_inputs(unit, ctx))
+        return {(r.y, r.x): r.value for r in out.collect()}
+
+    before = value(spark)
+    assert sorted(loads) == [1, 2]
+    assert value(spark) == before and loads == []    # a hit loads nothing
+    # a re-landed 2020 (+24 everywhere) carries a new checksum
+    grids[1] = grids[1].withColumn("value", F.col("value") + 24.0)
+    ctx.items[0]["checksum"] = "y2020-relanded"
+    after = value(spark)
+    assert sorted(loads) == [1, 2] and after.keys() == before.keys()
+    assert all(abs(after[k] - before[k] - 12.0) < 1e-9 for k in before)
+    other = spark.newSession()
+    assert value(other) == after and sorted(loads) == [1, 2]
+    assert recipe._shared[0][0] is other

@@ -1290,3 +1290,85 @@ def test_refine_grid_semi_joins_broadcast_selection(spark, tmp_path):
         for s in ("", "_centroids", "_codebook"):
             spark.sql(f"DROP TABLE IF EXISTS {t}{s}")
 
+
+def _parents(lines: list, i: int):
+    """Ancestors of line ``i`` of a rendered plan tree, nearest first
+    (an operator's name starts at its depth in the tree)."""
+    import re
+
+    depth = re.search(r"[A-Za-z*]", lines[i]).start()
+    for ln in reversed(lines[:i]):
+        d = re.search(r"[A-Za-z*]", ln).start()
+        if d < depth:
+            depth = d
+            yield ln
+
+
+def test_climatology_level_scans_the_series_once(spark, tmp_path):
+    """A landing's value, anomaly and trend units share one aggregate:
+    in the final plan of the engine's one level write, exactly one
+    shuffle stage reads the staging series and the other two units'
+    branches read it through ``ReusedExchange``."""
+    import re
+    import time
+
+    from georiva_spark.plans import (CatalogContext, DerivationEngine,
+                                     RecipeRegistry)
+    from georiva_spark.plans.recipes import ClimatologyRecipe
+    from georiva_spark.testing import month_starts
+
+    items = []
+    for i, year in enumerate((2020, 2021)):
+        times = month_starts(dt.datetime(year, 1, 1), 12)
+        path = str(tmp_path / "staging" / str(year))
+        grid_from_arrays(spark, np.arange(48.0).reshape(12, 2, 2) + i, times,
+                         collection="src").write.parquet(path)
+        items.append({"item_id": i + 1, "collection": "src",
+                      "variable": "v", "time": times[0], "tier": "staging",
+                      "checksum": f"y{year}", "path": path})
+    ctx = CatalogContext(spark, items,
+                         grid_loader=lambda it: spark.read.parquet(it["path"]))
+    reg = RecipeRegistry()
+    reg.register(ClimatologyRecipe(
+        "src", "clim", periods=[(2020, 2021)],
+        quantities=["value", "anomaly", "trend"], baseline=(2020, 2020)))
+    eng = DerivationEngine(spark, reg, ctx,
+                           output_dir=str(tmp_path / "products"))
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions_after(last: int) -> list:
+        """Executions with an id above ``last``. The store keeps them in
+        id order and evicts the oldest past its retention limit, so
+        positions shift and ids do not."""
+        execs, out = store.executionsList(), []
+        for i in reversed(range(execs.size())):
+            if execs.apply(i).executionId() <= last:
+                break
+            out.append(execs.apply(i))
+        return out
+
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    before = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    recs = eng.run_all()
+    assert len(recs) == 3 and {r.status for r in recs} == {"completed"}
+    for _ in range(50):
+        # the UI store may write an execution's final plan a moment late
+        bus.waitUntilEmpty()
+        plans = [e.physicalPlanDescription()
+                 for e in executions_after(before)]
+        plans = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+        if len(plans) == 1 and "== Final Plan ==" in plans[0]:
+            break
+        time.sleep(0.1)
+    assert len(plans) == 1, len(plans)
+    final = (plans[0].split("== Final Plan ==", 1)[1]
+             .split("== Initial Plan ==", 1)[0].splitlines())
+    readers = set()
+    for i, ln in enumerate(final):
+        if "Scan parquet" in ln:
+            readers.add(next(p for p in _parents(final, i)
+                             if re.search(r"(?<!Reused)Exchange \(", p)))
+    assert len(readers) == 1, readers
+    assert sum("ReusedExchange" in ln for ln in final) == 2, "\n".join(final)

@@ -4,14 +4,22 @@ ingestion/asset_writer.py:199-203) — the size the COG pipeline was built
 around — generated in-flight from spark.range (no I/O), multiple
 timesteps.
 
+A second section lands one month on a monthly history and times the
+derivation engine's re-derivation (one Promotion unit and the value,
+anomaly and trend units of a climatology over the whole history).
+
 Usage: python tools/scale_smoke.py [timesteps]
-Prints one timing line per operator; appends nothing.
+       python tools/scale_smoke.py landing [months ...]   (default 12 60 240)
+Prints one timing line per operator or landing; appends nothing.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -43,7 +51,98 @@ def global_grid(spark, timesteps: int):
          + F.month("time")).alias("value"))
 
 
+LANDING_PX = 64            # a landing's grid: 64 × 64 pixels per month
+
+
+def land_once(spark, months: int, label: str = "landing") -> None:
+    """Write ``months`` monthly slices from 2000-01 into a grid store,
+    then land the next month and time the engine's dispatch for it."""
+    from georiva_spark.plans import (CatalogContext, DerivationEngine,
+                                     RecipeRegistry, Trigger)
+    from georiva_spark.plans.recipes import ClimatologyRecipe, PromotionRecipe
+    from georiva_spark.schemas import GRID_SCHEMA
+    from georiva_spark.sources import grid_store
+
+    n = LANDING_PX
+    root = tempfile.mkdtemp(prefix="landing-smoke-")
+    store = os.path.join(root, "store")
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                       for f in GRID_SCHEMA.fields
+                       if f.name not in ("collection", "variable"))
+
+    def month(t: int) -> dt.datetime:
+        return dt.datetime(2000 + t // 12, t % 12 + 1, 1)
+
+    def write(t0: int, t1: int) -> None:
+        grid_store.write_grid(spark.range(n * n * (t1 - t0)).select(
+            F.lit("default").alias("org"), F.lit("t").alias("catalog"),
+            F.lit("g").alias("collection"), F.lit("t").alias("variable"),
+            F.expr(f"cast(add_months(date'2000-01-01', "
+                   f"cast(id div {n * n} + {t0} as int)) as timestamp)")
+            .alias("time"),
+            F.lit(None).cast("timestamp").alias("reference_time"),
+            F.expr(f"(id div {n}) % {n}").alias("y"),
+            F.expr(f"id % {n}").alias("x"),
+            (F.expr(f"(id div {n}) % {n}") + 0.5).alias("lat"),
+            (F.expr(f"id % {n}") + 0.5).alias("lon"),
+            (F.sin(F.col("id") / 97.0) * 10.0).alias("value")), store)
+
+    def item(t: int) -> dict:
+        return {"item_id": t + 1, "collection": "g", "variable": "t",
+                "time": month(t), "tier": "staging", "checksum": f"m{t}"}
+
+    def load(it: dict):
+        part = os.path.join(store, "collection=g", "variable=t",
+                            f"date={it['time']:%Y-%m-%d}")
+        return (spark.read.schema(f"{schema}, collection string, "
+                                  "variable string, date date")
+                .option("basePath", store).parquet(part).drop("date"))
+
+    try:
+        write(0, months)
+        ctx = CatalogContext(spark, [item(t) for t in range(months)],
+                             grid_loader=load)
+        reg = RecipeRegistry()
+        reg.register(PromotionRecipe("g", "g-published"))
+        reg.register(ClimatologyRecipe(
+            "g", "g-climatology", periods=[(2000, month(months).year)],
+            quantities=["value", "anomaly", "trend"], baseline=(2000, 2000)))
+        engine = DerivationEngine(spark, reg, ctx,
+                                  output_dir=os.path.join(root, "products"))
+        write(months, months + 1)
+        landed = item(months)
+        ctx.items.append(landed)
+        sc = spark.sparkContext
+        group = f"{label} {months}"
+        sc.setJobGroup(group, group)
+        try:
+            t0 = time.perf_counter()
+            recs = engine.dispatch_for_triggers(
+                [Trigger(kind="staging_item", item=landed)], origin="landing")
+            el = time.perf_counter() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = sum(tracker.getStageInfo(s).numCompletedTasks
+                    for j in jobs for s in tracker.getJobInfo(j).stageIds
+                    if tracker.getStageInfo(s) is not None)
+        done = sum(r.status == "completed" for r in recs)
+        print(f"{label} after {months} months: {el:.2f}s engine wall, "
+              f"{len(jobs)} jobs, {tasks} tasks, {done} units completed")
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def main():
+    if sys.argv[1:2] == ["landing"]:
+        spark = get_spark("scale-smoke-landing",
+                          extra_conf={"spark.driver.memory": "4g"})
+        land_once(spark, 12, label="warm-up landing")
+        for months in [int(a) for a in sys.argv[2:]] or [12, 60, 240]:
+            land_once(spark, months)
+        return
     t_n = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     spark = get_spark("scale-smoke",
                       extra_conf={"spark.driver.memory": "48g"})
