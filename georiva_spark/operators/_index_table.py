@@ -13,6 +13,11 @@ trip, no Spark job) and passes that dict on: to :func:`require` for
 typed parameters, to :func:`check_quantizer_sync`, and to the
 tombstone tripwire. A stamps dict is the table's properties as Spark
 reports them, so a raw ``SHOW TBLPROPERTIES`` dict is one too.
+
+Every compaction (MinHash, Hamming, IVF float and PQ, with or without
+a retrain) ends through :func:`install`: stamp the staged table, swap
+the staged tables in, clear the tombstone rules. That one function is
+the list of a compaction's commit points.
 """
 
 from __future__ import annotations
@@ -103,3 +108,29 @@ def check_quantizer_sync(spark, table: str, stamps: dict,
                 f"compaction was interrupted between the sidecar and "
                 f"main swaps. Re-run the compact (it re-stages) or "
                 f"finish the pending atomic swap.")
+
+
+def install(spark, table: str, stamp_table: str, params: dict,
+            swaps) -> None:
+    """The end of every index compaction, in crash-safe order:
+
+    1. stamp ``params`` (parameter name -> value) on the staged
+       ``{stamp_table}_compact``, so every probeable state of the swap
+       is param-valid;
+    2. swap each staged ``{name}_compact`` in as ``name``
+       (:func:`~georiva_spark.sources.bucketing.atomic_swap_table`),
+       in the order of ``swaps`` — quantizer sidecars before the main
+       table, so a crash between them is a version skew that fails by
+       name (:func:`check_quantizer_sync`);
+    3. clear index ``table``'s tombstone rules
+       (:func:`~georiva_spark.operators._tombstones.clear_rules`),
+       AFTER the purged tables are in: a crash before the clear leaves
+       rules that match nothing, never dead rows live again."""
+    from georiva_spark.operators._tombstones import clear_rules
+    from georiva_spark.sources.bucketing import atomic_swap_table
+
+    if params:
+        stamp(spark, f"{stamp_table}_compact", params)
+    for name in swaps:
+        atomic_swap_table(spark, name)
+    clear_rules(spark, table, stamp_table=stamp_table)

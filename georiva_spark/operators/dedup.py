@@ -744,6 +744,9 @@ def hamming_index_write(codes: DataFrame, table: str, path: str,
         "max_hamming": max_hamming, "bits": bits,
         "word_bits": word_bits, "n_buckets": n_buckets,
         "arr": int(is_arr)})
+    # the rebuilt index starts with no rules: the old name's tombstones
+    # would hide its rows (cleared last — a crash before only hides)
+    _clear_rules(codes.sparkSession, table, stamp_table=f"{table}_bands")
 
 
 def _hamming_stamps(spark, table: str) -> tuple[dict, dict]:
@@ -1025,9 +1028,8 @@ def hamming_index_compact(spark, table: str, path: str) -> None:
     (:func:`hamming_index_retract`) are removed PHYSICALLY, band rows
     whose code has no live member left are dropped (a retracted-only
     code stops generating candidates at all), and the rule table
-    clears AFTER both swaps."""
-    from georiva_spark.sources.bucketing import (atomic_swap_table,
-                                                 write_bucketed)
+    clears AFTER both swaps (:func:`_index_table.install`)."""
+    from georiva_spark.sources.bucketing import write_bucketed
 
     p, stamps = _hamming_stamps(spark, table)
     _validate_single_writer(spark, table)
@@ -1045,12 +1047,9 @@ def hamming_index_compact(spark, table: str, path: str) -> None:
                    f"{table}_ids_compact", "ref",
                    p["n_buckets"], f"{path}/ids", sort=False,
                    one_file_per_bucket=True)
-    _index_table.stamp(spark, f"{table}_bands_compact",
-                       _index_table.params(stamps))
-    for suffix in ("bands", "ids"):
-        atomic_swap_table(spark, f"{table}_{suffix}")
-    # applied-then-cleared (safe order)
-    _clear_rules(spark, table, stamp_table=f"{table}_bands")
+    _index_table.install(spark, table, f"{table}_bands",
+                         _index_table.params(stamps),
+                         (f"{table}_bands", f"{table}_ids"))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.3,
@@ -1316,6 +1315,9 @@ def minhash_index_write(docs: DataFrame, table: str, path: str,
         "num_hashes": num_hashes, "bands": bands, "n": n,
         "n_buckets": n_buckets, "text_col": text_col,
         "portable": int(portable)})
+    # the rebuilt index starts with no rules: the old name's tombstones
+    # would hide its rows (cleared last — a crash before only hides)
+    _clear_rules(docs.sparkSession, table, stamp_table=f"{table}_bands")
 
 
 def _minhash_stamps(spark, table: str) -> tuple[dict, dict]:
@@ -1458,12 +1460,12 @@ def minhash_index_compact(spark, table: str, path: str) -> None:
 
     Tombstoned generations (:func:`minhash_index_retract`) are
     REMOVED PHYSICALLY here — the compacted layout holds only live
-    rows — and the rule table clears AFTER both swaps: a crash
-    between swap and clear leaves rules that match nothing
-    (idempotently re-appliable), never a window where dead rows are
-    live again."""
-    from georiva_spark.sources.bucketing import (atomic_swap_table,
-                                                 write_bucketed)
+    rows — and the rule table clears AFTER both swaps
+    (:func:`_index_table.install`, the stamp → swap → clear step of
+    every compaction): a crash between swap and clear leaves rules
+    that match nothing (idempotently re-appliable), never a window
+    where dead rows are live again."""
+    from georiva_spark.sources.bucketing import write_bucketed
 
     p, stamps = _minhash_stamps(spark, table)
     _validate_single_writer(spark, table)
@@ -1476,19 +1478,9 @@ def minhash_index_compact(spark, table: str, path: str) -> None:
                    f"{table}_sigs_compact", "doc_id",
                    p["n_buckets"], f"{path}/sigs", sort=False,
                    one_file_per_bucket=True)
-    # stamp BEFORE the swap: a probe that lands on the staged table at
-    # any intermediate state must already see valid parameters
-    _index_table.stamp(spark, f"{table}_bands_compact",
-                       _index_table.params(stamps))
-    for suffix in ("bands", "sigs"):
-        atomic_swap_table(spark, f"{table}_{suffix}")
-    # clear_rules, NOT a raw DROP (r13, ADVICE): an ADOPTED
-    # (post-restart, external) rule table keeps its files under a bare
-    # DROP, and the next probe would re-adopt the stale rules —
-    # permanently tombstoning any later live generation that isn't the
-    # stale keep_gen (applied-then-cleared safe order, matching
-    # hamming_index_compact / ivf_index_compact)
-    _clear_rules(spark, table, stamp_table=f"{table}_bands")
+    _index_table.install(spark, table, f"{table}_bands",
+                         _index_table.params(stamps),
+                         (f"{table}_bands", f"{table}_sigs"))
 
 
 def minhash_index_probe(new_docs: DataFrame, table: str,

@@ -342,11 +342,11 @@ def ivf_index_retract(spark, table: str, shard: str,
     machinery shared with the MinHash/Hamming families): tombstone
     every generation of ``shard`` except ``keep_gen``. Probes stop
     returning the dead vectors immediately (O(1) rule row, zero index
-    rewrite); :func:`ivf_index_compact` / :func:`ivf_pq_index_compact`
-    purge them physically and clear the rules. Recall calibration and
-    tuning (:func:`ann_recall_estimate`, :func:`ann_tune`) also see
-    only live rows — dead vectors neither serve as queries nor count
-    as truth."""
+    rewrite); :func:`ivf_index_compact` purges them physically and
+    clears the rules. Recall calibration and tuning
+    (:func:`ann_recall_estimate`, :func:`ann_tune`) also see only live
+    rows — dead vectors neither serve as queries nor count as
+    truth."""
     _tombstones.retract(spark, table, "ivf", shard, keep_gen)
 
 
@@ -357,9 +357,9 @@ def ivf_index_retract_docs(spark, table: str, vec_ids) -> None:
     right-to-be-forgotten names items, not crawl shards). Probes,
     recall calibration, and tuning stop seeing the vectors
     immediately (a second broadcast anti-join in the live filter);
-    the compactions purge them physically and clear the rules. Works
-    on any layout including unversioned pre-r12 indexes (the filter
-    keys on vec_id, not the gen)."""
+    :func:`ivf_index_compact` purges them physically and clears the
+    rules. Works on any layout including unversioned pre-r12 indexes
+    (the filter keys on vec_id, not the gen)."""
     _tombstones.retract_docs(spark, table, "ivf", vec_ids)
 
 
@@ -452,30 +452,52 @@ def ivf_index_write(emb: DataFrame, table: str, path: str,
         "n_centroids": n_centroids, "train_iters": train_iters,
         "train_sample_ppm": train_sample_ppm or 0,
         "quantizer_version": 1})
+    # the rebuilt index starts with no rules: the old name's tombstones
+    # would hide its rows (cleared last — a crash before only hides)
+    _tombstones.clear_rules(emb.sparkSession, table, stamp_table=table)
 
 
 def ivf_index_append(emb: DataFrame, table: str,
                      gen: str = "") -> None:
-    """Append a delta shard to a :func:`ivf_index_write` index — the
-    growth half of the ANN layout (mirror of minhash_index_append):
-    new vectors are assigned with the INDEX'S OWN centroids (read from
-    the bounded sidecar, inlined as literals — zero shuffle) and
-    appended into the same cell partitions, so probes keep pruning to
-    nprobe/C over the grown corpus without ever re-assigning it.
-    ``gen`` tags the appended rows' generation for
+    """Append a delta shard to an IVF index, float
+    (:func:`ivf_index_write`) or PQ (:func:`ivf_pq_index_write`) — the
+    growth half of the ANN layout (mirror of minhash_index_append).
+    The index's stamps name its layout (``pq_m`` means PQ). New
+    vectors are assigned with the INDEX'S OWN centroids (read from the
+    bounded sidecar, inlined as literals — zero shuffle) and appended
+    into the same cell partitions, so probes keep pruning to nprobe/C
+    over the grown corpus without ever re-assigning it. A PQ index
+    also encodes the delta with its OWN codebook (rotated first by its
+    own rotation on an OPQ index); the stamped m/nbits/residual drive
+    the packing, so a probe's unpacking stays consistent across
+    appends. ``gen`` tags the appended rows' generation for
     :func:`ivf_index_retract` (T5); tagged appends into an
     unversioned pre-r12 layout fail by name."""
     spark = emb.sparkSession
-    _index_table.check_quantizer_sync(
-        spark, table, _index_table.props(spark, table), ("_centroids",))
+    stamps = _index_table.props(spark, table)
+    pq = _index_table.get(stamps, "pq_m") is not None
+    if pq:
+        m, nbits, residual, opq = _pq_stamps(spark, table, stamps)
+    else:
+        _index_table.check_quantizer_sync(spark, table, stamps,
+                                          ("_centroids",))
     gen_cols = _tombstones.gen_cols(spark, table, "ivf", gen,
                                     "ivf_index_append")
     cents = _read_sidecar(spark, table, "_centroids")
     if not cents:
         raise ValueError(f"{table!r} has no centroid sidecar — not an "
                          f"ivf_index_write index")
-    assigned = emb.withColumn("cell", _argmin_cell(cents)) \
-                  .select(*emb.columns, *gen_cols, "cell")
+    if not pq:
+        assigned = emb.withColumn("cell", _argmin_cell(cents)) \
+                      .select(*emb.columns, *gen_cols, "cell")
+    else:
+        if opq:
+            emb = emb.select("vec_id", _rotate_expr(
+                _load_rotation(spark, table)).alias("embedding"))
+        assigned = _pq_encode_frame(
+            emb, cents, _read_sidecar(spark, table, "_codebook"), m,
+            nbits, residual).select("vec_id", "pq_code", *gen_cols,
+                                    "cell")
     (assigned.write.mode("append").format("parquet")
      .partitionBy("cell").saveAsTable(table))
     # a reader that scanned the table BEFORE this append (the probe in
@@ -487,185 +509,119 @@ def ivf_index_append(emb: DataFrame, table: str,
 
 def ivf_index_compact(spark, table: str, path: str,
                       retrain_iters: int = 0,
-                      train_sample_ppm: int | None = None) -> None:
-    """Compact an appended-to IVF index: every
-    :func:`ivf_index_append` adds files to the touched cell
-    partitions; after many deltas a probe opens one file per append
-    per probed cell. Re-materialize one file per cell (repartition on
-    the partition column, pure layout rewrite — no re-assignment;
-    tombstoned generations are removed PHYSICALLY and the rule table
-    clears after the swap — :func:`ivf_index_retract`),
-    then swap the catalog entry via
+                      train_sample_ppm: int | None = None,
+                      emb: DataFrame | None = None) -> None:
+    """Compact an appended-to IVF index, float or PQ (the stamps name
+    the layout): every :func:`ivf_index_append` adds files to the
+    touched cell partitions; after many deltas a probe opens one file
+    per append per probed cell. Re-materialize one file per cell
+    (repartition on the partition column, pure layout rewrite — no
+    re-assignment; tombstoned generations are removed PHYSICALLY —
+    :func:`ivf_index_retract`), then end through
+    :func:`_index_table.install`: stamps carried onto the staged
+    table, catalog swap via
     :func:`~georiva_spark.sources.bucketing.atomic_swap_table`
-    (rename-out / rename-in / drop-old): each statement is atomic, the
-    sequence is not, but every intermediate state leaves a probeable
-    table under some name and a crash is recovered by renaming the
-    surviving ``_compact``/``_old`` back. Old data directories are
-    the caller's to retire.
+    (rename-out / rename-in / drop-old), rules cleared. Each statement
+    is atomic, the sequence is not, but every intermediate state
+    leaves a probeable table under some name and a crash is recovered
+    by renaming the surviving ``_compact``/``_old`` back. Old data
+    directories are the caller's to retire.
 
     ``retrain_iters>0`` — RETRAIN on compact (the drift story): heavy
     appends under distribution drift decay the cell balance (new
     blobs all route to whichever old cell is least-far — one hot
     cell, probes read its fraction instead of ~1/C) and nothing
     re-trains. Since compaction rewrites every byte anyway, this is
-    the free moment to re-run Lloyd on the compacted corpus:
-    :func:`kmeans_centroids` over the table's own (vec_id, embedding),
-    full re-assignment, NEW centroid sidecar. Consistency across the
-    two swapped tables is stamp-enforced: both staged tables carry an
-    incremented ``georiva.quantizer_version``, the SIDECAR swaps
-    first, and every probe/append validates version sync — the crash
-    window between the swaps fails BY NAME instead of routing new
-    assignments with old centroids (silently wrong recall). Only the
-    float layout can self-retrain (it stores its embeddings); a PQ
-    table raises by name toward :func:`ivf_pq_index_compact`, which
-    takes the float corpus as input. ``train_sample_ppm`` gates the
-    retrain's Lloyd rounds to a deterministic md5-bucket subsample
-    (the writer's knob) — at 100 TB the re-ASSIGNMENT is the
-    compaction rewrite itself, but per-round training cost should
-    never be corpus-sized."""
-    from georiva_spark.sources.bucketing import atomic_swap_table
-
+    the free moment to re-run Lloyd (:func:`kmeans_centroids`) on the
+    LIVE corpus, once read: a float index's own (vec_id, embedding)
+    rows, fully re-assigned; a PQ index's float corpus ``emb`` (the
+    caller's grown corpus — base + every appended delta; a PQ table
+    stores sub-codes only), semi-joined to the live vec_ids so dead
+    vectors neither train nor re-enter, each row keeping its gen tag,
+    and re-encoded through :func:`_pq_encode_frame`. A trained PQ
+    codebook (stamped ``pq_codebook_iters>0``) re-trains with the same
+    iteration count (on residuals if stamped); a pinned codebook and
+    an OPQ rotation are CARRIED — codewords and rotations are data,
+    and re-pinning or re-rotating would silently re-encode everything
+    against a different basis (the retrain runs in the rotated space
+    the index lives in). The staged main table and every sidecar
+    (``_centroids``, ``_codebook``, ``_rotation``) carry the
+    incremented ``georiva.quantizer_version``; the sidecars swap
+    before the main table, and every probe/append validates version
+    sync — a crash between the swaps fails BY NAME instead of routing
+    new assignments with old centroids (silently wrong recall).
+    ``emb`` on a float index, or a PQ retrain without it, fails by
+    name. ``train_sample_ppm`` gates every Lloyd round to a
+    deterministic md5-bucket subsample (the writer's knob) — at 100 TB
+    the re-ASSIGNMENT is the compaction rewrite itself, but per-round
+    training cost should never be corpus-sized."""
     _tombstones.validate_single_writer(spark, table)
     stamps = _index_table.props(spark, table)
     params = _index_table.params(stamps)
-    if retrain_iters > 0:
-        if "pq_m" in params:
-            raise ValueError(
-                "ivf_index_compact: a PQ index stores no float "
-                "embeddings to retrain from — use "
-                "ivf_pq_index_compact(emb=..., retrain_iters=...)")
-        k, = _index_table.require(stamps, table, "IVF", "n_centroids")
-        corpus = _tombstones.live_filter(spark, table, stamps, "vec_id")(
-            spark.table(table)).drop("cell")
-        cents = kmeans_centroids(corpus, k=k, iters=retrain_iters,
-                                 sample_ppm=train_sample_ppm)
-        staged = corpus.withColumn("cell", _argmin_cell(cents))
-        ver = int(params.get("quantizer_version", "1")) + 1
-        params.update(train_iters=retrain_iters,
-                      train_sample_ppm=train_sample_ppm or 0,
-                      quantizer_version=ver)
-        (staged.write.mode("overwrite").format("parquet")
-         .partitionBy("cell").option("path", path)
-         .saveAsTable(f"{table}_compact"))
-        _write_sidecars(spark, table, path, {"_centroids": cents}, ver,
-                        staged="_compact")
-        _index_table.stamp(spark, f"{table}_compact", params)
-        # sidecar FIRST: the crash window (new sidecar + old main) is
-        # version-skewed and probes fail by name; main-first would
-        # leave new assignments probed with old centroids — silent
-        atomic_swap_table(spark, f"{table}_centroids")
-        atomic_swap_table(spark, table)
-        # tombstones applied, then cleared
-        _tombstones.clear_rules(spark, table, stamp_table=table)
-        return
-    cur = _tombstones.live_filter(spark, table, stamps, "vec_id")(
-        spark.table(table))
-    (cur.repartition("cell")
-     .write.mode("overwrite").format("parquet")
-     .partitionBy("cell").option("path", path)
-     .saveAsTable(f"{table}_compact"))
-    # carry the quantizer/PQ stamps onto the staged table BEFORE the
-    # swap (atomic_swap_table's contract: every probeable state is
-    # param-valid) — works for both the float and the PQ layout
-    if params:
-        _index_table.stamp(spark, f"{table}_compact", params)
-    atomic_swap_table(spark, table)
-    # tombstones applied, then cleared
-    _tombstones.clear_rules(spark, table, stamp_table=table)
-
-
-def ivf_pq_index_compact(spark, table: str, path: str,
-                         emb: DataFrame | None = None,
-                         retrain_iters: int = 0,
-                         train_sample_ppm: int | None = None) -> None:
-    """Compact a PQ-compressed index; with ``retrain_iters>0``,
-    RETRAIN it — the PQ variant of
-    :func:`ivf_index_compact(retrain_iters=…)`. A PQ table stores
-    sub-codes, not floats, so retraining needs the float corpus
-    passed as ``emb`` (the caller's grown corpus — base + every
-    appended delta; raises by name without it). The coarse quantizer
-    re-runs Lloyd; a trained codebook (stamped
-    ``pq_codebook_iters>0``) re-trains with the same iteration count
-    (on residuals if stamped); a pinned codebook is CARRIED — its
-    codewords are data, and re-pinning under a new id space would
-    silently re-encode everything against different codewords. The
-    whole corpus re-encodes through the shared
-    :func:`_pq_encode_frame`, all three staged tables stamp the
-    incremented quantizer version, and the swap order is sidecars
-    (centroids, codebook) then main — every crash window is
-    version-skewed and fails by name at the next probe/append.
-    ``train_sample_ppm`` gates both retraining stages to a
-    deterministic md5-bucket subsample (see
-    :func:`ivf_index_compact`). With pending tombstones
-    (:func:`ivf_index_retract`) the retrain path restricts ``emb`` to
-    the LIVE vec_ids first — dead vectors neither train the quantizer
-    nor re-enter the re-encoded index — and carries each surviving
-    row's generation tag."""
-    from georiva_spark.sources.bucketing import atomic_swap_table
-
-    if retrain_iters <= 0:
-        ivf_index_compact(spark, table, path)
-        return
-    _tombstones.validate_single_writer(spark, table)
-    stamps = _index_table.props(spark, table)
-    m, nbits, n_centroids = _index_table.require(
-        stamps, table, "ivf_pq", "pq_m", "pq_nbits", "n_centroids")
-    params = _index_table.params(stamps)
-    codebook_iters = int(params.get("pq_codebook_iters", "0"))
-    residual = params.get("pq_residual") == "1"
-    if emb is None:
+    pq = "pq_m" in params
+    if emb is not None and not pq:
         raise ValueError(
-            "ivf_pq_index_compact: retrain_iters>0 needs the float "
-            "corpus (emb=) — the PQ table stores sub-codes only")
-    # T5: restrict the retrain corpus to LIVE index rows (the caller's
-    # grown corpus still contains re-crawled shards' dead vectors and
-    # r13 taken-down vec_ids) and keep each row's generation for the
-    # re-encoded table (gen-less layouts still honor doc takedowns)
-    gen_map = None
+            "ivf_index_compact: emb= is the float corpus of a PQ "
+            "retrain — a float index retrains from its own rows")
+    if pq and retrain_iters > 0 and emb is None:
+        raise ValueError(
+            "ivf_index_compact: retrain_iters>0 on a PQ index needs "
+            "the float corpus (emb=) — the PQ table stores sub-codes "
+            "only")
     live = _tombstones.live_filter(spark, table, stamps, "vec_id")(
         spark.table(table))
-    if "gen" in live.columns:
-        gen_map = live.select("vec_id", "gen")
-    emb = emb.join(live.select("vec_id"), "vec_id", "left_semi")
-    opq = params.get("pq_opq") == "1"
-    rot = None
-    if opq:
-        # the rotation is CARRIED, not relearned (same policy as a
-        # pinned codebook: codewords/rotations are data, and rotating
-        # under a fresh basis would silently re-route every probe a
-        # user calibrated against) — the retrained quantizer and
-        # codebook train in the SAME rotated space the index lives in
-        rot = _load_rotation(spark, table)
-        emb = emb.select("vec_id", _rotate_expr(rot).alias("embedding"))
-    cents = kmeans_centroids(emb, k=n_centroids, iters=retrain_iters,
-                             sample_ppm=train_sample_ppm)
-    if codebook_iters > 0:
-        cb = pq_train_codebooks(emb, m, nbits, codebook_iters,
-                                cents=cents if residual else None,
-                                sample_ppm=train_sample_ppm)
+    sidecars = {}
+    if retrain_iters <= 0:
+        staged = live.repartition("cell")
     else:
-        cb = _read_sidecar(spark, table, "_codebook")
-    ver = int(params.get("quantizer_version", "1")) + 1
-    assigned = _pq_encode_frame(emb, cents, cb, m, nbits, residual)
-    if gen_map is not None:
-        assigned = (assigned.join(gen_map, "vec_id")
-                    .select("vec_id", "pq_code", "gen", "cell"))
-    (assigned.write.mode("overwrite").format("parquet")
+        k, = _index_table.require(stamps, table, "IVF", "n_centroids")
+        rot = None
+        if not pq:
+            corpus = live.drop("cell")
+        else:
+            corpus = emb.join(live.select("vec_id"), "vec_id",
+                              "left_semi")
+            if params.get("pq_opq") == "1":
+                rot = _load_rotation(spark, table)
+                corpus = corpus.select(
+                    "vec_id", _rotate_expr(rot).alias("embedding"))
+        cents = kmeans_centroids(corpus, k=k, iters=retrain_iters,
+                                 sample_ppm=train_sample_ppm)
+        sidecars["_centroids"] = cents
+        if not pq:
+            staged = corpus.withColumn("cell", _argmin_cell(cents))
+        else:
+            m, nbits = _index_table.require(stamps, table, "ivf_pq",
+                                            "pq_m", "pq_nbits")
+            residual = params.get("pq_residual") == "1"
+            cb_iters = int(params.get("pq_codebook_iters", "0"))
+            sidecars["_codebook"] = (
+                pq_train_codebooks(corpus, m, nbits, cb_iters,
+                                   cents=cents if residual else None,
+                                   sample_ppm=train_sample_ppm)
+                if cb_iters > 0
+                else _read_sidecar(spark, table, "_codebook"))
+            if rot is not None:
+                sidecars["_rotation"] = rot
+            staged = _pq_encode_frame(corpus, cents,
+                                      sidecars["_codebook"], m, nbits,
+                                      residual)
+            if "gen" in live.columns:
+                staged = (staged.join(live.select("vec_id", "gen"),
+                                      "vec_id")
+                          .select("vec_id", "pq_code", "gen", "cell"))
+        params.update(train_iters=retrain_iters,
+                      train_sample_ppm=train_sample_ppm or 0,
+                      quantizer_version=int(
+                          params.get("quantizer_version", "1")) + 1)
+    (staged.write.mode("overwrite").format("parquet")
      .partitionBy("cell").option("path", path)
      .saveAsTable(f"{table}_compact"))
-    sidecars = {"_centroids": cents, "_codebook": cb}
-    if opq:
-        sidecars["_rotation"] = rot
-    _write_sidecars(spark, table, path, sidecars, ver, staged="_compact")
-    params.update(train_iters=retrain_iters,
-                  train_sample_ppm=train_sample_ppm or 0,
-                  quantizer_version=ver)
-    _index_table.stamp(spark, f"{table}_compact", params)
-    for sc in sidecars:
-        atomic_swap_table(spark, f"{table}{sc}")
-    atomic_swap_table(spark, table)
-    # tombstones applied, then cleared
-    _tombstones.clear_rules(spark, table, stamp_table=table)
+    if sidecars:
+        _write_sidecars(spark, table, path, sidecars,
+                        params["quantizer_version"], staged="_compact")
+    _index_table.install(spark, table, table, params,
+                         [f"{table}{sc}" for sc in sidecars] + [table])
 
 
 def ivf_index_probe(spark, table: str, query_vec, k: int = 5,
@@ -1449,41 +1405,8 @@ def ivf_pq_index_write(emb: DataFrame, table: str, path: str,
         "pq_nbits": nbits, "pq_codebook_iters": codebook_iters,
         "pq_residual": int(residual), "pq_opq": int(opq),
         "quantizer_version": 1})
-
-
-def ivf_pq_index_append(emb: DataFrame, table: str,
-                        gen: str = "") -> None:
-    """Append a delta shard to a :func:`ivf_pq_index_write` index —
-    the growth half of the compressed ANN layout: new vectors are
-    assigned with the INDEX'S OWN centroids and encoded with the
-    INDEX'S OWN codebook (both read from the bounded sidecars and
-    inlined as literals — zero shuffle), then appended into the same
-    cell partitions. The stamped m/nbits/residual drive the packing
-    (a residual index encodes the delta's residuals too), so a
-    probe's unpacking stays consistent across appends. Readers'
-    cached listings are refreshed (the probe-then-grow loop's
-    per-session cache hazard). ``gen`` tags the appended rows for
-    :func:`ivf_index_retract` (T5)."""
-    spark = emb.sparkSession
-    gen_cols = _tombstones.gen_cols(spark, table, "ivf", gen,
-                                    "ivf_pq_index_append")
-    m, nbits, residual, opq = _pq_stamps(
-        spark, table, _index_table.props(spark, table))
-    cents = _read_sidecar(spark, table, "_centroids")
-    if not cents:
-        raise ValueError(f"{table!r} has no centroid sidecar")
-    cb = _read_sidecar(spark, table, "_codebook")
-    if opq:
-        # an OPQ index lives entirely in rotated space — the delta
-        # rotates with the INDEX'S OWN stamped rotation before encode
-        rot = _load_rotation(spark, table)
-        emb = emb.select("vec_id", _rotate_expr(rot).alias("embedding"))
-
-    assigned = _pq_encode_frame(emb, cents, cb, m, nbits, residual) \
-        .select("vec_id", "pq_code", *gen_cols, "cell")
-    (assigned.write.mode("append").format("parquet")
-     .partitionBy("cell").saveAsTable(table))
-    spark.catalog.refreshTable(table)
+    # no rules carry over to the rebuilt index (see ivf_index_write)
+    _tombstones.clear_rules(spark, table, stamp_table=table)
 
 
 def ivf_pq_index_probe(spark, table: str, query_vec, k: int = 5,

@@ -72,6 +72,7 @@ class ResolvedInput:
     checksum: str
     required: bool = True
     load: Callable[[], DataFrame] | None = None  # lazy grid loader
+    time: Any = None          # the item's catalog time
 
 
 @dataclass

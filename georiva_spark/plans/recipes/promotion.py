@@ -47,7 +47,7 @@ class PromotionRecipe:
         it = matches[0]
         return [ResolvedInput(role="source", tier=it.get("tier", "staging"),
                               item_id=it["item_id"], checksum=it["checksum"],
-                              load=ctx.loader_for(it))]
+                              load=ctx.loader_for(it), time=it.get("time"))]
 
     def transform(self, spark: SparkSession, unit: ProductionUnit,
                   resolved: list[ResolvedInput]) -> tuple[OutputItem, DataFrame]:
@@ -57,13 +57,8 @@ class PromotionRecipe:
             df = df.withColumn("collection", F.lit(self.target_collection))
             if self.drop_nodata:
                 df = df.where(F.col("value").isNotNull())
-        matches = [i for i in [df] if i is not None]
-        item_time = None
-        if matches:
-            # promoted item keeps the source timestep
-            row = df.select(F.min("time").alias("t")).collect()[0]
-            item_time = row.t
+        # the promoted item keeps the source item's timestep (no job)
         return (OutputItem(collection=self.target_collection, variable="value",
-                           time=item_time,
+                           time=src.time,
                            properties={"promoted_from": str(unit["source_item_id"])}),
                 df)

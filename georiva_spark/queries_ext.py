@@ -6077,8 +6077,6 @@ def q_takedown_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                         BPE_MERGES, context_len=128, num_shards=8)
     t = _fixture_table(spark, "t_tdrepq")
     ht = _fixture_table(spark, "t_tdrehq")
-    from georiva_spark.operators._tombstones import clear_rules
-    clear_rules(spark, t, stamp_table=f"{t}_bands")
     clear_hold(spark, ht)
     dedup.minhash_index_write(docs.select("doc_id", "text"), t,
                               os.path.join(base, "idx"), n_buckets=8)
@@ -7276,12 +7274,9 @@ def q_minhash_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
                               & F.col("src_text").isNotNull(),
                               F.col("src_text"))
                        .otherwise(F.col("text")).alias("text")))
-    from georiva_spark.operators._tombstones import clear_rules
     _sweep_stale_fixtures(spark, "t_mhretq", "mhret")
     d = _fixture_tmp(spark, "mhret")
     t = _fixture_table(spark, "t_mhretq")
-    # best-of-N re-evaluations start clean
-    clear_rules(spark, t, stamp_table=f"{t}_bands")
     dedup.minhash_index_write(planted.where(F.col("doc_id") % 4 == 0),
                               t, os.path.join(d, "idx"),
                               n_buckets=8, portable=True)
@@ -7355,12 +7350,9 @@ def q_ann_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")
-    from georiva_spark.operators._tombstones import clear_rules
     _sweep_stale_fixtures(spark, "t_annret", "annret")
     d = _fixture_tmp(spark, "annret")
     t = _fixture_table(spark, "t_annret")
-    # best-of-N re-evaluations start clean
-    clear_rules(spark, t, stamp_table=t)
     similarity.ivf_index_write(emb, t,
                                os.path.join(d, "idx"), n_centroids=8)
     twins = (emb.where(F.col("vec_id") < 3)
@@ -7429,12 +7421,9 @@ def q_image_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     originals = emb.mapInPandas(gen({0}), schema=schema)
     shard = emb.mapInPandas(gen({3}), schema=schema)
     delta = emb.mapInPandas(gen({1, 2}), schema=schema)
-    from georiva_spark.operators._tombstones import clear_rules
     _sweep_stale_fixtures(spark, "t_imgret", "imgret")
     d = _fixture_tmp(spark, "imgret")
     t = _fixture_table(spark, "t_imgret")
-    # best-of-N re-evaluations start clean
-    clear_rules(spark, t, stamp_table=f"{t}_bands")
     dedup.hamming_index_write(mm.image_dhash(originals), t,
                               os.path.join(d, "idx"),
                               id_col="media_id", code_col="dhash",
@@ -7487,11 +7476,9 @@ def q_minhash_retract_docs(spark: SparkSession,
                               & F.col("src_text").isNotNull(),
                               F.col("src_text"))
                        .otherwise(F.col("text")).alias("text")))
-    from georiva_spark.operators._tombstones import clear_rules
     _sweep_stale_fixtures(spark, "t_mhretdq", "mhretd")
     d = _fixture_tmp(spark, "mhretd")
     t = _fixture_table(spark, "t_mhretdq")
-    clear_rules(spark, t, stamp_table=f"{t}_bands")
     dedup.minhash_index_write(planted.where(F.col("doc_id") % 4 == 0),
                               t, os.path.join(d, "idx"),
                               n_buckets=8, portable=True)
@@ -7569,11 +7556,9 @@ def q_ann_retract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")
-    from georiva_spark.operators._tombstones import clear_rules
     _sweep_stale_fixtures(spark, "t_annretd", "annretd")
     d = _fixture_tmp(spark, "annretd")
     t = _fixture_table(spark, "t_annretd")
-    clear_rules(spark, t, stamp_table=t)
     similarity.ivf_index_write(emb, t,
                                os.path.join(d, "idx"), n_centroids=8)
     twins = (emb.where(F.col("vec_id") < 3)
@@ -7643,11 +7628,9 @@ def q_image_retract_docs(spark: SparkSession,
     originals = emb.mapInPandas(gen({0}), schema=schema)
     shard = emb.mapInPandas(gen({3}), schema=schema)
     delta = emb.mapInPandas(gen({1, 2}), schema=schema)
-    from georiva_spark.operators._tombstones import clear_rules
     _sweep_stale_fixtures(spark, "t_imgretd", "imgretd")
     d = _fixture_tmp(spark, "imgretd")
     t = _fixture_table(spark, "t_imgretd")
-    clear_rules(spark, t, stamp_table=f"{t}_bands")
     dedup.hamming_index_write(mm.image_dhash(originals), t,
                               os.path.join(d, "idx"),
                               id_col="media_id", code_col="dhash",

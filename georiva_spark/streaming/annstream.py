@@ -31,8 +31,6 @@ from georiva_spark.operators import _index_table
 from georiva_spark.operators.similarity import (ivf_index_append,
                                                 ivf_index_compact,
                                                 ivf_index_probe_batch,
-                                                ivf_pq_index_append,
-                                                ivf_pq_index_compact,
                                                 ivf_pq_index_probe_batch)
 from georiva_spark.streaming._loop import _family_compact, run_probe_grow
 
@@ -67,14 +65,16 @@ def start_ann_stream(emb_stream: DataFrame, table: str, out_dir: str,
     (base + every appended delta; it is re-invoked at each
     compaction, so a parquet-landing read stays current) or a table
     name string. When the append counter trips, the loop runs
-    :func:`~georiva_spark.operators.similarity.ivf_pq_index_compact`
+    :func:`~georiva_spark.operators.similarity.ivf_index_compact`
     with ``emb=retrain_emb(...)`` — quantizer + stamped codebook
     retrain, version bump, sidecars-then-main swap — and the serving
-    session refreshes, all inside the stream. Requesting PQ retrain
-    WITHOUT ``retrain_emb`` still fails by name at launch (the
-    float corpus cannot be conjured from sub-codes); layout-only PQ
-    compaction (``retrain_iters=0``) needs no floats. Returns the
-    StreamingQuery."""
+    session refreshes, all inside the stream. Append and compact are
+    one function each for both layouts (they read the layout from
+    the index's stamps), so the loop builds one closure of each.
+    Requesting PQ retrain WITHOUT ``retrain_emb`` still fails by name
+    at launch (the float corpus cannot be conjured from sub-codes);
+    layout-only PQ compaction (``retrain_iters=0``) needs no floats.
+    Returns the StreamingQuery."""
     spark = emb_stream.sparkSession
     if not spark.table(f"{table}_centroids").head(1):   # fail fast
         raise ValueError(f"{table!r} has no centroid sidecar — not an "
@@ -82,7 +82,6 @@ def start_ann_stream(emb_stream: DataFrame, table: str, out_dir: str,
     is_pq = _index_table.get(_index_table.props(spark, table),
                              "pq_m") is not None
     probe = ivf_pq_index_probe_batch if is_pq else ivf_index_probe_batch
-    append = ivf_pq_index_append if is_pq else ivf_index_append
     if retrain_emb is not None and not (is_pq and retrain_iters > 0):
         raise ValueError(
             "start_ann_stream: retrain_emb only applies to PQ "
@@ -95,28 +94,17 @@ def start_ann_stream(emb_stream: DataFrame, table: str, out_dir: str,
             "sub-code table doesn't carry; pass retrain_emb= (a "
             "callable returning the grown float corpus, or a table "
             "name) to wire the in-stream maintenance pass")
-    # shard_col (r13): multi-shard micro-batches — guard + gen-tagged
-    # append run per shard slice (see start_neardup_stream)
-    if is_pq and retrain_iters > 0:
-        def _floats() -> DataFrame:
-            return (retrain_emb() if callable(retrain_emb)
-                    else spark.table(retrain_emb))
-        compact = _family_compact(
-            compact_every, compact_dir, "start_ann_stream",
-            lambda path: ivf_pq_index_compact(
-                spark, table, path, emb=_floats(),
-                retrain_iters=retrain_iters,
-                train_sample_ppm=train_sample_ppm))
-    elif is_pq:
-        compact = _family_compact(
-            compact_every, compact_dir, "start_ann_stream",
-            lambda path: ivf_pq_index_compact(spark, table, path))
-    else:
-        compact = _family_compact(
-            compact_every, compact_dir, "start_ann_stream",
-            lambda path: ivf_index_compact(
-                spark, table, path, retrain_iters=retrain_iters,
-                train_sample_ppm=train_sample_ppm))
+
+    def _floats() -> DataFrame | None:
+        if retrain_emb is None:
+            return None
+        return (retrain_emb() if callable(retrain_emb)
+                else spark.table(retrain_emb))
+    compact = _family_compact(
+        compact_every, compact_dir, "start_ann_stream",
+        lambda path: ivf_index_compact(
+            spark, table, path, retrain_iters=retrain_iters,
+            train_sample_ppm=train_sample_ppm, emb=_floats()))
 
     def neighbors(work: DataFrame) -> DataFrame:
         # a replayed batch whose first attempt already appended would
@@ -134,8 +122,9 @@ def start_ann_stream(emb_stream: DataFrame, table: str, out_dir: str,
         # gen_fn (r12, e.g. _tombstones.batch_delivery_gen) tags each
         # batch's appended rows so a re-crawled delivery can later be
         # retracted via ivf_index_retract
-        append=lambda w: append(w.select("vec_id", "embedding"), table,
-                                gen=(gen_fn(w) if gen_fn else "")),
+        append=lambda w: ivf_index_append(
+            w.select("vec_id", "embedding"), table,
+            gen=(gen_fn(w) if gen_fn else "")),
         # compaction swaps the sidecars too (retrain swaps centroids,
         # PQ compaction the codebook) — refresh them alongside main
         refresh_tables=((table, f"{table}_centroids", f"{table}_codebook")
@@ -146,6 +135,9 @@ def start_ann_stream(emb_stream: DataFrame, table: str, out_dir: str,
         compact=compact, rules_table=table,
         hold_table=hold_table,
         hold_id_col=None if hold_table is None else "vec_id",
+        # shard_col (r13): multi-shard micro-batches — guard +
+        # gen-tagged append run per shard slice (see
+        # start_neardup_stream)
         split_col=shard_col)
 
 

@@ -226,10 +226,13 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
         raise ValueError(
             "start_corpus_ingest: neardup_table and neardup_out_dir "
             "must be passed together")
-    if (neardup_compact_every is None) != (neardup_compact_dir is None):
-        raise ValueError(
-            "start_corpus_ingest: neardup_compact_every and "
-            "neardup_compact_dir must be passed together")
+    from georiva_spark.operators.dedup import (minhash_index_compact,
+                                               minhash_index_params)
+    from georiva_spark.streaming._loop import _family_compact
+    nd_compact = _family_compact(
+        neardup_compact_every, neardup_compact_dir,
+        "start_corpus_ingest",
+        lambda path: minhash_index_compact(spark, neardup_table, path))
     if neardup_compact_every is not None and neardup_table is None:
         raise ValueError(
             "start_corpus_ingest: neardup_compact_every without "
@@ -244,7 +247,6 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
                 f"admission path must never silently run unfiltered")
     if neardup_table is not None:
         from georiva_spark.operators._tombstones import require_gen
-        from georiva_spark.operators.dedup import minhash_index_params
         minhash_index_params(spark, neardup_table)  # fail fast on launch
         require_gen(spark, neardup_table, "minhash", "start_corpus_ingest",
                     "re-crawled shards could never be retracted")
@@ -463,20 +465,15 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
         PENDING (the streaming/_loop.py r13 rule); every
         ``neardup_compact_every`` counted commits the index compacts
         crash-atomically into a fresh staging dir."""
-        if neardup_compact_every is None:
+        if nd_compact is None:
             return
         from georiva_spark.operators._tombstones import has_rules
-        from georiva_spark.operators.dedup import minhash_index_compact
         if not appended and not has_rules(spark, neardup_table):
             return
         nd_count[0] += 1
         if nd_count[0] % neardup_compact_every:
             return
-        import uuid
-        minhash_index_compact(
-            spark, neardup_table,
-            f"{neardup_compact_dir}/c{nd_count[0]}_"
-            f"{uuid.uuid4().hex[:8]}")
+        nd_compact(nd_count[0])
         for t in (f"{neardup_table}_bands", f"{neardup_table}_sigs"):
             spark.catalog.refreshTable(t)
 

@@ -804,13 +804,16 @@ def test_minhash_index_portable_stamp_roundtrip(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS t_mhport_{s}")
 
 
-def _swap_failpoints(spark, monkeypatch, failpoint):
+def _swap_failpoints(spark, monkeypatch, failpoint, log=None):
     """Monkeypatch spark.sql to raise at the Nth catalog-swap statement
-    (ALTER/DROP, excluding the TBLPROPERTIES stamp and SHOW)."""
+    (ALTER/DROP, excluding the TBLPROPERTIES stamp and SHOW; None:
+    never). ``log`` (a list) records every statement issued."""
     real_sql = type(spark).sql
     calls = {"n": 0}
 
     def failing(self, stmt, *a, **k):
+        if log is not None:
+            log.append(stmt)
         if (("ALTER TABLE" in stmt or "DROP TABLE" in stmt)
                 and "TBLPROPERTIES" not in stmt):
             calls["n"] += 1
@@ -907,182 +910,248 @@ def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_minhash_compact_crash_leaves_probeable_index(spark, tmp_path,
-                                                      monkeypatch):
-    """Crash-atomicity of the compaction swap: inject a failure before
-    EACH of the 8 catalog statements (two atomic_swap_table calls ×
-    4 statements); at every intermediate state some table name holds a
-    probeable, param-STAMPED index (the stamp lands on _compact before
-    any swap), and the one-rename recovery restores identical probe
-    results."""
-    probe_docs = _docs(spark, [(900, BASE)])
-    # 8 swap statements; failpoint 9 = no failure (control)
-    for failpoint in range(1, 10):
-        t = f"t_mhcr{failpoint}"
-        base = _docs(spark, [(1, BASE), (2, "other text entirely here")])
-        dedup.minhash_index_write(base, t, str(tmp_path / f"i{failpoint}"),
-                                  n_buckets=4)
-        want = {(r.doc_new, r.doc_old) for r in dedup.minhash_index_probe(
-            probe_docs, t, threshold=0.4).collect()}
-        restore = _swap_failpoints(spark, monkeypatch, failpoint)
-        try:
-            if failpoint <= 8:
-                with pytest.raises(RuntimeError, match="injected crash"):
-                    dedup.minhash_index_compact(
-                        spark, t, str(tmp_path / f"c{failpoint}"))
-            else:
-                dedup.minhash_index_compact(
-                    spark, t, str(tmp_path / f"c{failpoint}"))
-        finally:
-            restore()
-        # at every failpoint, BOTH halves survive under some name,
-        # param-valid (the _compact stamp precedes every swap stmt)
-        for suffix in ("bands", "sigs"):
-            names = {x.name for x in spark.catalog.listTables()}
-            assert {f"{t}_{suffix}", f"{t}_{suffix}_compact",
-                    f"{t}_{suffix}_old"} & names
-            _recover_swap(spark, f"{t}_{suffix}")
-        p = dedup.minhash_index_params(spark, t)
-        assert p["num_hashes"] == 64 and p["n_buckets"] == 4
-        got = {(r.doc_new, r.doc_old) for r in dedup.minhash_index_probe(
-            probe_docs, t, threshold=0.4).collect()}
-        assert got == want
-        for suffix in ("bands", "sigs"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}_{suffix}")
-
-
-def test_ivf_compact_crash_leaves_probeable_index(spark, tmp_path,
-                                                  monkeypatch):
-    """Same crash-atomicity contract for the IVF index compaction: a
-    failure before each of the 4 swap statements leaves the corpus
-    probeable under some name, and the rename recovery restores
-    identical probe results (centroid sidecar untouched throughout)."""
+def _index_case(spark, tmp_path, kind, t):
+    """Write a small index under ``t`` for one compaction path →
+    (compact(path), probe() -> result set, retract_docs())."""
     import numpy as np
 
     from georiva_spark.operators import similarity
 
-    rng = np.random.default_rng(11)
-    rows = [(i, [float(v) for v in rng.normal(size=4)]) for i in range(24)]
-    q = rows[0][1]
-    for failpoint in range(1, 6):          # 4 stmts; 5 = control
-        t = f"t_ivfcr{failpoint}"
-        emb = spark.createDataFrame(rows,
-                                    "vec_id long, embedding array<double>")
-        similarity.ivf_index_write(emb, t, str(tmp_path / f"v{failpoint}"),
-                                   n_centroids=2)
-        similarity.ivf_index_append(
-            spark.createDataFrame(rows[:4],
-                                  "vec_id long, embedding array<double>")
-            .withColumn("vec_id", F.col("vec_id") + 100), t)
-        want = {(r.vec_id, r.cosine) for r in similarity.ivf_index_probe(
-            spark, t, q, k=3, nprobe=2).collect()}
-        restore = _swap_failpoints(spark, monkeypatch, failpoint)
-        try:
-            if failpoint <= 4:
-                with pytest.raises(RuntimeError, match="injected crash"):
-                    similarity.ivf_index_compact(
-                        spark, t, str(tmp_path / f"vc{failpoint}"))
-            else:
-                similarity.ivf_index_compact(
-                    spark, t, str(tmp_path / f"vc{failpoint}"))
-        finally:
-            restore()
-        names = {x.name for x in spark.catalog.listTables()}
-        assert {t, f"{t}_compact", f"{t}_old"} & names
-        _recover_swap(spark, t)
-        got = {(r.vec_id, r.cosine) for r in similarity.ivf_index_probe(
-            spark, t, q, k=3, nprobe=2).collect()}
-        assert got == want
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        spark.sql(f"DROP TABLE IF EXISTS {t}_centroids")
-
-
-def test_ivf_retrain_compact_crash_fails_by_name_or_recovers(
-        spark, tmp_path, monkeypatch):
-    """Crash-atomicity of the RETRAINING compaction (r8): two swapped
-    tables (centroid sidecar first, then main), 8 catalog statements.
-    A crash at any of them leaves a state that is either consistent
-    (probe works and matches the reference retrain) or VERSION-SKEWED
-    — in which case the probe fails BY NAME, never routes new
-    assignments with old centroids, and the documented recovery
-    (re-run the retraining compact) restores a consistent index with
-    the reference results."""
-    import numpy as np
-
-    from georiva_spark.operators import similarity
-
+    path = str(tmp_path / t)
+    if kind == "minhash":
+        dedup.minhash_index_write(
+            _docs(spark, [(1, BASE), (2, "other text entirely here")]),
+            t, path, n_buckets=4)
+        probe_docs = _docs(spark, [(900, BASE)])
+        return (lambda p: dedup.minhash_index_compact(spark, t, p),
+                lambda: {(r.doc_new, r.doc_old) for r in
+                         dedup.minhash_index_probe(
+                             probe_docs, t, threshold=0.4).collect()},
+                lambda: dedup.minhash_index_retract_docs(spark, t, [1]))
+    if kind == "hamming":
+        codes = spark.createDataFrame(
+            [(1, 0b1111), (2, 1 << 40), (3, 0b0111)],
+            "media_id long, code long")
+        dedup.hamming_index_write(codes, t, path, max_hamming=2,
+                                  bits=64, n_buckets=4)
+        return (lambda p: dedup.hamming_index_compact(spark, t, p),
+                lambda: {(r.id_new, r.id_old, r.hamming) for r in
+                         dedup.hamming_index_probe(codes, t).collect()},
+                lambda: dedup.hamming_index_retract_docs(spark, t, [1]))
+    # two blobs, dense vec_ids (the pinned quantizer needs 0..N-1)
     rng = np.random.default_rng(19)
     rows = ([(i, [float(v) for v in rng.normal(0, 1.0, 4)])
              for i in range(24)]
-            + [(100 + i, [float(v) for v in rng.normal(0, 0.2, 4) + 9.0])
+            + [(24 + i, [float(v) for v in rng.normal(0, 0.2, 4) + 9.0])
                for i in range(24)])
+    schema = "vec_id long, embedding array<double>"
+    emb = spark.createDataFrame(rows, schema)
     q = rows[0][1]
-    mk = lambda: spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>")
+    retract = lambda: similarity.ivf_index_retract_docs(spark, t, [0])
+    if kind == "pq_retrain":
+        similarity.ivf_pq_index_write(emb, t, path, n_centroids=2, m=2,
+                                      nbits=2, train_iters=1,
+                                      codebook_iters=1, opq=True)
+        return (lambda p: similarity.ivf_index_compact(
+                    spark, t, p, retrain_iters=1, emb=emb),
+                lambda: {r.vec_id for r in similarity.ivf_pq_index_probe(
+                    spark, t, q, k=3, nprobe=1).collect()},
+                retract)
+    retrain = kind == "ivf_retrain"
+    similarity.ivf_index_write(emb, t, path, n_centroids=2,
+                               train_iters=int(retrain))
+    if not retrain:
+        similarity.ivf_index_append(
+            spark.createDataFrame(rows[:4], schema)
+            .withColumn("vec_id", F.col("vec_id") + 100), t)
+    return (lambda p: similarity.ivf_index_compact(
+                spark, t, p, retrain_iters=2 * retrain),
+            lambda: {(r.vec_id, r.cosine) for r in
+                     similarity.ivf_index_probe(
+                         spark, t, q, k=3,
+                         nprobe=1 if retrain else 2).collect()},
+            retract)
 
-    # reference: same corpus — probe BEFORE and AFTER a clean retrain
-    # (a crash before any rename leaves the valid pre-retrain state;
-    # every other recovered state must equal the retrained reference)
-    similarity.ivf_index_write(mk(), "t_rtref", str(tmp_path / "ref"),
-                               n_centroids=2, train_iters=1)
-    want_orig = {(r.vec_id, r.cosine)
-                 for r in similarity.ivf_index_probe(
-                     spark, "t_rtref", q, k=3, nprobe=1).collect()}
-    similarity.ivf_index_compact(spark, "t_rtref",
-                                 str(tmp_path / "refc"),
-                                 retrain_iters=2)
-    want = {(r.vec_id, r.cosine) for r in similarity.ivf_index_probe(
-        spark, "t_rtref", q, k=3, nprobe=1).collect()}
 
+#: compaction path -> the tables its install step swaps, in order
+#: (suffixes of the index name; quantizer sidecars before the main)
+_COMPACT_SWAPS = {
+    "minhash": ("_bands", "_sigs"),
+    "hamming": ("_bands", "_ids"),
+    "ivf": ("",),
+    "ivf_retrain": ("_centroids", ""),
+    "pq_retrain": ("_centroids", "_codebook", "_rotation", ""),
+}
+
+
+def _swap(n):
+    """atomic_swap_table's four statements for table ``n``."""
+    return [f"DROP TABLE IF EXISTS {n}_old",
+            f"ALTER TABLE {n} RENAME TO {n}_old",
+            f"ALTER TABLE {n}_compact RENAME TO {n}",
+            f"DROP TABLE {n}_old"]
+
+
+def _clear(stamped):
+    """clear_rules' statements for a pending takedown."""
+    return [f"ALTER TABLE {stamped} UNSET TBLPROPERTIES IF EXISTS "
+            f"('georiva.has_doc_tombstones')",
+            "DROP TABLE IF EXISTS {t}_dead_docs"]
+
+
+def _stamp(name, params):
+    kv = ", ".join(f"'georiva.{k}'='{v}'" for k, v in params)
+    return f"ALTER TABLE {name} SET TBLPROPERTIES ({kv})"
+
+
+_IVF = [("has_doc_tombstones", 0), ("n_centroids", 2)]
+#: each compaction path's catalog statements (``{t}`` = the index name)
+#: with one pending takedown — the commit points a crash falls between
+_COMPACT_STATEMENTS = {
+    "minhash": [
+        "SHOW TBLPROPERTIES {t}_bands",
+        _stamp("{t}_bands_compact", [
+            ("bands", 16), ("has_doc_tombstones", 0), ("n", 3),
+            ("n_buckets", 4), ("num_hashes", 64), ("portable", 0),
+            ("text_col", "text")]),
+        *_swap("{t}_bands"), *_swap("{t}_sigs"), *_clear("{t}_bands")],
+    "hamming": [
+        "SHOW TBLPROPERTIES {t}_bands",
+        _stamp("{t}_bands_compact", [
+            ("arr", 0), ("bits", 64), ("has_doc_tombstones", 0),
+            ("max_hamming", 2), ("n_buckets", 4), ("word_bits", 56)]),
+        *_swap("{t}_bands"), *_swap("{t}_ids"), *_clear("{t}_bands")],
+    "ivf": [
+        "SHOW TBLPROPERTIES {t}",
+        _stamp("{t}_compact", _IVF + [
+            ("quantizer_version", 1), ("train_iters", 0),
+            ("train_sample_ppm", 0)]),
+        *_swap("{t}"), *_clear("{t}")],
+    "ivf_retrain": [
+        "SHOW TBLPROPERTIES {t}",
+        _stamp("{t}_centroids_compact", [("quantizer_version", 2)]),
+        _stamp("{t}_compact", _IVF + [
+            ("quantizer_version", 2), ("train_iters", 2),
+            ("train_sample_ppm", 0)]),
+        *_swap("{t}_centroids"), *_swap("{t}"), *_clear("{t}")],
+    "pq_retrain": [
+        "SHOW TBLPROPERTIES {t}",
+        *(_stamp(f"{{t}}{s}_compact", [("quantizer_version", 2)])
+          for s in ("_centroids", "_codebook", "_rotation")),
+        _stamp("{t}_compact", _IVF + [
+            ("pq_codebook_iters", 1), ("pq_m", 2), ("pq_nbits", 2),
+            ("pq_opq", 1), ("pq_residual", 0), ("quantizer_version", 2),
+            ("train_iters", 1), ("train_sample_ppm", 0)]),
+        *_swap("{t}_centroids"), *_swap("{t}_codebook"),
+        *_swap("{t}_rotation"), *_swap("{t}"), *_clear("{t}")],
+}
+
+
+def _drop_index(spark, t, kind):
+    for s in _COMPACT_SWAPS[kind] + ("_codebook", "_rotation"):
+        for x in ("", "_compact", "_old"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}{s}{x}")
+    for s in ("_dead", "_dead_docs", "_centroids"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}{s}")
+
+
+@pytest.mark.parametrize("kind",
+                         ["minhash", "hamming", "ivf", "pq_retrain"])
+def test_rewritten_index_starts_without_tombstones(spark, tmp_path,
+                                                   kind):
+    """A takedown's rules name the index they were written for:
+    rebuilding an index under the same name (``*_index_write``) clears
+    them, or the live filter would hide rows of the brand-new index."""
+    from georiva_spark.operators._tombstones import has_rules
+
+    t = f"t_rw_{kind}"
+    _, probe, retract = _index_case(spark, tmp_path, kind, t)
     try:
-        for failpoint in range(1, 10):     # 8 stmts; 9 = control
-            t = f"t_rtcr{failpoint}"
-            similarity.ivf_index_write(mk(), t,
-                                       str(tmp_path / f"w{failpoint}"),
-                                       n_centroids=2, train_iters=1)
+        want = probe()
+        retract()
+        assert probe() != want              # the takedown hides a row
+        _, probe, _ = _index_case(spark, tmp_path, kind, t)
+        assert probe() == want
+        assert not has_rules(spark, t)
+    finally:
+        _drop_index(spark, t, kind)
+
+
+@pytest.mark.parametrize("kind", sorted(_COMPACT_STATEMENTS))
+def test_compaction_catalog_statements(spark, tmp_path, monkeypatch,
+                                       kind):
+    """Every compaction path — MinHash, Hamming, IVF, IVF retrain, PQ
+    retrain — issues exactly its pinned catalog statements, in order:
+    stamp reads, the staged sidecars' version stamps, then the
+    install step's stamp → swaps → rule clear. The index carries a
+    pending takedown so the clear's statements are part of the
+    sequence. These are the commit points a crash can fall between."""
+    t = f"t_seq_{kind}"
+    compact, _, retract = _index_case(spark, tmp_path, kind, t)
+    try:
+        retract()
+        log = []
+        restore = _swap_failpoints(spark, monkeypatch, None, log)
+        try:
+            compact(str(tmp_path / "c"))
+        finally:
+            restore()
+        assert [s.replace(t, "{t}") for s in log] == \
+            _COMPACT_STATEMENTS[kind]
+    finally:
+        _drop_index(spark, t, kind)
+
+
+@pytest.mark.parametrize("kind",
+                         ["minhash", "hamming", "ivf", "ivf_retrain"])
+def test_compact_crash_leaves_probeable_index(spark, tmp_path,
+                                              monkeypatch, kind):
+    """Crash-atomicity of the install step's swaps: a failure injected
+    before EACH of its catalog statements (4 per swapped table) leaves
+    every swapped table under some name and param-STAMPED (the stamp
+    precedes every swap), and the one-rename recovery restores a
+    legitimate index: the results before or after the compaction,
+    never a mixture (a layout-only compaction changes no result, so
+    its control run must reproduce them). A retrain's crash between
+    the sidecar and main swaps is VERSION-SKEWED instead: the probe
+    fails by name, and the documented recovery — re-run the
+    compaction — restores the retrained results. Each failpoint
+    compacts the index the previous one recovered, so a recovered
+    index is also shown compactable."""
+    t = f"t_cr_{kind}"
+    parts = [f"{t}{s}" for s in _COMPACT_SWAPS[kind]]
+    compact, probe, _ = _index_case(spark, tmp_path, kind, t)
+    try:
+        before = after = probe()
+        if kind == "ivf_retrain":
+            compact(str(tmp_path / "ref"))
+            after = probe()
+        n = 4 * len(parts)
+        for failpoint in range(1, n + 2):      # n + 1 = control
             restore = _swap_failpoints(spark, monkeypatch, failpoint)
             try:
-                if failpoint <= 8:
+                if failpoint <= n:
                     with pytest.raises(RuntimeError,
                                        match="injected crash"):
-                        similarity.ivf_index_compact(
-                            spark, t, str(tmp_path / f"c{failpoint}"),
-                            retrain_iters=2)
+                        compact(str(tmp_path / f"c{failpoint}"))
                 else:
-                    similarity.ivf_index_compact(
-                        spark, t, str(tmp_path / f"c{failpoint}"),
-                        retrain_iters=2)
+                    compact(str(tmp_path / f"c{failpoint}"))
             finally:
                 restore()
-            for part in (t, f"{t}_centroids"):
+            for part in parts:
                 names = {x.name for x in spark.catalog.listTables()}
                 assert {part, f"{part}_compact", f"{part}_old"} & names
                 _recover_swap(spark, part)
             try:
-                got = {(r.vec_id, r.cosine)
-                       for r in similarity.ivf_index_probe(
-                           spark, t, q, k=3, nprobe=1).collect()}
+                got = probe()
             except ValueError as e:
-                # the mid-swap mixture: detected by name, then the
-                # documented recovery — re-run the retraining compact
-                assert "version skew" in str(e)
-                similarity.ivf_index_compact(
-                    spark, t, str(tmp_path / f"r{failpoint}"),
-                    retrain_iters=2)
-                got = {(r.vec_id, r.cosine)
-                       for r in similarity.ivf_index_probe(
-                           spark, t, q, k=3, nprobe=1).collect()}
-                assert got == want      # re-run => retrained state
-                got = None
-            if got is not None:
-                # no skew: the recovered state is one of the two
-                # legitimate index states, never a mixture
-                assert got in (want, want_orig)
-            for part in (t, f"{t}_centroids"):
-                spark.sql(f"DROP TABLE IF EXISTS {part}")
+                assert kind == "ivf_retrain" and "version skew" in str(e)
+                compact(str(tmp_path / f"r{failpoint}"))
+                got = probe()
+                assert got == after
+            assert got in (before, after)
     finally:
-        for part in ("t_rtref", "t_rtref_centroids"):
-            spark.sql(f"DROP TABLE IF EXISTS {part}")
+        _drop_index(spark, t, kind)
 
 
 def test_opq_rotation_index_probe_append_sync(spark, tmp_path):
@@ -1116,7 +1185,7 @@ def test_opq_rotation_index_probe_append_sync(spark, tmp_path):
         delta = spark.createDataFrame(
             [(9999, [float(v) for v in X[7]])],
             "vec_id long, embedding array<double>")
-        similarity.ivf_pq_index_append(delta, t)
+        similarity.ivf_index_append(delta, t)
         top = similarity.ivf_pq_index_probe(
             spark, t, [float(v) for v in X[7]], k=3, nprobe=2,
             exclude_vec_id=7).collect()
@@ -1204,7 +1273,7 @@ def test_opq_nonparametric_improves_training_objective(spark,
         delta = spark.createDataFrame(
             [(9999, [float(v) for v in X[7]])],
             "vec_id long, embedding array<double>")
-        similarity.ivf_pq_index_append(delta, t)
+        similarity.ivf_index_append(delta, t)
         top = similarity.ivf_pq_index_probe(
             spark, t, [float(v) for v in X[7]], k=3, nprobe=2,
             exclude_vec_id=7).collect()
@@ -1691,7 +1760,7 @@ def test_streaming_pq_ann_retrains_in_stream(spark, tmp_path):
     operator-driven batch call. retrain_emb hands the loop the grown
     float corpus (base + landing deltas, re-read at each compaction);
     two appends trip the counter and the in-stream
-    ivf_pq_index_compact(emb=…, retrain_iters=…) retrains quantizer
+    ivf_index_compact(emb=…, retrain_iters=…) retrains quantizer
     AND stamped codebook, bumps the version across all three tables
     (the skew gate proves sync: the post-compaction batch probes the
     swapped index without a version error and finds its cross-batch
@@ -2127,7 +2196,7 @@ def test_ivf_index_retract_float_and_pq(spark, tmp_path):
                                      spark, t, q, k=4,
                                      nprobe=2).collect()}
             else:
-                similarity.ivf_pq_index_append(delta, t, gen=g1)
+                similarity.ivf_index_append(delta, t, gen=g1)
                 probe = lambda: {r.vec_id for r in           # noqa: E731
                                  similarity.ivf_pq_index_probe(
                                      spark, t, q, k=4,
@@ -2146,7 +2215,7 @@ def test_ivf_index_retract_float_and_pq(spark, tmp_path):
                 # RETRAIN compaction: the caller's corpus still holds
                 # the dead vectors — the live-filter must drop them
                 full = base.unionByName(delta)
-                similarity.ivf_pq_index_compact(
+                similarity.ivf_index_compact(
                     spark, t, str(tmp_path / f"{kind}_c"),
                     emb=full, retrain_iters=1)
             assert spark.table(t).count() == 8

@@ -165,6 +165,28 @@ def test_trigger_routing_promotion(spark):
     assert eng.dispatch_for_trigger(Trigger(kind="staging_item", item=other)) == []
 
 
+def test_promotion_takes_the_staging_items_time_without_a_job(spark):
+    """The promoted item keeps its staging item's time, read from the
+    resolved input — ``transform`` submits no Spark job for it."""
+    ctx = _staging_catalog(spark, 3)
+    recipe = PromotionRecipe("src", "pub")
+    staged = ctx.items[1]
+    unit, = recipe.candidate_units(Trigger("staging_item", staged), ctx)
+    resolved = recipe.resolve_inputs(unit, ctx)
+    assert resolved[0].time == staged["time"]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("promotion-transform", "promotion transform")
+    try:
+        out, df = recipe.transform(spark, unit, resolved)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("promotion-transform") == []
+    assert out.time == staged["time"]
+    assert df.select(F.min("time")).head()[0] == staged["time"]
+
+
 def test_trigger_routing_climatology_by_year(spark, clim_engine):
     # item in 2020 (covered) routes to all 4 units; item in 2030 → none
     it2020 = clim_engine.catalog.items[0]

@@ -2224,7 +2224,7 @@ def test_ivf_pq_index_append_and_compact(spark, tmp_path):
     try:
         q = [float(v) for v in vecs[0]]
         twin = [float(v) for v in vecs[0] + np.float32(0.001)]
-        similarity.ivf_pq_index_append(mk([(999, twin)]), "t_pqa_ut")
+        similarity.ivf_index_append(mk([(999, twin)]), "t_pqa_ut")
         top = similarity.ivf_pq_index_probe(
             spark, "t_pqa_ut", q, k=3, nprobe=1,
             exclude_vec_id=0).collect()
@@ -2318,7 +2318,7 @@ def test_ivf_pq_trained_residual_index(spark, tmp_path):
         # it must carry the minimal ADC distance (ties with same-code
         # cellmates are possible; refine then surfaces it exactly)
         twin = [float(v) for v in vecs[0] + 0.001]
-        similarity.ivf_pq_index_append(mk([(999, twin)]), "t_pqt_ut")
+        similarity.ivf_index_append(mk([(999, twin)]), "t_pqt_ut")
         top2 = similarity.ivf_pq_index_probe(
             spark, "t_pqt_ut", q, k=10, nprobe=2,
             exclude_vec_id=0).collect()
@@ -2428,15 +2428,15 @@ def test_ivf_pq_index_retrain_compact_reencodes(spark, tmp_path):
         drift_rows = [(2000 + i,
                        [float(v) for v in rng.normal(0, 0.2, 8) + 30.0])
                       for i in range(120)]
-        similarity.ivf_pq_index_append(mk(drift_rows), "t_rtpq")
+        similarity.ivf_index_append(mk(drift_rows), "t_rtpq")
         with pytest.raises(ValueError, match="needs the float corpus"):
-            similarity.ivf_pq_index_compact(spark, "t_rtpq",
-                                            str(tmp_path / "p2"),
-                                            retrain_iters=2)
+            similarity.ivf_index_compact(spark, "t_rtpq",
+                                         str(tmp_path / "p2"),
+                                         retrain_iters=2)
         grown = mk(base_rows + drift_rows)
-        similarity.ivf_pq_index_compact(spark, "t_rtpq",
-                                        str(tmp_path / "p2"),
-                                        emb=grown, retrain_iters=2)
+        similarity.ivf_index_compact(spark, "t_rtpq",
+                                     str(tmp_path / "p2"),
+                                     emb=grown, retrain_iters=2)
         for t in ("t_rtpq", "t_rtpq_centroids", "t_rtpq_codebook"):
             props = {r.key: r.value for r in spark.sql(
                 f"SHOW TBLPROPERTIES {t}").collect()}

@@ -1023,6 +1023,71 @@ def test_rule_table_audit_current():
         f"and filter with live_filter / drop_ids")
 
 
+def test_index_lifecycle_audit_current():
+    """Index maintenance has one path. Only the install step
+    (operators/_index_table.py ``install``) swaps tables
+    (``atomic_swap_table``), and only it and the index writes clear
+    tombstone rules (``clear_rules``): every compaction ends through
+    the one stamp → swap → clear sequence. And no module outside
+    operators/similarity.py chooses an append or compact function by
+    the index layout: ``ivf_index_append`` / ``ivf_index_compact``
+    read the layout from the stamps, so no branch outside picks
+    between two ``*_index_append`` or two ``*_index_compact``."""
+    import ast
+    import re
+
+    install = ("operators/_index_table.py", "install")
+    allowed = {"atomic_swap_table": {install},
+               "clear_rules": {
+                   install,
+                   ("operators/dedup.py", "minhash_index_write"),
+                   ("operators/dedup.py", "hamming_index_write"),
+                   ("operators/similarity.py", "ivf_index_write"),
+                   ("operators/similarity.py", "ivf_pq_index_write")}}
+    calls = {name: set() for name in allowed}
+    found = []
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name and name.lstrip("_") in allowed:
+                calls[name.lstrip("_")].add((rel, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    def names(node):
+        return {getattr(n, "id", None) or getattr(n, "attr", None)
+                for n in ast.walk(node)} - {None}
+
+    for rel, tree, _ in _package_code():
+        rel = rel.as_posix()
+        visit(tree, rel, None)
+        if rel == "operators/similarity.py":
+            continue
+        found += [f"{rel}: {n}" for n in names(tree)
+                  if re.fullmatch(r"\w*ivf\w*_(append|compact)", n)
+                  and n not in ("ivf_index_append", "ivf_index_compact")]
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.If, ast.IfExp)):
+                for op in ("append", "compact"):
+                    picks = {n for n in names(node)
+                             if n.endswith(f"_index_{op}")}
+                    if len(picks) > 1:
+                        found.append(f"{rel}:{node.lineno} picks "
+                                     f"{sorted(picks)}")
+    for name, sites in calls.items():
+        found += [f"{rel}:{fn} calls {name}"
+                  for rel, fn in sorted(sites - allowed[name])]
+    assert calls["atomic_swap_table"], "no install step found"
+    assert not found, (
+        f"index maintenance outside its one path: {found} — end a "
+        f"compaction with _index_table.install, and call "
+        f"ivf_index_append / ivf_index_compact for either IVF layout")
+
+
 def test_write_mechanism_audit_current():
     """One way to write partitions, and no driver thread pools: a
     partition overwrite names ``.option("partitionOverwriteMode",

@@ -101,7 +101,7 @@ def main(n=200_000, d=64, blobs=8):
     # STREAMED PQ index (r9 verdict item 3 — in-stream maintenance,
     # not an operator-driven batch call): trained PQ write on the
     # base blobs, drift arrives as TWO micro-batches, compact_every=2
-    # trips the in-stream ivf_pq_index_compact(emb=retrain_emb(),
+    # trips the in-stream ivf_index_compact(emb=retrain_emb(),
     # retrain_iters=…) which retrains quantizer + codebook over the
     # grown float corpus and swaps versioned tables under the serving
     # session.
