@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from georiva_spark.functions.frames import local_frame
 
 import itertools
+from functools import cached_property
 
 from georiva_spark.functions import fastexpr
 from georiva_spark.functions.vectors import cosine_similarity, dot
@@ -335,6 +336,65 @@ def _read_sidecar(spark, table: str, suffix: str) -> list:
             for r in sorted(rows, key=lambda r: r[key])]
 
 
+class _IvfLayout:
+    """The IVF family's layout head — every probe and append starts
+    here. ONE stamp read (or the caller's already-read ``stamps``)
+    names the layout: ``pq_m`` means PQ, ``pq_opq`` a rotated index.
+    The quantizer-version sync check covers exactly the sidecars the
+    stamps name (:attr:`sidecars`), so a torn retraining compaction
+    fails by name before anything routes. The sidecar vectors load on
+    first use, so a caller reads only the sidecars it needs."""
+
+    def __init__(self, spark, table: str, stamps: dict | None = None):
+        self.spark, self.table = spark, table
+        self.stamps = (_index_table.props(spark, table)
+                       if stamps is None else stamps)
+        self.pq = _index_table.get(self.stamps, "pq_m") is not None
+        self.opq = _index_table.get(self.stamps, "pq_opq") == "1"
+        self.residual = _index_table.get(self.stamps, "pq_residual") == "1"
+        self.sidecars = (("_centroids",)
+                         + (("_codebook",) if self.pq else ())
+                         + (("_rotation",) if self.opq else ()))
+        _index_table.check_quantizer_sync(spark, table, self.stamps,
+                                          self.sidecars)
+
+    def pq_shape(self) -> list:
+        """[m, nbits], or fail by name: the table is not a PQ index."""
+        return _index_table.require(self.stamps, self.table, "ivf_pq",
+                                    "pq_m", "pq_nbits")
+
+    @cached_property
+    def cents(self) -> list:
+        cents = _read_sidecar(self.spark, self.table, "_centroids")
+        if not cents:
+            raise ValueError(f"{self.table!r} has no centroid sidecar — "
+                             f"not an IVF index")
+        return cents
+
+    @cached_property
+    def codebook(self) -> list:
+        return _read_sidecar(self.spark, self.table, "_codebook")
+
+    @cached_property
+    def rotation(self) -> list:
+        """The OPQ rotation (d rows — model state, like the codebook);
+        callers check :attr:`opq`."""
+        return _read_sidecar(self.spark, self.table, "_rotation")
+
+    def rotate(self, emb: DataFrame) -> DataFrame:
+        """``emb``'s embeddings in index space: an OPQ index lives in
+        rotated space, so its inputs rotate in-row first."""
+        if not self.opq:
+            return emb
+        return emb.withColumn("embedding", _rotate_expr(self.rotation))
+
+    @property
+    def order(self) -> list:
+        """The ranking of a scored candidate ``_s``: cosine descending
+        (float) or ADC-L2² ascending (PQ), then vec_id."""
+        return [F.asc("_s") if self.pq else F.desc("_s"), F.asc("vec_id")]
+
+
 def ivf_index_retract(spark, table: str, shard: str,
                       keep_gen: str = "") -> None:
     """Retract a re-crawled embedding shard's DEAD vectors from a
@@ -474,29 +534,17 @@ def ivf_index_append(emb: DataFrame, table: str,
     :func:`ivf_index_retract` (T5); tagged appends into an
     unversioned pre-r12 layout fail by name."""
     spark = emb.sparkSession
-    stamps = _index_table.props(spark, table)
-    pq = _index_table.get(stamps, "pq_m") is not None
-    if pq:
-        m, nbits, residual, opq = _pq_stamps(spark, table, stamps)
-    else:
-        _index_table.check_quantizer_sync(spark, table, stamps,
-                                          ("_centroids",))
+    layout = _IvfLayout(spark, table)
     gen_cols = _tombstones.gen_cols(spark, table, "ivf", gen,
                                     "ivf_index_append")
-    cents = _read_sidecar(spark, table, "_centroids")
-    if not cents:
-        raise ValueError(f"{table!r} has no centroid sidecar — not an "
-                         f"ivf_index_write index")
-    if not pq:
-        assigned = emb.withColumn("cell", _argmin_cell(cents)) \
+    if not layout.pq:
+        assigned = emb.withColumn("cell", _argmin_cell(layout.cents)) \
                       .select(*emb.columns, *gen_cols, "cell")
     else:
-        if opq:
-            emb = emb.select("vec_id", _rotate_expr(
-                _load_rotation(spark, table)).alias("embedding"))
+        m, nbits = layout.pq_shape()
         assigned = _pq_encode_frame(
-            emb, cents, _read_sidecar(spark, table, "_codebook"), m,
-            nbits, residual).select("vec_id", "pq_code", *gen_cols,
+            layout.rotate(emb), layout.cents, layout.codebook, m, nbits,
+            layout.residual).select("vec_id", "pq_code", *gen_cols,
                                     "cell")
     (assigned.write.mode("append").format("parquet")
      .partitionBy("cell").saveAsTable(table))
@@ -556,6 +604,8 @@ def ivf_index_compact(spark, table: str, path: str,
     the re-ASSIGNMENT is the compaction rewrite itself, but per-round
     training cost should never be corpus-sized."""
     _tombstones.validate_single_writer(spark, table)
+    # no layout head here: a compaction is the recovery path of a
+    # quantizer-version skew, so it must run without the sync check
     stamps = _index_table.props(spark, table)
     params = _index_table.params(stamps)
     pq = "pq_m" in params
@@ -582,7 +632,7 @@ def ivf_index_compact(spark, table: str, path: str,
             corpus = emb.join(live.select("vec_id"), "vec_id",
                               "left_semi")
             if params.get("pq_opq") == "1":
-                rot = _load_rotation(spark, table)
+                rot = _read_sidecar(spark, table, "_rotation")
                 corpus = corpus.select(
                     "vec_id", _rotate_expr(rot).alias("embedding"))
         cents = kmeans_centroids(corpus, k=k, iters=retrain_iters,
@@ -644,13 +694,8 @@ def ivf_index_probe(spark, table: str, query_vec, k: int = 5,
     recall trade — the filter does not change which cells are probed)."""
     import numpy as np
 
-    from georiva_spark.functions.vectors import cosine_similarity
-
-    stamps = _index_table.props(spark, table)
-    _index_table.check_quantizer_sync(spark, table, stamps,
-                                      ("_centroids",))
-    cents = np.asarray(_read_sidecar(spark, table, "_centroids"),
-                       dtype=np.float64)
+    layout = _IvfLayout(spark, table)
+    cents = np.asarray(layout.cents, dtype=np.float64)
     q = np.asarray(list(query_vec), dtype=np.float64)
     order = sorted((float(((c - q) ** 2).sum()), cell)
                    for cell, c in enumerate(cents))
@@ -658,7 +703,7 @@ def ivf_index_probe(spark, table: str, query_vec, k: int = 5,
 
     qlit = F.expr(fastexpr.darr(q))
     cos = cosine_similarity(F.col("embedding"), qlit)
-    scan = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+    scan = _tombstones.live_filter(spark, table, layout.stamps, "vec_id")(
         spark.table(table)).where(F.col("cell").isin(probe_cells))
     if candidate_filter is not None:
         scan = scan.where(candidate_filter)
@@ -675,35 +720,29 @@ def ivf_index_probe_batch(spark, table: str, queries: DataFrame,
                           k: int = 5, nprobe: int = 2,
                           exclude_self: bool = False,
                           max_broadcast_queries: int = 10_000,
-                          candidate_filter=None) -> DataFrame:
-    """Batch-serve ANN queries against a :func:`ivf_index_write`
-    index: every query row (q_id, embedding) routes IN-ROW to its
-    nprobe nearest cells (argsort over the sidecar centroids inlined
-    as literals — no shuffle on the query side), the (q_id, cell)
-    fan-out joins the partitioned index on cell, and the scan carries
-    a STATIC partition filter over the union of probed cells — that
-    union is bounded by C, so collecting it is model-state scale like
-    the centroids themselves, and the listing prunes
-    deterministically (PartitionFilters, asserted in tests; Spark's
-    dynamic pruning would need a selective build-side predicate it
-    cannot see here). Per-query top-k by exact cosine,
-    (desc cosine, vec_id) tie-break.
+                          candidate_filter=None,
+                          candidate_ids: DataFrame | None = None
+                          ) -> DataFrame:
+    """Batch-serve ANN queries against an IVF index, float
+    (:func:`ivf_index_write`) or PQ (:func:`ivf_pq_index_write`) —
+    the stamps name the layout. Every query row (q_id, embedding)
+    routes IN-ROW to its nprobe nearest cells, the fan-out joins the
+    cell-partitioned index under a static probed-cell partition
+    filter, and each query keeps its top-k (the serving pass is
+    :func:`_ivf_candidates`). → (q_id, vec_id, cell, cosine) by exact
+    cosine descending on a float index; (q_id, vec_id, cell,
+    adc_dist) by ADC-L2² ascending on a PQ index, whose serving join
+    ships no float embedding in either direction. Ties break by
+    vec_id.
 
-    The fan-out is PERSISTED before the probed-cell union is
-    collected, so the query-side routing executes exactly once — a
-    non-deterministic ``queries`` frame cannot route to one cell set
-    in the static filter and another in the join (which would
-    silently drop candidates).
-
-    Broadcast gate (the 100×-scale rule; same pattern as the zonal
-    mask gate, operators/zonal.py): batches up to
-    ``max_broadcast_queries`` broadcast the fan-out — ONE
-    shuffle-free join answers the whole batch. A larger backlog
-    (50 M queries streamed through one call) would OOM an executor as
-    a broadcast, so past the gate the join runs as a shuffle join on
-    cell instead — both plan shapes asserted in tests. At production
-    C (≥4096) the cell key distributes the shuffle; tiny-C indexes
-    should keep batches under the gate.
+    This is the serving shape the per-query :func:`ivf_index_probe`
+    can't reach: 10k queries cost ONE join over the probed cells, not
+    10k driver round-trips. Batches up to ``max_broadcast_queries``
+    broadcast the fan-out; a larger backlog (50 M queries streamed
+    through one call) would OOM an executor as a broadcast, so past
+    the gate the join runs as a salted shuffle join on cell — both
+    plan shapes asserted in tests. At production C (≥4096) the cell
+    key distributes the shuffle.
 
     ``exclude_self`` (opt-in): drop candidates whose vec_id equals
     the query's q_id — only meaningful when q_ids share the corpus
@@ -711,66 +750,124 @@ def ivf_index_probe_batch(spark, table: str, queries: DataFrame,
     must leave it False: a q_id that happens to collide with an
     unrelated vec_id would silently lose that valid neighbor.
 
-    ``candidate_filter`` (optional Column or SQL string): FILTERED
-    batch ANN — the metadata predicate applies to the index scan
-    BEFORE the serving join (pushed to parquet alongside the cell
-    partition filter), so non-matching candidates never enter the
-    join. Filter-then-rank semantics; selective filters warrant a
-    larger ``nprobe`` (see :func:`ivf_index_probe`).
+    Filtered batch ANN, filter-then-rank (selective filters warrant a
+    larger ``nprobe``, see :func:`ivf_index_probe`):
+    ``candidate_filter`` (Column or SQL string) is a metadata
+    predicate on the index scan, pushed to parquet beside the cell
+    filter — a float index stores every attribute column the corpus
+    had, a PQ index none, so there it fails by name;
+    ``candidate_ids`` (single-column frame, either layout) SEMI-joins
+    the scan to the vec_ids an attribute query on the metadata table
+    returned."""
+    layout = _IvfLayout(spark, table)
+    cand, _ = _ivf_candidates(layout, queries, nprobe,
+                              "ivf_index_probe_batch.probed",
+                              max_broadcast_queries, exclude_self,
+                              candidate_filter, candidate_ids)
+    name, digits = ("adc_dist", 6) if layout.pq else ("cosine", 4)
+    return _top_k(cand, layout.order, k).select(
+        "q_id", "vec_id", F.col("cell").cast("long").alias("cell"),
+        F.round("_s", digits).alias(name))
 
-    This is the serving shape the per-query :func:`ivf_index_probe`
-    can't reach: 10k queries cost ONE join over the probed cells, not
-    10k driver round-trips. → (q_id, vec_id, cell, cosine)."""
+
+def _top_k(cand: DataFrame, order: list, k: int) -> DataFrame:
+    """Each query's first ``k`` candidates by ``order`` (rank ``_r``)."""
+    w = Window.partitionBy("q_id").orderBy(*order)
+    return (cand.withColumn("_r", F.row_number().over(w))
+            .where(F.col("_r") <= k))
+
+
+def _ivf_candidates(layout: _IvfLayout, queries: DataFrame,
+                    nprobe: int, slot: str, max_broadcast_queries: int,
+                    exclude_self: bool, candidate_filter=None,
+                    candidate_ids: DataFrame | None = None) -> tuple:
+    """The IVF family's ONE serving pass, float or PQ — every batch
+    probe, the batch refine's stage 1 and the recall grid score their
+    candidates here.
+
+    1. ROUTE in-row: each query row (q_id, embedding — rotated into
+       index space on an OPQ index) argsorts the centroid literals and
+       fans out to its ``nprobe`` nearest cells (no shuffle on the
+       query side). ``__pos`` is the cell's rank, so a smaller
+       nprobe's fan is a ``__pos`` prefix of this one. A float fan-out
+       row carries the query embedding ``qe``; a PQ row its ADC
+       lookup table ``qd`` — the m·2^nbits query↔codeword distances,
+       from the query's residual against the row's probed cell on a
+       residual index — in place of the embedding.
+    2. PERSIST the fan-out in ``slot`` (each caller keeps its own, so
+       a serving probe never evicts the grid's cache), then ONE
+       :func:`_fanout_gate` job counts the distinct queries and
+       collects the probed-cell union (bounded by C — model-state
+       scale). Routing executes exactly once: a non-deterministic
+       ``queries`` frame cannot route to one cell set in the static
+       filter and another in the join.
+    3. SCAN the live rows (tombstones anti-joined) of the probed cells
+       only — a STATIC partition filter, so the listing prunes
+       deterministically (PartitionFilters, asserted in tests) —
+       narrowed by ``candidate_filter`` / ``candidate_ids`` (see
+       :func:`ivf_index_probe_batch`).
+    4. JOIN on cell: broadcast the fan-out under
+       ``max_broadcast_queries`` queries; past the gate spread a
+       degenerate fan-out (:func:`_spread_fanout`) and salt the
+       shuffle join against live-cell skew (:func:`_salted_cell_join`).
+    5. SCORE: exact cosine (float) or ADC-L2² from ``qd`` and the
+       packed sub-codes (PQ), after the optional exclude-self.
+
+    → (candidates (q_id, __pos, vec_id, cell, _s), small) — rank
+    ``_s`` by ``layout.order``; ``small`` is the gate's verdict."""
     from pyspark import StorageLevel
 
-    from georiva_spark.functions.vectors import cosine_similarity
     from georiva_spark.operators._retention import persist_bounded
 
-    stamps = _index_table.props(spark, table)
-    _index_table.check_quantizer_sync(spark, table, stamps,
-                                      ("_centroids",))
-    cents = _read_sidecar(spark, table, "_centroids")
-    if not cents:
-        raise ValueError(f"{table!r} has no centroid sidecar")
-
+    if layout.pq and candidate_filter is not None:
+        raise ValueError(
+            f"{layout.table!r} is a PQ index: it stores sub-codes, no "
+            f"attributes for candidate_filter — evaluate the predicate "
+            f"on the metadata table and pass the surviving vec_ids as "
+            f"candidate_ids")
+    spark, table, cents = layout.spark, layout.table, layout.cents
     cells = F.expr(fastexpr.route_cells_sql("embedding", cents, nprobe))
-    probed = persist_bounded(
-        queries.select("q_id", F.col("embedding").alias("qe"),
-                       F.explode(cells).alias("cell")),
-        "ivf_index_probe_batch.probed", StorageLevel.MEMORY_AND_DISK)
-    # gate on the DISTINCT query count, not the fan-out row count: an
-    # index with fewer cells than nprobe fans out fewer rows per query,
-    # so a fan-out gate would let batches larger than
-    # max_broadcast_queries slip onto the broadcast path (the tiny-C
-    # hazard). ONE agg job (r13) returns both the gate count and the
-    # probed-cell union (bounded by C — model-state scale) and
-    # materializes the persisted fan-out so routing executes exactly
-    # once before the static filter reads it.
+    fan = layout.rotate(queries).select(
+        "q_id", F.col("embedding").alias("qe"),
+        F.posexplode(cells).alias("__pos", "cell"))
+    if layout.pq:
+        m, nbits = layout.pq_shape()
+        vec = "qe"
+        if layout.residual:
+            fan = fan.withColumn(
+                "_rq", F.zip_with(F.col("qe"), _cent_lookup(cents),
+                                  lambda a, b: a.cast("double") - b))
+            vec = "_rq"
+        fan = fan.select("q_id", "__pos",
+                         _pq_adc_flat(vec, m, layout.codebook).alias("qd"),
+                         "cell")
+        score = _pq_adc_score(m, nbits)
+    else:
+        score = cosine_similarity(F.col("embedding"), F.col("qe"))
+    probed = persist_bounded(fan, slot, StorageLevel.MEMORY_AND_DISK)
+    # gate on the DISTINCT query count, not the fan-out rows: an index
+    # with fewer cells than nprobe fans out fewer rows per query, and a
+    # row gate would let larger batches onto the broadcast path
     n_queries, live_cells = _fanout_gate(probed)
-    cos = cosine_similarity(F.col("embedding"), F.col("qe"))
-    scan = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+    scan = _tombstones.live_filter(spark, table, layout.stamps, "vec_id")(
         spark.table(table)).where(F.col("cell").isin(live_cells))
     if candidate_filter is not None:
         scan = scan.where(candidate_filter)
-    if n_queries <= max_broadcast_queries:
+    if candidate_ids is not None:
+        ids = candidate_ids.select(
+            F.col(candidate_ids.columns[0]).alias("vec_id"))
+        scan = scan.join(ids, "vec_id", "left_semi")
+    small = n_queries <= max_broadcast_queries
+    if small:
         cand = scan.join(F.broadcast(probed), "cell")
     else:
-        # past the gate: spread a degenerate fan-out (a one-file
-        # streaming micro-batch) so the heavy work parallelizes even
-        # when Spark auto-broadcasts a small scan side, and salt the
-        # genuine shuffle join against live-cell skew
         cand = _salted_cell_join(spark, scan,
                                  _spread_fanout(spark, probed),
                                  len(live_cells))
     if exclude_self:
         cand = cand.where(F.col("vec_id") != F.col("q_id"))
-    cand = cand.select("q_id", "vec_id", "cell", cos.alias("_c"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("_c"), F.asc("vec_id"))
-    return (cand.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= k)
-            .select("q_id", "vec_id",
-                    F.col("cell").cast("long").alias("cell"),
-                    F.round("_c", 4).alias("cosine")))
+    return (cand.select("q_id", "__pos", "vec_id", "cell",
+                        score.alias("_s")), small)
 
 
 def _fanout_gate(probed: DataFrame) -> tuple[int, list]:
@@ -1225,13 +1322,6 @@ def _rotate_expr(R: list[list[float]], col: str = "embedding"):
     return F.expr(fastexpr.rotate_sql(R, col=col))
 
 
-def _load_rotation(spark, table: str):
-    """The OPQ rotation of an index stamped ``pq_opq`` — callers
-    check the stamp. The sidecar is d rows — model state, like the
-    codebook."""
-    return _read_sidecar(spark, table, "_rotation")
-
-
 def ivf_pq_index_write(emb: DataFrame, table: str, path: str,
                        n_centroids: int = 8, m: int = 8, nbits: int = 4,
                        train_iters: int = 0,
@@ -1439,24 +1529,21 @@ def ivf_pq_index_probe(spark, table: str, query_vec, k: int = 5,
     ``candidate_filter`` — selective filters warrant larger nprobe."""
     import numpy as np
 
-    stamps = _index_table.props(spark, table)
-    m, nbits, residual, opq = _pq_stamps(spark, table, stamps)
+    layout = _IvfLayout(spark, table)
+    m, nbits = layout.pq_shape()
     ncw = 1 << nbits
 
-    cents = np.asarray(_read_sidecar(spark, table, "_centroids"),
-                       dtype=np.float64)
+    cents = np.asarray(layout.cents, dtype=np.float64)
     q = np.asarray(list(query_vec), dtype=np.float64)
-    if opq:
+    if layout.opq:
         # the index lives in rotated space; rotate the query into it
         # (driver-side d×d matvec — model-sized, like the routing)
-        q = np.asarray(_load_rotation(spark, table),
-                       dtype=np.float64) @ q
+        q = np.asarray(layout.rotation, dtype=np.float64) @ q
     order = sorted((float(((c - q) ** 2).sum()), cell)
                    for cell, c in enumerate(cents))
     probe_cells = [cell for _, cell in order[:nprobe]]
 
-    cb = np.asarray(_read_sidecar(spark, table, "_codebook"),
-                    dtype=np.float64)
+    cb = np.asarray(layout.codebook, dtype=np.float64)
     dim = len(cb[0])
     sub = dim // m
 
@@ -1472,14 +1559,14 @@ def ivf_pq_index_probe(spark, table: str, query_vec, k: int = 5,
             f"{ncw - 1}) AS INT) + 1)"
             for s in range(m))
 
-    if residual:
+    if layout.residual:
         adc = F.expr("CASE " + " ".join(
             f"WHEN cell = {cell} THEN ({adc_for(q - cents[cell])})"
             for cell in probe_cells) + " END")
     else:
         adc = F.expr(adc_for(q))
 
-    scan = _tombstones.live_filter(spark, table, stamps, "vec_id")(
+    scan = _tombstones.live_filter(spark, table, layout.stamps, "vec_id")(
         spark.table(table)).where(F.col("cell").isin(probe_cells))
     if candidate_ids is not None:
         ids = candidate_ids.select(
@@ -1530,11 +1617,12 @@ def ivf_pq_index_refine(spark, table: str, emb: DataFrame, query_vec,
             .limit(k).drop("_c"))
 
 
-def _pq_adc_flat(vec_col: str, m: int, ncw: int, sub: int, cb):
+def _pq_adc_flat(vec_col: str, m: int, cb: list):
     """The flat m·2^nbits ADC lookup table of one query (fan-out)
-    row: ||q_seg − cw_seg||² against the codebook literals — ONE
-    parsed string (fastexpr). Shared by the batch probe and the
-    recall harness's routed fan-out."""
+    row: ||q_seg − cw_seg||² against the codebook literals ``cb``
+    (2^nbits rows) — ONE parsed string (fastexpr)."""
+    ncw, sub = len(cb), len(cb[0]) // m
+
     def qd(s: int, j: int) -> str:
         return fastexpr.l2_sql(
             f"slice({vec_col}, {s * sub + 1}, {sub})",
@@ -1544,9 +1632,10 @@ def _pq_adc_flat(vec_col: str, m: int, ncw: int, sub: int, cb):
         qd(s, j) for s in range(m) for j in range(ncw)) + ")")
 
 
-def _pq_adc_score(m: int, nbits: int, ncw: int):
+def _pq_adc_score(m: int, nbits: int):
     """Per-candidate ADC-L2² from the riding `qd` table + the packed
     `pq_code` — m element_at picks, no floats shipped."""
+    ncw = 1 << nbits
     adc = None
     for s in range(m):
         code_s = (F.shiftrightunsigned(F.col("pq_code"), s * nbits)
@@ -1554,132 +1643,6 @@ def _pq_adc_score(m: int, nbits: int, ncw: int):
         term = F.element_at(F.col("qd"), F.lit(s * ncw) + code_s + 1)
         adc = term if adc is None else adc + term
     return adc
-
-
-def _pq_stamps(spark, table: str, stamps: dict):
-    """The PQ parameters from the main table's already-read
-    ``stamps``, validated (fail by name when unstamped) and
-    version-synced with every quantizer sidecar the index carries.
-    → (m, nbits, residual, opq)."""
-    m, nbits = _index_table.require(stamps, table, "ivf_pq",
-                                    "pq_m", "pq_nbits")
-    residual = _index_table.get(stamps, "pq_residual") == "1"
-    opq = _index_table.get(stamps, "pq_opq") == "1"
-    _index_table.check_quantizer_sync(
-        spark, table, stamps,
-        ("_centroids", "_codebook") + (("_rotation",) if opq else ()))
-    return m, nbits, residual, opq
-
-
-def _pq_params(spark, table: str, stamps: dict, queries: DataFrame):
-    """Shared head of the PQ probe family: validate the stamp + sync,
-    load the centroid/codebook sidecars, and rotate the queries into
-    index space for an OPQ index. ONE definition (the batch probe and
-    the recall harness's shared routing both call it — drift here
-    would silently route probes and calibration differently).
-    → (m, nbits, residual, ncw, cents, cb, sub, queries)."""
-    import numpy as np
-
-    m, nbits, residual, opq = _pq_stamps(spark, table, stamps)
-    if opq:
-        # the index lives in rotated space — rotate every query
-        # in-row against the stamped rotation before routing/ADC
-        rot = _load_rotation(spark, table)
-        queries = queries.withColumn("embedding", _rotate_expr(rot))
-    cents = _read_sidecar(spark, table, "_centroids")
-    if not cents:
-        raise ValueError(f"{table!r} has no centroid sidecar")
-    cb = [np.asarray(c, dtype=np.float64)
-          for c in _read_sidecar(spark, table, "_codebook")]
-    dim = len(cb[0])
-    return (m, nbits, residual, 1 << nbits, cents, cb, dim // m,
-            queries)
-
-
-def ivf_pq_index_probe_batch(spark, table: str, queries: DataFrame,
-                             k: int = 5, nprobe: int = 2,
-                             exclude_self: bool = False,
-                             max_broadcast_queries: int = 10_000,
-                             candidate_ids: DataFrame | None = None
-                             ) -> DataFrame:
-    """Batch-serve ANN queries against a :func:`ivf_pq_index_write`
-    index → per-query top-k (q_id, vec_id, cell, adc_dist), ADC-L2²
-    ascending. Each query row routes IN-ROW to its nprobe cells AND
-    materializes its ADC lookup table in the same pass — the
-    m·2^nbits query↔codeword distances computed against codebook
-    literals, a bounded flat array riding the fan-out row in place of
-    the embedding. The fan-out (PERSISTED — routing executes once)
-    joins the cell-partitioned index under a static probed-cell
-    partition filter, and every candidate scores with m ``element_at``
-    picks on its unpacked sub-codes: the serving join ships NO float
-    embeddings in either direction — query side is C+m·2^nbits
-    doubles per query, corpus side is one long per vector. A RESIDUAL
-    index (stamped) computes each fan-out row's ADC table from the
-    query's residual against the row's probed cell — still bounded,
-    still no floats shipped. Broadcast gated at
-    ``max_broadcast_queries`` with a shuffle fallback, same contract
-    as :func:`ivf_index_probe_batch`; ``exclude_self`` opt-in for
-    corpus-internal q_id spaces; ``candidate_ids`` (optional
-    single-column frame) SEMI-joins the scan for filtered batch ANN —
-    see :func:`ivf_pq_index_probe`."""
-    from georiva_spark.operators._retention import persist_bounded
-    from pyspark import StorageLevel
-
-    stamps = _index_table.props(spark, table)
-    m, nbits, residual, ncw, cents, cb, sub, queries = _pq_params(
-        spark, table, stamps, queries)
-
-    cells = F.expr(fastexpr.route_cells_sql("embedding", cents, nprobe))
-
-    # a residual index builds each fan-out row's ADC table from the
-    # query's residual against the row's PROBED cell (q − cent[cell],
-    # picked in-row from the bounded centroid literal) — so the flat
-    # table is computed AFTER the explode; the non-residual table is
-    # cell-independent and rides through the explode unchanged
-    fan = queries.select("q_id", F.col("embedding").alias("qe"),
-                         F.explode(cells).alias("cell"))
-    if residual:
-        fan = fan.withColumn(
-            "_rq", F.zip_with(F.col("qe"), _cent_lookup(cents),
-                              lambda a, b: a.cast("double") - b))
-        vec_col = "_rq"
-    else:
-        vec_col = "qe"
-    adc_flat = _pq_adc_flat(vec_col, m, ncw, sub, cb)
-    probed = persist_bounded(
-        fan.select("q_id", adc_flat.alias("qd"), "cell"),
-        "ivf_pq_index_probe_batch.probed", StorageLevel.MEMORY_AND_DISK)
-    # distinct-q_id gate, not fan-out rows: with fewer cells than
-    # nprobe each query fans out fewer rows and a row-count gate
-    # over-admits (the ivf_index_probe_batch comment); one agg job
-    # returns gate count + probed-cell union together (r13)
-    n_queries, live_cells = _fanout_gate(probed)
-    adc = _pq_adc_score(m, nbits, ncw)
-    scan = _tombstones.live_filter(spark, table, stamps, "vec_id")(
-        spark.table(table)).where(F.col("cell").isin(live_cells))
-    if candidate_ids is not None:
-        ids = candidate_ids.select(
-            F.col(candidate_ids.columns[0]).alias("vec_id"))
-        scan = scan.join(ids, "vec_id", "left_semi")
-    if n_queries <= max_broadcast_queries:
-        cand = scan.join(F.broadcast(probed), "cell")
-    else:
-        # past the gate: spread a degenerate fan-out (a one-file
-        # streaming micro-batch) so the heavy work parallelizes even
-        # when Spark auto-broadcasts a small scan side, and salt the
-        # genuine shuffle join against live-cell skew
-        cand = _salted_cell_join(spark, scan,
-                                 _spread_fanout(spark, probed),
-                                 len(live_cells))
-    if exclude_self:
-        cand = cand.where(F.col("vec_id") != F.col("q_id"))
-    cand = cand.select("q_id", "vec_id", "cell", adc.alias("_d"))
-    w = Window.partitionBy("q_id").orderBy(F.asc("_d"), F.asc("vec_id"))
-    return (cand.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= k)
-            .select("q_id", "vec_id",
-                    F.col("cell").cast("long").alias("cell"),
-                    F.round("_d", 6).alias("adc_dist")))
 
 
 def ivf_pq_index_refine_batch(spark, table: str, emb: DataFrame,
@@ -1690,41 +1653,40 @@ def ivf_pq_index_refine_batch(spark, table: str, emb: DataFrame,
                               ) -> DataFrame:
     """Two-stage BATCH ANN serving — the per-query
     :func:`ivf_pq_index_refine`'s driver round-trip removed: stage 1
-    is :func:`ivf_pq_index_probe_batch` (compressed cell-pruned scan,
-    no float I/O) keeping the top-``shortlist`` ADC candidates per
-    query; stage 2 re-ranks them EXACTLY by cosine via a JOIN of the
-    (q_id, vec_id) shortlist against the float table — no driver
-    collect, no ``IN``-literal in the plan, so serving N queries
-    costs ONE two-join plan instead of N driver hops (the shape the
-    r7 verdict flagged as un-loopable). Float I/O is the join-matched
-    shortlist rows (≤ |batch|·shortlist); at production scale the
-    float table is bucketed/sorted on vec_id so the join co-locates,
-    and Spark's runtime bloom-filter join pushes the shortlist keys
-    into the scan.
+    is the PQ serving pass (:func:`ivf_index_probe_batch`'s compressed
+    cell-pruned scan, no float I/O) keeping the top-``shortlist`` ADC
+    candidates per query; stage 2 re-ranks them EXACTLY by cosine via
+    a JOIN of the (q_id, vec_id) shortlist against the float table —
+    no driver collect, no ``IN``-literal in the plan, so serving N
+    queries costs ONE two-join plan instead of N driver hops (the
+    shape the r7 verdict flagged as un-loopable). Float I/O is the
+    join-matched shortlist rows (≤ |batch|·shortlist); at production
+    scale the float table is bucketed/sorted on vec_id so the join
+    co-locates, and Spark's runtime bloom-filter join pushes the
+    shortlist keys into the scan. A float index has no ADC stage to
+    refine and fails by name.
 
     The ``queries`` projection is PERSISTED before stage 1 so a
     non-deterministic frame cannot route with one set of embeddings
     and re-rank with another. Broadcast gate: both stage-2 build
     sides (the shortlist pairs and the query embeddings) broadcast
-    under ``max_broadcast_queries`` distinct queries, shuffle past it
-    — same contract as the stage-1 join. → per-query top-k
-    (q_id, vec_id, cosine), exact scores, desc."""
+    under ``max_broadcast_queries`` distinct queries (stage 1's gate
+    count), shuffle past it — same contract as the stage-1 join.
+    → per-query top-k (q_id, vec_id, cosine), exact scores, desc."""
     from pyspark import StorageLevel
 
-    from georiva_spark.functions.vectors import cosine_similarity
     from georiva_spark.operators._retention import persist_bounded
 
+    layout = _IvfLayout(spark, table)
+    layout.pq_shape()                  # a float index fails by name
     qsrc = persist_bounded(
         queries.select("q_id", "embedding"),
         "ivf_pq_index_refine_batch.queries",
         StorageLevel.MEMORY_AND_DISK)
-    short = ivf_pq_index_probe_batch(
-        spark, table, qsrc, k=shortlist, nprobe=nprobe,
-        exclude_self=exclude_self,
-        max_broadcast_queries=max_broadcast_queries)
-    pairs = short.select("q_id", "vec_id")
-    n_queries = qsrc.select("q_id").distinct().count()
-    small = n_queries <= max_broadcast_queries
+    cand, small = _ivf_candidates(layout, qsrc, nprobe,
+                                  "ivf_pq_index_refine_batch.probed",
+                                  max_broadcast_queries, exclude_self)
+    pairs = _top_k(cand, layout.order, shortlist).select("q_id", "vec_id")
     build = F.broadcast(pairs) if small else pairs
     qe = qsrc.select(F.col("q_id").alias("__qid"),
                      F.col("embedding").alias("qe"))
@@ -1733,11 +1695,9 @@ def ivf_pq_index_refine_batch(spark, table: str, emb: DataFrame,
     cos = cosine_similarity(F.col("embedding"), F.col("qe"))
     cand = (emb.join(build, "vec_id")
             .join(qe, F.col("q_id") == F.col("__qid"))
-            .select("q_id", "vec_id", cos.alias("_c")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("_c"), F.asc("vec_id"))
-    return (cand.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= k)
-            .select("q_id", "vec_id", F.round("_c", 4).alias("cosine")))
+            .select("q_id", "vec_id", cos.alias("_s")))
+    return _top_k(cand, [F.desc("_s"), F.asc("vec_id")], k).select(
+        "q_id", "vec_id", F.round("_s", 4).alias("cosine"))
 
 
 def _exact_topk(corpus: DataFrame, queries: DataFrame, k: int,
@@ -1774,94 +1734,41 @@ def _exact_topk(corpus: DataFrame, queries: DataFrame, k: int,
               .crossJoin(F.broadcast(q))
               .where(F.col("vec_id") != F.col("q_id"))
               .select("q_id", "vec_id", score.alias("_s")))
-    w = Window.partitionBy("q_id").orderBy(*order)
-    return (scored.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= k).select("q_id", "vec_id"))
+    return _top_k(scored, order, k).select("q_id", "vec_id")
 
 
-def _grid_probe_settings(spark, table: str, props: dict,
-                         queries: DataFrame, k: int, nprobes: tuple,
-                         shortlists: tuple, emb: DataFrame | None,
+def _grid_probe_settings(layout: _IvfLayout, queries: DataFrame, k: int,
+                         nprobes: tuple, shortlists: tuple,
+                         emb: DataFrame | None,
                          max_broadcast_queries: int) -> list:
     """The recall harness's probes for the FULL (nprobe × shortlist)
-    grid off ONE routed fan-out and ONE index scan (r14, guide §1.2 —
-    the r13 verdict's item 4): ``route_cells_sql`` argsorts the full
-    centroid distance array and slices, so the nprobe-n fan is a
-    PREFIX of the max(nprobes) fan, and a shortlist is a prefix of
-    the stage-1 ADC ranking — every grid setting is a filter + window
-    over SHARED scored candidates. Top-k sets are identical to the
-    serving batch probes' (same routing argsort, same scores, same
-    (score, vec_id) tie-break, same exclude_self-always-on harness
-    contract, same broadcast gate), which the per-setting serving
-    calls this replaces re-derived per setting with their own scan.
+    grid off ONE serving pass (:func:`_ivf_candidates` at
+    max(nprobes) — one routed fan-out, one index scan; r14, guide
+    §1.2). The nprobe-n fan is the ``__pos < n`` prefix of the
+    max(nprobes) fan, and a shortlist is a prefix of the stage-1 ADC
+    ranking, so every grid setting is a filter + window over SHARED
+    scored candidates. Top-k sets are identical to the serving batch
+    probes' (same pass, same (score, vec_id) tie-break, the
+    exclude_self-always-on harness contract) — pytest-pinned against
+    :func:`ivf_index_probe_batch` for a float and a raw-ADC PQ index.
     → [(nprobe, shortlist_or_None, got_df(q_id, vec_id)), ...]."""
     from pyspark import StorageLevel
 
-    from georiva_spark.functions.vectors import cosine_similarity
     from georiva_spark.operators._retention import persist_bounded
 
-    is_pq = _index_table.get(props, "pq_m") is not None
-    max_np = max(int(n) for n in nprobes)
-    queries_orig = queries
-    if is_pq:
-        m, nbits, residual, ncw, cents, cb, sub, queries = _pq_params(
-            spark, table, props, queries)
-    else:
-        _index_table.check_quantizer_sync(spark, table, props,
-                                          ("_centroids",))
-        cents = _read_sidecar(spark, table, "_centroids")
-        if not cents:
-            raise ValueError(f"{table!r} has no centroid sidecar")
-    cells = F.expr(fastexpr.route_cells_sql("embedding", cents,
-                                            max_np))
-    fan = queries.select("q_id", F.col("embedding").alias("qe"),
-                         F.posexplode(cells).alias("__pos", "cell"))
-    if is_pq:
-        if residual:
-            fan = fan.withColumn(
-                "_rq", F.zip_with(F.col("qe"), _cent_lookup(cents),
-                                  lambda a, b: a.cast("double") - b))
-            vec_col = "_rq"
-        else:
-            vec_col = "qe"
-        adc_flat = _pq_adc_flat(vec_col, m, ncw, sub, cb)
-        probed = persist_bounded(
-            fan.select("q_id", "__pos", adc_flat.alias("qd"), "cell"),
-            "ann_recall_estimate.probed", StorageLevel.MEMORY_AND_DISK)
-    else:
-        probed = persist_bounded(
-            fan.select("q_id", "qe", "__pos", "cell"),
-            "ann_recall_estimate.probed", StorageLevel.MEMORY_AND_DISK)
-    n_queries, live_cells = _fanout_gate(probed)
-    scan = _tombstones.live_filter(spark, table, props, "vec_id")(
-        spark.table(table)).where(F.col("cell").isin(live_cells))
-    small = n_queries <= max_broadcast_queries
-    if small:
-        cand = scan.join(F.broadcast(probed), "cell")
-    else:
-        cand = _salted_cell_join(spark, scan,
-                                 _spread_fanout(spark, probed),
-                                 len(live_cells))
     # the harness always probes exclude_self (q_ids ARE corpus ids)
-    cand = cand.where(F.col("vec_id") != F.col("q_id"))
-    if is_pq:
-        score, order = _pq_adc_score(m, nbits, ncw), \
-            [F.asc("_s"), F.asc("vec_id")]
-    else:
-        score, order = cosine_similarity(F.col("embedding"),
-                                         F.col("qe")), \
-            [F.desc("_s"), F.asc("vec_id")]
-    cand = persist_bounded(
-        cand.select("q_id", "__pos", "vec_id", score.alias("_s")),
-        "ann_recall_estimate.cand", StorageLevel.MEMORY_AND_DISK)
-    w1 = Window.partitionBy("q_id").orderBy(*order)
+    cand, small = _ivf_candidates(
+        layout, queries, max(int(n) for n in nprobes),
+        "ann_recall_estimate.probed", max_broadcast_queries, True)
+    cand = persist_bounded(cand.select("q_id", "__pos", "vec_id", "_s"),
+                           "ann_recall_estimate.cand",
+                           StorageLevel.MEMORY_AND_DISK)
     if shortlists == (None,):
         # float probe / raw ADC: per setting, top-k over the shared
         # scored candidates routed at that nprobe (fan prefix)
         return [(np_, None,
-                 cand.where(F.col("__pos") < int(np_))
-                 .withColumn("_r", F.row_number().over(w1))
-                 .where(F.col("_r") <= k).select("q_id", "vec_id"))
+                 _top_k(cand.where(F.col("__pos") < int(np_)),
+                        layout.order, k).select("q_id", "vec_id"))
                 for np_ in nprobes]
     # PQ refine grid: stage-1 ADC rank per nprobe at max(shortlist)
     # (a shortlist is a rank prefix), then ONE exact-cosine join over
@@ -1871,32 +1778,29 @@ def _grid_probe_settings(spark, table: str, props: dict,
     max_sl = max(int(s) for s in shortlists)
     ranked = None
     for np_ in nprobes:
-        r1 = (cand.where(F.col("__pos") < int(np_))
-              .withColumn("_r1", F.row_number().over(w1))
-              .where(F.col("_r1") <= max_sl)
-              .select(F.lit(int(np_)).alias("__np"), "q_id",
-                      "vec_id", "_r1"))
+        r1 = (_top_k(cand.where(F.col("__pos") < int(np_)),
+                     layout.order, max_sl)
+              .select(F.lit(int(np_)).alias("__np"), "q_id", "vec_id",
+                      "_r"))
         ranked = r1 if ranked is None else ranked.unionByName(r1)
     ranked = persist_bounded(ranked, "ann_recall_estimate.ranked",
                              StorageLevel.MEMORY_AND_DISK)
     pairs = ranked.select("q_id", "vec_id").distinct()
-    qe = queries_orig.select(F.col("q_id").alias("__qid"),
-                             F.col("embedding").alias("qe"))
+    qe = queries.select(F.col("q_id").alias("__qid"),
+                        F.col("embedding").alias("qe"))
     if small:
         pairs, qe = F.broadcast(pairs), F.broadcast(qe)
     cos = cosine_similarity(F.col("embedding"), F.col("qe"))
     rescored = persist_bounded(
         emb.join(pairs, "vec_id")
         .join(qe, F.col("q_id") == F.col("__qid"))
-        .select("q_id", "vec_id", cos.alias("_c")),
+        .select("q_id", "vec_id", cos.alias("_s")),
         "ann_recall_estimate.rescored", StorageLevel.MEMORY_AND_DISK)
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("_c"),
-                                            F.asc("vec_id"))
     out = []
     for np_ in nprobes:
         for sl in shortlists:
             sel = (ranked.where((F.col("__np") == int(np_))
-                                & (F.col("_r1") <= int(sl)))
+                                & (F.col("_r") <= int(sl)))
                    .select("q_id", "vec_id"))
             # sel is model-sized (≤ sample queries × shortlist rows);
             # without the hint the per-setting semi joins over the two
@@ -1906,10 +1810,9 @@ def _grid_probe_settings(spark, table: str, props: dict,
             # the same max_broadcast_queries gate as the other hints
             if small:
                 sel = F.broadcast(sel)
-            got = (rescored.join(sel, ["q_id", "vec_id"], "left_semi")
-                   .withColumn("_r", F.row_number().over(w2))
-                   .where(F.col("_r") <= k).select("q_id", "vec_id"))
-            out.append((np_, sl, got))
+            got = _top_k(rescored.join(sel, ["q_id", "vec_id"], "left_semi"),
+                         [F.desc("_s"), F.asc("vec_id")], k)
+            out.append((np_, sl, got.select("q_id", "vec_id")))
     return out
 
 
@@ -1949,46 +1852,53 @@ def ann_recall_estimate(spark, table: str, k: int = 5,
     = min(k, N−1), so starved corpora don't deflate the score).
     → (nprobe, shortlist, k, n_queries, truth_rows, hits, recall),
     one row per setting."""
-    return _recall_estimate(spark, table, _index_table.props(spark, table),
-                            k, nprobes, sample_ppm, emb, shortlist, salt,
+    return _recall_estimate(_IvfLayout(spark, table), k, nprobes,
+                            sample_ppm, emb, shortlist, salt,
                             max_broadcast_queries)
 
 
-def _recall_estimate(spark, table: str, props: dict, k: int,
-                     nprobes: tuple, sample_ppm: int,
-                     emb: DataFrame | None, shortlist, salt: str,
-                     max_broadcast_queries: int) -> DataFrame:
-    """:func:`ann_recall_estimate` over the main table's stamps
-    ``props``, already read once by the caller."""
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-
-    is_pq = _index_table.get(props, "pq_m") is not None
-    if not 0 < sample_ppm <= 1_000_000:
-        raise ValueError(
-            f"ann_recall_estimate: sample_ppm={sample_ppm} must be "
-            f"in (0, 1_000_000]")
-    if is_pq and emb is None:
-        raise ValueError(
-            "ann_recall_estimate: a PQ index stores sub-codes only — "
-            "pass the float corpus as emb for ground truth")
-    if shortlist is not None and not is_pq:
-        raise ValueError(
-            "ann_recall_estimate: shortlist applies to PQ refine "
-            "probes; a float index probes exactly at stage 1")
-    corpus = (emb if is_pq else _tombstones.live_filter(
-        spark, table, props, "vec_id")(spark.table(table))) \
-        .select("vec_id", "embedding")
+def _recall_sample(layout: _IvfLayout, emb: DataFrame | None, salt: str,
+                   sample_ppm: int) -> tuple:
+    """The recall harness's float corpus (a PQ index's ``emb``, a
+    float index's own live rows) and its query sample: the rows whose
+    md5 bucket of ``salt:vec_id`` falls under ``sample_ppm``/1e6
+    (engine-reproducible). → (corpus (vec_id, embedding), queries
+    (q_id, embedding))."""
+    corpus = (emb if layout.pq else _tombstones.live_filter(
+        layout.spark, layout.table, layout.stamps, "vec_id")(
+        layout.spark.table(layout.table))).select("vec_id", "embedding")
     h = F.md5(F.concat_ws(":", F.lit(salt),
                           F.col("vec_id").cast("string")))
     bucket = F.conv(F.substring(h, 1, 15), 16, 10).cast("long") \
         % 1_000_000
-    queries = persist_bounded(
-        corpus.where(bucket < sample_ppm)
-        .select(F.col("vec_id").alias("q_id"), "embedding"),
-        "ann_recall_estimate.queries", StorageLevel.MEMORY_AND_DISK)
-    metric = "l2" if (is_pq and shortlist is None) else "cosine"
+    return corpus, corpus.where(bucket < sample_ppm).select(
+        F.col("vec_id").alias("q_id"), "embedding")
+
+
+def _recall_estimate(layout: _IvfLayout, k: int, nprobes: tuple,
+                     sample_ppm: int, emb: DataFrame | None, shortlist,
+                     salt: str, max_broadcast_queries: int) -> DataFrame:
+    """:func:`ann_recall_estimate` over the caller's layout head."""
+    from pyspark import StorageLevel
+
+    from georiva_spark.operators._retention import persist_bounded
+
+    if not 0 < sample_ppm <= 1_000_000:
+        raise ValueError(
+            f"ann_recall_estimate: sample_ppm={sample_ppm} must be "
+            f"in (0, 1_000_000]")
+    if layout.pq and emb is None:
+        raise ValueError(
+            "ann_recall_estimate: a PQ index stores sub-codes only — "
+            "pass the float corpus as emb for ground truth")
+    if shortlist is not None and not layout.pq:
+        raise ValueError(
+            "ann_recall_estimate: shortlist applies to PQ refine "
+            "probes; a float index probes exactly at stage 1")
+    corpus, sample = _recall_sample(layout, emb, salt, sample_ppm)
+    queries = persist_bounded(sample, "ann_recall_estimate.queries",
+                              StorageLevel.MEMORY_AND_DISK)
+    metric = "l2" if (layout.pq and shortlist is None) else "cosine"
     truth = persist_bounded(
         _exact_topk(corpus, queries, k, metric),
         "ann_recall_estimate.truth", StorageLevel.MEMORY_AND_DISK)
@@ -1999,9 +1909,8 @@ def _recall_estimate(spark, table: str, props: dict, k: int,
     # fan-out + ONE index scan (r14 — see _grid_probe_settings);
     # per-setting results are filter+window slices of the shared
     # scored candidates, identical to the serving batch probes'
-    settings = _grid_probe_settings(
-        spark, table, props, queries, k, nprobes, shortlists, emb,
-        max_broadcast_queries)
+    settings = _grid_probe_settings(layout, queries, k, nprobes,
+                                    shortlists, emb, max_broadcast_queries)
     out = None
     for np_, sl, got in settings:
         # one bounded union-shuffle per setting: hits = pairs in both
@@ -2076,8 +1985,9 @@ def ann_tune(spark, table: str, target_recall: float, k: int = 5,
             f"(0, 1]")
     props = _index_table.props(spark, table)
     n_cents, = _index_table.require(props, table, "IVF", "n_centroids")
-    rows = _recall_estimate(spark, table, props, k, nprobes, sample_ppm,
-                            emb, shortlist, salt, max_broadcast_queries)
+    layout = _IvfLayout(spark, table, props)
+    rows = _recall_estimate(layout, k, nprobes, sample_ppm, emb,
+                            shortlist, salt, max_broadcast_queries)
     n = F.broadcast(_tombstones.live_filter(spark, table, props, "vec_id")(
         spark.table(table)).agg(F.count(F.lit(1)).alias("__n")))
     per_probe = F.expr(f"(__n + {n_cents} - 1) div {n_cents}")
@@ -2085,7 +1995,7 @@ def ann_tune(spark, table: str, target_recall: float, k: int = 5,
             + F.col("shortlist").cast("long"))
     meets = F.round(F.col("recall"), 6) >= F.lit(float(target_recall))
     meas = _measured_candidates(spark, table, props, nprobes,
-                                sample_ppm, emb, salt)
+                                sample_ppm, emb, salt, layout)
     priced = (rows.crossJoin(n)
               .withColumn("cost", cost.cast("long"))
               .withColumn("target_recall",
@@ -2112,30 +2022,23 @@ def ann_tune(spark, table: str, target_recall: float, k: int = 5,
 
 def _measured_candidates(spark, table: str, props: dict,
                          nprobes: tuple, sample_ppm: int,
-                         emb: DataFrame | None, salt: str) -> DataFrame:
+                         emb: DataFrame | None, salt: str,
+                         layout: _IvfLayout | None = None) -> DataFrame:
     """Skew-aware per-setting candidate counts for :func:`ann_tune`:
     (nprobe, __mc = avg candidate rows scanned per query). Routes the
     SAME md5 query sample through the SAME centroid-literal argsort
     the serving probes use (rotated first for an OPQ index), joins
     the bounded C-row cell histogram, and averages per query — every
     frame here is bounded by the sample or by C, and the one corpus
-    touch is the histogram's map-side-combined count."""
-    is_pq = _index_table.get(props, "pq_m") is not None
-    corpus = (emb if is_pq else _tombstones.live_filter(
-        spark, table, props, "vec_id")(spark.table(table))) \
-        .select("vec_id", "embedding")
-    h = F.md5(F.concat_ws(":", F.lit(salt),
-                          F.col("vec_id").cast("string")))
-    bucket = F.conv(F.substring(h, 1, 15), 16, 10).cast("long") \
-        % 1_000_000
-    queries = corpus.where(bucket < sample_ppm) \
-        .select(F.col("vec_id").alias("q_id"), "embedding")
-    if _index_table.get(props, "pq_opq") == "1":
-        rot = _load_rotation(spark, table)
-        queries = queries.withColumn("embedding", _rotate_expr(rot))
-    cents = _read_sidecar(spark, table, "_centroids")
+    touch is the histogram's map-side-combined count. ``layout``: the
+    caller's head over ``props`` (ann_tune's, so the sync check and
+    the sidecar reads are not repeated)."""
+    layout = layout or _IvfLayout(spark, table, props)
+    queries = layout.rotate(_recall_sample(layout, emb, salt,
+                                           sample_ppm)[1])
     maxnp = max(int(np_) for np_ in nprobes)
-    cells = F.expr(fastexpr.route_cells_sql("embedding", cents, maxnp))
+    cells = F.expr(fastexpr.route_cells_sql("embedding", layout.cents,
+                                            maxnp))
     fan = queries.select("q_id",
                          F.posexplode(cells).alias("__pos", "cell"))
     sizes = (_tombstones.live_filter(spark, table, props, "vec_id")(

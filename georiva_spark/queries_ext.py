@@ -2120,7 +2120,7 @@ def q_ivf_pq_probe_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   n_centroids=8, m=8, nbits=4)
     queries = (emb.where(F.col("vec_id").isin([0, 1, 2]))
                .select(F.col("vec_id").alias("q_id"), "embedding"))
-    return similarity.ivf_pq_index_probe_batch(
+    return similarity.ivf_index_probe_batch(
         spark, "t_ivfpqb", queries, k=5, nprobe=2, exclude_self=True)
 
 
@@ -2202,7 +2202,7 @@ def q_ivf_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   train_sample_ppm=250_000)
     queries = (emb.where(F.col("vec_id").isin([0, 1, 2]))
                .select(F.col("vec_id").alias("q_id"), "embedding"))
-    return similarity.ivf_pq_index_probe_batch(
+    return similarity.ivf_index_probe_batch(
         spark, "t_ivfpqt", queries, k=5, nprobe=2, exclude_self=True)
 
 

@@ -27,11 +27,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from georiva_spark.operators import _index_table
-from georiva_spark.operators.similarity import (ivf_index_append,
+from georiva_spark.operators.similarity import (_IvfLayout,
+                                                ivf_index_append,
                                                 ivf_index_compact,
-                                                ivf_index_probe_batch,
-                                                ivf_pq_index_probe_batch)
+                                                ivf_index_probe_batch)
 from georiva_spark.streaming._loop import _family_compact, run_probe_grow
 
 
@@ -76,18 +75,14 @@ def start_ann_stream(emb_stream: DataFrame, table: str, out_dir: str,
     layout-only PQ compaction (``retrain_iters=0``) needs no floats.
     Returns the StreamingQuery."""
     spark = emb_stream.sparkSession
-    if not spark.table(f"{table}_centroids").head(1):   # fail fast
-        raise ValueError(f"{table!r} has no centroid sidecar — not an "
-                         f"ivf_index_write index")
-    is_pq = _index_table.get(_index_table.props(spark, table),
-                             "pq_m") is not None
-    probe = ivf_pq_index_probe_batch if is_pq else ivf_index_probe_batch
-    if retrain_emb is not None and not (is_pq and retrain_iters > 0):
+    layout = _IvfLayout(spark, table)
+    layout.cents                 # fail fast: no centroid sidecar
+    if retrain_emb is not None and not (layout.pq and retrain_iters > 0):
         raise ValueError(
             "start_ann_stream: retrain_emb only applies to PQ "
             "retraining compaction (a float index retrains from its "
             "own rows; without retrain_iters>0 nothing retrains)")
-    if is_pq and retrain_iters > 0 and retrain_emb is None:
+    if layout.pq and retrain_iters > 0 and retrain_emb is None:
         raise ValueError(
             "start_ann_stream: retrain_iters>0 on a PQ index — "
             "retraining re-encodes from the FLOAT corpus, which the "
@@ -111,7 +106,8 @@ def start_ann_stream(emb_stream: DataFrame, table: str, out_dir: str,
         # otherwise match its vectors against THEMSELVES in the index
         queries = work.select(F.col("vec_id").alias("q_id"),
                               "embedding")
-        nbrs = probe(spark, table, queries, k=k, nprobe=nprobe)
+        nbrs = ivf_index_probe_batch(spark, table, queries, k=k,
+                                     nprobe=nprobe)
         return nbrs.join(work.select("vec_id"), "vec_id", "left_anti")
 
     return run_probe_grow(
@@ -125,10 +121,9 @@ def start_ann_stream(emb_stream: DataFrame, table: str, out_dir: str,
         append=lambda w: ivf_index_append(
             w.select("vec_id", "embedding"), table,
             gen=(gen_fn(w) if gen_fn else "")),
-        # compaction swaps the sidecars too (retrain swaps centroids,
-        # PQ compaction the codebook) — refresh them alongside main
-        refresh_tables=((table, f"{table}_centroids", f"{table}_codebook")
-                        if is_pq else (table, f"{table}_centroids")),
+        # a retraining compaction swaps every sidecar the stamps name
+        # (centroids, PQ codebook, OPQ rotation) — refresh them too
+        refresh_tables=(table, *(f"{table}{sc}" for sc in layout.sidecars)),
         grow=grow,
         compact_every_n_appends=(None if compact is None
                                  else compact_every),

@@ -203,7 +203,23 @@ def test_streaming_neardup_auto_compacts(spark, mh_index, tmp_path):
             "t_mhidx", out, ckpt, compact_every=2)
 
 
-def test_streaming_ann_probe_grows_index(spark, tmp_path):
+def _spy_refresh_tables(monkeypatch) -> list:
+    """Record the ``refresh_tables`` every start_ann_stream hands its
+    probe-then-grow loop: the index's main table plus each sidecar its
+    stamps name, which a retraining compaction swaps."""
+    from georiva_spark.streaming import annstream
+
+    seen, real = [], annstream.run_probe_grow
+
+    def spy(*args, **kwargs):
+        seen.append(tuple(kwargs["refresh_tables"]))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(annstream, "run_probe_grow", spy)
+    return seen
+
+
+def test_streaming_ann_probe_grows_index(spark, tmp_path, monkeypatch):
     """Continuous ANN (r7): batch 2's planted twin of a batch-1 vector
     is found because batch 1 was appended into the cell layout after
     its probe — the IVF index GROWS between micro-batches. Replays are
@@ -248,8 +264,10 @@ def test_streaming_ann_probe_grows_index(spark, tmp_path):
         q = start_ann_stream(src, "t_annstr", out, ckpt, k=3, nprobe=2)
         q.awaitTermination(180)
 
+    refreshed = _spy_refresh_tables(monkeypatch)
     try:
         cycle()
+        assert refreshed == [("t_annstr", "t_annstr_centroids")]
         nbrs = read_ann_neighbors(spark, out).collect()
         by_q = {}
         for r in nbrs:
@@ -422,7 +440,8 @@ def test_streaming_corpus_rejects_long_id_index(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS t_crawl_old_{s}")
 
 
-def test_streaming_ann_pq_mode_autodetects(spark, tmp_path):
+def test_streaming_ann_pq_mode_autodetects(spark, tmp_path,
+                                           monkeypatch):
     """The same probe-then-grow loop serves a PQ-compressed index:
     the stamp autodetects PQ mode, the cross-batch twin is found via
     the grown compressed index (scored by adc_dist), and no float
@@ -455,8 +474,11 @@ def test_streaming_ann_pq_mode_autodetects(spark, tmp_path):
         src = (spark.readStream.schema(schema)
                .option("maxFilesPerTrigger", "1")
                .parquet(str(landing) + "/*"))
+        refreshed = _spy_refresh_tables(monkeypatch)
         q = start_ann_stream(src, "t_annpq", out, ckpt, k=3, nprobe=2)
         q.awaitTermination(180)
+        assert refreshed == [("t_annpq", "t_annpq_centroids",
+                              "t_annpq_codebook")]
         nbrs = read_ann_neighbors(spark, out).collect()
         assert all(hasattr(r, "adc_dist") for r in nbrs)   # PQ scores
         b200 = [r for r in nbrs if r.q_id == 200]
@@ -1177,7 +1199,7 @@ def test_opq_rotation_index_probe_append_sync(spark, tmp_path):
             emb, t, str(tmp_path / "i"), n_centroids=4, m=4, nbits=4,
             train_iters=2, codebook_iters=2, residual=True, opq=True)
         # rotation sidecar: d rows, orthogonal (R Rᵀ ≈ I)
-        rot = similarity._load_rotation(spark, t)
+        rot = similarity._IvfLayout(spark, t).rotation
         R = np.array(rot)
         assert R.shape == (d, d)
         assert np.allclose(R @ R.T, np.eye(d), atol=1e-6)
@@ -1267,7 +1289,7 @@ def test_opq_nonparametric_improves_training_objective(spark,
             emb, t, str(tmp_path / "i"), n_centroids=4, m=m,
             nbits=nbits, train_iters=2, codebook_iters=2,
             residual=True, opq=True, opq_np_iters=2)
-        rot = similarity._load_rotation(spark, t)
+        rot = similarity._IvfLayout(spark, t).rotation
         assert np.allclose(np.array(rot) @ np.array(rot).T,
                            np.eye(d), atol=1e-6)
         delta = spark.createDataFrame(
@@ -1325,6 +1347,44 @@ def test_ann_recall_estimate_monotone_and_exact_at_full_probe(
     finally:
         for s in ("", "_centroids"):
             spark.sql(f"DROP TABLE IF EXISTS t_rcx{s}")
+
+
+@pytest.mark.parametrize("layout", ["float", "pq"])
+def test_recall_grid_equals_serving_batch_probe(spark, tmp_path, layout):
+    """The recall grid slices ONE serving pass at max(nprobes), so each
+    nprobe's top-k from the grid must be exactly what the serving
+    batch probe returns at that nprobe with exclude_self on the same
+    md5 sample — on a float index (cosine) and a raw-ADC PQ index."""
+    import numpy as np
+
+    from georiva_spark.operators import similarity
+
+    rng = np.random.default_rng(17)
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in rng.normal(size=8)]) for i in range(96)],
+        "vec_id long, embedding array<double>")
+    t = f"t_gridsrv_{layout}"
+    try:
+        if layout == "float":
+            similarity.ivf_index_write(emb, t, str(tmp_path / "i"),
+                                       n_centroids=4)
+        else:
+            similarity.ivf_pq_index_write(emb, t, str(tmp_path / "i"),
+                                          n_centroids=4, m=4, nbits=3)
+        layout = similarity._IvfLayout(spark, t)
+        _, queries = similarity._recall_sample(layout, emb, "recall",
+                                               250_000)
+        settings = similarity._grid_probe_settings(
+            layout, queries, 3, (1, 2, 4), (None,), emb, 10_000)
+        assert [np_ for np_, _, _ in settings] == [1, 2, 4]
+        for np_, _, got in settings:
+            want = similarity.ivf_index_probe_batch(
+                spark, t, queries, k=3, nprobe=np_, exclude_self=True)
+            want = sorted((r.q_id, r.vec_id) for r in want.collect())
+            assert want and sorted(map(tuple, got.collect())) == want
+    finally:
+        for s in ("", "_centroids", "_codebook"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}{s}")
 
 
 def test_index_rewrite_with_live_grid_cache_is_safe(spark, tmp_path):
@@ -1850,7 +1910,8 @@ def test_streaming_pq_ann_retrains_in_stream(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_streaming_ann_opq_index_end_to_end(spark, tmp_path):
+def test_streaming_ann_opq_index_end_to_end(spark, tmp_path,
+                                            monkeypatch):
     """r9: the probe-then-grow loop over an OPQ index — every
     streamed query and every appended delta rotates against the
     stamped sidecar inside the shared serving paths, so the
@@ -1888,8 +1949,13 @@ def test_streaming_ann_opq_index_end_to_end(spark, tmp_path):
         src = (spark.readStream.schema(schema)
                .option("maxFilesPerTrigger", "1")
                .parquet(str(landing) + "/*"))
+        refreshed = _spy_refresh_tables(monkeypatch)
         q = start_ann_stream(src, "t_annopq", out, ckpt, k=3, nprobe=2)
         q.awaitTermination(180)
+        # the OPQ rotation sidecar refreshes too (a retraining
+        # compaction swaps it)
+        assert refreshed == [("t_annopq", "t_annopq_centroids",
+                              "t_annopq_codebook", "t_annopq_rotation")]
         nbrs = read_ann_neighbors(spark, out).collect()
         b200 = [r for r in nbrs if r.q_id == 200]
         # the exact twin appended by batch 0, found through the

@@ -2332,7 +2332,7 @@ def test_ivf_pq_trained_residual_index(spark, tmp_path):
         # residual batch probe: ADC rides the fan-out, no floats read
         qs = emb.where("vec_id in (0, 1)").selectExpr(
             "vec_id as q_id", "embedding")
-        out = similarity.ivf_pq_index_probe_batch(
+        out = similarity.ivf_index_probe_batch(
             spark, "t_pqt_ut", qs, k=3, nprobe=2, exclude_self=True)
         plan = out._jdf.queryExecution().toString()
         scan = [ln for ln in plan.splitlines()
@@ -2536,18 +2536,24 @@ def test_ivf_pq_probe_candidate_ids_semi_join(spark, tmp_path):
         assert "embedding" not in read          # still no float I/O
         qs = emb.where("vec_id < 2").selectExpr("vec_id as q_id",
                                                 "embedding")
-        b = similarity.ivf_pq_index_probe_batch(
+        b = similarity.ivf_index_probe_batch(
             spark, "t_pqf", qs, k=3, nprobe=4, exclude_self=True,
             candidate_ids=allowed).collect()
         assert b and all(r.vec_id % 2 == 0 for r in b)
+        # a PQ index stores no attribute columns to filter on
+        with pytest.raises(ValueError, match="is a PQ index"):
+            similarity.ivf_index_probe_batch(
+                spark, "t_pqf", qs, candidate_filter="vec_id % 2 = 0")
     finally:
         for t in ("t_pqf", "t_pqf_centroids", "t_pqf_codebook"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_ivf_pq_index_named_guards(spark, tmp_path):
-    """Over-wide packing (m·nbits > 62) and probes against unstamped
-    tables fail by name, not with garbage codes."""
+    """Over-wide packing (m·nbits > 62), PQ probes and the PQ batch
+    refine against a float index, and probes of an index whose
+    centroid sidecar is empty fail by name, not with garbage codes or
+    silently empty answers."""
     emb = spark.createDataFrame(
         [(i, [float(i)] * 8) for i in range(20)],
         "vec_id long, embedding array<double>")
@@ -2559,6 +2565,16 @@ def test_ivf_pq_index_named_guards(spark, tmp_path):
     try:
         with pytest.raises(ValueError, match="not a stamped ivf_pq"):
             similarity.ivf_pq_index_probe(spark, "t_pqg2", [0.0] * 8)
+        qs = emb.where("vec_id < 2").selectExpr("vec_id as q_id",
+                                                "embedding")
+        with pytest.raises(ValueError, match="not a stamped ivf_pq"):
+            similarity.ivf_pq_index_refine_batch(spark, "t_pqg2", emb, qs)
+        spark.sql("INSERT OVERWRITE TABLE t_pqg2_centroids "
+                  "SELECT 0, array(0.0D) WHERE false")
+        with pytest.raises(ValueError, match="has no centroid sidecar"):
+            similarity.ivf_index_probe(spark, "t_pqg2", [0.0] * 8)
+        with pytest.raises(ValueError, match="has no centroid sidecar"):
+            similarity.ivf_index_probe_batch(spark, "t_pqg2", qs)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_pqg2")
         spark.sql("DROP TABLE IF EXISTS t_pqg2_centroids")

@@ -457,90 +457,56 @@ def test_ivf_pq_probe_batch_ships_no_embeddings(spark):
     assert "BroadcastNestedLoopJoin" not in phys
 
 
-def test_ivf_pq_probe_batch_gate_matches_float_contract(spark):
-    """The PQ batch probe carries the same broadcast gate as the
-    float one: hinted broadcast under max_broadcast_queries, shuffle
-    join past it, identical results either way, pruning intact."""
-    import numpy as np
+@pytest.mark.parametrize("layout", ["float", "pq"])
+def test_ivf_probe_batch_gate_broadcasts_small_shuffles_large(spark,
+                                                              layout):
+    """probe_batch at 100× scale, on either index layout: up to
+    max_broadcast_queries the query fan-out is broadcast-hinted
+    (shuffle-free serving join); past the gate the hint is withheld
+    so a 50 M-query backlog joins as a shuffle on cell instead of
+    force-broadcasting into an executor OOM — results identical
+    either way, and the static PartitionFilters pruning survives both
+    shapes."""
+    import os
+    import tempfile
 
     from georiva_spark.operators import similarity
 
-    rng = np.random.default_rng(13)
+    rng = np.random.default_rng(5 if layout == "float" else 13)
     emb = spark.createDataFrame(
         [(i, [float(v) for v in rng.normal(size=8)]) for i in range(64)],
         "vec_id long, embedding array<double>")
-    import os
-    import tempfile
-    d = os.path.join(tempfile.gettempdir(), "georiva_spark_pqgate")
-    similarity.ivf_pq_index_write(emb, "t_pqgate", os.path.join(d, "i"),
-                                  n_centroids=4, m=4, nbits=3)
-    qs = (emb.where("vec_id in (0, 1, 2)")
-          .selectExpr("vec_id as q_id", "embedding"))
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        small = similarity.ivf_pq_index_probe_batch(
-            spark, "t_pqgate", qs, k=3, nprobe=2, exclude_self=True)
-        assert "BroadcastHashJoin" in _plan(small)
-        large = similarity.ivf_pq_index_probe_batch(
-            spark, "t_pqgate", qs, k=3, nprobe=2, exclude_self=True,
-            max_broadcast_queries=0)
-        plan = _plan(large)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        scan = [ln for ln in plan.splitlines()
-                if "FileScan parquet" in ln and "t_pqgate" in ln
-                and "codebook" not in ln and "centroids" not in ln][0]
-        assert "cell" in scan.split("PartitionFilters:", 1)[1].split("]")[0]
-        assert sorted(map(tuple, small.collect())) == \
-            sorted(map(tuple, large.collect()))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        for t in ("t_pqgate", "t_pqgate_centroids", "t_pqgate_codebook"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_ivf_probe_batch_gate_broadcasts_small_shuffles_large(spark):
-    """probe_batch at 100× scale: up to max_broadcast_queries the
-    query fan-out is broadcast-hinted (shuffle-free serving join);
-    past the gate the hint is withheld so a 50 M-query backlog joins
-    as a shuffle on cell instead of force-broadcasting into an
-    executor OOM — results identical either way, and the static
-    PartitionFilters pruning survives both shapes."""
-    import numpy as np
-
-    from georiva_spark.operators import similarity
-
-    rng = np.random.default_rng(5)
-    emb = spark.createDataFrame(
-        [(i, [float(v) for v in rng.normal(size=8)]) for i in range(64)],
-        "vec_id long, embedding array<double>")
-    import os
-    import tempfile
-    d = os.path.join(tempfile.gettempdir(), "georiva_spark_ivfgate")
-    similarity.ivf_index_write(emb, "t_ivfgate", os.path.join(d, "idx"),
-                               n_centroids=4)
+    t = f"t_gate_{layout}"
+    d = os.path.join(tempfile.gettempdir(), f"georiva_spark_{t}")
+    if layout == "float":
+        similarity.ivf_index_write(emb, t, os.path.join(d, "i"),
+                                   n_centroids=4)
+    else:
+        similarity.ivf_pq_index_write(emb, t, os.path.join(d, "i"),
+                                      n_centroids=4, m=4, nbits=3)
     qs = (emb.where("vec_id in (0, 1, 2)")
           .selectExpr("vec_id as q_id", "embedding"))
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         small = similarity.ivf_index_probe_batch(
-            spark, "t_ivfgate", qs, k=3, nprobe=2, exclude_self=True)
+            spark, t, qs, k=3, nprobe=2, exclude_self=True)
         assert "BroadcastHashJoin" in _plan(small)    # hinted
         large = similarity.ivf_index_probe_batch(
-            spark, "t_ivfgate", qs, k=3, nprobe=2, exclude_self=True,
+            spark, t, qs, k=3, nprobe=2, exclude_self=True,
             max_broadcast_queries=0)
         plan = _plan(large)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
         scan = [ln for ln in plan.splitlines()
-                if "FileScan parquet" in ln and "t_ivfgate" in ln][0]
+                if "FileScan parquet" in ln and t in ln
+                and "codebook" not in ln and "centroids" not in ln][0]
         assert "cell" in scan.split("PartitionFilters:", 1)[1].split("]")[0]
         assert sorted(map(tuple, small.collect())) == \
             sorted(map(tuple, large.collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS t_ivfgate")
-        spark.sql("DROP TABLE IF EXISTS t_ivfgate_centroids")
+        for sc in ("", "_centroids", "_codebook"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}{sc}")
 
 
 def test_ivf_pq_refine_batch_joins_not_enumerates(spark):
@@ -1086,6 +1052,59 @@ def test_index_lifecycle_audit_current():
         f"index maintenance outside its one path: {found} — end a "
         f"compaction with _index_table.install, and call "
         f"ivf_index_append / ivf_index_compact for either IVF layout")
+
+
+def test_ivf_serving_audit_current():
+    """IVF serving has one path. The in-row routing
+    (``route_cells_sql``), the fan-out gate job, the fan-out spread
+    and the salted join are called from the serving pass
+    (operators/similarity.py ``_ivf_candidates``) alone — every batch
+    probe, the batch refine and the recall grid score candidates
+    there — and ann_tune's skew-aware pricing
+    (``_measured_candidates``) is the one other routing caller. No
+    module outside similarity.py names a second batch probe, so none
+    can pick one by the index layout."""
+    import ast
+    import re
+
+    core = ("operators/similarity.py", "_ivf_candidates")
+    allowed = {"route_cells_sql": {
+                   core,
+                   ("operators/similarity.py", "_measured_candidates")},
+               "_fanout_gate": {core}, "_spread_fanout": {core},
+               "_salted_cell_join": {core}}
+    calls = {name: set() for name in allowed}
+    found = []
+
+    def visit(node, rel, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            if name in allowed:
+                calls[name].add((rel, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, rel, fn)
+
+    for rel, tree, _ in _package_code():
+        rel = rel.as_posix()
+        visit(tree, rel, None)
+        if rel == "operators/similarity.py":
+            continue
+        names = {getattr(n, "id", None) or getattr(n, "attr", None)
+                 or getattr(n, "name", None) for n in ast.walk(tree)}
+        found += [f"{rel}: {n}" for n in names
+                  if n and re.fullmatch(r"\w*ivf\w*_index_probe_batch", n)
+                  and n != "ivf_index_probe_batch"]
+    for name, sites in calls.items():
+        assert sites, f"no call to {name} found"
+        found += [f"{rel}:{fn} calls {name}"
+                  for rel, fn in sorted(sites - allowed[name])]
+    assert not found, (
+        f"IVF serving outside its one path: {found} — score candidates "
+        f"through similarity._ivf_candidates and serve either layout "
+        f"with ivf_index_probe_batch")
 
 
 def test_write_mechanism_audit_current():
