@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 SEASON_MONTHS: dict[str, tuple[int, ...]] = {
     # geoprocessing/temporal.py:27-49
@@ -95,8 +95,3 @@ def valid_pixels(df: DataFrame, value_col: str = "value") -> DataFrame:
     """P11 — drop nodata before aggregation (geoprocessing/zonal.py:56-57).
     Spark aggs null-skip natively; explicit filter also prunes rows early."""
     return df.where(F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col)))
-
-
-def season_predicate(season: str, time_col: str = "time") -> Column:
-    months = SEASON_MONTHS[season]
-    return F.month(F.col(time_col)).isin(*months)

@@ -235,32 +235,17 @@ def knn_ivf_pinned(emb: DataFrame, query_vec_id: int, k: int = 5,
     reproduces — this is the oracle-checkable IVF path."""
     import numpy as np
 
-    n = emb.count()
-    step = max(1, n // n_centroids)
-    cids = [i * step + step // 2 for i in range(n_centroids)]
-    cmap = {r.vec_id: [float(v) for v in r.embedding]
-            for r in emb.where(F.col("vec_id").isin(cids))
-                        .select("vec_id", "embedding").collect()}
-    missing = [c for c in cids if c not in cmap]
-    if missing:
-        raise ValueError(
-            f"pinned-centroid quantizer needs dense vec_ids 0..N-1: "
-            f"centroid rows {missing} absent from the corpus; re-index "
-            "ids or use the trained-quantizer path (knn_ivf)")
-    cents = [cmap[c] for c in cids]
+    (cents,), vecs = _pinned_rows(
+        emb, [(n_centroids, 2)], also=[query_vec_id],
+        hint="re-index ids or use the trained-quantizer path (knn_ivf)")
 
     # in-row argmin via lexicographic array_min over (dist, cell)
     # structs — one parsed SQL string (fastexpr, r13)
     assigned = emb.withColumn("cell", _argmin_cell(cents))
 
-    qv = cmap.get(query_vec_id)
-    if qv is None:
-        row = (emb.where(F.col("vec_id") == query_vec_id)
-                  .select("embedding").head())
-        if row is None:
-            raise ValueError(f"query vec_id {query_vec_id} not in corpus")
-        qv = row.embedding
-    q = np.asarray(qv, dtype=np.float64)
+    if query_vec_id not in vecs:
+        raise ValueError(f"query vec_id {query_vec_id} not in corpus")
+    q = np.asarray(vecs[query_vec_id], dtype=np.float64)
     d = [(float(((np.asarray(c) - q) ** 2).sum()), i)
          for i, c in enumerate(cents)]
     probe_cells = [i for _, i in sorted(d)[:nprobe]]
@@ -278,21 +263,27 @@ def knn_ivf_pinned(emb: DataFrame, query_vec_id: int, k: int = 5,
             .drop("_cos"))
 
 
-def _pinned_cents(emb: DataFrame, n_centroids: int) -> list[list[float]]:
-    """knn_ivf_pinned's deterministic quantizer: centroid i = the
-    corpus vector at vec_id = i·⌊N/C⌋ + ⌊N/C⌋//2."""
+def _pinned_rows(emb: DataFrame, groups: list, also=(),
+                 hint: str = "re-index ids") -> tuple:
+    """The pinned quantizer rows — centroids and PQ codewords "trained
+    elsewhere and shipped as literals": for each ``(k, div)`` in
+    ``groups``, the k corpus vectors at vec_id = i·⌊N/k⌋ + ⌊N/k⌋//div
+    (centroids take div 2, codewords div 3). ONE count and ONE collect
+    serve every group plus the ``also`` ids (a query row). →
+    ([vectors of each group], {vec_id: vector} of every row read)."""
     n = emb.count()
-    step = max(1, n // n_centroids)
-    cids = [i * step + step // 2 for i in range(n_centroids)]
-    cmap = {r.vec_id: [float(v) for v in r.embedding]
-            for r in emb.where(F.col("vec_id").isin(cids))
+    ids = [[i * step + step // div for i in range(k)]
+           for k, div in groups for step in [max(1, n // k)]]
+    want = sorted(set(itertools.chain(also, *ids)))
+    vecs = {r.vec_id: [float(v) for v in r.embedding]
+            for r in emb.where(F.col("vec_id").isin(want))
                         .select("vec_id", "embedding").collect()}
-    missing = [c for c in cids if c not in cmap]
+    missing = sorted({c for g in ids for c in g} - vecs.keys())
     if missing:
         raise ValueError(
-            f"pinned-centroid quantizer needs dense vec_ids 0..N-1: "
-            f"centroid rows {missing} absent from the corpus")
-    return [cmap[c] for c in cids]
+            f"pinned quantizer rows {missing} absent from the corpus — "
+            f"pinning needs dense vec_ids 0..N-1; {hint}")
+    return [[vecs[c] for c in g] for g in ids], vecs
 
 
 def _argmin_cell(cents: list[list[float]]):
@@ -340,15 +331,19 @@ class _IvfLayout:
     """The IVF family's layout head — every probe and append starts
     here. ONE stamp read (or the caller's already-read ``stamps``)
     names the layout: ``pq_m`` means PQ, ``pq_opq`` a rotated index.
-    The quantizer-version sync check covers exactly the sidecars the
-    stamps name (:attr:`sidecars`), so a torn retraining compaction
-    fails by name before anything routes. The sidecar vectors load on
-    first use, so a caller reads only the sidecars it needs."""
+    A table without ``n_centroids`` (a sidecar, a plain table) fails
+    by name first. The quantizer-version sync check covers exactly the
+    sidecars the stamps name (:attr:`sidecars`), so a torn retraining
+    compaction fails by name before anything routes. The sidecar
+    vectors load on first use, so a caller reads only the sidecars it
+    needs."""
 
     def __init__(self, spark, table: str, stamps: dict | None = None):
         self.spark, self.table = spark, table
         self.stamps = (_index_table.props(spark, table)
                        if stamps is None else stamps)
+        self.n_centroids, = _index_table.require(self.stamps, table,
+                                                 "IVF", "n_centroids")
         self.pq = _index_table.get(self.stamps, "pq_m") is not None
         self.opq = _index_table.get(self.stamps, "pq_opq") == "1"
         self.residual = _index_table.get(self.stamps, "pq_residual") == "1"
@@ -427,7 +422,9 @@ def ivf_index_write(emb: DataFrame, table: str, path: str,
                     n_centroids: int = 8, train_iters: int = 0,
                     seed_ids: list[int] | None = None,
                     train_sample_ppm: int | None = None,
-                    gen: str = "") -> None:
+                    gen: str = "", m: int | None = None, nbits: int = 4,
+                    codebook_iters: int = 0, residual: bool = False,
+                    opq: bool = False, opq_np_iters: int = 0) -> None:
     """Materialize a PERSISTENT IVF ANN index — the storage layout
     knn_ivf_pinned's docstring promises: the quantizer cell
     assignment (in-row argmin over literal centroids, zero shuffle on
@@ -439,10 +436,27 @@ def ivf_index_write(emb: DataFrame, table: str, path: str,
     corpus. At 100 TB with C=4096 cells, a 2-probe query touches
     ~0.05% of the data.
 
+    Layout — ``m`` (None: a FLOAT index, the table keeps every column
+    of ``emb``): with ``m`` set the index is PQ-COMPRESSED, the
+    memory-bound variant — ``{table}`` (vec_id, pq_code, cell) stores
+    ONE packed long of ``m`` sub-codes (``m·nbits`` bits, ≤ 62: the
+    sub-64-bit packing convention — DuckDB's ``1 << p`` overflows at
+    63) instead of the raw embedding, ~40× smaller than the float
+    index at 64-dim doubles (SCALE.md smoke), plus a
+    ``{table}_codebook`` (code, embedding) sidecar holding the 2^nbits
+    ACTUAL codeword vectors in concatenated per-subspace layout (dims
+    [s·sub, (s+1)·sub) of codeword j = subspace s's j-th codeword), so
+    probes never depend on how the codebook was derived. Encoding is
+    an IN-ROW argmin per subspace over codeword literals (zero
+    shuffle, one corpus scan), exactly :func:`knn_ivf_pq`'s
+    arithmetic; sub-codes pack little-end-first,
+    ``pq_code = Σ_s code_s << (s·nbits)``. The PQ-only arguments on a
+    float build (``m=None``) fail by name.
+
     Quantizer choice — ``train_iters`` (the 100-TB knob):
 
     - ``train_iters=0`` (default): deterministic hash-order SAMPLE
-      centroids (:func:`_pinned_cents`). Exact, SQL-replayable, fine
+      centroids (:func:`_pinned_rows`). Exact, SQL-replayable, fine
       for uniformly scattered vectors — but real embedding corpora
       are CLUSTERED by construction, and sampled centroids then give
       unbalanced cells: one hot cell can absorb a large corpus
@@ -454,25 +468,51 @@ def ivf_index_write(emb: DataFrame, table: str, path: str,
       max-cell/mean-cell balance ratio drops from ~8 (sampled) to ~1
       (trained) — see SCALE.md's clustered-quantizer smoke.
 
-    ``train_sample_ppm`` (with ``train_iters>0``): train the quantizer
-    on a deterministic md5-bucket SUBSAMPLE — the FAISS practice
-    (~256·k training vectors suffice) that makes training cost
-    independent of corpus size; each Lloyd round scans the sample, the
-    final assignment still covers every row. At 100 TB this is the
-    difference between "training costs iters extra corpus scans" and
-    "training is free relative to the write".
+    Codebook choice — ``codebook_iters`` (the ADC-recall knob):
 
-    DEFAULT POLICY (decided r8): the default stays ``train_iters=0``
-    — the pinned quantizer matches the in-memory knn_ivf_pinned
-    bit-for-bit and costs no training scans, which is what tests and
-    oracles want. It is NOT the production setting: real corpora are
-    clustered, and the pinned path additionally requires dense
-    vec_ids 0..N-1 (raises by name otherwise). Production indexes
-    should always pass ``train_iters>0`` (the trained path has no id
-    requirement); COVERAGE.md carries the same note.
+    - ``codebook_iters=0`` (default): PINNED codewords — 2^nbits
+      hash-order corpus rows shared across all m subspaces
+      (:func:`knn_ivf_pq`'s rule, so the in-memory and persistent
+      variants agree bit-for-bit). Statistically naive on clustered,
+      anisotropic corpora; NOT the production setting.
+    - ``codebook_iters>0``: per-subspace k-means codebooks
+      (:func:`pq_train_codebooks` — Jégou et al. 2011, FAISS IVFPQ's
+      training), SQL-replayable, the recommended production setting.
+    - ``residual=True`` (requires ``codebook_iters>0``): encode
+      ``x − cent[cell(x)]`` — the codebook resolves within-cell
+      structure; probes build their ADC tables per probed cell from
+      the query's residual.
+    - ``opq=True`` (requires ``codebook_iters>0``): learn an
+      orthogonal OPQ-P rotation first (:func:`opq_train_rotation` —
+      Ge et al. 2013) and build the ENTIRE index in rotated space
+      (``{table}_rotation`` sidecar; every probe/append rotates its
+      input). ``opq_np_iters>0`` refines it NON-parametrically
+      (:func:`opq_train_rotation_np`) — reach for it when OPQ-P alone
+      still misses the recall target.
 
-    The quantizer parameters are stamped as TBLPROPERTIES so probes
-    and appends can validate what they are joining against.
+    ``train_sample_ppm`` (with training): train on a deterministic
+    md5-bucket SUBSAMPLE — the FAISS practice (~256·k training vectors
+    suffice) that makes training cost independent of corpus size; the
+    final assignment and encoding still cover every row.
+
+    DEFAULT POLICY (decided r8): the defaults stay pinned
+    (``train_iters=0, codebook_iters=0``) — they match the in-memory
+    knn_ivf_pinned / knn_ivf_pq bit-for-bit and cost no training
+    scans, which is what tests and oracles want. They are NOT the
+    production setting: real corpora are clustered, and pinning
+    additionally requires dense vec_ids 0..N-1 (raises by name
+    otherwise). Production indexes should pass ``train_iters>0``
+    (and, for PQ, ``codebook_iters>0, residual=True`` — SCALE.md's
+    trained-PQ smoke measures 3.4–3.7× the pinned codebook's recall;
+    add ``opq=True`` when :func:`ann_recall_estimate` shows the
+    budgeted setting still misses target); COVERAGE.md carries the
+    same note.
+
+    The layout parameters are stamped as TBLPROPERTIES so probes,
+    appends and compactions read the layout from them; the quantizer
+    build and the assign-or-encode step are the ones a retraining
+    :func:`ivf_index_compact` runs (:func:`_quantize`,
+    :func:`_assign`).
 
     Rebuilding a LIVE index (an existing ``table``) is
     writer-exclusive: the write DROPs the table first (to uncache
@@ -488,14 +528,51 @@ def ivf_index_write(emb: DataFrame, table: str, path: str,
     matching the dead vectors immediately, compaction purges them
     physically. The default '' (unversioned base) is never
     retractable."""
-    if train_iters > 0:
-        cents = kmeans_centroids(emb, k=n_centroids, iters=train_iters,
-                                 seed_ids=seed_ids,
-                                 sample_ppm=train_sample_ppm)
+    params = {"n_centroids": n_centroids, "train_iters": train_iters,
+              "train_sample_ppm": train_sample_ppm or 0}
+    if m is None:
+        given = [name for name, v, default in (
+            ("nbits", nbits, 4), ("codebook_iters", codebook_iters, 0),
+            ("residual", residual, False), ("opq", opq, False),
+            ("opq_np_iters", opq_np_iters, 0)) if v != default]
+        if given:
+            raise ValueError(
+                f"ivf_index_write: {', '.join(given)} set on a float "
+                f"index (m=None) — they configure a PQ index; pass m")
     else:
-        cents = _pinned_cents(emb, n_centroids)
-    assigned = (emb.withColumn("cell", _argmin_cell(cents))
-                .withColumn("gen", F.lit(gen)))
+        if m * nbits > 62:
+            raise ValueError(
+                f"ivf_index_write: m={m} × nbits={nbits} = {m * nbits} "
+                f"bits does not fit one signed long (≤ 62); lower m or "
+                f"nbits, or shard the code into words")
+        if residual and codebook_iters <= 0:
+            raise ValueError(
+                "ivf_index_write: residual=True requires "
+                "codebook_iters>0 — residuals are centered near zero "
+                "and a pinned raw-corpus-row codebook cannot quantize "
+                "them")
+        if opq and codebook_iters <= 0:
+            raise ValueError(
+                "ivf_index_write: opq=True requires codebook_iters>0 "
+                "— pinned codewords are raw corpus rows in ORIGINAL "
+                "space; rotating the corpus under them would silently "
+                "mis-encode everything")
+        if opq_np_iters > 0 and not opq:
+            raise ValueError(
+                "ivf_index_write: opq_np_iters>0 requires opq=True — "
+                "the non-parametric iterations refine the OPQ rotation")
+        params.update(pq_m=m, pq_nbits=nbits,
+                      pq_codebook_iters=codebook_iters,
+                      pq_residual=int(residual), pq_opq=int(opq))
+    params["quantizer_version"] = 1
+    corpus, vecs = _quantize(emb, params, train_iters, train_sample_ppm,
+                             seed_ids=seed_ids, opq_np_iters=opq_np_iters)
+    if m is not None and len(vecs["_codebook"][0]) % m:
+        raise ValueError(
+            f"ivf_index_write: dim={len(vecs['_codebook'][0])} not "
+            f"divisible by m={m}")
+    assigned = _assign(corpus, params, vecs, [F.lit(gen).alias("gen")])
+    spark = emb.sparkSession
     # drop-first (r14): a bounded persist from a previous probe of the
     # SAME table (e.g. the recall grid's scored candidates) holds a
     # cached plan over its partitioned scan; overwriting the live
@@ -503,49 +580,123 @@ def ivf_index_write(emb: DataFrame, table: str, path: str,
     # (PruneFileSourcePartitions -> requireTableExists on the repeat
     # evaluation). DROP TABLE uncaches dependents first; the overwrite
     # write below then recreates table + data exactly as before.
-    emb.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
     (assigned.write.mode("overwrite").format("parquet")
      .partitionBy("cell").option("path", path).saveAsTable(table))
-    _write_sidecars(emb.sparkSession, table, path,
-                    {"_centroids": cents}, 1)
-    _index_table.stamp(emb.sparkSession, table, {
-        "n_centroids": n_centroids, "train_iters": train_iters,
-        "train_sample_ppm": train_sample_ppm or 0,
-        "quantizer_version": 1})
+    _write_sidecars(spark, table, path, vecs, 1)
+    _index_table.stamp(spark, table, params)
     # the rebuilt index starts with no rules: the old name's tombstones
     # would hide its rows (cleared last — a crash before only hides)
-    _tombstones.clear_rules(emb.sparkSession, table, stamp_table=table)
+    _tombstones.clear_rules(spark, table, stamp_table=table)
+
+
+def _quantize(corpus: DataFrame, params: dict, iters: int,
+              sample_ppm: int | None, carry=None,
+              seed_ids: list[int] | None = None,
+              opq_np_iters: int = 0) -> tuple:
+    """The IVF family's ONE quantizer build — a write's and a
+    retraining compaction's; ``params`` (stamp name -> value) names
+    the layout. In order:
+
+    1. ROTATION (``pq_opq``): trained (OPQ-P, or OPQ-NP with
+       ``opq_np_iters>0``), or carried on a retrain; the corpus then
+       moves into the rotated space the index lives in;
+    2. CENTROIDS: ``iters`` Lloyd rounds (:func:`kmeans_centroids`),
+       or pinned corpus rows when ``iters`` is 0;
+    3. CODEBOOK (``pq_m``): trained when ``pq_codebook_iters>0`` (on
+       residuals when ``pq_residual``), else carried on a retrain or
+       pinned on a write.
+
+    ``carry(suffix)`` reads a retrained index's own sidecar: codewords
+    and rotations are data, and re-pinning or re-rotating would
+    silently re-encode everything against a different basis. Pinned
+    centroids and codewords come from ONE count and ONE collect
+    (:func:`_pinned_rows`). → (corpus in index space, sidecar vectors
+    by suffix in swap order: centroids, codebook, rotation)."""
+    m, nbits, cb_iters, residual, opq = (int(params.get(n, 0)) for n in (
+        "pq_m", "pq_nbits", "pq_codebook_iters", "pq_residual", "pq_opq"))
+    rot = None
+    if opq:
+        if carry is not None:
+            rot = carry("_rotation")
+        elif opq_np_iters > 0:
+            rot = opq_train_rotation_np(
+                corpus, m, nbits=nbits, iters=opq_np_iters,
+                codebook_iters=cb_iters, sample_ppm=sample_ppm)
+        else:
+            rot = opq_train_rotation(corpus, m, sample_ppm=sample_ppm)
+        corpus = corpus.select("vec_id",
+                               _rotate_expr(rot).alias("embedding"))
+    k = int(params["n_centroids"])
+    pin = [(k, 2)] if iters <= 0 else []
+    if m and cb_iters <= 0 and carry is None:
+        pin.append((1 << nbits, 3))
+    pinned = iter(_pinned_rows(
+        corpus, pin, hint="re-index ids or train the quantizer "
+        "(train_iters>0; codebook_iters>0 for a PQ codebook)")[0]
+        if pin else [])
+    vecs = {"_centroids": kmeans_centroids(
+        corpus, k=k, iters=iters, seed_ids=seed_ids,
+        sample_ppm=sample_ppm) if iters > 0 else next(pinned)}
+    if m:
+        vecs["_codebook"] = (
+            pq_train_codebooks(
+                corpus, m, nbits, cb_iters,
+                cents=vecs["_centroids"] if residual else None,
+                sample_ppm=sample_ppm) if cb_iters > 0
+            else carry("_codebook") if carry is not None
+            else next(pinned))
+    if rot is not None:
+        vecs["_rotation"] = rot
+    return corpus, vecs
+
+
+def _assign(frame: DataFrame, params: dict, vecs: dict,
+            extra: list) -> DataFrame:
+    """The IVF family's ONE assign-or-encode step — write, append and
+    retraining compaction: each row of ``frame`` (in index space) gets
+    its cell, an in-row argmin over the centroid literals
+    ``vecs['_centroids']``. A float index keeps every column of
+    ``frame``, then ``extra``; a PQ index (``params`` has ``pq_m``)
+    keeps (vec_id, pq_code — encoded under ``vecs['_codebook']``,
+    residuals on a residual index — and ``extra``). → the rows to
+    write, partition column ``cell`` last."""
+    cents = vecs["_centroids"]
+    if "pq_m" not in params:
+        return frame.select(*frame.columns, *extra,
+                            _argmin_cell(cents).alias("cell"))
+    m, nbits, residual = (int(params.get(n, 0)) for n in (
+        "pq_m", "pq_nbits", "pq_residual"))
+    return _pq_encode_frame(frame, cents, vecs["_codebook"], m, nbits,
+                            residual == 1).select("vec_id", "pq_code",
+                                                  *extra, "cell")
 
 
 def ivf_index_append(emb: DataFrame, table: str,
                      gen: str = "") -> None:
-    """Append a delta shard to an IVF index, float
-    (:func:`ivf_index_write`) or PQ (:func:`ivf_pq_index_write`) — the
-    growth half of the ANN layout (mirror of minhash_index_append).
-    The index's stamps name its layout (``pq_m`` means PQ). New
-    vectors are assigned with the INDEX'S OWN centroids (read from the
-    bounded sidecar, inlined as literals — zero shuffle) and appended
-    into the same cell partitions, so probes keep pruning to nprobe/C
-    over the grown corpus without ever re-assigning it. A PQ index
-    also encodes the delta with its OWN codebook (rotated first by its
-    own rotation on an OPQ index); the stamped m/nbits/residual drive
-    the packing, so a probe's unpacking stays consistent across
-    appends. ``gen`` tags the appended rows' generation for
-    :func:`ivf_index_retract` (T5); tagged appends into an
-    unversioned pre-r12 layout fail by name."""
+    """Append a delta shard to an IVF index, float or PQ
+    (:func:`ivf_index_write`) — the growth half of the ANN layout
+    (mirror of minhash_index_append). The index's stamps name its
+    layout (``pq_m`` means PQ). New vectors go through the write's
+    assign-or-encode step (:func:`_assign`) with the INDEX'S OWN
+    centroids (read from the bounded sidecar, inlined as literals —
+    zero shuffle) into the same cell partitions, so probes keep
+    pruning to nprobe/C over the grown corpus without ever
+    re-assigning it. A PQ index also encodes the delta with its OWN
+    codebook (rotated first by its own rotation on an OPQ index); the
+    stamped m/nbits/residual drive the packing, so a probe's
+    unpacking stays consistent across appends. ``gen`` tags the
+    appended rows' generation for :func:`ivf_index_retract` (T5);
+    tagged appends into an unversioned pre-r12 layout fail by name."""
     spark = emb.sparkSession
     layout = _IvfLayout(spark, table)
     gen_cols = _tombstones.gen_cols(spark, table, "ivf", gen,
                                     "ivf_index_append")
-    if not layout.pq:
-        assigned = emb.withColumn("cell", _argmin_cell(layout.cents)) \
-                      .select(*emb.columns, *gen_cols, "cell")
-    else:
-        m, nbits = layout.pq_shape()
-        assigned = _pq_encode_frame(
-            layout.rotate(emb), layout.cents, layout.codebook, m, nbits,
-            layout.residual).select("vec_id", "pq_code", *gen_cols,
-                                    "cell")
+    vecs = {"_centroids": layout.cents}
+    if layout.pq:
+        vecs["_codebook"] = layout.codebook
+    assigned = _assign(layout.rotate(emb),
+                       _index_table.params(layout.stamps), vecs, gen_cols)
     (assigned.write.mode("append").format("parquet")
      .partitionBy("cell").saveAsTable(table))
     # a reader that scanned the table BEFORE this append (the probe in
@@ -580,13 +731,14 @@ def ivf_index_compact(spark, table: str, path: str,
     blobs all route to whichever old cell is least-far — one hot
     cell, probes read its fraction instead of ~1/C) and nothing
     re-trains. Since compaction rewrites every byte anyway, this is
-    the free moment to re-run Lloyd (:func:`kmeans_centroids`) on the
-    LIVE corpus, once read: a float index's own (vec_id, embedding)
-    rows, fully re-assigned; a PQ index's float corpus ``emb`` (the
-    caller's grown corpus — base + every appended delta; a PQ table
-    stores sub-codes only), semi-joined to the live vec_ids so dead
-    vectors neither train nor re-enter, each row keeping its gen tag,
-    and re-encoded through :func:`_pq_encode_frame`. A trained PQ
+    the free moment to re-run the write's quantizer build
+    (:func:`_quantize`) on the LIVE corpus, once read: a float index's
+    own (vec_id, embedding) rows, fully re-assigned; a PQ index's
+    float corpus ``emb`` (the caller's grown corpus — base + every
+    appended delta; a PQ table stores sub-codes only), semi-joined to
+    the live vec_ids so dead vectors neither train nor re-enter, each
+    row keeping its gen tag, and re-encoded through the write's
+    assign-or-encode step (:func:`_assign`). A trained PQ
     codebook (stamped ``pq_codebook_iters>0``) re-trains with the same
     iteration count (on residuals if stamped); a pinned codebook and
     an OPQ rotation are CARRIED — codewords and rotations are data,
@@ -624,42 +776,16 @@ def ivf_index_compact(spark, table: str, path: str,
     if retrain_iters <= 0:
         staged = live.repartition("cell")
     else:
-        k, = _index_table.require(stamps, table, "IVF", "n_centroids")
-        rot = None
-        if not pq:
-            corpus = live.drop("cell")
-        else:
-            corpus = emb.join(live.select("vec_id"), "vec_id",
-                              "left_semi")
-            if params.get("pq_opq") == "1":
-                rot = _read_sidecar(spark, table, "_rotation")
-                corpus = corpus.select(
-                    "vec_id", _rotate_expr(rot).alias("embedding"))
-        cents = kmeans_centroids(corpus, k=k, iters=retrain_iters,
-                                 sample_ppm=train_sample_ppm)
-        sidecars["_centroids"] = cents
-        if not pq:
-            staged = corpus.withColumn("cell", _argmin_cell(cents))
-        else:
-            m, nbits = _index_table.require(stamps, table, "ivf_pq",
-                                            "pq_m", "pq_nbits")
-            residual = params.get("pq_residual") == "1"
-            cb_iters = int(params.get("pq_codebook_iters", "0"))
-            sidecars["_codebook"] = (
-                pq_train_codebooks(corpus, m, nbits, cb_iters,
-                                   cents=cents if residual else None,
-                                   sample_ppm=train_sample_ppm)
-                if cb_iters > 0
-                else _read_sidecar(spark, table, "_codebook"))
-            if rot is not None:
-                sidecars["_rotation"] = rot
-            staged = _pq_encode_frame(corpus, cents,
-                                      sidecars["_codebook"], m, nbits,
-                                      residual)
-            if "gen" in live.columns:
-                staged = (staged.join(live.select("vec_id", "gen"),
-                                      "vec_id")
-                          .select("vec_id", "pq_code", "gen", "cell"))
+        _index_table.require(stamps, table, "IVF", "n_centroids")
+        corpus = (emb.join(live.select("vec_id"), "vec_id", "left_semi")
+                  if pq else live.drop("cell"))
+        corpus, sidecars = _quantize(
+            corpus, params, retrain_iters, train_sample_ppm,
+            carry=lambda sc: _read_sidecar(spark, table, sc))
+        staged = _assign(corpus, params, sidecars, [])
+        if pq and "gen" in live.columns:
+            staged = (staged.join(live.select("vec_id", "gen"), "vec_id")
+                      .select("vec_id", "pq_code", "gen", "cell"))
         params.update(train_iters=retrain_iters,
                       train_sample_ppm=train_sample_ppm or 0,
                       quantizer_version=int(
@@ -677,43 +803,118 @@ def ivf_index_compact(spark, table: str, path: str,
 def ivf_index_probe(spark, table: str, query_vec, k: int = 5,
                     nprobe: int = 2,
                     exclude_vec_id: int | None = None,
-                    candidate_filter=None) -> DataFrame:
-    """Probe a :func:`ivf_index_write` index with a query VECTOR →
-    top-k (vec_id, cell, cosine). Cell selection is driver-side over
-    the bounded centroid sidecar (C rows); the corpus scan carries a
-    `cell IN (...)` predicate that Spark turns into partition pruning
-    — the nprobe/C read the index layout exists for.
+                    candidate_filter=None,
+                    candidate_ids: DataFrame | None = None) -> DataFrame:
+    """Probe an IVF index, float or PQ (:func:`ivf_index_write` — the
+    stamps name the layout), with ONE query VECTOR → top-k (vec_id,
+    cell, cosine) by exact cosine descending on a float index;
+    (vec_id, cell, adc_dist) by ADC-L2² ascending on a PQ index —
+    FAISS IVFPQ's serving shape. Ties break by vec_id, as in
+    :func:`ivf_index_probe_batch`. Cell selection is driver-side over
+    the bounded centroid sidecar (C rows; the query rotates into
+    index space first on an OPQ index); the scan carries a
+    ``cell IN (...)`` predicate that Spark turns into partition
+    pruning — the nprobe/C read the index layout exists for.
 
-    ``candidate_filter`` (optional Column or SQL string): FILTERED ANN
-    — the float index stores every attribute column the corpus had, so
-    a metadata predicate (``"label = 2"``, ``"lang = 'en'"``) applies
-    scan-side and pushes down to parquet (PushedFilters) BEFORE any
-    distance math. Semantics are filter-then-rank within the probed
-    cells: a highly selective filter thins each cell, so callers
-    should raise ``nprobe`` accordingly (the standard filtered-ANN
-    recall trade — the filter does not change which cells are probed)."""
+    PQ scoring is an ADC lookup: the per-subspace query↔codeword
+    distance table (m × 2^nbits doubles, computed driver-side from the
+    codebook sidecar) ships as literals and each row's score is m
+    ``element_at`` picks on its unpacked sub-codes. A RESIDUAL index
+    builds one table per probed cell from the query's residual
+    against THAT cell's centroid, dispatched by a when-chain on the
+    row's cell. The PQ scan never touches a float embedding: it reads
+    (vec_id, pq_code) only — the ~40× I/O reduction is the point.
+
+    FILTERED ANN, filter-then-rank within the probed cells (a highly
+    selective filter thins each cell, so callers should raise
+    ``nprobe`` accordingly — the filter does not change which cells
+    are probed): ``candidate_filter`` (Column or SQL string) is a
+    metadata predicate (``"label = 2"``, ``"lang = 'en'"``) applied
+    scan-side and pushed down to parquet (PushedFilters) BEFORE any
+    distance math — a float index stores every attribute column the
+    corpus had, a PQ index none, so there it fails by name;
+    ``candidate_ids`` (single-column frame, either layout) SEMI-joins
+    the scan to the vec_ids an attribute query on the metadata table
+    returned (hash keys only, no floats)."""
+    return _probe_one(_IvfLayout(spark, table), query_vec, k, nprobe,
+                      exclude_vec_id, candidate_filter, candidate_ids)
+
+
+def _probe_one(layout: _IvfLayout, query_vec, k: int, nprobe: int,
+               exclude_vec_id: int | None, candidate_filter=None,
+               candidate_ids: DataFrame | None = None) -> DataFrame:
+    """:func:`ivf_index_probe` over the caller's layout head."""
     import numpy as np
 
-    layout = _IvfLayout(spark, table)
+    scan = _live_scan(layout, candidate_filter, candidate_ids)
     cents = np.asarray(layout.cents, dtype=np.float64)
     q = np.asarray(list(query_vec), dtype=np.float64)
+    if layout.opq:
+        # driver-side d×d matvec — model-sized, like the routing
+        q = np.asarray(layout.rotation, dtype=np.float64) @ q
     order = sorted((float(((c - q) ** 2).sum()), cell)
                    for cell, c in enumerate(cents))
     probe_cells = [cell for _, cell in order[:nprobe]]
+    if layout.pq:
+        m, nbits = layout.pq_shape()
+        ncw = 1 << nbits
+        cb = np.asarray(layout.codebook, dtype=np.float64)
+        sub = len(cb[0]) // m
 
-    qlit = F.expr(fastexpr.darr(q))
-    cos = cosine_similarity(F.col("embedding"), qlit)
-    scan = _tombstones.live_filter(spark, table, layout.stamps, "vec_id")(
-        spark.table(table)).where(F.col("cell").isin(probe_cells))
-    if candidate_filter is not None:
-        scan = scan.where(candidate_filter)
+        def adc_for(qv: "np.ndarray") -> str:
+            # one parsed SQL string (fastexpr, r13) — the m·2^nbits ADC
+            # literal table cost seconds of py4j chatter per probe
+            qd = [[float(((qv[s * sub:(s + 1) * sub]
+                           - cb[j][s * sub:(s + 1) * sub]) ** 2).sum())
+                   for j in range(ncw)] for s in range(m)]
+            return " + ".join(
+                f"element_at({fastexpr.darr(qd[s])}, "
+                f"CAST((shiftrightunsigned(pq_code, {s * nbits}) & "
+                f"{ncw - 1}) AS INT) + 1)"
+                for s in range(m))
+
+        if layout.residual:
+            score = F.expr("CASE " + " ".join(
+                f"WHEN cell = {cell} THEN ({adc_for(q - cents[cell])})"
+                for cell in probe_cells) + " END")
+        else:
+            score = F.expr(adc_for(q))
+        name, digits = "adc_dist", 6
+    else:
+        score = cosine_similarity(F.col("embedding"),
+                                  F.expr(fastexpr.darr(q)))
+        name, digits = "cosine", 4
+    scan = scan.where(F.col("cell").isin(probe_cells))
     if exclude_vec_id is not None:
         scan = scan.where(F.col("vec_id") != exclude_vec_id)
     return (scan.select("vec_id", F.col("cell").cast("long").alias("cell"),
-                        F.round(cos, 4).alias("cosine"),
-                        cos.alias("_c"))
-            .orderBy(F.desc("_c"), F.asc("vec_id"))
-            .limit(k).drop("_c"))
+                        F.round(score, digits).alias(name),
+                        score.alias("_s"))
+            .orderBy(*layout.order).limit(k).drop("_s"))
+
+
+def _live_scan(layout: _IvfLayout, candidate_filter=None,
+               candidate_ids: DataFrame | None = None) -> DataFrame:
+    """The index's live rows (tombstones anti-joined) narrowed by
+    ``candidate_filter`` / ``candidate_ids`` (see
+    :func:`ivf_index_probe`) — every probe adds its probed-cell
+    filter. ``candidate_filter`` on a PQ index fails by name."""
+    if layout.pq and candidate_filter is not None:
+        raise ValueError(
+            f"{layout.table!r} is a PQ index: it stores sub-codes, no "
+            f"attributes for candidate_filter — evaluate the predicate "
+            f"on the metadata table and pass the surviving vec_ids as "
+            f"candidate_ids")
+    scan = _tombstones.live_filter(layout.spark, layout.table,
+                                   layout.stamps, "vec_id")(
+        layout.spark.table(layout.table))
+    if candidate_filter is not None:
+        scan = scan.where(candidate_filter)
+    if candidate_ids is not None:
+        ids = candidate_ids.select(
+            F.col(candidate_ids.columns[0]).alias("vec_id"))
+        scan = scan.join(ids, "vec_id", "left_semi")
+    return scan
 
 
 def ivf_index_probe_batch(spark, table: str, queries: DataFrame,
@@ -723,13 +924,13 @@ def ivf_index_probe_batch(spark, table: str, queries: DataFrame,
                           candidate_filter=None,
                           candidate_ids: DataFrame | None = None
                           ) -> DataFrame:
-    """Batch-serve ANN queries against an IVF index, float
-    (:func:`ivf_index_write`) or PQ (:func:`ivf_pq_index_write`) —
-    the stamps name the layout. Every query row (q_id, embedding)
-    routes IN-ROW to its nprobe nearest cells, the fan-out joins the
-    cell-partitioned index under a static probed-cell partition
-    filter, and each query keeps its top-k (the serving pass is
-    :func:`_ivf_candidates`). → (q_id, vec_id, cell, cosine) by exact
+    """Batch-serve ANN queries against an IVF index, float or PQ
+    (:func:`ivf_index_write`) — the stamps name the layout. Every
+    query row (q_id, embedding) routes IN-ROW to its nprobe nearest
+    cells, the fan-out joins the cell-partitioned index under a
+    static probed-cell partition filter, and each query keeps its
+    top-k (the serving pass is :func:`_ivf_candidates`). → (q_id,
+    vec_id, cell, cosine) by exact
     cosine descending on a float index; (q_id, vec_id, cell,
     adc_dist) by ADC-L2² ascending on a PQ index, whose serving join
     ships no float embedding in either direction. Ties break by
@@ -804,8 +1005,8 @@ def _ivf_candidates(layout: _IvfLayout, queries: DataFrame,
     3. SCAN the live rows (tombstones anti-joined) of the probed cells
        only — a STATIC partition filter, so the listing prunes
        deterministically (PartitionFilters, asserted in tests) —
-       narrowed by ``candidate_filter`` / ``candidate_ids`` (see
-       :func:`ivf_index_probe_batch`).
+       narrowed by ``candidate_filter`` / ``candidate_ids``
+       (:func:`_live_scan`).
     4. JOIN on cell: broadcast the fan-out under
        ``max_broadcast_queries`` queries; past the gate spread a
        degenerate fan-out (:func:`_spread_fanout`) and salt the
@@ -819,13 +1020,8 @@ def _ivf_candidates(layout: _IvfLayout, queries: DataFrame,
 
     from georiva_spark.operators._retention import persist_bounded
 
-    if layout.pq and candidate_filter is not None:
-        raise ValueError(
-            f"{layout.table!r} is a PQ index: it stores sub-codes, no "
-            f"attributes for candidate_filter — evaluate the predicate "
-            f"on the metadata table and pass the surviving vec_ids as "
-            f"candidate_ids")
-    spark, table, cents = layout.spark, layout.table, layout.cents
+    scan = _live_scan(layout, candidate_filter, candidate_ids)
+    spark, cents = layout.spark, layout.cents
     cells = F.expr(fastexpr.route_cells_sql("embedding", cents, nprobe))
     fan = layout.rotate(queries).select(
         "q_id", F.col("embedding").alias("qe"),
@@ -849,14 +1045,7 @@ def _ivf_candidates(layout: _IvfLayout, queries: DataFrame,
     # with fewer cells than nprobe fans out fewer rows per query, and a
     # row gate would let larger batches onto the broadcast path
     n_queries, live_cells = _fanout_gate(probed)
-    scan = _tombstones.live_filter(spark, table, layout.stamps, "vec_id")(
-        spark.table(table)).where(F.col("cell").isin(live_cells))
-    if candidate_filter is not None:
-        scan = scan.where(candidate_filter)
-    if candidate_ids is not None:
-        ids = candidate_ids.select(
-            F.col(candidate_ids.columns[0]).alias("vec_id"))
-        scan = scan.join(ids, "vec_id", "left_semi")
+    scan = scan.where(F.col("cell").isin(live_cells))
     small = n_queries <= max_broadcast_queries
     if small:
         cand = scan.join(F.broadcast(probed), "cell")
@@ -985,8 +1174,8 @@ def _pq_encode_frame(emb: DataFrame, cents: list[list[float]],
                      cb: list[list[float]], m: int, nbits: int,
                      residual: bool) -> DataFrame:
     """(vec_id, pq_code, cell) for ``emb`` under the given quantizer +
-    codebook — the one encode pipeline write, append, and retraining
-    compaction all share, so the three cannot drift."""
+    codebook — the PQ half of :func:`_assign`, which write, append
+    and retraining compaction all share, so the three cannot drift."""
     sub = len(cb[0]) // m
     assigned = emb.withColumn("cell", _argmin_cell(cents))
     vec_col = "embedding"
@@ -1322,264 +1511,6 @@ def _rotate_expr(R: list[list[float]], col: str = "embedding"):
     return F.expr(fastexpr.rotate_sql(R, col=col))
 
 
-def ivf_pq_index_write(emb: DataFrame, table: str, path: str,
-                       n_centroids: int = 8, m: int = 8, nbits: int = 4,
-                       train_iters: int = 0,
-                       seed_ids: list[int] | None = None,
-                       codebook_iters: int = 0,
-                       residual: bool = False,
-                       train_sample_ppm: int | None = None,
-                       opq: bool = False,
-                       opq_np_iters: int = 0,
-                       gen: str = "") -> None:
-    """PQ-COMPRESSED persistent IVF index — the memory-bound variant
-    of :func:`ivf_index_write`: instead of storing raw
-    ``array<double>`` embeddings (at 100 TB the float index is as
-    large as the corpus), each vector stores ONE packed long of
-    ``m`` sub-codes (``m·nbits`` bits), PARTITIONED BY cell. The
-    measured on-disk ratio vs the float index is ~40× at 64-dim
-    doubles (SCALE.md smoke) — the difference between an in-memory
-    probe and an I/O-bound one.
-
-    Layout: ``{table}`` (vec_id, pq_code, cell) partitioned by cell;
-    ``{table}_centroids`` (cell, embedding) — the coarse quantizer
-    sidecar, C rows; ``{table}_codebook`` (code, embedding) — the
-    PQ codeword sidecar, 2^nbits rows of the ACTUAL codeword vectors
-    in concatenated per-subspace layout (dims [s·sub, (s+1)·sub) of
-    codeword j = subspace s's j-th codeword — for the pinned default
-    every subspace shares the same corpus row, for trained codebooks
-    they diverge), so probes are self-contained and never depend on
-    how the codebook was derived.
-
-    Codebook choice — ``codebook_iters`` (the ADC-recall knob):
-
-    - ``codebook_iters=0`` (default): PINNED codewords — 2^nbits
-      hash-order corpus rows shared across all m subspaces
-      (:func:`knn_ivf_pq`'s rule, so the in-memory and persistent
-      variants agree bit-for-bit). Exact and SQL-replayable, but
-      statistically naive: on real (clustered, anisotropic) embedding
-      corpora the shared untrained codebook inflates ADC error exactly
-      where distances are close. Fine for uniform data and smoke
-      tests; NOT the production setting.
-    - ``codebook_iters>0``: per-subspace k-means codebooks
-      (:func:`pq_train_codebooks` — Jégou et al. 2011, FAISS IVFPQ's
-      training). Same determinism contract as the coarse
-      ``train_iters`` (SQL-replayable), measured recall@10 win on an
-      unequal-variance correlated-blob corpus in SCALE.md's trained-PQ
-      smoke. This is the recommended production setting.
-    - ``residual=True`` (requires ``codebook_iters>0``): encode
-      ``x − cent[cell(x)]`` instead of raw ``x`` — the coarse
-      component is removed before quantizing, so the codebook's
-      2^nbits codewords resolve within-cell structure; probes build
-      their ADC tables per probed cell from the query's residual.
-      Raw pinned rows would make a nonsense residual codebook, hence
-      the coupling.
-
-    - ``opq=True`` (requires ``codebook_iters>0``): learn an
-      orthogonal OPQ-P rotation first (:func:`opq_train_rotation` —
-      Ge et al. 2013) and build the ENTIRE index in rotated space:
-      the coarse quantizer trains on rotated vectors, the codebook on
-      rotated (residuals if also ``residual=True``), and every
-      probe/append rotates its input against the stamped
-      ``{table}_rotation`` sidecar. Orthogonality preserves L2/cosine
-      exactly, so correctness is unchanged; ADC error drops where
-      correlated/anisotropic dimensions used to break PQ's
-      subspace-independence assumption (measured on the correlated-
-      blob smoke, SCALE.md). ``opq_np_iters>0`` (r10) refines the
-      rotation NON-parametrically (:func:`opq_train_rotation_np` —
-      Ge et al. §5 alternating updates; same sidecar contract,
-      strictly ≥ OPQ-P on the training objective) — reach for it
-      when OPQ-P alone still misses the recall target.
-
-    DEFAULT POLICY (decided r8, same as ivf_index_write's): defaults
-    stay pinned (``train_iters=0, codebook_iters=0``) for bit-for-bit
-    parity with :func:`knn_ivf_pq` and zero training cost — the
-    test/oracle setting, which also requires dense vec_ids 0..N-1.
-    Production indexes should pass ``train_iters>0, codebook_iters>0,
-    residual=True`` — SCALE.md's trained-PQ smoke measures 3.4–3.7×
-    the pinned codebook's recall on unequal-variance correlated
-    blobs, and the trained path has no id requirement. Add
-    ``opq=True`` when the recall harness (:func:`ann_recall_estimate`)
-    shows the budgeted (nprobe, shortlist) still misses target — see
-    SCALE.md's OPQ row for the measured case.
-
-    Encoding is an IN-ROW argmin per subspace over codeword literals
-    (zero shuffle, one corpus scan, whole-stage codegen), exactly
-    :func:`knn_ivf_pq`'s arithmetic — so a probe of this index
-    matches knn_ivf_pq's answer bit-for-bit and the same SQL oracle
-    replays it. Sub-codes pack little-end-first:
-    ``pq_code = Σ_s code_s << (s·nbits)``; ``m·nbits`` must stay
-    ≤ 62 (the sub-64-bit packing convention — DuckDB's ``1 << p``
-    overflows at 63). All quantizer/codebook provenance
-    (n_centroids, train_iters, m, nbits, codebook_iters, residual)
-    is stamped as TBLPROPERTIES and validated at probe/append. A live
-    rebuild is writer-exclusive, for the DROP-first reason given in
-    :func:`ivf_index_write`."""
-    if m * nbits > 62:
-        raise ValueError(
-            f"ivf_pq_index_write: m={m} × nbits={nbits} = {m * nbits} "
-            f"bits does not fit one signed long (≤ 62); lower m or "
-            f"nbits, or shard the code into words")
-    if residual and codebook_iters <= 0:
-        raise ValueError(
-            "ivf_pq_index_write: residual=True requires "
-            "codebook_iters>0 — residuals are centered near zero and "
-            "a pinned raw-corpus-row codebook cannot quantize them")
-    if opq and codebook_iters <= 0:
-        raise ValueError(
-            "ivf_pq_index_write: opq=True requires codebook_iters>0 "
-            "— pinned codewords are raw corpus rows in ORIGINAL "
-            "space; rotating the corpus under them would silently "
-            "mis-encode everything")
-    if opq_np_iters > 0 and not opq:
-        raise ValueError(
-            "ivf_pq_index_write: opq_np_iters>0 requires opq=True — "
-            "the non-parametric iterations refine the OPQ rotation")
-    rot = None
-    if opq:
-        if opq_np_iters > 0:
-            rot = opq_train_rotation_np(
-                emb, m, nbits=nbits, iters=opq_np_iters,
-                codebook_iters=codebook_iters,
-                sample_ppm=train_sample_ppm)
-        else:
-            rot = opq_train_rotation(emb, m,
-                                     sample_ppm=train_sample_ppm)
-        emb = emb.select("vec_id",
-                         _rotate_expr(rot).alias("embedding"))
-    ncw = 1 << nbits
-    if train_iters > 0:
-        cents = kmeans_centroids(emb, k=n_centroids, iters=train_iters,
-                                 seed_ids=seed_ids,
-                                 sample_ppm=train_sample_ppm)
-    else:
-        cents = _pinned_cents(emb, n_centroids)
-    if codebook_iters > 0:
-        cb = pq_train_codebooks(emb, m, nbits, codebook_iters,
-                                cents=cents if residual else None,
-                                sample_ppm=train_sample_ppm)
-    else:
-        # pinned codebook: hash-order corpus rows (knn_ivf_pq's rule)
-        n = emb.count()
-        step2 = max(1, n // ncw)
-        cwids = [j * step2 + step2 // 3 for j in range(ncw)]
-        cmap = {r.vec_id: [float(v) for v in r.embedding]
-                for r in emb.where(F.col("vec_id").isin(cwids))
-                            .select("vec_id", "embedding").collect()}
-        missing = [c for c in cwids if c not in cmap]
-        if missing:
-            raise ValueError(
-                f"pinned-codebook rows {missing} absent from the "
-                f"corpus — PQ pinning needs dense vec_ids 0..N-1")
-        cb = [cmap[c] for c in cwids]
-    dim = len(cb[0])
-    if dim % m:
-        raise ValueError(
-            f"ivf_pq_index_write: dim={dim} not divisible by m={m}")
-
-    assigned = _pq_encode_frame(emb, cents, cb, m, nbits, residual) \
-        .withColumn("gen", F.lit(gen))
-    # drop-first: uncache dependent plans before the overwrite (see
-    # ivf_index_write — the recall grid's persisted candidates)
-    emb.sparkSession.sql(f"DROP TABLE IF EXISTS {table}")
-    (assigned.write.mode("overwrite").format("parquet")
-     .partitionBy("cell").option("path", path).saveAsTable(table))
-    spark = emb.sparkSession
-    sidecars = {"_centroids": cents, "_codebook": cb}
-    if rot is not None:
-        sidecars["_rotation"] = rot
-    _write_sidecars(spark, table, path, sidecars, 1)
-    _index_table.stamp(spark, table, {
-        "n_centroids": n_centroids, "train_iters": train_iters,
-        "train_sample_ppm": train_sample_ppm or 0, "pq_m": m,
-        "pq_nbits": nbits, "pq_codebook_iters": codebook_iters,
-        "pq_residual": int(residual), "pq_opq": int(opq),
-        "quantizer_version": 1})
-    # no rules carry over to the rebuilt index (see ivf_index_write)
-    _tombstones.clear_rules(spark, table, stamp_table=table)
-
-
-def ivf_pq_index_probe(spark, table: str, query_vec, k: int = 5,
-                       nprobe: int = 2,
-                       exclude_vec_id: int | None = None,
-                       candidate_ids: DataFrame | None = None
-                       ) -> DataFrame:
-    """Probe a :func:`ivf_pq_index_write` index → top-k
-    (vec_id, adc_dist), approximate L2² ascending — FAISS IVFPQ's
-    serving shape. Cell selection is driver-side over the C-row
-    centroid sidecar; the scan carries the ``cell IN (...)`` partition
-    filter (file-listing pruning); scoring is an ADC lookup — the
-    per-subspace query↔codeword distance table (m × 2^nbits doubles,
-    computed driver-side from the codebook sidecar) ships as literals
-    and each row's score is m ``element_at`` picks on its unpacked
-    sub-codes. A RESIDUAL index (stamped ``pq_residual``) builds one
-    ADC table per probed cell from the query's residual against THAT
-    cell's centroid — nprobe bounded tables, dispatched by a
-    when-chain on the row's cell. The scan never touches a float
-    embedding: it reads (vec_id, pq_code) only — the ~40× I/O
-    reduction is the point. ``m``/``nbits``/``residual`` come from
-    the stamp (a probe against a non-PQ table fails by name).
-
-    ``candidate_ids`` (optional single-column frame): FILTERED ANN
-    for the compressed layout — the PQ table stores only sub-codes,
-    so attribute predicates evaluate on the metadata table and pass
-    their surviving vec_ids here; the scan SEMI-joins them (hash keys
-    only, no floats, no pair expansion) before scoring. Same
-    filter-then-rank semantics as the float family's
-    ``candidate_filter`` — selective filters warrant larger nprobe."""
-    import numpy as np
-
-    layout = _IvfLayout(spark, table)
-    m, nbits = layout.pq_shape()
-    ncw = 1 << nbits
-
-    cents = np.asarray(layout.cents, dtype=np.float64)
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    if layout.opq:
-        # the index lives in rotated space; rotate the query into it
-        # (driver-side d×d matvec — model-sized, like the routing)
-        q = np.asarray(layout.rotation, dtype=np.float64) @ q
-    order = sorted((float(((c - q) ** 2).sum()), cell)
-                   for cell, c in enumerate(cents))
-    probe_cells = [cell for _, cell in order[:nprobe]]
-
-    cb = np.asarray(layout.codebook, dtype=np.float64)
-    dim = len(cb[0])
-    sub = dim // m
-
-    def adc_for(qv: "np.ndarray") -> str:
-        # one parsed SQL string (fastexpr, r13) — the m·2^nbits ADC
-        # literal table cost seconds of py4j chatter per probe
-        qd = [[float(((qv[s * sub:(s + 1) * sub]
-                       - cb[j][s * sub:(s + 1) * sub]) ** 2).sum())
-               for j in range(ncw)] for s in range(m)]
-        return " + ".join(
-            f"element_at({fastexpr.darr(qd[s])}, "
-            f"CAST((shiftrightunsigned(pq_code, {s * nbits}) & "
-            f"{ncw - 1}) AS INT) + 1)"
-            for s in range(m))
-
-    if layout.residual:
-        adc = F.expr("CASE " + " ".join(
-            f"WHEN cell = {cell} THEN ({adc_for(q - cents[cell])})"
-            for cell in probe_cells) + " END")
-    else:
-        adc = F.expr(adc_for(q))
-
-    scan = _tombstones.live_filter(spark, table, layout.stamps, "vec_id")(
-        spark.table(table)).where(F.col("cell").isin(probe_cells))
-    if candidate_ids is not None:
-        ids = candidate_ids.select(
-            F.col(candidate_ids.columns[0]).alias("vec_id"))
-        scan = scan.join(ids, "vec_id", "left_semi")
-    if exclude_vec_id is not None:
-        scan = scan.where(F.col("vec_id") != exclude_vec_id)
-    return (scan.select("vec_id", F.round(adc, 6).alias("adc_dist"),
-                        adc.alias("_d"))
-            .orderBy(F.asc("_d"), F.asc("vec_id"))
-            .limit(k).drop("_d"))
-
-
 def ivf_pq_index_refine(spark, table: str, emb: DataFrame, query_vec,
                         k: int = 5, nprobe: int = 2,
                         shortlist: int = 100,
@@ -1604,9 +1535,10 @@ def ivf_pq_index_refine(spark, table: str, emb: DataFrame, query_vec,
     never touches the driver."""
     from georiva_spark.functions.vectors import cosine_similarity
 
-    short = ivf_pq_index_probe(spark, table, query_vec, k=shortlist,
-                               nprobe=nprobe,
-                               exclude_vec_id=exclude_vec_id)
+    layout = _IvfLayout(spark, table)
+    layout.pq_shape()                  # a float index fails by name
+    short = _probe_one(layout, query_vec, shortlist, nprobe,
+                       exclude_vec_id)
     ids = [r.vec_id for r in short.select("vec_id").collect()]
     qlit = F.expr(fastexpr.darr(query_vec))
     cos = cosine_similarity(F.col("embedding"), qlit)
@@ -1983,9 +1915,8 @@ def ann_tune(spark, table: str, target_recall: float, k: int = 5,
         raise ValueError(
             f"ann_tune: target_recall={target_recall} must be in "
             f"(0, 1]")
-    props = _index_table.props(spark, table)
-    n_cents, = _index_table.require(props, table, "IVF", "n_centroids")
-    layout = _IvfLayout(spark, table, props)
+    layout = _IvfLayout(spark, table)
+    props, n_cents = layout.stamps, layout.n_centroids
     rows = _recall_estimate(layout, k, nprobes, sample_ppm, emb,
                             shortlist, salt, max_broadcast_queries)
     n = F.broadcast(_tombstones.live_filter(spark, table, props, "vec_id")(
@@ -2093,19 +2024,8 @@ def semdedup(emb: DataFrame, n_clusters: int = 8,
         cents = kmeans_centroids(emb, k=n_clusters, iters=train_iters,
                                  seed_ids=seed_ids)
     else:
-        n = emb.count()
-        step = max(1, n // n_clusters)
-        cids = [i * step + step // 2 for i in range(n_clusters)]
-        cmap = {r.vec_id: [float(v) for v in r.embedding]
-                for r in emb.where(F.col("vec_id").isin(cids))
-                            .select("vec_id", "embedding").collect()}
-        missing = [c for c in cids if c not in cmap]
-        if missing:
-            raise ValueError(
-                f"pinned-centroid quantizer needs dense vec_ids "
-                f"0..N-1: centroid rows {missing} absent from the "
-                "corpus; re-index ids or use train_iters>0")
-        cents = [cmap[c] for c in cids]
+        (cents,), _ = _pinned_rows(emb, [(n_clusters, 2)],
+                                   hint="re-index ids or use train_iters>0")
 
     cell = _argmin_cell(cents)
     # null embeddings can't be clustered or compared — drop them here
@@ -2153,25 +2073,10 @@ def knn_ivf_pq(emb: DataFrame, query_vec_id: int, k: int = 5,
     shuffle. Returns (vec_id, adc_dist) — approximate L2², ascending."""
     import numpy as np
 
-    n = emb.count()
-    # --- coarse cells (same pinning rule as knn_ivf_pinned) -----------
-    step = max(1, n // n_centroids)
-    cids = [i * step + step // 2 for i in range(n_centroids)]
+    # coarse cells and codewords: knn_ivf_pinned's pinning rule
     ncw = 1 << nbits
-    step2 = max(1, n // ncw)
-    cwids = [j * step2 + step2 // 3 for j in range(ncw)]
-    want = sorted(set(cids) | set(cwids) | {query_vec_id})
-    vecs = {r.vec_id: [float(v) for v in r.embedding]
-            for r in emb.where(F.col("vec_id").isin(want))
-                        .select("vec_id", "embedding").collect()}
-    absent = [c for c in sorted(set(cids) | set(cwids))
-              if c not in vecs]
-    if absent:
-        raise ValueError(
-            f"pinned-centroid/codebook rows {absent} absent from the "
-            "corpus — PQ pinning needs dense vec_ids 0..N-1")
-    cents = [vecs[c] for c in cids]
-    cb = [vecs[c] for c in cwids]
+    (cents, cb), vecs = _pinned_rows(emb, [(n_centroids, 2), (ncw, 3)],
+                                     also=[query_vec_id])
     dim = len(cb[0])
     sub = dim // m
 

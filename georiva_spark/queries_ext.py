@@ -1622,9 +1622,9 @@ def q_ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     d = _fixture_tmp(spark, "ivfpq")
-    similarity.ivf_pq_index_write(emb, "t_ivfrcpq",
-                                  os.path.join(d, "idxrcpq"),
-                                  n_centroids=8, m=8, nbits=4)
+    similarity.ivf_index_write(emb, "t_ivfrcpq",
+                               os.path.join(d, "idxrcpq"),
+                               n_centroids=8, m=8, nbits=4)
     return similarity.ann_recall_estimate(
         spark, "t_ivfrcpq", k=5, nprobes=(2,), sample_ppm=30_000,
         emb=emb)
@@ -1712,9 +1712,9 @@ def q_ann_recall_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     d = _fixture_tmp(spark, "ivfpq")
-    similarity.ivf_pq_index_write(emb, "t_ivfrcrf",
-                                  os.path.join(d, "idxrcrf"),
-                                  n_centroids=8, m=8, nbits=4)
+    similarity.ivf_index_write(emb, "t_ivfrcrf",
+                               os.path.join(d, "idxrcrf"),
+                               n_centroids=8, m=8, nbits=4)
     return similarity.ann_recall_estimate(
         spark, "t_ivfrcrf", k=5, nprobes=(2,), sample_ppm=30_000,
         emb=emb, shortlist=50)
@@ -1827,9 +1827,9 @@ def q_ann_tune_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     d = _fixture_tmp(spark, "ivftnpq")
-    similarity.ivf_pq_index_write(emb, "t_ivftnpq",
-                                  os.path.join(d, "idxtnpq"),
-                                  n_centroids=8, m=8, nbits=4)
+    similarity.ivf_index_write(emb, "t_ivftnpq",
+                               os.path.join(d, "idxtnpq"),
+                               n_centroids=8, m=8, nbits=4)
     return similarity.ann_tune(spark, "t_ivftnpq", target_recall=0.2,
                                k=5, nprobes=(2,), shortlist=(20, 50),
                                emb=emb, sample_ppm=30_000)
@@ -2017,12 +2017,13 @@ def q_ivf_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     d = _fixture_tmp(spark, "ivfpq")
-    similarity.ivf_pq_index_write(emb, "t_ivfpq", os.path.join(d, "idx"),
-                                  n_centroids=8, m=8, nbits=4)
+    similarity.ivf_index_write(emb, "t_ivfpq", os.path.join(d, "idx"),
+                               n_centroids=8, m=8, nbits=4)
     q = (emb.where(F.col("vec_id") == 0)
          .select("embedding").head().embedding)
-    return similarity.ivf_pq_index_probe(spark, "t_ivfpq", q, k=5,
-                                         nprobe=2, exclude_vec_id=0)
+    return similarity.ivf_index_probe(spark, "t_ivfpq", q, k=5,
+                                      nprobe=2,
+                                      exclude_vec_id=0).drop("cell")
 
 
 def q_ivf_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2036,9 +2037,9 @@ def q_ivf_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     d = _fixture_tmp(spark, "ivfpq")
-    similarity.ivf_pq_index_write(emb, "t_ivfpqr",
-                                  os.path.join(d, "idxr"),
-                                  n_centroids=8, m=8, nbits=4)
+    similarity.ivf_index_write(emb, "t_ivfpqr",
+                               os.path.join(d, "idxr"),
+                               n_centroids=8, m=8, nbits=4)
     q = (emb.where(F.col("vec_id") == 0)
          .select("embedding").head().embedding)
     return similarity.ivf_pq_index_refine(
@@ -2115,9 +2116,9 @@ def q_ivf_pq_probe_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     d = _fixture_tmp(spark, "ivfpq")
-    similarity.ivf_pq_index_write(emb, "t_ivfpqb",
-                                  os.path.join(d, "idxb"),
-                                  n_centroids=8, m=8, nbits=4)
+    similarity.ivf_index_write(emb, "t_ivfpqb",
+                               os.path.join(d, "idxb"),
+                               n_centroids=8, m=8, nbits=4)
     queries = (emb.where(F.col("vec_id").isin([0, 1, 2]))
                .select(F.col("vec_id").alias("q_id"), "embedding"))
     return similarity.ivf_index_probe_batch(
@@ -2195,11 +2196,11 @@ def q_ivf_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     d = _fixture_tmp(spark, "ivfpq")
-    similarity.ivf_pq_index_write(emb, "t_ivfpqt",
-                                  os.path.join(d, "idxt"),
-                                  n_centroids=8, m=8, nbits=4,
-                                  codebook_iters=2, residual=True,
-                                  train_sample_ppm=250_000)
+    similarity.ivf_index_write(emb, "t_ivfpqt",
+                               os.path.join(d, "idxt"),
+                               n_centroids=8, m=8, nbits=4,
+                               codebook_iters=2, residual=True,
+                               train_sample_ppm=250_000)
     queries = (emb.where(F.col("vec_id").isin([0, 1, 2]))
                .select(F.col("vec_id").alias("q_id"), "embedding"))
     return similarity.ivf_index_probe_batch(
@@ -2326,9 +2327,9 @@ def q_ivf_pq_refine_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     d = _fixture_tmp(spark, "ivfpq")
-    similarity.ivf_pq_index_write(emb, "t_ivfpqrb",
-                                  os.path.join(d, "idxrb"),
-                                  n_centroids=8, m=8, nbits=4)
+    similarity.ivf_index_write(emb, "t_ivfpqrb",
+                               os.path.join(d, "idxrb"),
+                               n_centroids=8, m=8, nbits=4)
     queries = (emb.where(F.col("vec_id").isin([0, 1, 2]))
                .select(F.col("vec_id").alias("q_id"), "embedding"))
     return similarity.ivf_pq_index_refine_batch(

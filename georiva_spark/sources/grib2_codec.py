@@ -1133,9 +1133,3 @@ def _encode_complex_missing(a: np.ndarray, packing: int, order: int,
     if chunks:
         s7 += np.packbits(np.concatenate(chunks)).tobytes()
     return s5, bytes(s7)
-
-
-def encode_grib2(messages: list[dict]) -> bytes:
-    """Concatenate messages (kwargs dicts for encode_grib2_message)."""
-    return b"".join(encode_grib2_message(m.pop("values"), **m)
-                    for m in [dict(m) for m in messages])

@@ -310,10 +310,10 @@ def test_streaming_ann_residual_pq_index(spark, tmp_path):
     emb = spark.createDataFrame(
         [(i, [float(v) for v in base[i]]) for i in range(32)],
         "vec_id long, embedding array<double>")
-    similarity.ivf_pq_index_write(emb, "t_annres", str(tmp_path / "ix"),
-                                  n_centroids=4, m=4, nbits=3,
-                                  train_iters=2, codebook_iters=2,
-                                  residual=True)
+    similarity.ivf_index_write(emb, "t_annres", str(tmp_path / "ix"),
+                               n_centroids=4, m=4, nbits=3,
+                               train_iters=2, codebook_iters=2,
+                               residual=True)
     landing = tmp_path / "res_landing"
     landing.mkdir()
     out, ckpt = str(tmp_path / "res_out"), str(tmp_path / "res_ckpt")
@@ -459,8 +459,8 @@ def test_streaming_ann_pq_mode_autodetects(spark, tmp_path,
     emb = spark.createDataFrame(
         [(i, [float(v) for v in base[i]]) for i in range(20)],
         "vec_id long, embedding array<double>")
-    similarity.ivf_pq_index_write(emb, "t_annpq", str(tmp_path / "ix"),
-                                  n_centroids=4, m=4, nbits=3)
+    similarity.ivf_index_write(emb, "t_annpq", str(tmp_path / "ix"),
+                               n_centroids=4, m=4, nbits=3)
     landing = tmp_path / "pq_landing"
     landing.mkdir()
     out, ckpt = str(tmp_path / "pq_out"), str(tmp_path / "pq_ckpt")
@@ -890,9 +890,9 @@ def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
                               max_hamming=2, bits=64, n_buckets=4)
     similarity.ivf_index_write(emb, "t_once_iv", str(tmp_path / "iv"),
                                n_centroids=4)
-    similarity.ivf_pq_index_write(emb, "t_once_pq", str(tmp_path / "pq"),
-                                  n_centroids=4, m=4, nbits=4,
-                                  train_iters=1)
+    similarity.ivf_index_write(emb, "t_once_pq", str(tmp_path / "pq"),
+                               n_centroids=4, m=4, nbits=4,
+                               train_iters=1)
     qs = emb.where("vec_id < 3").selectExpr("vec_id as q_id",
                                             "embedding")
     calls = {
@@ -902,7 +902,7 @@ def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
             codes, "t_once_hm"),
         "ivf_index_probe_batch": lambda: similarity.ivf_index_probe_batch(
             spark, "t_once_iv", qs, k=2),
-        "ivf_pq_index_probe": lambda: similarity.ivf_pq_index_probe(
+        "ivf_index_probe": lambda: similarity.ivf_index_probe(
             spark, "t_once_pq", [0.0] * 8, k=2),
         "ann_tune": lambda: similarity.ann_tune(
             spark, "t_once_iv", 0.5, k=2, nprobes=(1, 2),
@@ -971,12 +971,12 @@ def _index_case(spark, tmp_path, kind, t):
     q = rows[0][1]
     retract = lambda: similarity.ivf_index_retract_docs(spark, t, [0])
     if kind == "pq_retrain":
-        similarity.ivf_pq_index_write(emb, t, path, n_centroids=2, m=2,
-                                      nbits=2, train_iters=1,
-                                      codebook_iters=1, opq=True)
+        similarity.ivf_index_write(emb, t, path, n_centroids=2, m=2,
+                                   nbits=2, train_iters=1,
+                                   codebook_iters=1, opq=True)
         return (lambda p: similarity.ivf_index_compact(
                     spark, t, p, retrain_iters=1, emb=emb),
-                lambda: {r.vec_id for r in similarity.ivf_pq_index_probe(
+                lambda: {r.vec_id for r in similarity.ivf_index_probe(
                     spark, t, q, k=3, nprobe=1).collect()},
                 retract)
     retrain = kind == "ivf_retrain"
@@ -1195,7 +1195,7 @@ def test_opq_rotation_index_probe_append_sync(spark, tmp_path):
         "vec_id long, embedding array<double>")
     t = "t_opqx"
     try:
-        similarity.ivf_pq_index_write(
+        similarity.ivf_index_write(
             emb, t, str(tmp_path / "i"), n_centroids=4, m=4, nbits=4,
             train_iters=2, codebook_iters=2, residual=True, opq=True)
         # rotation sidecar: d rows, orthogonal (R Rᵀ ≈ I)
@@ -1208,7 +1208,7 @@ def test_opq_rotation_index_probe_append_sync(spark, tmp_path):
             [(9999, [float(v) for v in X[7]])],
             "vec_id long, embedding array<double>")
         similarity.ivf_index_append(delta, t)
-        top = similarity.ivf_pq_index_probe(
+        top = similarity.ivf_index_probe(
             spark, t, [float(v) for v in X[7]], k=3, nprobe=2,
             exclude_vec_id=7).collect()
         assert top[0].vec_id == 9999
@@ -1225,12 +1225,12 @@ def test_opq_rotation_index_probe_append_sync(spark, tmp_path):
         spark.sql(f"ALTER TABLE {t}_rotation SET TBLPROPERTIES "
                   f"('georiva.quantizer_version'='99')")
         with pytest.raises(ValueError, match="version skew"):
-            similarity.ivf_pq_index_probe(spark, t, [0.0] * d, k=1)
+            similarity.ivf_index_probe(spark, t, [0.0] * d, k=1)
         spark.sql(f"ALTER TABLE {t}_rotation SET TBLPROPERTIES "
                   f"('georiva.quantizer_version'='1')")
         # pinned codewords live in original space — OPQ refuses them
         with pytest.raises(ValueError, match="opq"):
-            similarity.ivf_pq_index_write(
+            similarity.ivf_index_write(
                 emb, "t_opqbad", str(tmp_path / "b"), n_centroids=4,
                 m=4, nbits=4, opq=True)
     finally:
@@ -1285,7 +1285,7 @@ def test_opq_nonparametric_improves_training_objective(spark,
     # drop-in through the writer: probe finds the appended twin
     t = "t_opqnp"
     try:
-        similarity.ivf_pq_index_write(
+        similarity.ivf_index_write(
             emb, t, str(tmp_path / "i"), n_centroids=4, m=m,
             nbits=nbits, train_iters=2, codebook_iters=2,
             residual=True, opq=True, opq_np_iters=2)
@@ -1296,12 +1296,12 @@ def test_opq_nonparametric_improves_training_objective(spark,
             [(9999, [float(v) for v in X[7]])],
             "vec_id long, embedding array<double>")
         similarity.ivf_index_append(delta, t)
-        top = similarity.ivf_pq_index_probe(
+        top = similarity.ivf_index_probe(
             spark, t, [float(v) for v in X[7]], k=3, nprobe=2,
             exclude_vec_id=7).collect()
         assert top[0].vec_id == 9999
         with pytest.raises(ValueError, match="opq_np_iters"):
-            similarity.ivf_pq_index_write(
+            similarity.ivf_index_write(
                 emb, "t_opqnpbad", str(tmp_path / "b"), n_centroids=4,
                 m=m, nbits=nbits, train_iters=1, codebook_iters=1,
                 opq=False, opq_np_iters=2)
@@ -1369,8 +1369,8 @@ def test_recall_grid_equals_serving_batch_probe(spark, tmp_path, layout):
             similarity.ivf_index_write(emb, t, str(tmp_path / "i"),
                                        n_centroids=4)
         else:
-            similarity.ivf_pq_index_write(emb, t, str(tmp_path / "i"),
-                                          n_centroids=4, m=4, nbits=3)
+            similarity.ivf_index_write(emb, t, str(tmp_path / "i"),
+                                       n_centroids=4, m=4, nbits=3)
         layout = similarity._IvfLayout(spark, t)
         _, queries = similarity._recall_sample(layout, emb, "recall",
                                                250_000)
@@ -1390,16 +1390,18 @@ def test_recall_grid_equals_serving_batch_probe(spark, tmp_path, layout):
 def test_index_rewrite_with_live_grid_cache_is_safe(spark, tmp_path):
     """r14 regression (the bench's repeat-evaluation crash): the
     recall grid persists scored candidates whose CACHED plans contain
-    the index table's partitioned scan; a later ivf_index_write /
-    ivf_pq_index_write overwrite of the SAME table then died mid-drop
-    with TABLE_OR_VIEW_NOT_FOUND (PruneFileSourcePartitions →
+    the index table's partitioned scan; a later ivf_index_write
+    overwrite of the SAME table then died mid-drop with
+    TABLE_OR_VIEW_NOT_FOUND (PruneFileSourcePartitions →
     requireTableExists while the overwrite re-touched the dependent
-    cache entries). The writers now DROP-and-uncache first. Rebuilding
-    into the SAME path with a live estimate in between — what a
-    repeated setup does — must succeed, reproduce the identical recall
-    grid, and leave exactly the new build on disk: the post-drop
-    overwrite clears the previous build's files, so the row count is
-    the corpus size and every cell directory is a live cell."""
+    cache entries). The write now DROPs-and-uncaches first. Rebuilding
+    into the SAME table and path with a live estimate in between —
+    what a repeated setup does, here as a float build twice and then
+    a PQ build twice over it — must succeed, reproduce the identical
+    recall grid, and leave exactly the new build on disk: the
+    post-drop overwrite clears the previous build's files, so the row
+    count is the corpus size and every cell directory is a live
+    cell."""
     from pathlib import Path
 
     import numpy as np
@@ -1411,47 +1413,32 @@ def test_index_rewrite_with_live_grid_cache_is_safe(spark, tmp_path):
     emb = spark.createDataFrame(
         [(i, [float(v) for v in rng.normal(size=d)]) for i in range(n)],
         "vec_id long, embedding array<double>")
-    t, tpq = "t_rblx", "t_rblxpq"
+    t, path = "t_rblx", tmp_path / "i"
 
-    def one_build(table, path):
-        assert spark.table(table).count() == n
+    def grid(**pq):
+        similarity.ivf_index_write(emb, t, str(path), n_centroids=4,
+                                   train_iters=1, **pq)
+        assert spark.table(t).count() == n
         cells = {f"cell={r.cell}" for r in
-                 spark.table(table).select("cell").distinct().collect()}
+                 spark.table(t).select("cell").distinct().collect()}
         assert {p.name for p in Path(path).glob("cell=*")} == cells
+        extra = dict(emb=emb, shortlist=(5, 10)) if pq else {}
+        return sorted(
+            (r.nprobe, r.shortlist, r.hits, r.recall) for r in
+            similarity.ann_recall_estimate(
+                spark, t, k=3, nprobes=(1, 2), sample_ppm=120_000,
+                **extra).collect())
 
     try:
-        def grid():
-            similarity.ivf_index_write(emb, t, str(tmp_path / "i"),
-                                       n_centroids=4, train_iters=1)
-            one_build(t, tmp_path / "i")
-            return sorted(
-                (r.nprobe, r.hits, r.recall) for r in
-                similarity.ann_recall_estimate(
-                    spark, t, k=3, nprobes=(1, 2),
-                    sample_ppm=120_000).collect())
-
-        def grid_pq():
-            similarity.ivf_pq_index_write(
-                emb, tpq, str(tmp_path / "p"), n_centroids=4,
-                m=4, nbits=4, train_iters=1)
-            one_build(tpq, tmp_path / "p")
-            return sorted(
-                (r.nprobe, r.shortlist, r.hits, r.recall) for r in
-                similarity.ann_recall_estimate(
-                    spark, tpq, k=3, nprobes=(1, 2), emb=emb,
-                    shortlist=(5, 10), sample_ppm=120_000).collect())
-
         first = grid()
         # the estimate's cand/ranked persists are still live here —
         # the rebuild is the crash repro
         assert grid() == first
-        first_pq = grid_pq()
-        assert grid_pq() == first_pq
+        first_pq = grid(m=4, nbits=4)
+        assert grid(m=4, nbits=4) == first_pq
     finally:
-        for s in ("", "_centroids"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}{s}")
         for s in ("", "_centroids", "_codebook"):
-            spark.sql(f"DROP TABLE IF EXISTS {tpq}{s}")
+            spark.sql(f"DROP TABLE IF EXISTS {t}{s}")
 
 
 def test_ann_tune_picks_cheapest_setting_meeting_target(spark,
@@ -1502,10 +1489,10 @@ def test_ann_tune_picks_cheapest_setting_meeting_target(spark,
         # PQ refine grid: when every setting meets an easy target,
         # the cheapest (smallest shortlist) wins, and cost carries
         # the re-rank term
-        similarity.ivf_pq_index_write(emb, "t_tnpq",
-                                      str(tmp_path / "pq"),
-                                      n_centroids=C, m=4, nbits=4,
-                                      train_iters=1)
+        similarity.ivf_index_write(emb, "t_tnpq",
+                                   str(tmp_path / "pq"),
+                                   n_centroids=C, m=4, nbits=4,
+                                   train_iters=1)
         pq = similarity.ann_tune(spark, "t_tnpq", target_recall=0.01,
                                  k=5, nprobes=(2,),
                                  shortlist=(20, 60), emb=emb,
@@ -1606,10 +1593,10 @@ def test_measured_candidates_routes_opq_queries_in_rotated_space(
         "vec_id long, embedding array<double>")
     t = "t_mcopq"
     try:
-        similarity.ivf_pq_index_write(emb, t, str(tmp_path / "i"),
-                                      n_centroids=4, m=4, nbits=4,
-                                      train_iters=2, codebook_iters=1,
-                                      opq=True)
+        similarity.ivf_index_write(emb, t, str(tmp_path / "i"),
+                                   n_centroids=4, m=4, nbits=4,
+                                   train_iters=2, codebook_iters=1,
+                                   opq=True)
         props = {r.key: r.value for r in
                  spark.sql(f"SHOW TBLPROPERTIES {t}").collect()}
         assert props.get("georiva.pq_opq") == "1"
@@ -1717,7 +1704,7 @@ def test_ann_recall_estimate_pq_refine_recovers_adc_loss(spark,
         "vec_id long, embedding array<double>")
     t = "t_rcpq"
     try:
-        similarity.ivf_pq_index_write(
+        similarity.ivf_index_write(
             emb, t, str(tmp_path / "i"), n_centroids=4, m=4, nbits=4,
             train_iters=1, codebook_iters=2, residual=True)
         adc = similarity.ann_recall_estimate(
@@ -1799,7 +1786,7 @@ def test_streaming_ann_auto_compacts_with_retrain(spark, tmp_path):
         assert max(by_q[200], key=lambda t: t[1])[0] == 101
         assert spark.table("t_annc").count() == 23
         # PQ + retrain refuses at launch, by name
-        similarity.ivf_pq_index_write(
+        similarity.ivf_index_write(
             emb, "t_anncpq", str(tmp_path / "ixpq"), n_centroids=4,
             m=4, nbits=4)
         with pytest.raises(ValueError, match="retrain_iters"):
@@ -1864,7 +1851,7 @@ def test_streaming_pq_ann_retrains_in_stream(spark, tmp_path):
         q.awaitTermination(180)
 
     try:
-        similarity.ivf_pq_index_write(
+        similarity.ivf_index_write(
             emb, "t_pqrs", str(tmp_path / "pqr_ix"), n_centroids=4,
             m=4, nbits=4, train_iters=1, codebook_iters=1)
         pre_cents = {r.cell: r.embedding for r in
@@ -1932,7 +1919,7 @@ def test_streaming_ann_opq_index_end_to_end(spark, tmp_path,
     emb = spark.createDataFrame(
         [(i, [float(v) for v in base[i]]) for i in range(32)],
         "vec_id long, embedding array<double>")
-    similarity.ivf_pq_index_write(
+    similarity.ivf_index_write(
         emb, "t_annopq", str(tmp_path / "ix"), n_centroids=4, m=4,
         nbits=3, train_iters=1, codebook_iters=2, residual=True,
         opq=True)
@@ -2251,7 +2238,7 @@ def test_ivf_index_retract_float_and_pq(spark, tmp_path):
                 similarity.ivf_index_write(
                     base, t, str(tmp_path / kind), n_centroids=4)
             else:
-                similarity.ivf_pq_index_write(
+                similarity.ivf_index_write(
                     base, t, str(tmp_path / kind), n_centroids=4,
                     m=4, nbits=3)
             delta = mk([100, 101], [0, 0])
@@ -2264,7 +2251,7 @@ def test_ivf_index_retract_float_and_pq(spark, tmp_path):
             else:
                 similarity.ivf_index_append(delta, t, gen=g1)
                 probe = lambda: {r.vec_id for r in           # noqa: E731
-                                 similarity.ivf_pq_index_probe(
+                                 similarity.ivf_index_probe(
                                      spark, t, q, k=4,
                                      nprobe=2).collect()}
             assert {100, 101} <= probe()

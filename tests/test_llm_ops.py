@@ -2172,9 +2172,9 @@ def test_cluster_aware_split_no_leakage(spark):
 def test_ivf_pq_index_matches_in_memory_pq(spark, tmp_path):
     """The PQ-compressed persistent index returns EXACTLY the
     in-memory knn_ivf_pq answer (same pinned quantizer + codebook,
-    same ADC arithmetic), and its probe scan reads ONLY
+    same ADC arithmetic), its probe scan reads ONLY
     (vec_id, pq_code) from the probed cell partitions — never a float
-    embedding."""
+    embedding — and its pinned build reads the pinned rows once."""
     rng = np.random.default_rng(53)
     centers = rng.normal(size=(4, 8)) * 4
     vecs = (np.repeat(centers, 25, axis=0)
@@ -2186,10 +2186,25 @@ def test_ivf_pq_index_matches_in_memory_pq(spark, tmp_path):
             similarity.knn_ivf_pq(emb, query_vec_id=0, k=5,
                                   n_centroids=4, nprobe=2,
                                   m=4, nbits=3).collect()]
-    similarity.ivf_pq_index_write(emb, "t_pq_ut", str(tmp_path / "pq"),
-                                  n_centroids=4, m=4, nbits=3)
+    sc = spark.sparkContext
+    jobs = {}
+    for layout, pq in (("float", {}), ("pq", dict(m=4, nbits=3))):
+        sc.setJobGroup(f"pinned-{layout}-build", "pinned IVF build")
+        try:
+            similarity.ivf_index_write(emb, f"t_{layout}_ut",
+                                       str(tmp_path / layout),
+                                       n_centroids=4, **pq)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[layout] = len(sc.statusTracker().getJobIdsForGroup(
+            f"pinned-{layout}-build"))
+    # the pinned centroids and codewords share one count and one
+    # collect: the PQ build runs the float build's jobs plus the
+    # write of its codebook sidecar
+    assert jobs["pq"] == jobs["float"] + 1, jobs
     try:
-        out = similarity.ivf_pq_index_probe(
+        out = similarity.ivf_index_probe(
             spark, "t_pq_ut", [float(v) for v in vecs[0]],
             k=5, nprobe=2, exclude_vec_id=0)
         got = [(r.vec_id, r.adc_dist) for r in out.collect()]
@@ -2202,9 +2217,9 @@ def test_ivf_pq_index_matches_in_memory_pq(spark, tmp_path):
         read = scan.split("ReadSchema:", 1)[1]
         assert "embedding" not in read and "pq_code" in read
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_pq_ut")
-        spark.sql("DROP TABLE IF EXISTS t_pq_ut_centroids")
-        spark.sql("DROP TABLE IF EXISTS t_pq_ut_codebook")
+        for t in ("t_pq_ut", "t_pq_ut_centroids", "t_pq_ut_codebook",
+                  "t_float_ut", "t_float_ut_centroids"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_ivf_pq_index_append_and_compact(spark, tmp_path):
@@ -2219,13 +2234,13 @@ def test_ivf_pq_index_append_and_compact(spark, tmp_path):
     mk = lambda rows: spark.createDataFrame(
         rows, "vec_id long, embedding array<float>")
     emb = mk([(i, [float(v) for v in vecs[i]]) for i in range(40)])
-    similarity.ivf_pq_index_write(emb, "t_pqa_ut", str(tmp_path / "pq"),
-                                  n_centroids=4, m=4, nbits=3)
+    similarity.ivf_index_write(emb, "t_pqa_ut", str(tmp_path / "pq"),
+                               n_centroids=4, m=4, nbits=3)
     try:
         q = [float(v) for v in vecs[0]]
         twin = [float(v) for v in vecs[0] + np.float32(0.001)]
         similarity.ivf_index_append(mk([(999, twin)]), "t_pqa_ut")
-        top = similarity.ivf_pq_index_probe(
+        top = similarity.ivf_index_probe(
             spark, "t_pqa_ut", q, k=3, nprobe=1,
             exclude_vec_id=0).collect()
         assert top[0].vec_id == 999 and top[0].adc_dist <= top[-1].adc_dist
@@ -2233,7 +2248,7 @@ def test_ivf_pq_index_append_and_compact(spark, tmp_path):
         similarity.ivf_index_compact(spark, "t_pqa_ut",
                                      str(tmp_path / "pq2"))
         after = [(r.vec_id, r.adc_dist)
-                 for r in similarity.ivf_pq_index_probe(
+                 for r in similarity.ivf_index_probe(
                      spark, "t_pqa_ut", q, k=3, nprobe=1,
                      exclude_vec_id=0).collect()]
         assert after == before          # stamps + layout survive
@@ -2256,8 +2271,8 @@ def test_ivf_pq_refine_recovers_exact_topk(spark, tmp_path):
     emb = spark.createDataFrame(
         [(i, [float(v) for v in vecs[i]]) for i in range(100)],
         "vec_id long, embedding array<float>")
-    similarity.ivf_pq_index_write(emb, "t_pqr_ut", str(tmp_path / "pq"),
-                                  n_centroids=4, m=4, nbits=3)
+    similarity.ivf_index_write(emb, "t_pqr_ut", str(tmp_path / "pq"),
+                               n_centroids=4, m=4, nbits=3)
     try:
         q = [float(v) for v in vecs[0]]
         got = [(r.vec_id, r.cosine) for r in
@@ -2296,20 +2311,20 @@ def test_ivf_pq_trained_residual_index(spark, tmp_path):
         rows, "vec_id long, embedding array<double>")
     emb = mk([(i, [float(v) for v in vecs[i]]) for i in range(120)])
     with pytest.raises(ValueError, match="requires codebook_iters"):
-        similarity.ivf_pq_index_write(emb, "t_pqt_ut",
-                                      str(tmp_path / "x"),
-                                      m=4, nbits=3, residual=True)
-    similarity.ivf_pq_index_write(emb, "t_pqt_ut", str(tmp_path / "pq"),
-                                  n_centroids=4, m=4, nbits=3,
-                                  train_iters=2, codebook_iters=2,
-                                  residual=True)
+        similarity.ivf_index_write(emb, "t_pqt_ut",
+                                   str(tmp_path / "x"),
+                                   m=4, nbits=3, residual=True)
+    similarity.ivf_index_write(emb, "t_pqt_ut", str(tmp_path / "pq"),
+                               n_centroids=4, m=4, nbits=3,
+                               train_iters=2, codebook_iters=2,
+                               residual=True)
     try:
         props = {r.key: r.value for r in spark.sql(
             "SHOW TBLPROPERTIES t_pqt_ut").collect()}
         assert props["georiva.pq_codebook_iters"] == "2"
         assert props["georiva.pq_residual"] == "1"
         q = [float(v) for v in vecs[0]]
-        top = similarity.ivf_pq_index_probe(
+        top = similarity.ivf_index_probe(
             spark, "t_pqt_ut", q, k=5, nprobe=2,
             exclude_vec_id=0).collect()
         blob0 = set(range(0, 30))
@@ -2319,7 +2334,7 @@ def test_ivf_pq_trained_residual_index(spark, tmp_path):
         # cellmates are possible; refine then surfaces it exactly)
         twin = [float(v) for v in vecs[0] + 0.001]
         similarity.ivf_index_append(mk([(999, twin)]), "t_pqt_ut")
-        top2 = similarity.ivf_pq_index_probe(
+        top2 = similarity.ivf_index_probe(
             spark, "t_pqt_ut", q, k=10, nprobe=2,
             exclude_vec_id=0).collect()
         dmin = min(r.adc_dist for r in top2)
@@ -2420,10 +2435,10 @@ def test_ivf_pq_index_retrain_compact_reencodes(spark, tmp_path):
     base_rows = [(i, [float(v) for v in rng.normal(0, 1.0, 8)])
                  for i in range(120)]
     base = mk(base_rows)
-    similarity.ivf_pq_index_write(base, "t_rtpq", str(tmp_path / "p"),
-                                  n_centroids=4, m=4, nbits=3,
-                                  train_iters=2, codebook_iters=1,
-                                  residual=True)
+    similarity.ivf_index_write(base, "t_rtpq", str(tmp_path / "p"),
+                               n_centroids=4, m=4, nbits=3,
+                               train_iters=2, codebook_iters=1,
+                               residual=True)
     try:
         drift_rows = [(2000 + i,
                        [float(v) for v in rng.normal(0, 0.2, 8) + 30.0])
@@ -2442,7 +2457,7 @@ def test_ivf_pq_index_retrain_compact_reencodes(spark, tmp_path):
                 f"SHOW TBLPROPERTIES {t}").collect()}
             assert props["georiva.quantizer_version"] == "2"
         q = [float(v) for v in np.asarray(drift_rows[0][1])]
-        top = similarity.ivf_pq_index_probe(
+        top = similarity.ivf_index_probe(
             spark, "t_rtpq", q, k=3, nprobe=1,
             exclude_vec_id=2000).collect()
         assert all(r.vec_id >= 2000 for r in top)
@@ -2510,19 +2525,19 @@ def test_ivf_pq_probe_candidate_ids_semi_join(spark, tmp_path):
     emb = spark.createDataFrame(
         [(i, [float(v) for v in vecs[i]]) for i in range(100)],
         "vec_id long, embedding array<double>")
-    similarity.ivf_pq_index_write(emb, "t_pqf", str(tmp_path / "f"),
-                                  n_centroids=4, m=4, nbits=3)
+    similarity.ivf_index_write(emb, "t_pqf", str(tmp_path / "f"),
+                               n_centroids=4, m=4, nbits=3)
     try:
         allowed = emb.where("vec_id % 2 = 0").select("vec_id")
         q = [float(v) for v in vecs[0]]
-        unf = similarity.ivf_pq_index_probe(
+        unf = similarity.ivf_index_probe(
             spark, "t_pqf", q, k=100, nprobe=4,
             exclude_vec_id=0).collect()
         want = [(r.vec_id, r.adc_dist) for r in unf
                 if r.vec_id % 2 == 0][:5]
         # re-rank the post-filter list with the probe's tie-break
         want = sorted(want, key=lambda t: (t[1], t[0]))[:5]
-        out = similarity.ivf_pq_index_probe(
+        out = similarity.ivf_index_probe(
             spark, "t_pqf", q, k=5, nprobe=4, exclude_vec_id=0,
             candidate_ids=allowed)
         got = [(r.vec_id, r.adc_dist) for r in out.collect()]
@@ -2550,25 +2565,44 @@ def test_ivf_pq_probe_candidate_ids_semi_join(spark, tmp_path):
 
 
 def test_ivf_pq_index_named_guards(spark, tmp_path):
-    """Over-wide packing (m·nbits > 62), PQ probes and the PQ batch
-    refine against a float index, and probes of an index whose
-    centroid sidecar is empty fail by name, not with garbage codes or
-    silently empty answers."""
+    """Over-wide packing (m·nbits > 62), a PQ-only argument on a float
+    build, the PQ refines against a float index, IVF entry points
+    given a stamped sidecar, and probes of an index whose centroid
+    sidecar is empty fail by name, not with garbage codes, a missing
+    table or silently empty answers."""
     emb = spark.createDataFrame(
         [(i, [float(i)] * 8) for i in range(20)],
         "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="does not fit one signed long"):
-        similarity.ivf_pq_index_write(emb, "t_pqg", str(tmp_path / "g"),
-                                      m=8, nbits=8)
+        similarity.ivf_index_write(emb, "t_pqg", str(tmp_path / "g"),
+                                   m=8, nbits=8)
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-float-pq-arg", "float build given nbits")
+    try:
+        with pytest.raises(ValueError, match="nbits, residual set on a "
+                                             "float index"):
+            similarity.ivf_index_write(emb, "t_pqg", str(tmp_path / "g"),
+                                       nbits=3, residual=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("ivf-float-pq-arg") == []
     similarity.ivf_index_write(emb, "t_pqg2", str(tmp_path / "g2"),
                                n_centroids=2)
     try:
-        with pytest.raises(ValueError, match="not a stamped ivf_pq"):
-            similarity.ivf_pq_index_probe(spark, "t_pqg2", [0.0] * 8)
         qs = emb.where("vec_id < 2").selectExpr("vec_id as q_id",
                                                 "embedding")
         with pytest.raises(ValueError, match="not a stamped ivf_pq"):
+            similarity.ivf_pq_index_refine(spark, "t_pqg2", emb,
+                                           [0.0] * 8)
+        with pytest.raises(ValueError, match="not a stamped ivf_pq"):
             similarity.ivf_pq_index_refine_batch(spark, "t_pqg2", emb, qs)
+        for call in (
+                lambda t: similarity.ivf_index_probe(spark, t, [0.0] * 8),
+                lambda t: similarity.ivf_index_probe_batch(spark, t, qs),
+                lambda t: similarity.ann_recall_estimate(spark, t)):
+            with pytest.raises(ValueError, match="not a stamped IVF"):
+                call("t_pqg2_centroids")
         spark.sql("INSERT OVERWRITE TABLE t_pqg2_centroids "
                   "SELECT 0, array(0.0D) WHERE false")
         with pytest.raises(ValueError, match="has no centroid sidecar"):

@@ -482,8 +482,8 @@ def test_ivf_probe_batch_gate_broadcasts_small_shuffles_large(spark,
         similarity.ivf_index_write(emb, t, os.path.join(d, "i"),
                                    n_centroids=4)
     else:
-        similarity.ivf_pq_index_write(emb, t, os.path.join(d, "i"),
-                                      n_centroids=4, m=4, nbits=3)
+        similarity.ivf_index_write(emb, t, os.path.join(d, "i"),
+                                   n_centroids=4, m=4, nbits=3)
     qs = (emb.where("vec_id in (0, 1, 2)")
           .selectExpr("vec_id as q_id", "embedding"))
     thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -529,8 +529,8 @@ def test_ivf_pq_refine_batch_joins_not_enumerates(spark):
     import os
     import tempfile
     d = os.path.join(tempfile.gettempdir(), "georiva_spark_pqrb")
-    similarity.ivf_pq_index_write(emb, "t_pqrb", os.path.join(d, "i"),
-                                  n_centroids=4, m=4, nbits=3)
+    similarity.ivf_index_write(emb, "t_pqrb", os.path.join(d, "i"),
+                               n_centroids=4, m=4, nbits=3)
     # a range predicate, not IN — so ANY vec_id IN/INSET in the plan
     # is the forbidden shortlist enumeration, not this query filter
     qs = emb.where("vec_id < 3").selectExpr("vec_id as q_id", "embedding")
@@ -995,10 +995,15 @@ def test_index_lifecycle_audit_current():
     (``atomic_swap_table``), and only it and the index writes clear
     tombstone rules (``clear_rules``): every compaction ends through
     the one stamp → swap → clear sequence. And no module outside
-    operators/similarity.py chooses an append or compact function by
-    the index layout: ``ivf_index_append`` / ``ivf_index_compact``
-    read the layout from the stamps, so no branch outside picks
-    between two ``*_index_append`` or two ``*_index_compact``."""
+    operators/similarity.py chooses an IVF write, append, compact or
+    probe by the index layout: ``ivf_index_write`` takes the layout
+    as its arguments, and ``ivf_index_append`` / ``ivf_index_compact``
+    / ``ivf_index_probe`` read it from the stamps, so no branch
+    outside picks between two ``*_index_append`` or two
+    ``*_index_compact``. Inside it, the PQ encoding
+    (``_pq_encode_frame``) is called from the one assign-or-encode
+    step (``_assign``) alone, which the write, the append and the
+    retraining compaction share."""
     import ast
     import re
 
@@ -1008,8 +1013,8 @@ def test_index_lifecycle_audit_current():
                    install,
                    ("operators/dedup.py", "minhash_index_write"),
                    ("operators/dedup.py", "hamming_index_write"),
-                   ("operators/similarity.py", "ivf_index_write"),
-                   ("operators/similarity.py", "ivf_pq_index_write")}}
+                   ("operators/similarity.py", "ivf_index_write")},
+               "pq_encode_frame": {("operators/similarity.py", "_assign")}}
     calls = {name: set() for name in allowed}
     found = []
 
@@ -1034,8 +1039,10 @@ def test_index_lifecycle_audit_current():
         if rel == "operators/similarity.py":
             continue
         found += [f"{rel}: {n}" for n in names(tree)
-                  if re.fullmatch(r"\w*ivf\w*_(append|compact)", n)
-                  and n not in ("ivf_index_append", "ivf_index_compact")]
+                  if re.fullmatch(
+                      r"\w*ivf\w*_index_(append|compact|write|probe)", n)
+                  and n not in ("ivf_index_append", "ivf_index_compact",
+                                "ivf_index_write", "ivf_index_probe")]
         for node in ast.walk(tree):
             if isinstance(node, (ast.If, ast.IfExp)):
                 for op in ("append", "compact"):
@@ -1048,10 +1055,46 @@ def test_index_lifecycle_audit_current():
         found += [f"{rel}:{fn} calls {name}"
                   for rel, fn in sorted(sites - allowed[name])]
     assert calls["atomic_swap_table"], "no install step found"
+    assert calls["pq_encode_frame"], "no PQ encode step found"
     assert not found, (
         f"index maintenance outside its one path: {found} — end a "
-        f"compaction with _index_table.install, and call "
-        f"ivf_index_append / ivf_index_compact for either IVF layout")
+        f"compaction with _index_table.install, call ivf_index_write / "
+        f"ivf_index_append / ivf_index_compact / ivf_index_probe for "
+        f"either IVF layout, and encode through _assign")
+
+
+def test_tools_reference_existing_operators():
+    """Every ``similarity.X`` / ``dedup.X`` the scripts under tools/
+    use exists in the package (read from the source, no Spark): no
+    test runs the scale smokes, so a rename would otherwise surface
+    only when someone next runs one by hand."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    defined = {}
+    for mod in ("similarity", "dedup"):
+        tree = ast.parse((root / "georiva_spark" / "operators"
+                          / f"{mod}.py").read_text())
+        defined[mod] = {
+            getattr(t, "id", None) or getattr(node, "name", None)
+            for node in tree.body
+            for t in getattr(node, "targets", [node])}
+        defined[mod] |= {a.asname or a.name for node in tree.body
+                         if isinstance(node, (ast.Import, ast.ImportFrom))
+                         for a in node.names}
+    used, missing = 0, []
+    for py in sorted((root / "tools").glob("*.py")):
+        for node in ast.walk(ast.parse(py.read_text())):
+            if (isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id in defined):
+                used += 1
+                if node.attr not in defined[node.value.id]:
+                    missing.append(f"tools/{py.name}:{node.lineno} "
+                                   f"{node.value.id}.{node.attr}")
+    assert used, "no operator reference found under tools/"
+    assert not missing, f"tools/ name operators that do not exist: {missing}"
 
 
 def test_ivf_serving_audit_current():
@@ -1357,9 +1400,9 @@ def test_refine_grid_semi_joins_broadcast_selection(spark, tmp_path):
         return est, plan, semis
 
     try:
-        similarity.ivf_pq_index_write(emb, t, str(tmp_path / "g"),
-                                      n_centroids=4, m=4, nbits=4,
-                                      train_iters=1)
+        similarity.ivf_index_write(emb, t, str(tmp_path / "g"),
+                                   n_centroids=4, m=4, nbits=4,
+                                   train_iters=1)
         est, plan, semis = grid(10_000)
         assert "SortMergeJoin" not in plan
         assert all("BroadcastHashJoin" in ln for ln in semis)

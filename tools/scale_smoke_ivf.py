@@ -88,9 +88,9 @@ def main(n=500_000, d=64, blobs=16):
 
     # PQ index: bytes vs float index
     t0 = time.time()
-    similarity.ivf_pq_index_write(emb, "t_smk_pq",
-                                  os.path.join(root, "pq"),
-                                  n_centroids=blobs, m=8, nbits=4)
+    similarity.ivf_index_write(emb, "t_smk_pq",
+                               os.path.join(root, "pq"),
+                               n_centroids=blobs, m=8, nbits=4)
     print(f"pq write: {time.time() - t0:.1f}s")
 
     def du(path):
@@ -102,9 +102,9 @@ def main(n=500_000, d=64, blobs=16):
     print(f"float index bytes={fb:,}  pq index bytes={pb:,}  "
           f"ratio={fb / pb:.1f}x")
     t0 = time.time()
-    ptop = similarity.ivf_pq_index_probe(spark, "t_smk_pq", q, k=10,
-                                         nprobe=2,
-                                         exclude_vec_id=0).collect()
+    ptop = similarity.ivf_index_probe(spark, "t_smk_pq", q, k=10,
+                                      nprobe=2,
+                                      exclude_vec_id=0).collect()
     psame = sum(1 for r in ptop if r.vec_id % blobs == 0)
     print(f"pq probe: {time.time() - t0:.2f}s  "
           f"top10-from-query-blob={psame}/10")
@@ -160,10 +160,10 @@ def skewed_tune_stage(spark, n=500_000, d=64, blobs=16,
     # train_iters>0 is what makes seed_ids take effect (pinned-cents
     # ignores them): two Lloyd rounds from the seeds keep the two hot
     # seeds splitting the hot blob into twin ~40%-cells
-    similarity.ivf_pq_index_write(emb, t, os.path.join(root, "skew"),
-                                  n_centroids=blobs, m=8, nbits=4,
-                                  seed_ids=seeds, train_iters=2,
-                                  train_sample_ppm=100_000)
+    similarity.ivf_index_write(emb, t, os.path.join(root, "skew"),
+                               n_centroids=blobs, m=8, nbits=4,
+                               seed_ids=seeds, train_iters=2,
+                               train_sample_ppm=100_000)
     wt = time.time() - t0
     sizes = sorted(r["count"] for r in
                    spark.table(t).groupBy("cell").count().collect())

@@ -94,7 +94,7 @@ def main(n=100_000, d=64, blobs=16, n_queries=24):
     recall = {}
     for tag, kw in variants:
         t0 = time.time()
-        similarity.ivf_pq_index_write(
+        similarity.ivf_index_write(
             emb, f"t_pqs_{tag}", os.path.join(root, tag),
             n_centroids=blobs, m=8, nbits=4, train_iters=2,
             seed_ids=list(range(blobs)), **kw)
@@ -103,7 +103,7 @@ def main(n=100_000, d=64, blobs=16, n_queries=24):
         t1 = time.time()
         for q in qids:
             qv = [float(v) for v in data[q]]
-            top = similarity.ivf_pq_index_probe(
+            top = similarity.ivf_index_probe(
                 spark, f"t_pqs_{tag}", qv, k=100, nprobe=4,
                 exclude_vec_id=q).collect()
             got10 = {r.vec_id for r in top[:10]}

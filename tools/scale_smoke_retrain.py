@@ -126,11 +126,11 @@ def main(n=200_000, d=64, blobs=8):
      .parquet(os.path.join(landing, "b1")))
 
     t0 = time.time()
-    similarity.ivf_pq_index_write(base_emb, "t_smk_rtpq",
-                                  os.path.join(root, "ipq"),
-                                  n_centroids=blobs * 2, m=8, nbits=4,
-                                  train_iters=2, codebook_iters=1,
-                                  train_sample_ppm=250_000)
+    similarity.ivf_index_write(base_emb, "t_smk_rtpq",
+                               os.path.join(root, "ipq"),
+                               n_centroids=blobs * 2, m=8, nbits=4,
+                               train_iters=2, codebook_iters=1,
+                               train_sample_ppm=250_000)
     p0 = pq_balance()
     print(f"pq write(trained): {time.time() - t0:.1f}s  "
           f"max/mean={p0:.2f}")
