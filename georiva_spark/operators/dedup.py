@@ -17,11 +17,15 @@ anti-join, and compaction purges physically.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window, functions as F
 
 from georiva_spark.operators import _index_table
+from georiva_spark.operators._retention import persist_bounded
 from georiva_spark.operators.textops import portable_hash64, tokens
 
 
@@ -198,8 +202,6 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
     bounds it — the table is 64 longs per doc, ~3 orders smaller than
     the corpus text).
     """
-    from pyspark import StorageLevel
-
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(docs, num_hashes=num_hashes, n=n,
                              text_col=text_col, portable=portable
@@ -507,8 +509,6 @@ def hamming_pairs(codes: DataFrame, id_col: str, code_col: str,
     itself. Returns (out_a, out_b, hamming), a < b."""
     from pyspark.sql.types import ArrayType
 
-    from georiva_spark.operators._retention import persist_bounded
-
     is_arr = isinstance(codes.schema[code_col].dataType, ArrayType)
     # the code table feeds FOUR plan branches (distinct, two expansion
     # sides, within self-join); without a persist an expensive upstream
@@ -594,8 +594,6 @@ def hamming_groups(codes: DataFrame, id_col: str, code_col: str,
     """
     from pyspark.sql.types import ArrayType
 
-    from georiva_spark.operators._retention import persist_bounded
-
     # the code table feeds three branches here (distinct, item-tagging,
     # exact-size rollup) plus hamming_pairs' four — persist once so an
     # expensive upstream (fingerprint decode) runs once
@@ -636,420 +634,6 @@ def hamming_groups(codes: DataFrame, id_col: str, code_col: str,
     return (withc.join(grp, "__comp").join(exact, code_col)
             .select(F.col(id_col).alias("id"), "group_id",
                     "group_size", "exact_size"))
-
-
-def _code_ref(codes: DataFrame, code_col: str):
-    """Collision-free join key for a code column: a long code is its
-    own ref; an array code uses the full 128-bit md5 of its canonical
-    string (the hamming_groups surrogate policy — bucketable, unlike
-    the array itself)."""
-    from pyspark.sql.types import ArrayType
-
-    if isinstance(codes.schema[code_col].dataType, ArrayType):
-        return F.md5(F.col(code_col).cast("string").cast("binary")), True
-    return F.col(code_col), False
-
-
-def hamming_index_write(codes: DataFrame, table: str, path: str,
-                        id_col: str = "media_id",
-                        code_col: str = "code",
-                        max_hamming: int = 3, bits: int = 64,
-                        word_bits: int = 56,
-                        n_buckets: int = 64, gen: str = "") -> None:
-    """Persistent Hamming near-dup index — the PERCEPTUAL member of
-    the index triad (MinHash for text, IVF for embeddings): probe
-    yesterday's media corpus with today's shard without recomputing
-    or re-shuffling anything about it. Two bucketed tables:
-
-    - ``{table}_bands`` (band, key, code, ref) bucketed by
-      (band, key) — candidate generation over DISTINCT codes only
-      (the pre-collapse: N silence clips sharing one code cost ONE
-      row per band, not N);
-    - ``{table}_ids`` (ref, id) bucketed by ref — membership, where
-      ref is the code itself (long codes) or its 128-bit md5 (array
-      codes — bucketable and collision-free).
-
-    Band keys come from :func:`_hamming_band_exprs` — the SAME
-    definition the in-memory miner uses, so index and probe cannot
-    drift. Banding parameters are stamped as TBLPROPERTIES and read
-    back at probe/append time (no caller params to mismatch).
-
-    ``gen`` (r12) tags the MEMBERSHIP rows' generation (see
-    :func:`index_gen`) so a re-crawled media shard's dead members can
-    be RETRACTED (:func:`hamming_index_retract`). Band rows stay
-    generation-free BY DESIGN: they are distinct CODES shared across
-    shards (the pre-collapse), so retraction works at the membership
-    layer — a dead member vanishes from probe pairs and lookup
-    counts immediately, and compaction drops band rows whose code has
-    no live member left."""
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-    from georiva_spark.sources.bucketing import write_bucketed
-
-    _, is_arr = _code_ref(codes, code_col)
-    # the perceptual codes must be computed ONCE for both table writes
-    # (the minhash_index_write policy): without sharing, the Arrow
-    # decode lineage (image_dhash / audio_fingerprint over raw media
-    # bytes) runs twice — at 100 TB that is a second full media scan +
-    # decode per index build
-    base = (codes.select(F.col(id_col).alias("id"),
-                         F.col(code_col).alias("code"))
-            .where(F.col("code").isNotNull())
-            .dropDuplicates(["id", "code"]))
-    bands, _ = _hamming_band_exprs(is_arr, "code", max_hamming, bits,
-                                   word_bits, caller="hamming_index")
-    if is_arr:
-        # array codes: ref is the md5 surrogate, so the code is NOT
-        # recoverable from the membership table — share the decode
-        # via a persist (r13 policy; the fingerprint decode dominates
-        # the cache materialization on real media)
-        base = persist_bounded(base, "hamming_index_write.base",
-                               StorageLevel.MEMORY_AND_DISK)
-        ref2, _ = _code_ref(base, "code")
-        dc = base.select("code").distinct()
-        banded = (dc.select("code",
-                            F.explode(F.array(*bands)).alias("bk"))
-                  .select("bk.band", "bk.key", "code",
-                          _code_ref(dc, "code")[0].alias("ref")))
-        write_bucketed(banded, f"{table}_bands", ["band", "key"],
-                       n_buckets, f"{path}/bands", sort=False)
-        write_bucketed(base.select(ref2.alias("ref"), "id",
-                                   F.lit(gen).alias("gen")),
-                       f"{table}_ids", "ref", n_buckets, f"{path}/ids",
-                       sort=False)
-    else:
-        # long codes: ref IS the code, so the just-written membership
-        # table doubles as the single materialization of the decode
-        # lineage (r14, guide §1.2/§5) — the persist this replaces
-        # taxed cheap-decode media with a block-manager cache write
-        # (image_index_probe/lookup 0.68× in the r13 driver bench);
-        # deriving the band rows from the bucketed _ids scan keeps one
-        # decode pass AND makes the distinct bucket-aligned
-        # (shuffle-free). Crash between the writes leaves no stamped
-        # _bands, so probes fail by name exactly as before.
-        write_bucketed(base.select(F.col("code").alias("ref"), "id",
-                                   F.lit(gen).alias("gen")),
-                       f"{table}_ids", "ref", n_buckets, f"{path}/ids",
-                       sort=False)
-        dc = (codes.sparkSession.table(f"{table}_ids")
-              .select(F.col("ref").alias("code")).distinct())
-        banded = (dc.select("code",
-                            F.explode(F.array(*bands)).alias("bk"))
-                  .select("bk.band", "bk.key", "code",
-                          F.col("code").alias("ref")))
-        write_bucketed(banded, f"{table}_bands", ["band", "key"],
-                       n_buckets, f"{path}/bands", sort=False)
-    _index_table.stamp(codes.sparkSession, f"{table}_bands", {
-        "max_hamming": max_hamming, "bits": bits,
-        "word_bits": word_bits, "n_buckets": n_buckets,
-        "arr": int(is_arr)})
-    # the rebuilt index starts with no rules: the old name's tombstones
-    # would hide its rows (cleared last — a crash before only hides)
-    _clear_rules(codes.sparkSession, table, stamp_table=f"{table}_bands")
-
-
-def _hamming_stamps(spark, table: str) -> tuple[dict, dict]:
-    """ONE read of ``{table}_bands``' stamps → (banding parameters,
-    the stamps for the tombstone tripwire)."""
-    stamps = _index_table.props(spark, f"{table}_bands")
-    names = ("max_hamming", "bits", "word_bits", "n_buckets", "arr")
-    return dict(zip(names, _index_table.require(
-        stamps, table, "hamming", *names))), stamps
-
-
-def hamming_index_params(spark, table: str) -> dict:
-    """Read the banding parameters :func:`hamming_index_write`
-    stamped (raises by name if absent — an unstamped table is not a
-    managed Hamming index)."""
-    return _hamming_stamps(spark, table)[0]
-
-
-def hamming_index_probe(new_codes: DataFrame, table: str,
-                        id_col: str = "media_id",
-                        code_col: str = "code") -> DataFrame:
-    """Probe a :func:`hamming_index_write` index with a delta shard →
-    (id_new, id_old, hamming ≤ max_hamming) pairs, min-hamming per id
-    pair, id_new ≠ id_old. Banding parameters come from the stamp;
-    the delta's band keys join the bucketed index SHUFFLE-FREE on the
-    index side; verification runs the exact bit_count on the
-    band-matched DISTINCT code pairs only; members expand through the
-    bucketed ``_ids`` table. Nothing about the indexed corpus is
-    recomputed, collected, or broadcast.
-
-    QUADRATIC-OUTPUT HAZARD (the hamming_pairs contract): a delta
-    code near an M-member identical-code group owes M pair rows —
-    the 1M-code smoke measures 34.8 s for a hot-group delta that
-    :func:`hamming_index_lookup` answers in 3.7 s with one row per
-    delta item. Use the probe only when the pairs themselves are the
-    product; keep-or-drop decisions belong to the lookup."""
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-
-    spark = new_codes.sparkSession
-    p, stamps = _hamming_stamps(spark, table)
-    ref, is_arr = _code_ref(new_codes, code_col)
-    if bool(p["arr"]) != is_arr:
-        raise ValueError(
-            f"hamming_index_probe: index {table!r} stores "
-            f"{'array' if p['arr'] else 'long'} codes but the delta "
-            f"carries {'array' if is_arr else 'long'} codes")
-    delta = persist_bounded(
-        new_codes.select(F.col(id_col).alias("id"),
-                         F.col(code_col).alias("code"))
-        .where(F.col("code").isNotNull())
-        .dropDuplicates(["id", "code"]),
-        "hamming_index_probe.delta", StorageLevel.MEMORY_AND_DISK)
-    bands, ham = _hamming_band_exprs(
-        is_arr, "code", p["max_hamming"], p["bits"], p["word_bits"],
-        caller="hamming_index")
-    dc = delta.select("code").distinct()
-    dband = (dc.select("code", F.explode(F.array(*bands)).alias("bk"))
-             .select("bk.band", "bk.key",
-                     F.col("code").alias("__ca"),
-                     _code_ref(dc, "code")[0].alias("__ra")))
-    iband = (spark.table(f"{table}_bands")
-             .select("band", "key", F.col("code").alias("__cb"),
-                     F.col("ref").alias("__rb")))
-    cand = (dband.join(iband, ["band", "key"])
-            .select("__ra", "__rb", ham.alias("hamming"))
-            .where(F.col("hamming") <= p["max_hamming"])
-            .dropDuplicates(["__ra", "__rb"]))
-    da = delta.select(_code_ref(delta, "code")[0].alias("__ra"),
-                      F.col("id").alias("id_new"))
-    # retracted generations (re-crawled media shards, T5) and
-    # taken-down ids (r13) vanish at the MEMBERSHIP expansion — a
-    # band-matched code whose only members are dead yields no pair
-    # rows
-    ib = _live_filter(spark, table, stamps, "id")(
-        spark.table(f"{table}_ids")).select(
-        F.col("ref").alias("__rb"), F.col("id").alias("id_old"))
-    return (cand.join(da, "__ra").join(ib, "__rb")
-            .where(F.col("id_new") != F.col("id_old"))
-            .groupBy("id_new", "id_old")
-            .agg(F.min("hamming").cast("int").alias("hamming")))
-
-
-def hamming_index_lookup(new_codes: DataFrame, table: str,
-                         id_col: str = "media_id",
-                         code_col: str = "code",
-                         exclude_ids: DataFrame | None = None
-                         ) -> DataFrame:
-    """LINEAR keep-or-drop lookup against a :func:`hamming_index_write`
-    index — the :func:`hamming_groups` principle applied to serving:
-    per delta item, (id_new, min_hamming, n_matched_items) WITHOUT
-    materializing the pair expansion. A delta item whose code sits
-    near a 10 M-member black-frame group costs ONE row here; the same
-    item through :func:`hamming_index_probe` owes 10 M pair rows —
-    inherent to the pair contract, so use the probe only when the
-    pairs themselves are the product. min_hamming is over matched
-    DISTINCT index codes; n_matched_items sums the matched codes'
-    membership counts (a bounded rollup of the ``_ids`` table). Items
-    with no match are absent (semi shape — anti-join for the keeps).
-    An id carrying several codes reports its best (min) hamming and
-    the MAX of its per-code match counts — an overlap-safe lower
-    bound (summing could double-count an index code matched through
-    two of the id's codes).
-
-    ``exclude_ids`` (optional single-column frame): index MEMBERS to
-    ignore — both in the size rollup and in match existence (an index
-    code whose only members are excluded contributes nothing). The
-    streaming lookup mode passes the batch's own ids here so a
-    REPLAYED batch (whose first attempt already appended) does not
-    self-match at hamming 0 — the lookup-shaped analog of the pair
-    loop's id_old anti-join."""
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-
-    spark = new_codes.sparkSession
-    p, stamps = _hamming_stamps(spark, table)
-    _, is_arr = _code_ref(new_codes, code_col)
-    if bool(p["arr"]) != is_arr:
-        raise ValueError(
-            f"hamming_index_lookup: index {table!r} stores "
-            f"{'array' if p['arr'] else 'long'} codes but the delta "
-            f"carries {'array' if is_arr else 'long'} codes")
-    delta = persist_bounded(
-        new_codes.select(F.col(id_col).alias("id"),
-                         F.col(code_col).alias("code"))
-        .where(F.col("code").isNotNull())
-        .dropDuplicates(["id", "code"]),
-        "hamming_index_lookup.delta", StorageLevel.MEMORY_AND_DISK)
-    bands, ham = _hamming_band_exprs(
-        is_arr, "code", p["max_hamming"], p["bits"], p["word_bits"],
-        caller="hamming_index")
-    dc = delta.select("code").distinct()
-    dband = (dc.select("code", F.explode(F.array(*bands)).alias("bk"))
-             .select("bk.band", "bk.key",
-                     F.col("code").alias("__ca"),
-                     _code_ref(dc, "code")[0].alias("__ra")))
-    iband = (spark.table(f"{table}_bands")
-             .select("band", "key", F.col("code").alias("__cb"),
-                     F.col("ref").alias("__rb")))
-    cand = (dband.join(iband, ["band", "key"])
-            .select("__ra", "__rb", ham.alias("hamming"))
-            .where(F.col("hamming") <= p["max_hamming"])
-            .dropDuplicates(["__ra", "__rb"]))
-    ids_tbl = _live_filter(spark, table, stamps, "id")(
-        spark.table(f"{table}_ids"))
-    if exclude_ids is not None:
-        ex = exclude_ids.select(
-            F.col(exclude_ids.columns[0]).alias("id"))
-        ids_tbl = ids_tbl.join(ex, "id", "left_anti")
-    sizes = (ids_tbl
-             .groupBy(F.col("ref").alias("__rb"))
-             .agg(F.count(F.lit(1)).alias("__n")))
-    per_ref = (cand.join(sizes, "__rb")
-               .groupBy("__ra")
-               .agg(F.min("hamming").cast("int").alias("min_hamming"),
-                    F.sum("__n").alias("n_matched_items")))
-    da = delta.select(_code_ref(delta, "code")[0].alias("__ra"),
-                      F.col("id").alias("id_new"))
-    return (da.join(per_ref, "__ra")
-            .groupBy("id_new")
-            .agg(F.min("min_hamming").cast("int").alias("min_hamming"),
-                 F.max("n_matched_items").alias("n_matched_items")))
-
-
-def hamming_index_append(new_codes: DataFrame, table: str,
-                         id_col: str = "media_id",
-                         code_col: str = "code",
-                         gen: str = "") -> None:
-    """Append a delta shard into a :func:`hamming_index_write` index:
-    band rows append only for codes the index has NOT seen (anti-join
-    on the collision-free ref — the pre-collapse survives growth: a
-    code appearing in every future shard still costs one band row),
-    and membership rows anti-join on (ref, id) so a duplicate or
-    REPLAYED append outside the streaming loop's guard is a no-op —
-    without it, double-counted members silently inflate
-    :func:`hamming_index_lookup`'s n_matched_items (the probe collapses
-    dupes via its min-groupBy; the lookup's size rollup does not).
-    The existing-membership scan is pruned to the delta's refs first
-    (broadcast semi join — the delta is micro-batch-sized), mirroring
-    the cost of the band-side seen-refs scan. Parameters come from the
-    stamp; listings refresh so an open serving session sees growth.
-
-    ``gen`` (r12) tags the appended membership rows (see
-    :func:`hamming_index_retract`); the duplicate-membership
-    anti-join considers LIVE rows only, so a re-crawled shard's new
-    delivery re-admits an id whose only prior membership is
-    tombstoned (the dead row stays until compaction purges it).
-    Tagged appends into an unversioned pre-r12 layout fail by name."""
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-
-    spark = new_codes.sparkSession
-    p, stamps = _hamming_stamps(spark, table)
-    gen_cols = _gen_cols(spark, table, "hamming", gen,
-                         "hamming_index_append")
-    ref, is_arr = _code_ref(new_codes, code_col)
-    if bool(p["arr"]) != is_arr:
-        raise ValueError(
-            f"hamming_index_append: index {table!r} stores "
-            f"{'array' if p['arr'] else 'long'} codes but the delta "
-            f"carries {'array' if is_arr else 'long'} codes")
-    # the delta decode lineage feeds THREE consumers (band anti-join,
-    # membership-ref semi join, membership anti-join write) — persist
-    # once so the Arrow media decode runs once per append (r13, the
-    # hamming_index_write persist policy)
-    base = persist_bounded(
-        new_codes.select(F.col(id_col).alias("id"),
-                         F.col(code_col).alias("code"))
-        .where(F.col("code").isNotNull())
-        .dropDuplicates(["id", "code"]),
-        "hamming_index_append.base", StorageLevel.MEMORY_AND_DISK)
-    bands, _ = _hamming_band_exprs(
-        is_arr, "code", p["max_hamming"], p["bits"], p["word_bits"],
-        caller="hamming_index")
-    dc = base.select("code").distinct()
-    seen = spark.table(f"{table}_bands").select("ref").distinct()
-    fresh = (dc.select("code",
-                       _code_ref(dc, "code")[0].alias("ref"))
-             .join(seen, "ref", "left_anti"))
-    banded = (fresh.select("code", "ref",
-                           F.explode(F.array(*bands)).alias("bk"))
-              .select("bk.band", "bk.key", "code", "ref"))
-    # bands FIRST, membership LAST: "any batch id in _ids" then
-    # implies the append completed (the streaming loop's replay
-    # guard), and a crash between the two writes leaves only codes
-    # that the next attempt's anti-join sees as SEEN — no duplicate
-    # band rows, no lost bands (the neardup-append ordering)
-    (banded.write.mode("append").format("parquet")
-     .bucketBy(p["n_buckets"], "band", "key")
-     .saveAsTable(f"{table}_bands"))
-    delta_ids = base.select(_code_ref(base, "code")[0].alias("ref"), "id")
-    # LIVE rows only: a dead (tombstoned) membership must not block
-    # re-admission of the same (ref, id) under the new generation
-    existing = (_live_filter(spark, table, stamps, "id")(
-                    spark.table(f"{table}_ids"))
-                .join(delta_ids.select("ref").distinct(), "ref",
-                      "left_semi"))
-    (delta_ids.join(existing, ["ref", "id"], "left_anti")
-     .select("ref", "id", *gen_cols)
-     .write.mode("append").format("parquet")
-     .bucketBy(p["n_buckets"], "ref").saveAsTable(f"{table}_ids"))
-    spark.catalog.refreshTable(f"{table}_bands")
-    spark.catalog.refreshTable(f"{table}_ids")
-
-
-def hamming_index_retract(spark, table: str, shard: str,
-                          keep_gen: str = "") -> None:
-    """Retract a re-crawled media shard's DEAD memberships from a
-    persistent Hamming index (r12 — the T5 tombstone machinery shared
-    with the MinHash and IVF families, operators/_tombstones.py):
-    tombstone every generation of ``shard`` except ``keep_gen``.
-    Probes and lookups stop matching the dead members immediately
-    (broadcast anti-join of the bounded rule table at the membership
-    expansion); :func:`hamming_index_compact` purges them physically,
-    drops band rows whose code has no live member left, and clears
-    the rules."""
-    _retract(spark, table, "hamming", shard, keep_gen)
-
-
-def hamming_index_retract_docs(spark, table: str, ids) -> None:
-    """TAKEDOWN (r13 — doc-grained T5) for the perceptual index:
-    tombstone SPECIFIC media ids at the MEMBERSHIP layer (band rows
-    are distinct codes shared across items, so they stay — a code
-    whose only members are taken down simply yields no pair rows, and
-    :func:`hamming_index_compact` drops it physically). ``ids`` is
-    the bounded id list of the request; works on any layout including
-    unversioned pre-r12 indexes."""
-    _retract_docs(spark, table, "hamming", ids)
-
-
-def hamming_index_compact(spark, table: str, path: str) -> None:
-    """Compact an appended-to Hamming index back to one file per
-    bucket — stamps land on the staged tables BEFORE the crash-atomic
-    swap (atomic_swap_table's contract), same policy as the MinHash
-    and IVF compactions. Tombstoned memberships
-    (:func:`hamming_index_retract`) are removed PHYSICALLY, band rows
-    whose code has no live member left are dropped (a retracted-only
-    code stops generating candidates at all), and the rule table
-    clears AFTER both swaps (:func:`_index_table.install`)."""
-    from georiva_spark.sources.bucketing import write_bucketed
-
-    p, stamps = _hamming_stamps(spark, table)
-    _validate_single_writer(spark, table)
-    live_ids = _live_filter(spark, table, stamps, "id")(
-        spark.table(f"{table}_ids"))
-    bands_tbl = spark.table(f"{table}_bands")
-    if _has_rules(spark, table):
-        bands_tbl = bands_tbl.join(
-            live_ids.select("ref").distinct(), "ref", "left_semi")
-    write_bucketed(bands_tbl,
-                   f"{table}_bands_compact", ["band", "key"],
-                   p["n_buckets"], f"{path}/bands", sort=False,
-                   one_file_per_bucket=True)
-    write_bucketed(live_ids,
-                   f"{table}_ids_compact", "ref",
-                   p["n_buckets"], f"{path}/ids", sort=False,
-                   one_file_per_bucket=True)
-    _index_table.install(spark, table, f"{table}_bands",
-                         _index_table.params(stamps),
-                         (f"{table}_bands", f"{table}_ids"))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.3,
@@ -1163,10 +747,6 @@ def fuzzy_decontaminate(docs: DataFrame, benchmark: DataFrame,
     audit table (doc_id, max_est_jaccard, contaminated); at scale
     keep the sparse hit side and anti-join at the point of use.
     Both signature sets must use one hash family (``portable``)."""
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-
     sig_c = persist_bounded(
         minhash_signatures(docs, num_hashes=num_hashes, n=n,
                            text_col=text_col, portable=portable),
@@ -1247,16 +827,552 @@ def line_dedup(docs: DataFrame, *, delim: str = "\n", max_line_df: int = 1,
                     F.coalesce(F.col("kept_text"), F.lit(""))
                      .alias("kept_text")))
 
+# ---- persistent banded indexes: MinHash (text) and Hamming (media) ----
+#
+# Both families are one two-table shape: a bucketed band table
+# ``{table}_bands`` for candidate generation (it carries the stamps) and
+# a bucketed member table for verification and id expansion. One write,
+# append, compact and probe body serves both over a per-family spec.
+
 # generation + doc tombstones (r12, doc-grained r13): shared with the
-# Hamming and IVF families — operators/_tombstones.py is the one
-# implementation
+# IVF family — operators/_tombstones.py is the one implementation
 from georiva_spark.operators._tombstones import (  # noqa: E402
-    clear_rules as _clear_rules, gen_cols as _gen_cols,
+    FAMILIES as _ROWS, clear_rules as _clear_rules, gen_cols as _gen_cols,
     has_rules as _has_rules, live_filter as _live_filter,
     make_gen as index_gen, retract as _retract,
     retract_docs as _retract_docs,
     validate_single_writer as _validate_single_writer,
 )
+
+
+class _BandedFamily(NamedTuple):
+    """One banded-index family, as the core bodies see it. Its member
+    table suffix and tombstone id column come from
+    ``_tombstones.FAMILIES`` under the same key. The functions take
+    ``op``, the public operation (``write``, ``append``, ``probe``,
+    ``lookup``), which names persist slots and error messages."""
+    band_keys: tuple        # bucket columns of {table}_bands
+    sort_bands: bool        # sortBy the band keys inside each bucket
+    member_key: str         # bucket column of the member table
+    params: tuple           # integer stamps every index carries
+    read: Callable          # stamps -> the non-integer parameters
+    keys: Callable          # params -> band key expressions (+ verifier)
+    delta: Callable         # (frame, table, p, op) -> delta rows
+    bands: Callable         # (spark, table, delta, keys, gen_cols, op)
+    members: Callable       # (spark, table, delta, gen_cols, stamps)
+    prune: Callable         # (spark, table, live bands, live members)
+    verify: Callable        # (cand, delta, live members, p, keys, **opts)
+
+
+def _minhash_keys(p: dict):
+    return _band_buckets(p["num_hashes"], p["bands"])
+
+
+def _minhash_delta(frame: DataFrame, table: str, p: dict,
+                   op: str) -> DataFrame:
+    """The frame's signatures, computed ONCE for their two consumers
+    (r13): without the persist the pandas-UDF lineage runs twice — at
+    100 TB a second corpus scan + tokenize + hash pass; the cached
+    sketch is 64 longs/doc, ~3 orders smaller than the text."""
+    return persist_bounded(
+        minhash_signatures(frame, num_hashes=p["num_hashes"], n=p["n"],
+                           text_col=p["text_col"],
+                           portable=p["portable"]),
+        f"minhash_index_{op}.sig", StorageLevel.MEMORY_AND_DISK)
+
+
+def _minhash_bands(spark, table: str, delta: DataFrame, keys, gen_cols,
+                   op: str) -> DataFrame:
+    return (delta.select("doc_id",
+                         F.posexplode(keys).alias("band", "bucket"))
+            .select("band", "bucket", "doc_id", *gen_cols))
+
+
+def _minhash_verify(cand: DataFrame, delta: DataFrame, sigs: DataFrame,
+                    p: dict, keys, threshold: float) -> DataFrame:
+    """est_jaccard from the two signatures of each band-matched pair."""
+    pairs = (cand.where(F.col("new.doc_id") != F.col("old.doc_id"))
+             .select(F.col("new.doc_id").alias("doc_new"),
+                     F.col("old.doc_id").alias("doc_old"))
+             .dropDuplicates(["doc_new", "doc_old"]))
+    a = delta.select(F.col("doc_id").alias("doc_new"),
+                     F.col("signature").alias("sig_a"))
+    b = sigs.select(F.col("doc_id").alias("doc_old"),
+                    F.col("signature").alias("sig_b"))
+    est = (F.size(F.filter(F.zip_with("sig_a", "sig_b",
+                                      lambda x, y: (x == y).cast("int")),
+                           lambda v: v == 1)).cast("double")
+           / F.lit(float(p["num_hashes"])))
+    return (pairs.join(a, "doc_new").join(b, "doc_old")
+            .select("doc_new", "doc_old", est.alias("est_jaccard"))
+            .where(F.col("est_jaccard") >= threshold))
+
+
+def _code_ref(codes: DataFrame, code_col: str):
+    """Collision-free join key for a code column: a long code is its
+    own ref; an array code uses the full 128-bit md5 of its canonical
+    string (the hamming_groups surrogate policy — bucketable, unlike
+    the array itself)."""
+    from pyspark.sql.types import ArrayType
+
+    if isinstance(codes.schema[code_col].dataType, ArrayType):
+        return F.md5(F.col(code_col).cast("string").cast("binary")), True
+    return F.col(code_col), False
+
+
+def _hamming_keys(p: dict):
+    return _hamming_band_exprs(bool(p["arr"]), "code", p["max_hamming"],
+                               p["bits"], p["word_bits"],
+                               caller="hamming_index")
+
+
+def _hamming_delta(frame: DataFrame, table: str, p: dict,
+                   op: str) -> DataFrame:
+    """(id, code) rows without null codes or repeated pairs. They are
+    persisted: the Arrow decode of real media (image_dhash,
+    audio_fingerprint) feeds two or more plan branches and must run
+    once (r13). A long-code write is the exception, see
+    :func:`_hamming_bands`."""
+    is_arr = _code_ref(frame, "code")[1]
+    if bool(p["arr"]) != is_arr:
+        raise ValueError(
+            f"hamming_index_{op}: index {table!r} stores "
+            f"{'array' if p['arr'] else 'long'} codes but the delta "
+            f"carries {'array' if is_arr else 'long'} codes")
+    rows = (frame.where(F.col("code").isNotNull())
+            .dropDuplicates(["id", "code"]))
+    if op == "write" and not is_arr:
+        return rows
+    return persist_bounded(rows, f"hamming_index_{op}.delta",
+                           StorageLevel.MEMORY_AND_DISK)
+
+
+def _hamming_bands(spark, table: str, delta: DataFrame, keys, gen_cols,
+                   op: str) -> DataFrame:
+    """(band, key, code, ref) rows over DISTINCT codes — the
+    pre-collapse: N items sharing one code (silence clips, black
+    frames) cost ONE row per band, not N, so band rows carry no id or
+    generation. A long-code write reads its codes back from the
+    just-written ``_ids`` table, where ref IS the code (r14): one
+    decode pass without a persist, and a bucket-aligned distinct. An
+    append adds rows only for codes the index has not seen, so a code
+    in every future shard still costs one band row."""
+    if op == "write" and not _code_ref(delta, "code")[1]:
+        dc = spark.table(f"{table}_ids").select(F.col("ref").alias("code"))
+    else:
+        dc = delta.select("code")
+    dc = dc.distinct()
+    dc = dc.select("code", _code_ref(dc, "code")[0].alias("ref"))
+    if op == "append":
+        dc = dc.join(spark.table(f"{table}_bands").select("ref").distinct(),
+                     "ref", "left_anti")
+    return (dc.select("code", "ref", F.explode(F.array(*keys[0])).alias("bk"))
+            .select("bk.band", "bk.key", "code", "ref"))
+
+
+def _hamming_members(spark, table: str, delta: DataFrame, gen_cols,
+                     stamps: dict | None) -> DataFrame:
+    """(ref, id[, gen]) membership rows. An append (``stamps`` of the
+    grown index) skips the (ref, id) pairs the index holds LIVE: a
+    duplicate or replayed append outside the streaming loop's guard is
+    a no-op (double-counted members would inflate the lookup's
+    n_matched_items), while a tombstoned membership does not block its
+    re-admission under a new generation. The existing scan is pruned
+    to the delta's refs first (the delta is micro-batch-sized)."""
+    ids = delta.select(_code_ref(delta, "code")[0].alias("ref"), "id")
+    if stamps is not None:
+        held = (_live_filter(spark, table, stamps, "id")(
+                    spark.table(f"{table}_ids"))
+                .join(ids.select("ref").distinct(), "ref", "left_semi"))
+        ids = ids.join(held, ["ref", "id"], "left_anti")
+    return ids.select("ref", "id", *gen_cols)
+
+
+def _hamming_prune(spark, table: str, bands: DataFrame,
+                   ids: DataFrame) -> DataFrame:
+    """Band rows carry no id, so the live filter passes them: with
+    pending rules a compaction keeps only codes with a live member (a
+    retracted-only code stops generating candidates)."""
+    if not _has_rules(spark, table):
+        return bands
+    return bands.join(ids.select("ref").distinct(), "ref", "left_semi")
+
+
+def _hamming_candidates(cand: DataFrame, p: dict, keys) -> DataFrame:
+    """Band-matched (delta ref, index ref) DISTINCT code pairs within
+    max_hamming — the exact bit_count runs once per code pair."""
+    return (cand.select(F.col("new.ref").alias("__ra"),
+                        F.col("old.ref").alias("__rb"),
+                        F.col("new.code").alias("__ca"),
+                        F.col("old.code").alias("__cb"))
+            .select("__ra", "__rb", keys[1].alias("hamming"))
+            .where(F.col("hamming") <= p["max_hamming"])
+            .dropDuplicates(["__ra", "__rb"]))
+
+
+def _delta_refs(delta: DataFrame) -> DataFrame:
+    return delta.select(_code_ref(delta, "code")[0].alias("__ra"),
+                        F.col("id").alias("id_new"))
+
+
+def _hamming_verify(cand: DataFrame, delta: DataFrame, ids: DataFrame,
+                    p: dict, keys) -> DataFrame:
+    """The probe's pairs: candidate code pairs expanded to their
+    members, min hamming per (id_new, id_old), id_new ≠ id_old."""
+    ib = ids.select(F.col("ref").alias("__rb"), F.col("id").alias("id_old"))
+    return (_hamming_candidates(cand, p, keys)
+            .join(_delta_refs(delta), "__ra").join(ib, "__rb")
+            .where(F.col("id_new") != F.col("id_old"))
+            .groupBy("id_new", "id_old")
+            .agg(F.min("hamming").cast("int").alias("hamming")))
+
+
+def _hamming_lookup(cand: DataFrame, delta: DataFrame, ids: DataFrame,
+                    p: dict, keys,
+                    exclude_ids: DataFrame | None) -> DataFrame:
+    """The lookup's rows: per delta item its best hamming and the
+    matched codes' member counts (a bounded rollup of ``_ids``)."""
+    if exclude_ids is not None:
+        ids = ids.join(exclude_ids.select(
+            F.col(exclude_ids.columns[0]).alias("id")), "id", "left_anti")
+    sizes = (ids.groupBy(F.col("ref").alias("__rb"))
+             .agg(F.count(F.lit(1)).alias("__n")))
+    per_ref = (_hamming_candidates(cand, p, keys).join(sizes, "__rb")
+               .groupBy("__ra")
+               .agg(F.min("hamming").cast("int").alias("min_hamming"),
+                    F.sum("__n").alias("n_matched_items")))
+    return (_delta_refs(delta).join(per_ref, "__ra")
+            .groupBy("id_new")
+            .agg(F.min("min_hamming").cast("int").alias("min_hamming"),
+                 F.max("n_matched_items").alias("n_matched_items")))
+
+
+#: index family -> its spec (keys as in ``_tombstones.FAMILIES``)
+BANDED = {
+    "minhash": _BandedFamily(
+        band_keys=("band", "bucket"), sort_bands=True, member_key="doc_id",
+        params=("num_hashes", "bands", "n", "n_buckets"),
+        read=lambda stamps: {
+            "text_col": _index_table.get(stamps, "text_col", "text"),
+            "portable": _index_table.get(stamps, "portable") == "1"},
+        keys=_minhash_keys, delta=_minhash_delta, bands=_minhash_bands,
+        members=lambda spark, table, delta, gen_cols, stamps:
+            delta.select("doc_id", "signature", *gen_cols),
+        prune=lambda spark, table, bands, sigs: bands,
+        verify=_minhash_verify),
+    "hamming": _BandedFamily(
+        band_keys=("band", "key"), sort_bands=False, member_key="ref",
+        params=("max_hamming", "bits", "word_bits", "n_buckets", "arr"),
+        read=lambda stamps: {},
+        keys=_hamming_keys, delta=_hamming_delta, bands=_hamming_bands,
+        members=_hamming_members, prune=_hamming_prune,
+        verify=_hamming_verify),
+}
+
+
+def banded_stamps(family: str, spark, table: str) -> tuple[dict, dict]:
+    """ONE read of ``{table}_bands``' stamps → (the ``family``
+    parameters, the stamps for the tombstone tripwire). A missing or
+    unstamped ``_bands`` fails by name: it is not a managed index (a
+    rebuild that crashed between its writes leaves exactly that)."""
+    f = BANDED[family]
+    stamps = _index_table.props(spark, f"{table}_bands", missing_ok=True)
+    p = dict(zip(f.params, _index_table.require(stamps, table, family,
+                                                *f.params)))
+    return {**p, **f.read(stamps)}, stamps
+
+
+def banded_write(family: str, frame: DataFrame, table: str, path: str,
+                 p: dict, gen: str = "") -> None:
+    """Build a new ``family`` index under ``table``: drop the
+    stamped ``{table}_bands`` FIRST, write the member table, write the
+    band table, stamp ``p``, clear the old name's tombstone rules.
+
+    Drop-first makes a rebuild that crashes between its writes fail by
+    name at the next probe (no stamped ``_bands``) instead of pairing
+    new band rows with old members, and it uncaches plans that read
+    the old table (the r14 overwrite lesson). The rules clear last: a
+    crash before only hides rows."""
+    from georiva_spark.sources.bucketing import write_bucketed
+
+    f, member = BANDED[family], _ROWS[family][1]
+    spark = frame.sparkSession
+    keys = f.keys(p)        # a bad parameter fails before the drop
+    delta = f.delta(frame, table, p, "write")
+    spark.sql(f"DROP TABLE IF EXISTS {table}_bands")
+    gen_cols = [F.lit(gen).alias("gen")]
+    write_bucketed(f.members(spark, table, delta, gen_cols, None),
+                   f"{table}{member}", f.member_key, p["n_buckets"],
+                   f"{path}/{member[1:]}", sort=False)
+    write_bucketed(f.bands(spark, table, delta, keys, gen_cols, "write"),
+                   f"{table}_bands", list(f.band_keys), p["n_buckets"],
+                   f"{path}/bands", sort=f.sort_bands)
+    _index_table.stamp(spark, f"{table}_bands", p)
+    _clear_rules(spark, table, stamp_table=f"{table}_bands")
+
+
+def banded_append(family: str, frame: DataFrame, table: str,
+                  gen: str = "", stamped: tuple | None = None) -> None:
+    """Append ``frame`` into a ``family`` index in the SAME bucket
+    layout (Spark appends to a bucketed table when the spec matches),
+    so probes stay shuffle-free on the index side. Parameters come
+    from the stamps (``stamped``: a :func:`banded_stamps` read the
+    caller already holds). ``gen`` tags the appended rows' generation
+    (:func:`index_gen`); a tagged append into an unversioned pre-r12
+    layout fails by name."""
+    f, member = BANDED[family], _ROWS[family][1]
+    spark = frame.sparkSession
+    p, stamps = stamped or banded_stamps(family, spark, table)
+    gen_cols = _gen_cols(spark, table, family, gen,
+                         f"{family}_index_append")
+    keys = f.keys(p)
+    delta = f.delta(frame, table, p, "append")
+    # bands FIRST, members LAST: a member row then implies its append
+    # completed (the streaming replay guards read the member table),
+    # and a crash between the two writes leaves band rows without
+    # members, which no probe can verify and a replay's band rows
+    # duplicate harmlessly
+    for rows, name, cols, sort in (
+            (f.bands(spark, table, delta, keys, gen_cols, "append"),
+             "_bands", f.band_keys, f.sort_bands),
+            (f.members(spark, table, delta, gen_cols, stamps),
+             member, (f.member_key,), False)):
+        w = (rows.write.mode("append").format("parquet")
+             .bucketBy(p["n_buckets"], *cols))
+        (w.sortBy(*cols) if sort else w).saveAsTable(f"{table}{name}")
+    # a reader that scanned either table BEFORE this append holds a
+    # cached file listing that silently misses the new files (relation
+    # caches are per-session — a serving session refreshes separately,
+    # see streaming/_loop.py)
+    for name in ("_bands", member):
+        spark.catalog.refreshTable(f"{table}{name}")
+
+
+def banded_compact(family: str, spark, table: str, path: str) -> None:
+    """Compact an appended-to ``family`` index back to one file per
+    bucket under a fresh ``path`` — a pure layout rewrite (nothing is
+    recomputed) that removes tombstoned rows PHYSICALLY. The staged
+    tables end through :func:`_index_table.install`: stamp → swap →
+    clear the rules, so every intermediate state leaves a probeable,
+    stamped table under some name, and a crash between swap and clear
+    leaves rules that match nothing, never dead rows live again."""
+    from georiva_spark.sources.bucketing import write_bucketed
+
+    f, (_, member, id_col) = BANDED[family], _ROWS[family]
+    p, stamps = banded_stamps(family, spark, table)
+    _validate_single_writer(spark, table)
+    live = _live_filter(spark, table, stamps, id_col)
+    members = live(spark.table(f"{table}{member}"))
+    bands = f.prune(spark, table, live(spark.table(f"{table}_bands")),
+                    members)
+    write_bucketed(bands, f"{table}_bands_compact", list(f.band_keys),
+                   p["n_buckets"], f"{path}/bands", sort=f.sort_bands,
+                   one_file_per_bucket=True)
+    write_bucketed(members, f"{table}{member}_compact", f.member_key,
+                   p["n_buckets"], f"{path}/{member[1:]}", sort=False,
+                   one_file_per_bucket=True)
+    _index_table.install(spark, table, f"{table}_bands",
+                         _index_table.params(stamps),
+                         (f"{table}_bands", f"{table}{member}"))
+
+
+def banded_probe(family: str, frame: DataFrame, table: str,
+                 stamped: tuple | None = None, op: str = "probe",
+                 verify: Callable | None = None, **opts) -> DataFrame:
+    """Probe a ``family`` index with a delta: the delta's band rows
+    join the bucketed ``{table}_bands`` on the band keys (the index
+    side scans SHUFFLE-FREE), the family's ``verify`` (or the given
+    one, with ``opts``) checks the candidates against the member
+    table, and the live filter drops tombstoned rows from both tables
+    (a frame without the gen or id column passes it). Nothing about
+    the indexed corpus is recomputed, collected or broadcast."""
+    f, (_, member, id_col) = BANDED[family], _ROWS[family]
+    spark = frame.sparkSession
+    p, stamps = stamped or banded_stamps(family, spark, table)
+    keys = f.keys(p)
+    delta = f.delta(frame, table, p, op)
+    live = _live_filter(spark, table, stamps, id_col)
+    cand = (f.bands(spark, table, delta, keys, [], op).alias("new")
+            .join(live(spark.table(f"{table}_bands")).alias("old"),
+                  list(f.band_keys)))
+    return (verify or f.verify)(
+        cand, delta, live(spark.table(f"{table}{member}")), p, keys,
+        **opts)
+
+
+def _hamming_frame(codes: DataFrame, id_col: str,
+                   code_col: str) -> DataFrame:
+    return codes.select(F.col(id_col).alias("id"),
+                        F.col(code_col).alias("code"))
+
+
+def hamming_index_write(codes: DataFrame, table: str, path: str,
+                        id_col: str = "media_id",
+                        code_col: str = "code",
+                        max_hamming: int = 3, bits: int = 64,
+                        word_bits: int = 56,
+                        n_buckets: int = 64, gen: str = "") -> None:
+    """Persistent Hamming near-dup index — the PERCEPTUAL member of
+    the index triad (MinHash for text, IVF for embeddings): probe
+    yesterday's media corpus with today's shard without recomputing
+    or re-shuffling anything about it. Two bucketed tables:
+
+    - ``{table}_bands`` (band, key, code, ref) bucketed by
+      (band, key) — candidate generation over DISTINCT codes only
+      (the pre-collapse: N silence clips sharing one code cost ONE
+      row per band, not N);
+    - ``{table}_ids`` (ref, id, gen) bucketed by ref — membership,
+      where ref is the code itself (long codes) or its 128-bit md5
+      (array codes — bucketable and collision-free).
+
+    Band keys come from :func:`_hamming_band_exprs` — the SAME
+    definition the in-memory miner uses, so index and probe cannot
+    drift. Banding parameters are stamped as TBLPROPERTIES and read
+    back at probe/append time (no caller params to mismatch). The
+    write is :func:`banded_write` (drop the stamped table first).
+
+    ``gen`` (r12) tags the MEMBERSHIP rows' generation (see
+    :func:`index_gen`) so a re-crawled media shard's dead members can
+    be RETRACTED (:func:`hamming_index_retract`). Band rows stay
+    generation-free BY DESIGN: they are distinct CODES shared across
+    shards (the pre-collapse), so retraction works at the membership
+    layer — a dead member vanishes from probe pairs and lookup
+    counts immediately, and compaction drops band rows whose code has
+    no live member left."""
+    banded_write("hamming", _hamming_frame(codes, id_col, code_col),
+                 table, path, {
+                     "max_hamming": max_hamming, "bits": bits,
+                     "word_bits": word_bits, "n_buckets": n_buckets,
+                     "arr": int(_code_ref(codes, code_col)[1])}, gen)
+
+
+def hamming_index_params(spark, table: str) -> dict:
+    """Read the banding parameters :func:`hamming_index_write`
+    stamped (raises by name if absent — an unstamped table is not a
+    managed Hamming index)."""
+    return banded_stamps("hamming", spark, table)[0]
+
+
+def hamming_index_probe(new_codes: DataFrame, table: str,
+                        id_col: str = "media_id",
+                        code_col: str = "code") -> DataFrame:
+    """Probe a :func:`hamming_index_write` index with a delta shard →
+    (id_new, id_old, hamming ≤ max_hamming) pairs, min-hamming per id
+    pair, id_new ≠ id_old. Banding parameters come from the stamp;
+    the delta's band keys join the bucketed index SHUFFLE-FREE on the
+    index side; verification runs the exact bit_count on the
+    band-matched DISTINCT code pairs only; members expand through the
+    bucketed ``_ids`` table, where retracted generations and
+    taken-down ids vanish (a band-matched code whose only members are
+    dead yields no pair rows). Nothing about the indexed corpus is
+    recomputed, collected, or broadcast.
+
+    QUADRATIC-OUTPUT HAZARD (the hamming_pairs contract): a delta
+    code near an M-member identical-code group owes M pair rows —
+    the 1M-code smoke measures 34.8 s for a hot-group delta that
+    :func:`hamming_index_lookup` answers in 3.7 s with one row per
+    delta item. Use the probe only when the pairs themselves are the
+    product; keep-or-drop decisions belong to the lookup."""
+    return banded_probe("hamming", _hamming_frame(new_codes, id_col,
+                                                  code_col), table)
+
+
+def hamming_index_lookup(new_codes: DataFrame, table: str,
+                         id_col: str = "media_id",
+                         code_col: str = "code",
+                         exclude_ids: DataFrame | None = None
+                         ) -> DataFrame:
+    """LINEAR keep-or-drop lookup against a :func:`hamming_index_write`
+    index — the :func:`hamming_groups` principle applied to serving:
+    per delta item, (id_new, min_hamming, n_matched_items) WITHOUT
+    materializing the pair expansion. A delta item whose code sits
+    near a 10 M-member black-frame group costs ONE row here; the same
+    item through :func:`hamming_index_probe` owes 10 M pair rows —
+    inherent to the pair contract, so use the probe only when the
+    pairs themselves are the product. min_hamming is over matched
+    DISTINCT index codes; n_matched_items sums the matched codes'
+    membership counts (a bounded rollup of the ``_ids`` table). Items
+    with no match are absent (semi shape — anti-join for the keeps).
+    An id carrying several codes reports its best (min) hamming and
+    the MAX of its per-code match counts — an overlap-safe lower
+    bound (summing could double-count an index code matched through
+    two of the id's codes). The delta and the candidate step are the
+    probe's.
+
+    ``exclude_ids`` (optional single-column frame): index MEMBERS to
+    ignore — both in the size rollup and in match existence (an index
+    code whose only members are excluded contributes nothing). The
+    streaming lookup mode passes the batch's own ids here so a
+    REPLAYED batch (whose first attempt already appended) does not
+    self-match at hamming 0 — the lookup-shaped analog of the pair
+    loop's id_old anti-join."""
+    return banded_probe("hamming", _hamming_frame(new_codes, id_col,
+                                                  code_col), table,
+                        op="lookup", verify=_hamming_lookup,
+                        exclude_ids=exclude_ids)
+
+
+def hamming_index_append(new_codes: DataFrame, table: str,
+                         id_col: str = "media_id",
+                         code_col: str = "code",
+                         gen: str = "") -> None:
+    """Append a delta shard into a :func:`hamming_index_write` index:
+    band rows append only for codes the index has NOT seen (anti-join
+    on the collision-free ref — the pre-collapse survives growth: a
+    code appearing in every future shard still costs one band row),
+    and membership rows anti-join on (ref, id) so a duplicate or
+    REPLAYED append outside the streaming loop's guard is a no-op —
+    without it, double-counted members silently inflate
+    :func:`hamming_index_lookup`'s n_matched_items (the probe collapses
+    dupes via its min-groupBy; the lookup's size rollup does not).
+    The existing-membership scan is pruned to the delta's refs first
+    (broadcast semi join — the delta is micro-batch-sized), mirroring
+    the cost of the band-side seen-refs scan. Parameters come from the
+    stamp; listings refresh so an open serving session sees growth.
+
+    ``gen`` (r12) tags the appended membership rows (see
+    :func:`hamming_index_retract`); the duplicate-membership
+    anti-join considers LIVE rows only, so a re-crawled shard's new
+    delivery re-admits an id whose only prior membership is
+    tombstoned (the dead row stays until compaction purges it).
+    Tagged appends into an unversioned pre-r12 layout fail by name."""
+    banded_append("hamming", _hamming_frame(new_codes, id_col, code_col),
+                  table, gen)
+
+
+def hamming_index_retract(spark, table: str, shard: str,
+                          keep_gen: str = "") -> None:
+    """Retract a re-crawled media shard's DEAD memberships from a
+    persistent Hamming index (r12 — the T5 tombstone machinery shared
+    with the MinHash and IVF families, operators/_tombstones.py):
+    tombstone every generation of ``shard`` except ``keep_gen``.
+    Probes and lookups stop matching the dead members immediately
+    (broadcast anti-join of the bounded rule table at the membership
+    expansion); :func:`hamming_index_compact` purges them physically,
+    drops band rows whose code has no live member left, and clears
+    the rules."""
+    _retract(spark, table, "hamming", shard, keep_gen)
+
+
+def hamming_index_retract_docs(spark, table: str, ids) -> None:
+    """TAKEDOWN (r13 — doc-grained T5) for the perceptual index:
+    tombstone SPECIFIC media ids at the MEMBERSHIP layer (band rows
+    are distinct codes shared across items, so they stay — a code
+    whose only members are taken down simply yields no pair rows, and
+    :func:`hamming_index_compact` drops it physically). ``ids`` is
+    the bounded id list of the request; works on any layout including
+    unversioned pre-r12 indexes."""
+    _retract_docs(spark, table, "hamming", ids)
+
+
+def hamming_index_compact(spark, table: str, path: str) -> None:
+    """Compact an appended-to Hamming index back to one file per
+    bucket (:func:`banded_compact`). Tombstoned memberships
+    (:func:`hamming_index_retract`) are removed PHYSICALLY, band rows
+    whose code has no live member left are dropped (a retracted-only
+    code stops generating candidates at all), and the rule table
+    clears AFTER both swaps (:func:`_index_table.install`)."""
+    banded_compact("hamming", spark, table, path)
 
 
 def minhash_index_write(docs: DataFrame, table: str, path: str,
@@ -1277,118 +1393,41 @@ def minhash_index_write(docs: DataFrame, table: str, path: str,
 
     At probe time Spark shuffles only the (tiny) delta into the
     index's bucket layout; the index side scans shuffle-free
-    (plan-asserted in tests/test_dedup_index.py).
+    (plan-asserted in tests/test_dedup_index.py). The signature
+    parameters are stamped on ``{table}_bands``; probes and appends
+    read them from there. The write is :func:`banded_write` (drop the
+    stamped table first).
 
     ``gen`` (r12) stamps every row with a generation tag (see
     :func:`index_gen`) so a re-crawled shard's dead signatures can be
     RETRACTED (:func:`minhash_index_retract`) — T5 staleness reaching
     the index, the r11 verdict's top item. The default ''
     (unversioned base) is never retractable."""
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-    from georiva_spark.sources.bucketing import write_bucketed
-
-    # compute the signature sketch ONCE for both table writes (r13
-    # optimization): without the persist the pandas-UDF lineage runs
-    # twice — at 100 TB that is a second full corpus scan + tokenize +
-    # hash pass; the cached sketch is 64 longs/doc, ~3 orders smaller
-    # than the corpus text (the minhash_lsh_pairs persist policy)
-    sig = persist_bounded(
-        minhash_signatures(docs, num_hashes=num_hashes, n=n,
-                           text_col=text_col, portable=portable),
-        "minhash_index_write.sig", StorageLevel.MEMORY_AND_DISK)
-    bucket_arr = _band_buckets(num_hashes, bands)
-    banded = sig.select(
-        "doc_id", F.posexplode(bucket_arr).alias("band", "bucket"))
-    write_bucketed(banded.select("band", "bucket", "doc_id",
-                                 F.lit(gen).alias("gen")),
-                   f"{table}_bands", ["band", "bucket"], n_buckets,
-                   f"{path}/bands")
-    write_bucketed(sig.withColumn("gen", F.lit(gen)),
-                   f"{table}_sigs", "doc_id", n_buckets,
-                   f"{path}/sigs", sort=False)
-    # stamp the signature parameters on the index so a probe with
-    # mismatched params fails loudly instead of silently generating
-    # wrong bucket keys / garbage est_jaccard
-    _index_table.stamp(docs.sparkSession, f"{table}_bands", {
+    banded_write("minhash", docs, table, path, {
         "num_hashes": num_hashes, "bands": bands, "n": n,
         "n_buckets": n_buckets, "text_col": text_col,
-        "portable": int(portable)})
-    # the rebuilt index starts with no rules: the old name's tombstones
-    # would hide its rows (cleared last — a crash before only hides)
-    _clear_rules(docs.sparkSession, table, stamp_table=f"{table}_bands")
-
-
-def _minhash_stamps(spark, table: str) -> tuple[dict, dict]:
-    """ONE read of ``{table}_bands``' stamps → (signature parameters,
-    the stamps for the tombstone tripwire)."""
-    stamps = _index_table.props(spark, f"{table}_bands")
-    names = ("num_hashes", "bands", "n", "n_buckets")
-    out = dict(zip(names, _index_table.require(
-        stamps, table, "minhash", *names)))
-    out["text_col"] = _index_table.get(stamps, "text_col", "text")
-    out["portable"] = _index_table.get(stamps, "portable") == "1"
-    return out, stamps
+        "portable": int(portable)}, gen)
 
 
 def minhash_index_params(spark, table: str) -> dict[str, int]:
     """Read the signature parameters minhash_index_write stamped on
     ``{table}_bands`` (raises if absent — an unstamped table is not a
     managed index)."""
-    return _minhash_stamps(spark, table)[0]
+    return banded_stamps("minhash", spark, table)[0]
 
 
 def minhash_index_append(docs: DataFrame, table: str,
                          gen: str = "") -> None:
     """Append a delta shard to a :func:`minhash_index_write` index —
     the growth half of the incremental dedup loop: signatures computed
-    for the DELTA only, appended into the SAME bucket layout (Spark
-    appends to bucketed tables when the bucketBy spec matches), so
+    for the DELTA only, appended into the SAME bucket layout, so
     future probes stay shuffle-free on the index side. Parameters come
     from the stamp the write left on the table. ``gen`` tags the
     appended rows' generation (:func:`index_gen`) so
     :func:`minhash_index_retract` can later tombstone them (T5);
     appending a tagged generation into a pre-r12 unversioned layout
     fails by name (rebuild the index to make it retractable)."""
-    _minhash_append(docs, table,
-                    minhash_index_params(docs.sparkSession, table), gen)
-
-
-def _minhash_append(docs: DataFrame, table: str, p: dict,
-                    gen: str) -> None:
-    """:func:`minhash_index_append` with the signature parameters
-    ``p`` already read from the stamps."""
-    spark = docs.sparkSession
-    gen_cols = _gen_cols(spark, table, "minhash", gen,
-                         "minhash_index_append")
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-
-    # one signature evaluation for both appends (the index-write
-    # persist policy; the delta is micro-batch-bounded)
-    sig = persist_bounded(
-        minhash_signatures(docs, num_hashes=p["num_hashes"], n=p["n"],
-                           text_col=p["text_col"],
-                           portable=p["portable"]),
-        "minhash_index_append.sig", StorageLevel.MEMORY_AND_DISK)
-    bucket_arr = _band_buckets(p["num_hashes"], p["bands"])
-    banded = sig.select(
-        "doc_id", F.posexplode(bucket_arr).alias("band", "bucket"))
-    (banded.select("band", "bucket", "doc_id", *gen_cols)
-     .write.mode("append").format("parquet")
-     .bucketBy(p["n_buckets"], "band", "bucket")
-     .sortBy("band", "bucket").saveAsTable(f"{table}_bands"))
-    (sig.select("doc_id", "signature", *gen_cols)
-     .write.mode("append").format("parquet")
-     .bucketBy(p["n_buckets"], "doc_id").saveAsTable(f"{table}_sigs"))
-    # a reader that scanned either table BEFORE this append holds a
-    # cached file listing that silently misses the new files (the
-    # probe-then-grow loops; relation caches are per-session — the
-    # serving session must refresh separately, see streaming/corpus.py)
-    spark.catalog.refreshTable(f"{table}_bands")
-    spark.catalog.refreshTable(f"{table}_sigs")
+    banded_append("minhash", docs, table, gen)
 
 
 def minhash_index_retract(spark, table: str, shard: str,
@@ -1465,104 +1504,26 @@ def minhash_index_compact(spark, table: str, path: str) -> None:
     every compaction): a crash between swap and clear leaves rules
     that match nothing (idempotently re-appliable), never a window
     where dead rows are live again."""
-    from georiva_spark.sources.bucketing import write_bucketed
-
-    p, stamps = _minhash_stamps(spark, table)
-    _validate_single_writer(spark, table)
-    live = _live_filter(spark, table, stamps, "doc_id")
-    write_bucketed(live(spark.table(f"{table}_bands")),
-                   f"{table}_bands_compact", ["band", "bucket"],
-                   p["n_buckets"], f"{path}/bands",
-                   one_file_per_bucket=True)
-    write_bucketed(live(spark.table(f"{table}_sigs")),
-                   f"{table}_sigs_compact", "doc_id",
-                   p["n_buckets"], f"{path}/sigs", sort=False,
-                   one_file_per_bucket=True)
-    _index_table.install(spark, table, f"{table}_bands",
-                         _index_table.params(stamps),
-                         (f"{table}_bands", f"{table}_sigs"))
+    banded_compact("minhash", spark, table, path)
 
 
 def minhash_index_probe(new_docs: DataFrame, table: str,
-                        threshold: float = 0.5, num_hashes: int = 64,
-                        bands: int = 16, n: int = 3,
-                        text_col: str = "text") -> DataFrame:
+                        threshold: float = 0.5) -> DataFrame:
     """Probe a :func:`minhash_index_write` index with a new shard →
     (doc_new, doc_old, est_jaccard) pairs at est ≥ threshold. The
     incremental half of a growing-corpus dedup: signatures are
     computed for the DELTA only; candidate generation joins the
     delta's band keys against the bucketed index (index side
     shuffle-free); verification joins candidates back to the two
-    signature sources by id. Nothing about the existing corpus is
-    recomputed, collected, or broadcast.
+    signature sources by id; retracted generations and taken-down
+    doc_ids are filtered out of BOTH index tables. Nothing about the
+    existing corpus is recomputed, collected, or broadcast.
 
-    The probe's (num_hashes, bands, n) are validated against the
-    parameters minhash_index_write stamped on the index table — a
-    mismatch raises instead of silently yielding wrong bucket keys
-    (tables without the stamp, e.g. temp-view controls, skip the
-    check)."""
-    return _minhash_probe(
-        new_docs, table,
-        _index_table.props(new_docs.sparkSession, f"{table}_bands",
-                           missing_ok=True),
-        threshold, num_hashes, bands, n, text_col)
-
-
-def _minhash_probe(new_docs: DataFrame, table: str, stamps: dict,
-                   threshold: float, num_hashes: int, bands: int, n: int,
-                   text_col: str) -> DataFrame:
-    """:func:`minhash_index_probe` with ``{table}_bands``' stamps
-    already read."""
-    from pyspark import StorageLevel
-
-    spark = new_docs.sparkSession
-    stored = {name: _index_table.get(stamps, name)
-              for name in ("num_hashes", "bands", "n")}
-    if any(v is not None for v in stored.values()):
-        asked = {"num_hashes": num_hashes, "bands": bands, "n": n}
-        bad = {name: (stored[name], asked[name])
-               for name in asked
-               if stored[name] is not None
-               and int(stored[name]) != asked[name]}
-        if bad:
-            raise ValueError(
-                f"minhash_index_probe params do not match the index "
-                f"{table!r} (stored, asked): {bad}")
-    # the stamp's hash family is authoritative: a portable index must
-    # be probed with portable delta signatures or every est_jaccard
-    # is garbage (and vice versa)
-    portable = _index_table.get(stamps, "portable") == "1"
-    from georiva_spark.operators._retention import persist_bounded
-    sig_new = persist_bounded(
-        minhash_signatures(new_docs, num_hashes=num_hashes, n=n,
-                           text_col=text_col, portable=portable),
-        "minhash_index_probe.sig_new", StorageLevel.MEMORY_AND_DISK)
-    bucket_arr = _band_buckets(num_hashes, bands)
-    banded_new = sig_new.select(
-        F.col("doc_id").alias("doc_new"),
-        F.posexplode(bucket_arr).alias("band", "bucket"))
-    # retracted generations (re-crawled shards, T5) and taken-down
-    # doc_ids (r13) are filtered out of BOTH index sides via the
-    # broadcast-tiny tombstone rules — a probe never matches content
-    # that no longer exists
-    live = _live_filter(spark, table, stamps, "doc_id")
-    idx = live(spark.table(f"{table}_bands"))
-    cand = (banded_new.join(idx, ["band", "bucket"])
-            .where(F.col("doc_new") != F.col("doc_id"))
-            .select("doc_new", F.col("doc_id").alias("doc_old"))
-            .dropDuplicates(["doc_new", "doc_old"]))
-    a = sig_new.select(F.col("doc_id").alias("doc_new"),
-                       F.col("signature").alias("sig_a"))
-    b = live(spark.table(f"{table}_sigs")).select(
-        F.col("doc_id").alias("doc_old"),
-        F.col("signature").alias("sig_b"))
-    est = (F.size(F.filter(F.zip_with("sig_a", "sig_b",
-                                      lambda x, y: (x == y).cast("int")),
-                           lambda v: v == 1)).cast("double")
-           / F.lit(float(num_hashes)))
-    return (cand.join(a, "doc_new").join(b, "doc_old")
-            .select("doc_new", "doc_old", est.alias("est_jaccard"))
-            .where(F.col("est_jaccard") >= threshold))
+    The signature parameters (num_hashes, bands, n, text_col and the
+    portable hash family) are read from the stamps the write left on
+    ``{table}_bands`` — a probe cannot hash with other parameters, and
+    an unstamped ``_bands`` fails by name."""
+    return banded_probe("minhash", new_docs, table, threshold=threshold)
 
 
 def minhash_recall_estimate(docs: DataFrame, threshold: float = 0.5,
@@ -1608,10 +1569,6 @@ def minhash_recall_estimate(docs: DataFrame, threshold: float = 0.5,
     precision); recall/precision are NULL when their denominator is
     empty (no true / no flagged pairs in the sample — raise
     sample_ppm)."""
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-
     if not 0 < sample_ppm <= 1_000_000:
         raise ValueError(
             f"minhash_recall_estimate: sample_ppm={sample_ppm} must "
@@ -1816,10 +1773,6 @@ def hamming_recall_estimate(codes: DataFrame, id_col: str = "media_id",
     :func:`hamming_pairs` path on the same sample. → ONE row:
     (max_hamming, bits, n_items, true_pairs, caught_pairs, recall,
     flagged_pairs, precision)."""
-    from pyspark import StorageLevel
-
-    from georiva_spark.operators._retention import persist_bounded
-
     if not 0 < sample_ppm <= 1_000_000:
         raise ValueError(
             f"hamming_recall_estimate: sample_ppm={sample_ppm} must "

@@ -60,7 +60,7 @@ def start_corpus_stream(spark, warc_dir: str, table: str, out_dir: str,
     every N appends the MinHash index compacts back to one file per
     bucket (fresh staging dirs under ``compact_dir``). Returns the
     StreamingQuery."""
-    params = minhash_index_params(spark, table)     # fail fast
+    minhash_index_params(spark, table)              # fail fast
     # fail fast on id dtype too: doc ids are md5 HEX STRINGS (module
     # doc); against an old long-keyed index (the pre-r8 xxhash64
     # derivation) the replay-guard semi-join would lean on implicit
@@ -102,10 +102,7 @@ def start_corpus_stream(spark, warc_dir: str, table: str, out_dir: str,
 
     def pairs(passed: DataFrame) -> DataFrame:
         ids = passed.select("doc_id")
-        p = minhash_index_probe(
-            passed, table, threshold=threshold,
-            num_hashes=params["num_hashes"], bands=params["bands"],
-            n=params["n"])
+        p = minhash_index_probe(passed, table, threshold=threshold)
         return p.join(ids.withColumnRenamed("doc_id", "doc_old"),
                       "doc_old", "left_anti")
 

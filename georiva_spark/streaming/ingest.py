@@ -398,12 +398,12 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
         from georiva_spark.operators._tombstones import (GEN_SEP,
                                                          live_filter)
         from georiva_spark.operators.dedup import (
-            _minhash_append, _minhash_probe, _minhash_stamps, index_gen,
+            banded_append, banded_probe, banded_stamps, index_gen,
             minhash_index_has_gen, minhash_index_retract)
         gen = index_gen(shard, digest)
         # one stamp read per shard: the probe and append parameters and
         # the tombstone tripwire's evidence that rules exist
-        p, stamps = _minhash_stamps(spark, neardup_table)
+        stamped = banded_stamps("minhash", spark, neardup_table)
         # the guard reads on the SERVING session (refreshed after
         # every append below — the streaming/_loop.py contract);
         # appends write bands first, sigs last, so gen-in-sigs
@@ -426,7 +426,7 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
             # older generation is already taken down — rows that no
             # probe sees either way, so skipping their retract hides
             # nothing that was visible.
-            sigs = live_filter(spark, neardup_table, stamps, "doc_id")(
+            sigs = live_filter(spark, neardup_table, stamped[1], "doc_id")(
                 spark.table(f"{neardup_table}_sigs"))
             stale = (sigs.where(
                 (F.substring_index("gen", GEN_SEP, 1) == shard)
@@ -439,9 +439,8 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
                                       keep_gen=gen)
                 spark.catalog.refreshTable(f"{neardup_table}_dead")
         ids = docs.select("doc_id")
-        pairs = _minhash_probe(
-            docs, neardup_table, stamps, neardup_threshold,
-            p["num_hashes"], p["bands"], p["n"], "text")
+        pairs = banded_probe("minhash", docs, neardup_table, stamped,
+                             threshold=neardup_threshold)
         # a replay whose first attempt already appended would pair
         # this shard's docs against themselves — anti-join own ids
         (pairs.join(ids.withColumnRenamed("doc_id", "doc_old"),
@@ -449,7 +448,7 @@ def start_corpus_ingest(spark: SparkSession, landing_dir: str,
          .write.mode("overwrite")
          .parquet(f"{neardup_out_dir}/shard={shard}"))
         if not applied:
-            _minhash_append(docs, neardup_table, p, gen)
+            banded_append("minhash", docs, neardup_table, gen, stamped)
             for t in (f"{neardup_table}_bands",
                       f"{neardup_table}_sigs"):
                 spark.catalog.refreshTable(t)

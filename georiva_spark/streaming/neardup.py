@@ -65,7 +65,7 @@ def start_neardup_stream(docs_stream: DataFrame, table: str,
     permanent blocklist — held doc_ids neither probe nor append; see
     plans/takedown.standing_hold). Returns the StreamingQuery."""
     spark = docs_stream.sparkSession
-    params = minhash_index_params(spark, table)   # fail fast on launch
+    minhash_index_params(spark, table)            # fail fast on launch
     compact = _family_compact(
         compact_every, compact_dir, "start_neardup_stream",
         lambda path: minhash_index_compact(spark, table, path))
@@ -75,10 +75,7 @@ def start_neardup_stream(docs_stream: DataFrame, table: str,
         # otherwise pair its docs against THEMSELVES in the index —
         # drop pairs whose doc_old is in this batch
         ids = work.select("doc_id")
-        p = minhash_index_probe(
-            work, table, threshold=threshold,
-            num_hashes=params["num_hashes"], bands=params["bands"],
-            n=params["n"])
+        p = minhash_index_probe(work, table, threshold=threshold)
         return p.join(ids.withColumnRenamed("doc_id", "doc_old"),
                       "doc_old", "left_anti")
 

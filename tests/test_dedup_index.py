@@ -7,7 +7,7 @@ probe against an unbucketed copy)."""
 import pytest
 from pyspark.sql import functions as F
 
-from georiva_spark.operators import dedup
+from georiva_spark.operators import _index_table, dedup
 
 
 def _docs(spark, rows):
@@ -58,33 +58,48 @@ def test_index_side_joins_without_reshuffle(spark, mh_index, tmp_path):
     try:
         bucketed = (dedup.minhash_index_probe(delta, mh_index)
                     ._jdf.queryExecution().executedPlan().toString())
-        # unbucketed control: same data via plain parquet round-trip
-        spark.table("t_mhidx_bands").write.mode("overwrite") \
-             .parquet(str(tmp_path / "flat_bands"))
-        spark.table("t_mhidx_sigs").write.mode("overwrite") \
-             .parquet(str(tmp_path / "flat_sigs"))
-        spark.read.parquet(str(tmp_path / "flat_bands")) \
-             .createOrReplaceTempView("t_flat_bands")
-        spark.read.parquet(str(tmp_path / "flat_sigs")) \
-             .createOrReplaceTempView("t_flat_sigs")
+        # unbucketed control: same data and stamps as UNBUCKETED
+        # managed tables (the probe reads its parameters from the
+        # stamps on {table}_bands)
+        for s in ("bands", "sigs"):
+            spark.sql(f"DROP TABLE IF EXISTS t_flat_{s}")
+            spark.table(f"t_mhidx_{s}").write.saveAsTable(f"t_flat_{s}")
+        _index_table.stamp(spark, "t_flat_bands", _index_table.params(
+            _index_table.props(spark, "t_mhidx_bands")))
         flat = (dedup.minhash_index_probe(delta, "t_flat")
                 ._jdf.queryExecution().executedPlan().toString())
         assert (bucketed.count("Exchange hashpartitioning")
                 < flat.count("Exchange hashpartitioning"))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+        for s in ("bands", "sigs"):
+            spark.sql(f"DROP TABLE IF EXISTS t_flat_{s}")
 
 
-def test_probe_param_mismatch_raises(spark, mh_index):
-    """The index stamps its signature parameters at write time; a
-    probe with different params must fail loudly, not return wrong
-    bucket keys."""
-    delta = _docs(spark, [(100, BASE)])
-    with pytest.raises(ValueError, match="do not match the index"):
-        dedup.minhash_index_probe(delta, mh_index, bands=8)
-    with pytest.raises(ValueError, match="num_hashes"):
-        dedup.minhash_index_probe(delta, mh_index, num_hashes=32,
-                                  bands=16)
+def test_probe_reads_params_from_stamps(spark, tmp_path):
+    """The probe takes no signature parameters: it reads num_hashes,
+    bands, n and text_col from the stamps the write left on
+    ``{table}_bands``, so it cannot hash with other ones. A ``_bands``
+    without them is not a managed index and fails by name."""
+    t = "t_mhstamped"
+    rows = [(1, BASE), (2, "completely different content about spark")]
+    try:
+        dedup.minhash_index_write(
+            spark.createDataFrame(rows, "doc_id long, body string"), t,
+            str(tmp_path / "i"), n_buckets=4, num_hashes=32, bands=8,
+            n=2, text_col="body")
+        delta = spark.createDataFrame([(100, BASE)],
+                                      "doc_id long, body string")
+        assert {(r.doc_new, r.doc_old): r.est_jaccard
+                for r in dedup.minhash_index_probe(
+                    delta, t, threshold=0.4).collect()} == {(100, 1): 1.0}
+        _index_table.unstamp(spark, f"{t}_bands", ["num_hashes"])
+        with pytest.raises(ValueError,
+                           match="not a stamped minhash index"):
+            dedup.minhash_index_probe(delta, t, threshold=0.4)
+    finally:
+        for s in ("bands", "sigs"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}_{s}")
 
 
 def test_streaming_neardup_probe_grows_index(spark, mh_index, tmp_path):
@@ -522,10 +537,6 @@ def test_index_compact_restores_one_file_per_bucket(spark, mh_index,
     assert after == before                          # pure layout rewrite
     p = dedup.minhash_index_params(spark, mh_index)
     assert p["num_hashes"] == 64 and p["n_buckets"] == 8
-    # the stamp still guards mismatched probes
-    import pytest
-    with pytest.raises(ValueError, match="do not match"):
-        dedup.minhash_index_probe(probe_docs, mh_index, bands=8)
 
 
 def test_hamming_index_write_probe_append_compact(spark, tmp_path):
@@ -867,16 +878,22 @@ def _recover_swap(spark, table):
 
 def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
                                                   monkeypatch):
-    """One probe (or ``ann_tune``) call reads each table's stamps
-    (SHOW TBLPROPERTIES — a catalog round trip) at most once: the
-    read is passed on to the parameter checks, the quantizer-version
-    check and the tombstone tripwire instead of being repeated by
-    each of them."""
+    """One probe, lookup (or ``ann_tune``) call reads each table's
+    stamps (SHOW TBLPROPERTIES — a catalog round trip) at most once:
+    the read is passed on to the parameter checks, the
+    quantizer-version check and the tombstone tripwire instead of
+    being repeated by each of them. The corpus ingest's near-dup leg
+    reads them once per shard and passes that read to both the probe
+    and the append (its launch's fail-fast read runs on the caller's
+    thread, the leg on the stream's)."""
     import collections
+    import threading
 
     import numpy as np
 
     from georiva_spark.operators import similarity
+    from georiva_spark.streaming.ingest import start_corpus_ingest
+    from tests.test_corpus_products import _land, _mk_engine
 
     rng = np.random.default_rng(5)
     emb = spark.createDataFrame(
@@ -900,6 +917,8 @@ def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
             _docs(spark, [(9, BASE)]), "t_once_mh", threshold=0.4),
         "hamming_index_probe": lambda: dedup.hamming_index_probe(
             codes, "t_once_hm"),
+        "hamming_index_lookup": lambda: dedup.hamming_index_lookup(
+            codes, "t_once_hm"),
         "ivf_index_probe_batch": lambda: similarity.ivf_index_probe_batch(
             spark, "t_once_iv", qs, k=2),
         "ivf_index_probe": lambda: similarity.ivf_index_probe(
@@ -909,11 +928,12 @@ def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
             sample_ppm=500_000),
     }
     real_sql = type(spark).sql
-    reads = collections.Counter()
+    reads, leg_reads = collections.Counter(), collections.Counter()
 
     def counting(self, stmt, *a, **k):
         if stmt.startswith("SHOW TBLPROPERTIES"):
-            reads[stmt.split()[2]] += 1
+            main = threading.current_thread() is threading.main_thread()
+            (reads if main else leg_reads)[stmt.split()[2]] += 1
         return real_sql(self, stmt, *a, **k)
 
     monkeypatch.setattr(type(spark), "sql", counting)
@@ -923,6 +943,18 @@ def test_index_probes_read_each_stamp_table_once(spark, tmp_path,
             call().collect()
             assert reads, name
             assert max(reads.values()) == 1, (name, dict(reads))
+        land = tmp_path / "land"
+        land.mkdir()
+        _land(spark, tmp_path, str(land), "f0", [(10, BASE)], "sA")
+        start_corpus_ingest(
+            spark, str(land), str(tmp_path / "corpus"),
+            str(tmp_path / "ck"),
+            _mk_engine(spark, str(tmp_path / "corpus"),
+                       str(tmp_path / "out")),
+            available_now=True, neardup_table="t_once_mh",
+            neardup_out_dir=str(tmp_path / "nd")).awaitTermination()
+        assert leg_reads["t_once_mh_bands"] == 1, dict(leg_reads)
+        assert max(leg_reads.values()) == 1, dict(leg_reads)
     finally:
         monkeypatch.setattr(type(spark), "sql", real_sql)
         for t in ("t_once_mh_bands", "t_once_mh_sigs", "t_once_hm_bands",
@@ -1096,6 +1128,56 @@ def test_rewritten_index_starts_without_tombstones(spark, tmp_path,
         assert probe() == want
         assert not has_rules(spark, t)
     finally:
+        _drop_index(spark, t, kind)
+
+
+#: a rebuild of each banded family's ``_index_case`` index whose
+#: probe answer differs from the original's
+_REBUILDS = {
+    "minhash": lambda spark, t, path: dedup.minhash_index_write(
+        _docs(spark, [(1, "other text entirely here"), (2, BASE)]), t,
+        path, n_buckets=4),
+    "hamming": lambda spark, t, path: dedup.hamming_index_write(
+        spark.createDataFrame([(1, 1 << 40), (2, 0b0111), (3, 0b1111)],
+                              "media_id long, code long"),
+        t, path, max_hamming=2, bits=64, n_buckets=4),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_REBUILDS))
+def test_rebuild_crash_between_writes_fails_by_name(spark, tmp_path,
+                                                    monkeypatch, kind):
+    """A rebuild drops its stamped ``_bands`` before it writes, so a
+    crash between its two table writes leaves an index that fails by
+    name at the next probe — never new band rows verified against old
+    members, nor old band rows expanded through new ones — and
+    re-running the write gives the rebuilt answer."""
+    from pyspark.sql import DataFrameWriter
+
+    t = f"t_rb_{kind}"
+    _, probe, _ = _index_case(spark, tmp_path, kind, t)
+    real = DataFrameWriter.saveAsTable
+    writes = []
+
+    def crash_second(self, *a, **k):
+        writes.append(a)
+        if len(writes) == 2:
+            raise RuntimeError("injected crash at the second write")
+        return real(self, *a, **k)
+
+    try:
+        before = probe()
+        monkeypatch.setattr(DataFrameWriter, "saveAsTable", crash_second)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            _REBUILDS[kind](spark, t, str(tmp_path / t))
+        monkeypatch.setattr(DataFrameWriter, "saveAsTable", real)
+        with pytest.raises(ValueError,
+                           match=f"not a stamped {kind} index"):
+            probe()
+        _REBUILDS[kind](spark, t, str(tmp_path / t))
+        assert probe() not in (before, set())
+    finally:
+        monkeypatch.undo()
         _drop_index(spark, t, kind)
 
 

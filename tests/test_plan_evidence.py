@@ -1003,18 +1003,32 @@ def test_index_lifecycle_audit_current():
     ``*_index_compact``. Inside it, the PQ encoding
     (``_pq_encode_frame``) is called from the one assign-or-encode
     step (``_assign``) alone, which the write, the append and the
-    retraining compaction share."""
+    retraining compaction share. The MinHash and Hamming indexes
+    share one banded core in operators/dedup.py: only its write,
+    append and compact bodies write tables (``saveAsTable``,
+    ``write_bucketed``) there, and the band keys (``_band_buckets``,
+    ``_hamming_band_exprs``) are built by the in-memory miners, the
+    recall estimators and the two family specs alone."""
     import ast
     import re
 
     install = ("operators/_index_table.py", "install")
+    dedup = "operators/dedup.py"
+    core = {(dedup, f"banded_{op}")
+            for op in ("write", "append", "compact")}
+    band_keys = {(dedup, fn) for fn in (
+        "minhash_lsh_pairs", "fuzzy_decontaminate", "hamming_pairs",
+        "minhash_recall_estimate", "hamming_recall_estimate",
+        "_minhash_keys", "_hamming_keys")}
     allowed = {"atomic_swap_table": {install},
                "clear_rules": {
-                   install,
-                   ("operators/dedup.py", "minhash_index_write"),
-                   ("operators/dedup.py", "hamming_index_write"),
+                   install, (dedup, "banded_write"),
                    ("operators/similarity.py", "ivf_index_write")},
-               "pq_encode_frame": {("operators/similarity.py", "_assign")}}
+               "pq_encode_frame": {("operators/similarity.py", "_assign")},
+               "band_buckets": band_keys, "hamming_band_exprs": band_keys,
+               "saveAsTable": core, "write_bucketed": core}
+    #: names allowed anywhere outside dedup.py
+    dedup_only = ("saveAsTable", "write_bucketed")
     calls = {name: set() for name in allowed}
     found = []
 
@@ -1053,14 +1067,16 @@ def test_index_lifecycle_audit_current():
                                      f"{sorted(picks)}")
     for name, sites in calls.items():
         found += [f"{rel}:{fn} calls {name}"
-                  for rel, fn in sorted(sites - allowed[name])]
-    assert calls["atomic_swap_table"], "no install step found"
-    assert calls["pq_encode_frame"], "no PQ encode step found"
+                  for rel, fn in sorted(sites - allowed[name])
+                  if name not in dedup_only or rel == dedup]
+    for name in allowed:
+        assert calls[name], f"no {name} call found"
     assert not found, (
         f"index maintenance outside its one path: {found} — end a "
         f"compaction with _index_table.install, call ivf_index_write / "
         f"ivf_index_append / ivf_index_compact / ivf_index_probe for "
-        f"either IVF layout, and encode through _assign")
+        f"either IVF layout, encode through _assign, and write or band "
+        f"a MinHash or Hamming index through the banded core")
 
 
 def test_tools_reference_existing_operators():
