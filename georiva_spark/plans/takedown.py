@@ -23,12 +23,14 @@ orchestrator makes the fan-out one idempotent call with one audit
 record.
 
 IDEMPOTENCY: every leg converges on re-run — tombstone rules
-accumulate harmlessly (the anti-join is a set filter), the token
-rewrite's affected-scan finds exactly the not-yet-rewritten
-remainder, and the corpus leg records its affected-shard set in an
+accumulate harmlessly (the anti-join is a set filter), and the token
+layout and the corpus each record their affected-shard set in an
 INTENT token (committed through sources/commit.py BEFORE any
-mutation) so a crash between the partition prune and the engine
-dispatch re-dispatches on the next run even though the pruned
+mutation). The token rewrite's affected-scan finds exactly the
+not-yet-rewritten remainder, and its token brings the shards a
+crashed attempt rewrote into the manifest re-aggregation; the
+corpus token makes a crash between the partition prune and the
+engine dispatch re-dispatch on the next run even though the pruned
 partitions no longer contain the ids. Re-running a fully-applied
 request is a structural no-op (engine units skip on input_hash, T3).
 
@@ -49,7 +51,6 @@ is a superset required by the index/export layers this repo adds.
 from __future__ import annotations
 
 import hashlib
-import json
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,25 +61,13 @@ from georiva_spark.operators import _tombstones
 from georiva_spark.plans.engine import DerivationEngine, Trigger
 from georiva_spark.sources.commit import (atomic_replace,
                                           atomic_write_json,
-                                          backend_for, read_token_json)
+                                          backend_for, intent_path,
+                                          read_token_json,
+                                          request_digest)
 
 __all__ = ["clear_hold", "corpus_takedown", "expire_shards",
            "hold_filter", "read_audit_trail", "request_digest",
            "standing_hold", "takedown", "takedown_report"]
-
-
-def request_digest(ids) -> str:
-    """Deterministic digest of a takedown request's id set — the
-    audit/intent token key. Order- and duplicate-insensitive, so a
-    redelivered request maps to the same token (replay no-op)."""
-    ids = sorted({int(i) for i in ids})
-    return hashlib.md5(
-        ",".join(str(i) for i in ids).encode()).hexdigest()[:16]
-
-
-def _intent_path(corpus_dir: str, digest: str) -> str:
-    # underscore-prefixed sidecar: Spark's parquet listing ignores it
-    return posixpath.join(corpus_dir, f"_georiva_takedown_{digest}.json")
 
 
 def _index_legs(minhash_indexes, ivf_indexes, hamming_indexes):
@@ -109,6 +98,20 @@ def _prune_frame(corpus: DataFrame, affected, ids) -> DataFrame:
                         & ~F.expr(in_longs("doc_id", ids)))
 
 
+def _shard_checksums(corpus: DataFrame, shards, ids=()) -> DataFrame:
+    """Per shard of ``shards`` (a partition filter): the ingest
+    stream's content checksum — bit_xor of the rows' xxhash64 — and
+    the row count, both over the rows NOT in ``ids``. Taken before the
+    prune, these are exactly the figures of the pruned partition, so
+    one aggregate answers the emptied-shard check and the recommit."""
+    kept = (~F.expr(in_longs("doc_id", ids)) if ids else F.lit(True))
+    return (corpus.where(F.col("shard").isin(list(shards)))
+            .groupBy("shard")
+            .agg(F.bit_xor(F.when(kept, F.xxhash64("doc_id", "text")))
+                 .alias("digest"),
+                 F.sum(kept.cast("long")).alias("n")))
+
+
 def corpus_takedown(spark: SparkSession, corpus_dir: str,
                     engine: DerivationEngine, ids, *,
                     collection: str = "crawl-shards",
@@ -122,24 +125,30 @@ def corpus_takedown(spark: SparkSession, corpus_dir: str,
        bounded id list pushes to parquet row-group stats; only
        ``doc_id``/``shard`` columns ship) finds the shards still
        containing the ids. Bounded output: at most one row per shard.
-    2. INTENT TOKEN — the affected-shard set commits as a sidecar
+    2. CHECKSUMS — ONE aggregate over the affected partitions, before
+       any mutation, gives each shard's kept-row count and the content
+       checksum of its kept rows with the SAME formula the ingest
+       stream commits (bit_xor of row hashes, so a later identical
+       re-delivery T3-skips). The bit_xor over the kept rows IS the
+       pruned partition's checksum, so nothing is re-read after the
+       prune. A shard the takedown would EMPTY (zero kept rows) fails
+       by name here: dynamic overwrite cannot express an empty
+       partition, and deleting a whole shard is a different operation
+       — re-crawl or shard removal — that must be explicit.
+    3. INTENT TOKEN — the affected-shard set commits as a sidecar
        token in the corpus dir through sources/commit.py BEFORE any
        mutation. This is the crash-recovery hinge: after the
        partitions are pruned the ids are gone from the data, so a
        rerun's scan alone could never rediscover which shards still
        need their engine dispatch — the intent token can. Reruns
-       union the token's shards into the dispatch set.
-    3. PARTITION PRUNE — one dynamic partition overwrite of exactly
-       the affected shards, minus the ids (a shard the takedown would
-       EMPTY fails by name first: dynamic overwrite cannot express an
-       empty partition, and deleting a whole shard is a different
-       operation — re-crawl or shard removal — that must be explicit).
-    4. RECOMMIT + DISPATCH — per affected shard, recompute the
-       content checksum from the pruned partition with the SAME
-       formula the ingest stream commits (bit_xor of row hashes, so a
-       later identical re-delivery T3-skips), update the engine's
-       staging item, and dispatch its trigger: the clean unit and the
-       product chain recompute from the pruned shard, partials merge,
+       union the token's shards into the dispatch set; only those
+       shards (pruned by an earlier attempt, absent from this scan)
+       have their checksum read from the pruned partitions.
+    4. PARTITION PRUNE + DISPATCH — one dynamic partition overwrite of
+       exactly the affected shards, minus the ids; then per shard,
+       update the engine's staging item with the checksum and
+       dispatch its trigger: the clean unit and the product chain
+       recompute from the pruned shard, partials merge,
        datacard/manifest converge to a corpus that never had the docs
        (the takedown_e2e oracle proves exactly this).
     5. The intent token re-commits with ``completed: true`` — it
@@ -158,11 +167,10 @@ def corpus_takedown(spark: SparkSession, corpus_dir: str,
                          "empty")
     backend_for(corpus_dir, who="corpus_takedown")
     digest = request_digest(ids)
-    token_path = _intent_path(corpus_dir, digest)
+    token_path = intent_path(corpus_dir, digest)
     prior = read_token_json(token_path, who="corpus_takedown") or {}
 
     corpus = spark.read.parquet(corpus_dir)
-    dead = F.expr(in_longs("doc_id", ids))
     affected = sorted(r.shard for r in
                       _affected_scan(corpus, ids).collect())
     # crash recovery: shards a prior run pruned but may not have
@@ -171,13 +179,11 @@ def corpus_takedown(spark: SparkSession, corpus_dir: str,
     dispatch = sorted(set(affected) | set(prior.get("shards", [])))
     if not dispatch:
         return []
+    digests = {}
     if affected:
-        emptied = [
-            r.shard for r in corpus
-            .where(F.col("shard").isin(affected))
-            .groupBy("shard")
-            .agg(F.sum((~dead).cast("long")).alias("kept"))
-            .where(F.col("kept") == 0).collect()]
+        digests = {r.shard: r for r in
+                   _shard_checksums(corpus, affected, ids).collect()}
+        emptied = [s for s in affected if not digests[s].n]
         if emptied:
             raise ValueError(
                 f"corpus_takedown: the request would EMPTY shard(s) "
@@ -193,15 +199,15 @@ def corpus_takedown(spark: SparkSession, corpus_dir: str,
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("shard").parquet(corpus_dir))
-
-    pruned = spark.read.parquet(corpus_dir)
-    digests = {r.shard: r for r in pruned
-               .where(F.col("shard").isin(dispatch))
-               .groupBy("shard")
-               .agg(F.bit_xor(F.xxhash64("doc_id", "text"))
-                    .alias("digest"),
-                    F.count(F.lit(1)).alias("n"))
-               .collect()}
+    # shards only the intent token names were pruned by an earlier
+    # attempt: their checksums come from the pruned partitions (a
+    # fresh listing, the schema inferred above)
+    from_token = [s for s in dispatch if s not in digests]
+    if from_token:
+        digests.update(
+            (r.shard, r) for r in _shard_checksums(
+                spark.read.schema(corpus.schema).parquet(corpus_dir),
+                from_token).collect())
     results = []
     for shard in dispatch:
         d = digests.get(shard)
@@ -503,8 +509,7 @@ def takedown_report(spark: SparkSession, ids, *,
         parts.append(row_agg(live, family, t, id_col))
     dead = F.expr(larr(ids))
     for p in token_layouts:
-        bins = (spark.read.option("basePath", p)
-                .parquet(f"{p}/shard=*")
+        bins = (spark.read.parquet(p)
                 .withColumn("__f", F.col("_metadata.file_path"))
                 .where(F.arrays_overlap("doc_ids", dead)))
         n = F.size("doc_ids")
@@ -676,10 +681,10 @@ def takedown(spark: SparkSession, ids, *,
 
     from georiva_spark.sources.tables import export_token_shards_takedown
     for p in token_layouts:
+        # the leg's manifest is driver-held rows: the sum runs no job
         manifest = export_token_shards_takedown(spark, p, ids)
         audit["token_layouts"][p] = {
-            "bins": int(manifest.agg(
-                F.sum("n_bins").cast("long")).head()[0] or 0)}
+            "bins": sum(r.n_bins for r in manifest.collect())}
 
     if audit_dir is not None:
         atomic_write_json(

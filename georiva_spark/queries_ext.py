@@ -5415,8 +5415,7 @@ def q_token_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
                 docs.where((F.col("doc_id") % 20).isin(3, 7))
                 .select("doc_id").collect()]
     export_token_shards_takedown(spark, d, takedown)
-    bins = (spark.read.option("basePath", d)
-            .parquet(f"{d}/shard=*"))
+    bins = spark.read.parquet(d)
     n = F.size("doc_ids")
     per_doc = F.transform(
         F.sequence(F.lit(0), n - F.lit(1)),
@@ -6181,13 +6180,13 @@ def q_token_retire(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "text"))
     export_token_shards_delta(delta, d, BPE_MERGES,
                               generation="crawl-x")
-    bins = spark.read.option("basePath", d).parquet(f"{d}/shard=*")
+    bins = spark.read.parquet(d)
     n_delta = bins.where(
         F.exists("doc_ids", lambda i: i >= 10000000)).count()
     assert n_delta > 0, "delta generation did not land"
     export_token_shards_retire(spark, d, "crawl-x")
 
-    bins = spark.read.option("basePath", d).parquet(f"{d}/shard=*")
+    bins = spark.read.parquet(d)
     n = F.size("doc_ids")
     per_doc = F.transform(
         F.sequence(F.lit(0), n - F.lit(1)),

@@ -116,8 +116,8 @@ def export_token_shards(docs: DataFrame, path: str,
 
     The layout is APPENDABLE (r11): the vocab, merge table, and
     per-shard manifest are stamped as ``_georiva_*`` parquet sidecars
-    under ``path`` (underscore-prefixed — invisible to the
-    ``shard=*`` data listing), so :func:`export_token_shards_delta`
+    under ``path`` (underscore-prefixed — invisible to the layout's
+    data listing), so :func:`export_token_shards_delta`
     can later append new crawl docs as NEW bins under the SAME pinned
     tokenizer without touching (or re-tokenizing) a single existing
     shard file. ``extra_alphabet`` unions extra single characters
@@ -148,26 +148,49 @@ def export_token_shards(docs: DataFrame, path: str,
     # read-back is a column-pruned scan of two small int columns (and
     # stamps exactly what is on disk)
     manifest = _manifest_from_layout(docs.sparkSession, path,
-                                     context_len, len(vocab))
+                                     context_len,
+                                     len(vocab)).orderBy("shard")
     _stamp_token_sidecars(docs.sparkSession, path, manifest, vocab,
                           merges, num_shards)
     return manifest
 
 
+#: the per-shard manifest a token-shard export returns, and the stamped
+#: ``_georiva_manifest`` sidecar (the manifest plus num_shards)
+_MANIFEST_SCHEMA = ("shard int, n_bins long, n_docs long, n_tokens long, "
+                   "context_len int, pad_id int")
+_SIDECAR_SCHEMA = _MANIFEST_SCHEMA + ", num_shards int"
+
+
 def _manifest_from_layout(spark: SparkSession, path: str,
-                          context_len: int, pad_id: int) -> DataFrame:
+                          context_len: int, pad_id: int, *,
+                          schema=None, shards=None) -> DataFrame:
     """Per-shard manifest re-aggregated from the layout's data files
-    (shard, n_bins, n_docs, n_tokens, context_len, pad_id) — the
-    ground truth a torn manifest sidecar recovers from."""
-    return (spark.read.option("basePath", path)
-            .parquet(f"{path}/shard=*")
-            .groupBy("shard")
+    (shard, n_bins, n_docs, n_tokens, context_len, pad_id), unsorted —
+    the ground truth a torn manifest sidecar recovers from. ``shards``
+    limits the scan to those partitions (a partition filter: no other
+    shard's file is read); a given layout ``schema`` skips the
+    inference job."""
+    layout = (spark.read if schema is None
+              else spark.read.schema(schema)).parquet(path)
+    if shards is not None:
+        layout = layout.where(F.col("shard").isin(sorted(shards)))
+    return (layout.groupBy("shard")
             .agg(F.count(F.lit(1)).cast("long").alias("n_bins"),
                  F.sum("n_docs").cast("long").alias("n_docs"),
                  F.sum("n_tokens").cast("long").alias("n_tokens"))
             .withColumn("context_len", F.lit(context_len).cast("int"))
-            .withColumn("pad_id", F.lit(pad_id).cast("int"))
-            .orderBy("shard"))
+            .withColumn("pad_id", F.lit(pad_id).cast("int")))
+
+
+def _stamp_manifest(manifest: DataFrame, path: str,
+                    num_shards: int) -> None:
+    """Overwrite the ``_georiva_manifest`` sidecar with ``manifest``
+    plus num_shards. ``manifest`` must not read the sidecar itself."""
+    (manifest.withColumn("num_shards",
+                         F.lit(int(num_shards)).cast("int"))
+     .coalesce(1).write.mode("overwrite")
+     .parquet(os.path.join(path, "_georiva_manifest")))
 
 
 def _stamp_token_sidecars(spark: SparkSession, path: str,
@@ -192,49 +215,53 @@ def _stamp_token_sidecars(spark: SparkSession, path: str,
                  "rank int, a string, b string")
      .coalesce(1).write.mode("overwrite")
      .parquet(os.path.join(path, "_georiva_merges")))
-    (manifest.withColumn("num_shards",
-                         F.lit(int(num_shards)).cast("int"))
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(path, "_georiva_manifest")))
+    _stamp_manifest(manifest, path, num_shards)
+
+
+def _stamped_manifest(spark: SparkSession, path: str, who: str) -> list:
+    """The ``_georiva_manifest`` sidecar's rows (bounded: num_shards),
+    sorted by shard and read with the schema given, so no inference
+    job runs. Every row carries the layout config (context_len,
+    pad_id, num_shards). A missing or empty sidecar fails by name (a
+    pre-r11 or foreign layout must be rebuilt, not silently
+    re-tokenized)."""
+    from pyspark.errors import AnalysisException
+    try:
+        rows = (spark.read.schema(_SIDECAR_SCHEMA)
+                .parquet(os.path.join(path, "_georiva_manifest"))
+                .collect())
+    except AnalysisException:
+        rows = []
+    if not rows:
+        raise ValueError(
+            f"{who}: {path!r} has no stamped _georiva_* sidecars — "
+            f"only a layout written by export_token_shards (r11+) can "
+            f"take deltas, takedowns or retirements; rebuild full "
+            f"first")
+    return sorted(rows, key=lambda r: r.shard)
 
 
 def _read_token_sidecars(spark: SparkSession, path: str):
     """Load the pinned tokenizer + layout of an existing token-shard
-    export → (manifest_df, vocab, merges, context_len, num_shards).
-    Missing sidecars fail by name (a pre-r11 or foreign layout must
-    be rebuilt, not silently re-tokenized)."""
+    export for a delta → (vocab, merges, context_len, num_shards).
+    Missing sidecars fail by name."""
+    who = "export_token_shards_delta"
+    head = _stamped_manifest(spark, path, who)[0]
     try:
-        manifest = spark.read.parquet(
-            os.path.join(path, "_georiva_manifest"))
         vocab_df = spark.read.parquet(
             os.path.join(path, "_georiva_vocab"))
         merges_df = spark.read.parquet(
             os.path.join(path, "_georiva_merges"))
     except Exception as e:
         raise ValueError(
-            f"export_token_shards_delta: {path!r} has no stamped "
-            f"_georiva_* sidecars — only a layout written by "
-            f"export_token_shards (r11+) can take deltas; rebuild "
-            f"full first ({e})") from None
+            f"{who}: {path!r} has no stamped _georiva_* sidecars — "
+            f"only a layout written by export_token_shards (r11+) can "
+            f"take deltas; rebuild full first ({e})") from None
     vocab = [r.token for r in
              sorted(vocab_df.collect(), key=lambda r: r.id)]
     merges = [(r.a, r.b) for r in
               sorted(merges_df.collect(), key=lambda r: r.rank)]
-    # materialize the manifest OFF its files (bounded: num_shards
-    # rows) — the delta path later OVERWRITES _georiva_manifest while
-    # deriving the new manifest from the old one, and a lazy frame
-    # still reading the doomed files would hit FILE_NOT_EXIST
-    rows = manifest.collect()
-    head = rows[0]
-    from georiva_spark.functions.frames import local_frame
-    local = local_frame(
-        spark,
-        [(r.shard, r.n_bins, r.n_docs, r.n_tokens, r.context_len,
-          r.pad_id) for r in rows],
-        "shard int, n_bins long, n_docs long, n_tokens long, "
-        "context_len int, pad_id int")
-    return (local, vocab, merges,
-            int(head["context_len"]), int(head["num_shards"]))
+    return vocab, merges, int(head.context_len), int(head.num_shards)
 
 
 def generation_digest(docs: DataFrame, text_col: str = "text") -> str:
@@ -333,7 +360,7 @@ def export_token_shards_delta(new_docs: DataFrame, path: str,
     spark = new_docs.sparkSession
     # the stamped manifest itself is advisory (see CRASH RECOVERY);
     # only the pinned tokenizer + layout config are trusted from it
-    _, vocab, pinned, context_len, num_shards = \
+    vocab, pinned, context_len, num_shards = \
         _read_token_sidecars(spark, path)
     if [tuple(m) for m in merges] != pinned:
         raise ValueError(
@@ -374,12 +401,9 @@ def export_token_shards_delta(new_docs: DataFrame, path: str,
             import shutil
             shutil.rmtree(os.path.join(path, f"_staging_{generation}"),
                           ignore_errors=True)
-            manifest = _manifest_from_layout(spark, path, context_len,
-                                             len(vocab))
-            (manifest.withColumn(
-                "num_shards", F.lit(int(num_shards)).cast("int"))
-             .coalesce(1).write.mode("overwrite")
-             .parquet(os.path.join(path, "_georiva_manifest")))
+            manifest = _manifest_from_layout(
+                spark, path, context_len, len(vocab)).orderBy("shard")
+            _stamp_manifest(manifest, path, num_shards)
             return manifest
 
     def _foreign_files() -> list[str]:
@@ -493,11 +517,8 @@ def export_token_shards_delta(new_docs: DataFrame, path: str,
     # second tokenization pass, and the stamp is exactly what is on
     # disk (old + appended generations together)
     manifest = _manifest_from_layout(spark, path, context_len,
-                                     len(vocab))
-    (manifest.withColumn("num_shards",
-                         F.lit(int(num_shards)).cast("int"))
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(path, "_georiva_manifest")))
+                                     len(vocab)).orderBy("shard")
+    _stamp_manifest(manifest, path, num_shards)
     return manifest
 
 
@@ -511,48 +532,86 @@ def export_token_shards_takedown(spark: SparkSession, path: str,
     takedown's tokens stayed in the training bins forever. This is
     the sanctioned mutation: surgical, bounded, restartable.
 
-    Mechanics: one pruned scan finds the AFFECTED FILES (bins whose
-    ``doc_ids`` overlap the bounded takedown list — a doc packs into
-    exactly one bin, so affected files are bounded by the request,
-    never corpus-proportional); each affected file is rewritten
-    WITHOUT the taken-down docs' token segments (pure-JVM HOFs:
-    per-bin slice/flatten/re-pad — surviving docs' token ids are
-    BIT-IDENTICAL, offsets re-based, bins left empty are dropped) and
-    atomically REPLACED via the commit backend's ``replace_file``
-    (os.replace locally, whole-object PUT on an object store — a
-    loader mid-read sees the old file or the new in full). Untouched
-    files stay byte-identical. The manifest re-stamps from the layout
-    afterward (the delta export's healing rule: the layout can't lie).
+    Mechanics — every step costs what the request touches:
 
-    Restartable WITHOUT markers: a crash mid-run leaves some files
-    rewritten and some not — the rerun's affected-scan finds exactly
-    the remainder; a takedown of already-absent ids is a structural
-    no-op (zero affected files, manifest re-stamp only). Loader
-    contract change is inherent and documented: affected bins shrink
+    1. The layout config (``context_len``, ``pad_id``,
+       ``num_shards``) comes from the manifest sidecar alone, read
+       with its schema given; the vocab and merge table are not read.
+    2. One pruned scan of the layout (its schema inferred once, then
+       reused by every later read) collects the AFFECTED FILES and
+       their shards (bins whose ``doc_ids`` overlap the bounded
+       takedown list — a doc packs into exactly one bin, so affected
+       files are bounded by the request, never corpus-proportional).
+    3. Each affected file is rewritten WITHOUT the taken-down docs'
+       token segments (pure-JVM HOFs: per-bin slice/flatten/re-pad —
+       surviving docs' token ids are BIT-IDENTICAL, offsets re-based,
+       bins left empty are dropped) and atomically REPLACED via the
+       commit backend's ``replace_file`` (os.replace locally,
+       whole-object PUT on an object store — a loader mid-read sees
+       the old file or the new in full). Untouched files stay
+       byte-identical.
+    4. Only the affected shards re-aggregate (a partition filter on
+       ``shard``); every other manifest row is kept as stamped. The
+       sidecar is re-stamped from those driver rows, and the returned
+       manifest is built from them (collecting it runs no job).
+
+    CRASH RECOVERY through an INTENT token: before the first
+    ``replace_file``, ``_georiva_takedown_{digest}.json`` commits in
+    the layout root (``commit.atomic_write_json``; underscore-prefixed,
+    so the data listing skips it) naming the affected shards, and
+    re-commits with ``completed: true`` after the manifest stamp. A
+    crash mid-run leaves some files rewritten and some not: the
+    rerun's affected-scan finds exactly the remainder, and the
+    uncompleted token's shards join its re-aggregation, so shards the
+    crashed attempt rewrote still get fresh manifest rows. A takedown
+    of already-absent ids with no uncompleted token is a structural
+    no-op (zero affected files, nothing written). Loader contract
+    change is inherent and documented: affected bins shrink
     (re-padded) or vanish — the point of a takedown — so epochs
     consumed from a prior permutation should be considered re-drawn
     for the affected shards. → the updated manifest."""
-    import uuid as _uuid
+    import hashlib
+    import shutil
 
-    from georiva_spark.sources.commit import backend_for, replace_file
+    from pyspark.sql.types import StructType
+
+    from georiva_spark.functions.fastexpr import larr
+    from georiva_spark.functions.frames import local_frame
+    from georiva_spark.sources.commit import (atomic_write_json,
+                                              backend_for, intent_path,
+                                              read_token_json,
+                                              replace_file,
+                                              request_digest)
+    who = "export_token_shards_takedown"
     ids = sorted({int(i) for i in doc_ids})
     if not ids:
-        raise ValueError(
-            "export_token_shards_takedown: the takedown id list is "
-            "empty")
-    _, vocab, _merges, context_len, num_shards = \
-        _read_token_sidecars(spark, path)
-    pad_id = len(vocab)
-    backend_for(path, who="export_token_shards_takedown")
-    from georiva_spark.functions.fastexpr import larr
+        raise ValueError(f"{who}: the takedown id list is empty")
+    stamped = _stamped_manifest(spark, path, who)
+    context_len = int(stamped[0].context_len)
+    pad_id = int(stamped[0].pad_id)
+    backend_for(path, who=who)
+    digest = request_digest(ids)
+    token_path = intent_path(path, digest)
+    prior = read_token_json(token_path, who=who) or {}
+    # shards an uncompleted earlier attempt may have rewritten
+    pending = (set(prior["shards"]) if prior and not prior["completed"]
+               else set())
+
+    layout = spark.read.parquet(path)
+    schema = layout.schema
+    file_schema = StructType([f for f in schema.fields
+                              if f.name != "shard"])
     dead = F.expr(larr(ids))
-    affected = sorted(
-        r.f for r in
-        (spark.read.option("basePath", path)
-         .parquet(f"{path}/shard=*")
-         .where(F.arrays_overlap("doc_ids", dead))
-         .select(F.col("_metadata.file_path").alias("f"))
-         .distinct().collect()))
+    # one job, no shuffle: at most one row per affected bin
+    hits = (layout.where(F.arrays_overlap("doc_ids", dead))
+            .select(F.col("_metadata.file_path").alias("f"), "shard")
+            .collect())
+    affected = sorted({r.f for r in hits})
+    shards = sorted({r.shard for r in hits} | pending)
+    if not shards:
+        # structural no-op (ids absent, no crashed attempt to finish)
+        return local_frame(spark, [tuple(r)[:6] for r in stamped],
+                           _MANIFEST_SCHEMA)
 
     n = F.size("doc_ids")
 
@@ -583,8 +642,6 @@ def export_token_shards_takedown(spark: SparkSession, path: str,
             lambda j: F.aggregate(
                 F.slice(lens, F.lit(1), (j - 1).cast("int")),
                 F.lit(0).cast("long"), lambda a, x: a + x)))
-    import hashlib as _hashlib
-    import shutil
 
     # ONE distributed job rewrites every affected file (the r13 smoke
     # lesson: a driver loop of one Spark job per file serialized a
@@ -594,72 +651,76 @@ def export_token_shards_takedown(spark: SparkSession, path: str,
     # to one task (repartition on the file key), sort by bin inside
     # it, and land under one staged key dir; the installs are then
     # driver-side constant-cost renames through the commit backend.
-    if not affected:
-        # structural no-op (ids absent from the layout): manifest
-        # re-stamp only
-        manifest = _manifest_from_layout(spark, path, context_len,
-                                         pad_id)
-        (manifest.withColumn("num_shards",
-                             F.lit(int(num_shards)).cast("int"))
-         .coalesce(1).write.mode("overwrite")
-         .parquet(os.path.join(path, "_georiva_manifest")))
-        return manifest
-    keymap = {_hashlib.md5(f.encode()).hexdigest()[:16]: f
-              for f in affected}
-    df = (spark.read.parquet(*affected)
-          .withColumn("__key", F.substring(
-              F.md5(F.col("_metadata.file_path")), 1, 16)))
-    # temp aliases, then rename: aliasing an output column with an
-    # INPUT column's name inside one select lets Spark's lateral
-    # column alias resolution rebind sibling expressions' refs to
-    # the NEW value (observed on 4.1: token_ids came out unsliced)
-    out = (df.select(
-        "__key", "bin_id",
-        F.transform(kept, lambda d: d["doc_id"]).alias("__di"),
-        offsets.alias("__do"),
-        k.cast("int").alias("__nd"),
-        F.size(flat).cast("int").alias("__nt"),
-        F.concat(flat, F.array_repeat(
-            F.lit(pad_id).cast("int"),
-            F.lit(context_len) - F.size(flat))).alias("__ti"))
-        .where(F.col("__nd") > 0)
-        .select(F.col("__key"), F.col("bin_id"),
-                F.col("__di").alias("doc_ids"),
-                F.col("__do").alias("doc_offsets"),
-                F.col("__nd").alias("n_docs"),
-                F.col("__nt").alias("n_tokens"),
-                F.col("__ti").alias("token_ids")))
-    stage = os.path.join(path,
-                         f"_takedown_stage_{_uuid.uuid4().hex[:8]}")
-    (out.repartition(len(affected), "__key")
-     .sortWithinPartitions("__key", "bin_id")
-     .write.partitionBy("__key").mode("overwrite").parquet(stage))
-    empty_schema = spark.read.parquet(affected[0]).schema
-    for key, fpath in sorted(keymap.items(), key=lambda kv: kv[1]):
-        kdir = os.path.join(stage, f"__key={key}")
-        parts = (sorted(f for f in os.listdir(kdir)
-                        if f.endswith(".parquet"))
-                 if os.path.isdir(kdir) else [])
-        if parts:
-            replace_file(os.path.join(kdir, parts[0]), fpath,
-                         who="export_token_shards_takedown")
-        else:
-            # every bin in this file emptied: the file itself becomes
-            # the empty layout member (loader reads zero rows)
-            from georiva_spark.functions.frames import local_frame
-            edir = os.path.join(stage, f"__empty_{key}")
-            (local_frame(spark, [], empty_schema).coalesce(1)
-             .write.mode("overwrite").parquet(edir))
-            part = next(f for f in sorted(os.listdir(edir))
-                        if f.endswith(".parquet"))
-            replace_file(os.path.join(edir, part), fpath,
-                         who="export_token_shards_takedown")
+    # named by the request, so a rerun reuses and removes what a
+    # crashed attempt staged
+    stage = os.path.join(path, f"_takedown_stage_{digest}")
+    if affected:
+        keymap = {hashlib.md5(f.encode()).hexdigest()[:16]: f
+                  for f in affected}
+        df = (spark.read.schema(file_schema).parquet(*affected)
+              .withColumn("__key", F.substring(
+                  F.md5(F.col("_metadata.file_path")), 1, 16)))
+        # temp aliases, then rename: aliasing an output column with an
+        # INPUT column's name inside one select lets Spark's lateral
+        # column alias resolution rebind sibling expressions' refs to
+        # the NEW value (observed on 4.1: token_ids came out unsliced)
+        out = (df.select(
+            "__key", "bin_id",
+            F.transform(kept, lambda d: d["doc_id"]).alias("__di"),
+            offsets.alias("__do"),
+            k.cast("int").alias("__nd"),
+            F.size(flat).cast("int").alias("__nt"),
+            F.concat(flat, F.array_repeat(
+                F.lit(pad_id).cast("int"),
+                F.lit(context_len) - F.size(flat))).alias("__ti"))
+            .where(F.col("__nd") > 0)
+            .select(F.col("__key"), F.col("bin_id"),
+                    F.col("__di").alias("doc_ids"),
+                    F.col("__do").alias("doc_offsets"),
+                    F.col("__nd").alias("n_docs"),
+                    F.col("__nt").alias("n_tokens"),
+                    F.col("__ti").alias("token_ids")))
+        (out.repartition(len(affected), "__key")
+         .sortWithinPartitions("__key", "bin_id")
+         .write.partitionBy("__key").mode("overwrite").parquet(stage))
+        atomic_write_json(token_path,
+                          {"digest": digest, "n_ids": len(ids),
+                           "shards": shards, "completed": False},
+                          who=who)
+        empty = None
+        for key, fpath in sorted(keymap.items(), key=lambda kv: kv[1]):
+            kdir = os.path.join(stage, f"__key={key}")
+            parts = (sorted(f for f in os.listdir(kdir)
+                            if f.endswith(".parquet"))
+                     if os.path.isdir(kdir) else [])
+            if parts:
+                src = os.path.join(kdir, parts[0])
+            else:
+                # every bin in this file emptied: the file itself
+                # becomes the empty layout member (loader reads zero
+                # rows) — one empty file written, copied per file
+                if empty is None:
+                    edir = os.path.join(stage, "__empty")
+                    (local_frame(spark, [], file_schema).coalesce(1)
+                     .write.mode("overwrite").parquet(edir))
+                    empty = os.path.join(edir, next(
+                        f for f in sorted(os.listdir(edir))
+                        if f.endswith(".parquet")))
+                src = os.path.join(stage, f"__empty_{key}.parquet")
+                shutil.copyfile(empty, src)
+            replace_file(src, fpath, who=who)
     shutil.rmtree(stage, ignore_errors=True)
-    manifest = _manifest_from_layout(spark, path, context_len, pad_id)
-    (manifest.withColumn("num_shards",
-                         F.lit(int(num_shards)).cast("int"))
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(path, "_georiva_manifest")))
+
+    fresh = [tuple(r) for r in _manifest_from_layout(
+        spark, path, context_len, pad_id, schema=schema,
+        shards=shards).collect()]
+    rows = sorted([tuple(r)[:6] for r in stamped
+                   if r.shard not in shards] + fresh)
+    manifest = local_frame(spark, rows, _MANIFEST_SCHEMA)
+    _stamp_manifest(manifest, path, stamped[0].num_shards)
+    atomic_write_json(token_path,
+                      {"digest": digest, "n_ids": len(ids),
+                       "shards": shards, "completed": True}, who=who)
     return manifest
 
 
@@ -702,8 +763,8 @@ def export_token_shards_retire(spark: SparkSession, path: str,
         raise ValueError(
             f"export_token_shards_retire: generation={generation!r} "
             f"must match [A-Za-z0-9._-]{{1,128}}")
-    _, vocab, _merges, context_len, num_shards = \
-        _read_token_sidecars(spark, path)
+    stamped = _stamped_manifest(spark, path,
+                                "export_token_shards_retire")
     marker = os.path.join(path, "_georiva_gens", f"{generation}.json")
     prev = read_token_json(marker, who="export_token_shards_retire")
     if prev is None:
@@ -720,12 +781,10 @@ def export_token_shards_retire(spark: SparkSession, path: str,
             os.path.join(path, "shard=*", f"gen-{generation}-*"))):
         if f.endswith(".parquet"):
             remove_file(f, who="export_token_shards_retire")
-    manifest = _manifest_from_layout(spark, path, context_len,
-                                     len(vocab))
-    (manifest.withColumn("num_shards",
-                         F.lit(int(num_shards)).cast("int"))
-     .coalesce(1).write.mode("overwrite")
-     .parquet(os.path.join(path, "_georiva_manifest")))
+    manifest = _manifest_from_layout(
+        spark, path, stamped[0].context_len,
+        stamped[0].pad_id).orderBy("shard")
+    _stamp_manifest(manifest, path, stamped[0].num_shards)
     return manifest
 
 
@@ -740,8 +799,7 @@ def read_token_shards(spark: SparkSession, path: str,
     already written in bin order, so Spark's sort sees presorted
     runs; a non-Spark loader can skip it entirely and mmap the one
     file per directory sequentially."""
-    df = (spark.read.option("basePath", path)
-          .parquet(f"{path}/shard=*"))
+    df = spark.read.parquet(path)
     if shard is not None:
         df = df.where(F.col("shard") == shard)
     return df.orderBy("shard", "bin_id")

@@ -1290,8 +1290,10 @@ def test_export_token_shards_delta_appends_without_rewrite(
                and m.context_len == ctx
                for s, m in manifest.items())
     # re-stamped manifest == re-aggregation of the data files
-    from georiva_spark.sources.tables import _read_token_sidecars
-    stamped, vocab, pinned, c2, ns2 = _read_token_sidecars(spark, out)
+    from georiva_spark.sources.tables import (_read_token_sidecars,
+                                              _stamped_manifest)
+    vocab, pinned, c2, ns2 = _read_token_sidecars(spark, out)
+    stamped = _stamped_manifest(spark, out, "test")
     assert (c2, ns2) == (ctx, n_shards) and pinned == merges
     agg = {r.shard: r for r in spark.read.option("basePath", out)
            .parquet(f"{out}/shard=*")
@@ -1299,7 +1301,7 @@ def test_export_token_shards_delta_appends_without_rewrite(
            .agg(F.count(F.lit(1)).alias("n_bins"),
                 F.sum("n_docs").alias("n_docs"),
                 F.sum("n_tokens").alias("n_tokens")).collect()}
-    for r in stamped.collect():
+    for r in stamped:
         a = agg[r.shard]
         assert (r.n_bins, r.n_docs, r.n_tokens) \
             == (a.n_bins, a.n_docs, a.n_tokens)
@@ -1384,14 +1386,17 @@ def test_export_token_shards_delta_appends_without_rewrite(
                                   str(tmp_path / "virgin"), merges)
 
 
-def test_export_token_shards_takedown(spark, tmp_path):
+def test_export_token_shards_takedown(spark, tmp_path, monkeypatch):
     """r13 — takedown reaching the TRAINER layout (the last T5 gap):
     removing specific doc_ids rewrites ONLY the affected files
     (surviving docs' token ids bit-identical, offsets re-based,
     empty bins dropped, rows still exactly context_len), leaves
     every untouched file byte-identical, re-stamps the manifest from
     the layout, and is a structural no-op on rerun (already-absent
-    ids -> zero affected files)."""
+    ids -> zero affected files). A takedown that crashes after its
+    first file replacement leaves, once rerun, a manifest equal to a
+    full re-aggregation of the layout, and the returned manifest
+    collects without a Spark job."""
     import glob
     import hashlib
     import os
@@ -1478,7 +1483,57 @@ def test_export_token_shards_takedown(spark, tmp_path):
     assert md5s() == after_md5
     with pytest.raises(ValueError, match="empty"):
         export_token_shards_takedown(spark, out, [])
-    # no stale staging dirs
+
+    # CRASH after the first file replacement, before the manifest
+    # stamp: one doc from each shard, so the rerun's affected scan no
+    # longer sees the shard already rewritten — only the intent token
+    # brings it into the re-aggregation
+    from georiva_spark.sources import commit
+    first = {}
+    for r in (spark.read.parquet(out)
+              .select("shard", F.explode("doc_ids").alias("d"))
+              .orderBy("shard", "d").collect()):
+        first.setdefault(r.shard, r.d)
+    assert len(first) == 2
+    ids = sorted(first.values())
+    real = commit.replace_file
+
+    def crash_after_first(src, dst, who="commit"):
+        real(src, dst, who)
+        raise RuntimeError("injected crash after the first replace")
+
+    monkeypatch.setattr(commit, "replace_file", crash_after_first)
+    with pytest.raises(RuntimeError, match="injected"):
+        export_token_shards_takedown(spark, out, ids)
+    monkeypatch.undo()
+    token = commit.read_token_json(
+        commit.intent_path(out, commit.request_digest(ids)))
+    assert token["completed"] is False
+    man = export_token_shards_takedown(spark, out, ids)
+    sc = spark.sparkContext
+    sc.setJobGroup("token-takedown-manifest", "collect the manifest")
+    try:
+        got = {r.shard: (r.n_bins, r.n_docs, r.n_tokens)
+               for r in man.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(
+        "token-takedown-manifest") == []
+    full = {r.shard: (r.n_bins, r.n_docs, r.n_tokens) for r in
+            spark.read.parquet(out).groupBy("shard")
+            .agg(F.count("*").alias("n_bins"),
+                 F.sum("n_docs").alias("n_docs"),
+                 F.sum("n_tokens").alias("n_tokens")).collect()}
+    assert got == full
+    assert {r.shard: (r.n_bins, r.n_docs, r.n_tokens)
+            for r in spark.read.parquet(
+                os.path.join(out, "_georiva_manifest")).collect()} == full
+    assert not {d for r in read_token_shards(spark, out).collect()
+                for d in r.doc_ids} & set(ids)
+    assert commit.read_token_json(commit.intent_path(
+        out, commit.request_digest(ids)))["completed"] is True
+    # no stale staging dirs, the crashed attempt's included
     assert not [d for d in os.listdir(out)
                 if d.startswith("_takedown_stage_")]
 

@@ -1362,6 +1362,35 @@ def test_corpus_takedown_scan_pushdown_and_partition_prune(spark,
     assert "shard" in part and "s1" in part and "s3" in part
 
 
+def test_token_layout_reads_prune_shards_at_listing(spark, tmp_path):
+    """Token-layout reads go through the layout root, and a shard
+    predicate stays a PARTITION filter: the token takedown's manifest
+    step scans only the affected shards (the other shards' files are
+    never read), and ``read_token_shards(shard=k)`` reads one shard
+    directory — the per-worker loader shape."""
+    from georiva_spark.sources.tables import (_manifest_from_layout,
+                                              read_token_shards)
+    lay = str(tmp_path / "lay")
+    (spark.range(40)
+     .selectExpr("id as bin_id", "array(id) as doc_ids",
+                 "array(0L) as doc_offsets", "1 as n_docs",
+                 "3 as n_tokens", "array(1, 2, 3) as token_ids",
+                 "cast(id % 4 as int) as shard")
+     .write.partitionBy("shard").parquet(lay))
+
+    def part_filters(df):
+        scan = [ln for ln in _plan(df).splitlines()
+                if "FileScan parquet" in ln][0]
+        return scan.split("PartitionFilters:", 1)[1].split("]", 1)[0]
+
+    schema = spark.read.parquet(lay).schema
+    part = part_filters(_manifest_from_layout(
+        spark, lay, 8, 9, schema=schema, shards=[3, 1]))
+    assert "shard" in part and "IN (1,3)" in part
+    part = part_filters(read_token_shards(spark, lay, shard=2))
+    assert "shard" in part and "= 2" in part
+
+
 def test_hold_filter_is_broadcast_antijoin(spark, tmp_path):
     """r13 standing-hold scale story: the admission filter must be a
     BROADCAST anti-join of the bounded hold list over the incoming

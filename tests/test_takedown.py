@@ -87,6 +87,18 @@ def _card(spark, eng):
             for r in eng.catalog._grid_loader(it).collect()}
 
 
+def _jobs(spark, group, fn):
+    """(fn(), the Spark jobs it ran), counted in job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _drop(spark, table, suffixes):
     for s in suffixes:
         spark.sql(f"DROP TABLE IF EXISTS {table}_{s}")
@@ -136,10 +148,14 @@ def test_takedown_reaches_every_surface(spark, tmp_path):
                                    n_centroids=2, train_iters=1)
 
         ids = [1, 11]
-        audit = td.takedown(
+        audit, jobs = _jobs(spark, "takedown-all-legs", lambda: td.takedown(
             spark, ids, minhash_indexes=[mh], hamming_indexes=[hm],
             ivf_indexes=[iv], token_layouts=[lay],
-            corpus=(corp, eng), audit_dir=audit_dir)
+            corpus=(corp, eng), audit_dir=audit_dir))
+        # the request's job budget: the token leg re-aggregates only
+        # its affected shards and the audit sums driver rows — a leg
+        # that starts to scale with its surface moves this count
+        assert jobs == 59, jobs
 
         # indexes: probes exclude the ids, keep the rest
         mh_probe = spark.createDataFrame(
@@ -223,7 +239,7 @@ def test_corpus_takedown_crash_window_recovers_via_intent(spark,
     assert spark.read.parquet(corp).where("doc_id = 12").count() == 0
     assert _card(spark, eng) == card0             # stale: still has fr
     tok = commit.read_token_json(
-        td._intent_path(corp, td.request_digest([12])))
+        commit.intent_path(corp, td.request_digest([12])))
     assert tok["shards"] == ["s1"] and tok["completed"] is False
 
     res = td.corpus_takedown(spark, corp, eng, [12])
@@ -232,7 +248,7 @@ def test_corpus_takedown_crash_window_recovers_via_intent(spark,
     assert ("fr", "web") not in card
     assert card[("en", "books")] == card0[("en", "books")]
     tok = commit.read_token_json(
-        td._intent_path(corp, td.request_digest([12])))
+        commit.intent_path(corp, td.request_digest([12])))
     assert tok["completed"] is True
 
 

@@ -19,6 +19,10 @@ token-shard trainer layout. The claims measured:
 4. IDEMPOTENT RERUN is near-free: the affected scan finds nothing,
    the engine T3-skips on the recommitted checksums, the layout
    finds zero affected files.
+5. The TRAINER-LAYOUT LEG's Spark job count follows the request, not
+   the layout: the same 2-shard request against the layout and
+   against a layout with 4× its shards (4× the untouched shards)
+   runs the same number of jobs.
 
 Usage: python tools/scale_smoke_takedown.py [n_docs]
 Prints one timing line per stage; writes only under temp dirs.
@@ -68,6 +72,18 @@ def corpus(spark, n: int):
                  (base % N_SHARDS).cast("string")).alias("shard"))
 
 
+def _in_job_group(spark, group: str, fn):
+    """(fn(), the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def main(n: int = 2_000_000) -> None:
     from georiva_spark.plans.engine import DerivationEngine, Trigger
     from georiva_spark.plans.recipe import (CatalogContext,
@@ -78,7 +94,9 @@ def main(n: int = 2_000_000) -> None:
         CorpusTokenShardsRecipe, corpus_product_definitions,
     )
     from georiva_spark.plans.takedown import takedown
-    from georiva_spark.sources.tables import export_token_shards
+    from georiva_spark.sources.tables import (
+        export_token_shards, export_token_shards_takedown,
+        read_token_shards)
 
     spark = get_spark("scale-smoke-takedown",
                       extra_conf={"spark.driver.memory": "48g"})
@@ -146,11 +164,13 @@ def main(n: int = 2_000_000) -> None:
                     for f in os.listdir(p) if f.endswith(".parquet"))
 
         t0 = time.time()
-        aud = takedown(spark, ids, corpus=(corp, eng),
-                       token_layouts=[lay], audit_dir=audit)
+        aud, jobs = _in_job_group(spark, "smoke-takedown", lambda: takedown(
+            spark, ids, corpus=(corp, eng), token_layouts=[lay],
+            audit_dir=audit))
         td_s = time.time() - t0
         shards = [c["shard"] for c in aud["corpus"]]
-        print(f"TAKEDOWN (200 ids -> shards {shards}): {td_s:.1f}s "
+        print(f"TAKEDOWN (200 ids -> shards {shards}): {td_s:.1f}s, "
+              f"{jobs} Spark jobs "
               f"({td_s / (build_s + export_s):.2f}x of build+export)")
         assert shards == ["shard-1", "shard-5"], shards
         for d, snap in untouched.items():
@@ -162,8 +182,7 @@ def main(n: int = 2_000_000) -> None:
             assert now == snap, f"untouched partition {d} changed"
         total = spark.read.parquet(corp).count()
         assert total == n - len(ids), (total, n - len(ids))
-        gone = (spark.read.option("basePath", lay)
-                .parquet(f"{lay}/shard=*")
+        gone = (spark.read.parquet(lay)
                 .where(F.arrays_overlap(
                     "doc_ids",
                     F.array(*[F.lit(i).cast("long") for i in ids])))
@@ -180,6 +199,30 @@ def main(n: int = 2_000_000) -> None:
         print(f"idempotent rerun (scan finds nothing, T3 skips, "
               f"zero affected files): {rerun_s:.1f}s")
 
+        # the trainer-layout leg alone, one request against the layout
+        # and against one with 4x its shards: the request's docs sit in
+        # shards 0 and 1 of both (shard = hash mod num_shards, and 64
+        # divides 256), so only the untouched shard count grows
+        lay4 = os.path.join(base, "layout4")
+        export_token_shards(
+            corpus(spark, n).drop("shard"), lay4, MERGES,
+            context_len=512, num_shards=4 * 64,
+            extra_alphabet="abcdefghijklmnopqrstuvwxyz0123456789 ")
+        ids2 = [r.d for k in (0, 1) for r in
+                read_token_shards(spark, lay4, shard=k)
+                .select(F.explode("doc_ids").alias("d")).limit(100)
+                .collect()]
+        leg = {}
+        for name, p in (("64 shards", lay), ("256 shards", lay4)):
+            t0 = time.time()
+            man, leg[name] = _in_job_group(
+                spark, f"smoke-token-leg-{len(leg)}",
+                lambda p=p: export_token_shards_takedown(spark, p, ids2))
+            print(f"TOKEN LEG ({len(ids2)} ids -> 2 shards) on "
+                  f"{name}: {time.time() - t0:.1f}s, {leg[name]} Spark "
+                  f"jobs, {sum(r.n_bins for r in man.collect())} bins")
+        assert len(set(leg.values())) == 1, leg
+
         # r13 retention leg: EXPIRE one whole shard (250k docs) —
         # partition gone atomically, engine rebuilds merges from the
         # 7 remaining partials, datacard converges
@@ -190,7 +233,7 @@ def main(n: int = 2_000_000) -> None:
         assert not os.path.isdir(os.path.join(corp, "shard=shard-7"))
         total = spark.read.parquet(corp).count()
         assert total == n - len(ids) - (n // N_SHARDS), total
-        print(f"EXPIRE shard-7 (250k docs, engine rebuild "
+        print(f"EXPIRE shard-7 ({n // N_SHARDS} docs, engine rebuild "
               f"{exp.get('rebuild_units', 0)} units): {exp_s:.1f}s "
               f"({exp_s / build_s:.2f}x of the full chain build)")
     finally:
