@@ -24,11 +24,12 @@ record.
 
 IDEMPOTENCY: every leg converges on re-run — tombstone rules
 accumulate harmlessly (the anti-join is a set filter), and the token
-layout and the corpus each record their affected-shard set in an
-INTENT token (committed through sources/commit.py BEFORE any
-mutation). The token rewrite's affected-scan finds exactly the
-not-yet-rewritten remainder, and its token brings the shards a
-crashed attempt rewrote into the manifest re-aggregation; the
+layout and the corpus each record their affected-shard set in a
+token committed through sources/commit.py BEFORE any mutation: the
+layout's pending marker, the corpus's INTENT token. The token
+rewrite's affected-scan finds exactly the not-yet-rewritten
+remainder, and the pending marker brings the shards a crashed
+attempt rewrote into the manifest re-aggregation; the
 corpus token makes a crash between the partition prune and the
 engine dispatch re-dispatch on the next run even though the pruned
 partitions no longer contain the ids. Re-running a fully-applied
@@ -61,13 +62,25 @@ from georiva_spark.operators import _tombstones
 from georiva_spark.plans.engine import DerivationEngine, Trigger
 from georiva_spark.sources.commit import (atomic_replace,
                                           atomic_write_json,
-                                          backend_for, intent_path,
-                                          read_token_json,
-                                          request_digest)
+                                          backend_for, read_token_json)
 
 __all__ = ["clear_hold", "corpus_takedown", "expire_shards",
            "hold_filter", "read_audit_trail", "request_digest",
            "standing_hold", "takedown", "takedown_report"]
+
+
+def request_digest(ids) -> str:
+    """Deterministic digest of a takedown request's id set — the
+    audit/intent token key. Order- and duplicate-insensitive, so a
+    redelivered request maps to the same token (replay no-op)."""
+    ids = sorted({int(i) for i in ids})
+    return hashlib.md5(
+        ",".join(str(i) for i in ids).encode()).hexdigest()[:16]
+
+
+def _intent_path(corpus_dir: str, digest: str) -> str:
+    # underscore-prefixed sidecar: Spark's parquet listing ignores it
+    return posixpath.join(corpus_dir, f"_georiva_takedown_{digest}.json")
 
 
 def _index_legs(minhash_indexes, ivf_indexes, hamming_indexes):
@@ -167,7 +180,7 @@ def corpus_takedown(spark: SparkSession, corpus_dir: str,
                          "empty")
     backend_for(corpus_dir, who="corpus_takedown")
     digest = request_digest(ids)
-    token_path = intent_path(corpus_dir, digest)
+    token_path = _intent_path(corpus_dir, digest)
     prior = read_token_json(token_path, who="corpus_takedown") or {}
 
     corpus = spark.read.parquet(corpus_dir)

@@ -159,22 +159,6 @@ def atomic_write_json(path: str, obj, who: str = "commit") -> None:
     atomic_write_bytes(path, json.dumps(obj).encode(), who)
 
 
-def request_digest(ids) -> str:
-    """Deterministic digest of a request's id set — the key of its
-    intent and audit tokens. Order- and duplicate-insensitive, so a
-    redelivered request maps to the same token (replay no-op)."""
-    ids = sorted({int(i) for i in ids})
-    return hashlib.md5(
-        ",".join(str(i) for i in ids).encode()).hexdigest()[:16]
-
-
-def intent_path(root: str, digest: str) -> str:
-    """The takedown intent token of request ``digest`` under ``root``
-    (a corpus dir or a token layout): underscore-prefixed, so Spark's
-    parquet listing of ``root`` skips it."""
-    return os.path.join(root, f"_georiva_takedown_{digest}.json")
-
-
 def read_token(path: str, who: str = "commit") -> bytes | None:
     """Read a committed token, or None if it never committed — the
     replay-guard read of every marker protocol. A crash window's

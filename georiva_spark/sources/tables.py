@@ -168,13 +168,19 @@ def _manifest_from_layout(spark: SparkSession, path: str,
     """Per-shard manifest re-aggregated from the layout's data files
     (shard, n_bins, n_docs, n_tokens, context_len, pad_id), unsorted —
     the ground truth a torn manifest sidecar recovers from. ``shards``
-    limits the scan to those partitions (a partition filter: no other
-    shard's file is read); a given layout ``schema`` skips the
-    inference job."""
-    layout = (spark.read if schema is None
-              else spark.read.schema(schema)).parquet(path)
-    if shards is not None:
-        layout = layout.where(F.col("shard").isin(sorted(shards)))
+    limits the listing and the scan to those partitions (no other
+    shard's directory is listed or file read); a given layout
+    ``schema`` skips the inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if shards is None:
+        layout = reader.parquet(path)
+    else:
+        # the listing names only those shard directories, so it grows
+        # with the request, not with the layout
+        layout = (reader.option("basePath", path)
+                  .parquet(*[os.path.join(path, f"shard={s}")
+                             for s in sorted(shards)])
+                  .where(F.col("shard").isin(sorted(shards))))
     return (layout.groupBy("shard")
             .agg(F.count(F.lit(1)).cast("long").alias("n_bins"),
                  F.sum("n_docs").cast("long").alias("n_docs"),
@@ -239,6 +245,41 @@ def _stamped_manifest(spark: SparkSession, path: str, who: str) -> list:
             f"take deltas, takedowns or retirements; rebuild full "
             f"first")
     return sorted(rows, key=lambda r: r.shard)
+
+
+def _pending_path(path: str) -> str:
+    return os.path.join(path, "_georiva_manifest_pending.json")
+
+
+def _manifest_pending(path: str, who: str):
+    """The stamped manifest's STALE set: None when the stamp is
+    current, else the committed ``{"shards": [...]}`` marker, where
+    ``shards`` None means any shard may be stale."""
+    from georiva_spark.sources.commit import read_token_json
+    return read_token_json(_pending_path(path), who=who)
+
+
+def _mark_manifest_pending(path: str, shards, who: str) -> None:
+    """Commit, before a mutation touches any data file, the shards
+    whose stamped manifest rows it may leave stale (None: any shard),
+    merged into an uncleared earlier marker — a crash between the
+    mutation and its re-stamp then stays visible to the next reader
+    that trusts stamped rows (the takedown)."""
+    from georiva_spark.sources.commit import atomic_write_json
+    prev = _manifest_pending(path, who)
+    if prev is not None and shards is not None:
+        shards = (None if prev["shards"] is None
+                  else set(prev["shards"]) | set(shards))
+    atomic_write_json(_pending_path(path),
+                      {"shards": None if shards is None
+                       else sorted(shards)}, who=who)
+
+
+def _clear_manifest_pending(path: str, who: str) -> None:
+    """Remove the stale marker once the stamp covers every shard it
+    named (after the re-stamp, never before)."""
+    from georiva_spark.sources.commit import remove_file
+    remove_file(_pending_path(path), who=who)
 
 
 def _read_token_sidecars(spark: SparkSession, path: str):
@@ -333,7 +374,12 @@ def export_token_shards_delta(new_docs: DataFrame, path: str,
       LAYOUT, never the manifest sidecar — a crash between a
       completed append and the manifest re-stamp leaves the sidecar
       stale, and the next delta both avoids reusing that
-      generation's bin ids AND heals the stamp (pytest-pinned).
+      generation's bin ids AND heals the stamp (pytest-pinned). The
+      append first commits the layout's
+      ``_georiva_manifest_pending.json`` marker and removes it after
+      the re-stamp, so a takedown, which trusts the stamped rows of
+      shards it does not touch, sees that the stamp may be stale and
+      re-aggregates the whole layout instead.
     - ``generation`` (r11, the EXACTLY-ONCE mode — what a derivation
       unit or a streaming micro-batch should pass, e.g. the crawl
       shard name or the unit hash): the append becomes idempotent
@@ -404,6 +450,7 @@ def export_token_shards_delta(new_docs: DataFrame, path: str,
             manifest = _manifest_from_layout(
                 spark, path, context_len, len(vocab)).orderBy("shard")
             _stamp_manifest(manifest, path, num_shards)
+            _clear_manifest_pending(path, "export_token_shards_delta")
             return manifest
 
     def _foreign_files() -> list[str]:
@@ -481,6 +528,7 @@ def export_token_shards_delta(new_docs: DataFrame, path: str,
     writer = (bins.repartition(num_shards, F.col("shard"))
               .sortWithinPartitions("shard", "bin_id")
               .write.partitionBy("shard"))
+    _mark_manifest_pending(path, None, "export_token_shards_delta")
     if generation is None:
         writer.mode("append").parquet(path)
     else:
@@ -519,6 +567,7 @@ def export_token_shards_delta(new_docs: DataFrame, path: str,
     manifest = _manifest_from_layout(spark, path, context_len,
                                      len(vocab)).orderBy("shard")
     _stamp_manifest(manifest, path, num_shards)
+    _clear_manifest_pending(path, "export_token_shards_delta")
     return manifest
 
 
@@ -550,23 +599,27 @@ def export_token_shards_takedown(spark: SparkSession, path: str,
        whole-object PUT on an object store — a loader mid-read sees
        the old file or the new in full). Untouched files stay
        byte-identical.
-    4. Only the affected shards re-aggregate (a partition filter on
-       ``shard``); every other manifest row is kept as stamped. The
-       sidecar is re-stamped from those driver rows, and the returned
-       manifest is built from them (collecting it runs no job).
+    4. Only the affected shards re-aggregate (their directories alone
+       are listed, and a partition filter on ``shard``); every other
+       manifest row is kept as stamped. The sidecar is re-stamped from
+       those driver rows, and the returned manifest is built from them
+       (collecting it runs no job).
 
-    CRASH RECOVERY through an INTENT token: before the first
-    ``replace_file``, ``_georiva_takedown_{digest}.json`` commits in
-    the layout root (``commit.atomic_write_json``; underscore-prefixed,
-    so the data listing skips it) naming the affected shards, and
-    re-commits with ``completed: true`` after the manifest stamp. A
-    crash mid-run leaves some files rewritten and some not: the
-    rerun's affected-scan finds exactly the remainder, and the
-    uncompleted token's shards join its re-aggregation, so shards the
-    crashed attempt rewrote still get fresh manifest rows. A takedown
-    of already-absent ids with no uncompleted token is a structural
-    no-op (zero affected files, nothing written). Loader contract
-    change is inherent and documented: affected bins shrink
+    CRASH RECOVERY through the layout's PENDING marker: before the
+    first ``replace_file``, the affected shards merge into
+    ``_georiva_manifest_pending.json`` in the layout root
+    (``commit.atomic_write_json``; underscore-prefixed, so the data
+    listing skips it), and the marker is removed after the manifest
+    stamp. A crash mid-run leaves some files rewritten and some not:
+    the rerun's affected scan finds exactly the remainder, and the
+    marker's shards join its re-aggregation, so shards the crashed
+    attempt rewrote still get fresh manifest rows — whichever request
+    runs next. The delta and the retirement commit the marker too,
+    naming any shard: while such a marker stands, no stamped row is
+    trusted and the whole layout re-aggregates. A takedown of
+    already-absent ids with no marker standing is a structural no-op
+    (zero affected files, nothing written). Loader contract change
+    is inherent and documented: affected bins shrink
     (re-padded) or vanish — the point of a takedown — so epochs
     consumed from a prior permutation should be considered re-drawn
     for the affected shards. → the updated manifest."""
@@ -577,11 +630,7 @@ def export_token_shards_takedown(spark: SparkSession, path: str,
 
     from georiva_spark.functions.fastexpr import larr
     from georiva_spark.functions.frames import local_frame
-    from georiva_spark.sources.commit import (atomic_write_json,
-                                              backend_for, intent_path,
-                                              read_token_json,
-                                              replace_file,
-                                              request_digest)
+    from georiva_spark.sources.commit import backend_for, replace_file
     who = "export_token_shards_takedown"
     ids = sorted({int(i) for i in doc_ids})
     if not ids:
@@ -590,12 +639,7 @@ def export_token_shards_takedown(spark: SparkSession, path: str,
     context_len = int(stamped[0].context_len)
     pad_id = int(stamped[0].pad_id)
     backend_for(path, who=who)
-    digest = request_digest(ids)
-    token_path = intent_path(path, digest)
-    prior = read_token_json(token_path, who=who) or {}
-    # shards an uncompleted earlier attempt may have rewritten
-    pending = (set(prior["shards"]) if prior and not prior["completed"]
-               else set())
+    pending = _manifest_pending(path, who)
 
     layout = spark.read.parquet(path)
     schema = layout.schema
@@ -607,11 +651,16 @@ def export_token_shards_takedown(spark: SparkSession, path: str,
             .select(F.col("_metadata.file_path").alias("f"), "shard")
             .collect())
     affected = sorted({r.f for r in hits})
-    shards = sorted({r.shard for r in hits} | pending)
-    if not shards:
-        # structural no-op (ids absent, no crashed attempt to finish)
+    if not affected and pending is None:
+        # structural no-op (ids absent, the stamp is current)
         return local_frame(spark, [tuple(r)[:6] for r in stamped],
                            _MANIFEST_SCHEMA)
+    # the shards whose stamped rows cannot be kept (None: any shard)
+    if pending is not None and pending["shards"] is None:
+        stale = None
+    else:
+        stale = sorted({r.shard for r in hits}
+                       | set(pending["shards"] if pending else ()))
 
     n = F.size("doc_ids")
 
@@ -651,9 +700,10 @@ def export_token_shards_takedown(spark: SparkSession, path: str,
     # to one task (repartition on the file key), sort by bin inside
     # it, and land under one staged key dir; the installs are then
     # driver-side constant-cost renames through the commit backend.
-    # named by the request, so a rerun reuses and removes what a
-    # crashed attempt staged
-    stage = os.path.join(path, f"_takedown_stage_{digest}")
+    # One staging name per layout (takedowns of a layout are
+    # single-writer, like its manifest stamp), so the next takedown
+    # overwrites and removes whatever a crashed attempt staged
+    stage = os.path.join(path, "_takedown_stage")
     if affected:
         keymap = {hashlib.md5(f.encode()).hexdigest()[:16]: f
                   for f in affected}
@@ -683,44 +733,33 @@ def export_token_shards_takedown(spark: SparkSession, path: str,
         (out.repartition(len(affected), "__key")
          .sortWithinPartitions("__key", "bin_id")
          .write.partitionBy("__key").mode("overwrite").parquet(stage))
-        atomic_write_json(token_path,
-                          {"digest": digest, "n_ids": len(ids),
-                           "shards": shards, "completed": False},
-                          who=who)
-        empty = None
+        _mark_manifest_pending(path, {r.shard for r in hits}, who)
         for key, fpath in sorted(keymap.items(), key=lambda kv: kv[1]):
             kdir = os.path.join(stage, f"__key={key}")
             parts = (sorted(f for f in os.listdir(kdir)
                             if f.endswith(".parquet"))
                      if os.path.isdir(kdir) else [])
-            if parts:
-                src = os.path.join(kdir, parts[0])
-            else:
+            if not parts:
                 # every bin in this file emptied: the file itself
                 # becomes the empty layout member (loader reads zero
-                # rows) — one empty file written, copied per file
-                if empty is None:
-                    edir = os.path.join(stage, "__empty")
-                    (local_frame(spark, [], file_schema).coalesce(1)
-                     .write.mode("overwrite").parquet(edir))
-                    empty = os.path.join(edir, next(
-                        f for f in sorted(os.listdir(edir))
-                        if f.endswith(".parquet")))
-                src = os.path.join(stage, f"__empty_{key}.parquet")
-                shutil.copyfile(empty, src)
-            replace_file(src, fpath, who=who)
+                # rows)
+                kdir = os.path.join(stage, f"__empty_{key}")
+                (local_frame(spark, [], file_schema).coalesce(1)
+                 .write.mode("overwrite").parquet(kdir))
+                parts = sorted(f for f in os.listdir(kdir)
+                               if f.endswith(".parquet"))
+            replace_file(os.path.join(kdir, parts[0]), fpath, who=who)
     shutil.rmtree(stage, ignore_errors=True)
 
     fresh = [tuple(r) for r in _manifest_from_layout(
         spark, path, context_len, pad_id, schema=schema,
-        shards=shards).collect()]
+        shards=stale).collect()]
     rows = sorted([tuple(r)[:6] for r in stamped
-                   if r.shard not in shards] + fresh)
+                   if stale is not None and r.shard not in stale]
+                  + fresh)
     manifest = local_frame(spark, rows, _MANIFEST_SCHEMA)
     _stamp_manifest(manifest, path, stamped[0].num_shards)
-    atomic_write_json(token_path,
-                      {"digest": digest, "n_ids": len(ids),
-                       "shards": shards, "completed": True}, who=who)
+    _clear_manifest_pending(path, who)
     return manifest
 
 
@@ -734,7 +773,7 @@ def export_token_shards_retire(spark: SparkSession, path: str,
     rewrites bins, retirement DELETES the generation's own files —
     bounded by that generation, untouched files byte-identical.
 
-    Commit order (crash-safe without extra markers):
+    Commit order (crash-safe):
 
     1. the generation's ``_georiva_gens/`` marker re-commits with
        ``retired: true`` FIRST (atomic through the backend seam) —
@@ -747,6 +786,11 @@ def export_token_shards_retire(spark: SparkSession, path: str,
        ``commit.remove_file`` — per-file atomic (a loader sees each
        file or its absence, never a prefix), idempotent on rerun;
     3. the manifest re-stamps from the layout (the healing rule).
+
+    The layout's pending marker (see
+    :func:`export_token_shards_takedown`) commits before the deletes
+    and is removed after the re-stamp, so a takedown run after a
+    crash in between re-aggregates the whole layout.
 
     Retiring an UNKNOWN generation fails by name (an operator typo
     must not read as success); retiring an already-retired one is a
@@ -777,6 +821,7 @@ def export_token_shards_retire(spark: SparkSession, path: str,
                           {"digest": prev.get("digest"),
                            "retired": True},
                           who="export_token_shards_retire")
+    _mark_manifest_pending(path, None, "export_token_shards_retire")
     for f in sorted(_glob.glob(
             os.path.join(path, "shard=*", f"gen-{generation}-*"))):
         if f.endswith(".parquet"):
@@ -785,6 +830,7 @@ def export_token_shards_retire(spark: SparkSession, path: str,
         spark, path, stamped[0].context_len,
         stamped[0].pad_id).orderBy("shard")
     _stamp_manifest(manifest, path, stamped[0].num_shards)
+    _clear_manifest_pending(path, "export_token_shards_retire")
     return manifest
 
 

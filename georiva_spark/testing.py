@@ -61,3 +61,16 @@ def square_geojson(x0: float, y0: float, x1: float, y1: float) -> str:
     return ('{"type": "Polygon", "coordinates": [[[%f, %f], [%f, %f], '
             '[%f, %f], [%f, %f], [%f, %f]]]}'
             % (x0, y0, x1, y0, x1, y1, x0, y1, x0, y0))
+
+
+def jobs_in_group(spark: SparkSession, group: str, fn):
+    """(fn(), the number of Spark jobs it ran), counted in the job
+    group ``group`` — how tests and smokes pin a request's job budget."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1394,9 +1394,10 @@ def test_export_token_shards_takedown(spark, tmp_path, monkeypatch):
     every untouched file byte-identical, re-stamps the manifest from
     the layout, and is a structural no-op on rerun (already-absent
     ids -> zero affected files). A takedown that crashes after its
-    first file replacement leaves, once rerun, a manifest equal to a
-    full re-aggregation of the layout, and the returned manifest
-    collects without a Spark job."""
+    first file replacement, or a delta that crashes before its
+    re-stamp, leaves the next takedown a manifest equal to a full
+    re-aggregation of the layout, and the returned manifest collects
+    without a Spark job."""
     import glob
     import hashlib
     import os
@@ -1485,15 +1486,32 @@ def test_export_token_shards_takedown(spark, tmp_path, monkeypatch):
         export_token_shards_takedown(spark, out, [])
 
     # CRASH after the first file replacement, before the manifest
-    # stamp: one doc from each shard, so the rerun's affected scan no
-    # longer sees the shard already rewritten — only the intent token
-    # brings it into the re-aggregation
-    from georiva_spark.sources import commit
+    # stamp: one doc from each shard, so a later affected scan no
+    # longer sees the shard already rewritten — only the pending
+    # marker brings it into the re-aggregation, whichever request
+    # runs next
+    from georiva_spark.sources import commit, tables
+    from georiva_spark.testing import jobs_in_group
+
+    def full():
+        return {r.shard: (r.n_bins, r.n_docs, r.n_tokens) for r in
+                spark.read.parquet(out).groupBy("shard")
+                .agg(F.count("*").alias("n_bins"),
+                     F.sum("n_docs").alias("n_docs"),
+                     F.sum("n_tokens").alias("n_tokens")).collect()}
+
+    def stamped():
+        return {r.shard: (r.n_bins, r.n_docs, r.n_tokens)
+                for r in spark.read.parquet(
+                    os.path.join(out, "_georiva_manifest")).collect()}
+
+    def shard_of():
+        return {d: r.shard for r in read_token_shards(spark, out)
+                .collect() for d in r.doc_ids}
+
     first = {}
-    for r in (spark.read.parquet(out)
-              .select("shard", F.explode("doc_ids").alias("d"))
-              .orderBy("shard", "d").collect()):
-        first.setdefault(r.shard, r.d)
+    for d, sh in sorted(shard_of().items()):
+        first.setdefault(sh, d)
     assert len(first) == 2
     ids = sorted(first.values())
     real = commit.replace_file
@@ -1506,36 +1524,44 @@ def test_export_token_shards_takedown(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="injected"):
         export_token_shards_takedown(spark, out, ids)
     monkeypatch.undo()
-    token = commit.read_token_json(
-        commit.intent_path(out, commit.request_digest(ids)))
-    assert token["completed"] is False
-    man = export_token_shards_takedown(spark, out, ids)
-    sc = spark.sparkContext
-    sc.setJobGroup("token-takedown-manifest", "collect the manifest")
-    try:
-        got = {r.shard: (r.n_bins, r.n_docs, r.n_tokens)
-               for r in man.collect()}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup(
-        "token-takedown-manifest") == []
-    full = {r.shard: (r.n_bins, r.n_docs, r.n_tokens) for r in
-            spark.read.parquet(out).groupBy("shard")
-            .agg(F.count("*").alias("n_bins"),
-                 F.sum("n_docs").alias("n_docs"),
-                 F.sum("n_tokens").alias("n_tokens")).collect()}
-    assert got == full
-    assert {r.shard: (r.n_bins, r.n_docs, r.n_tokens)
-            for r in spark.read.parquet(
-                os.path.join(out, "_georiva_manifest")).collect()} == full
-    assert not {d for r in read_token_shards(spark, out).collect()
-                for d in r.doc_ids} & set(ids)
-    assert commit.read_token_json(commit.intent_path(
-        out, commit.request_digest(ids)))["completed"] is True
-    # no stale staging dirs, the crashed attempt's included
-    assert not [d for d in os.listdir(out)
-                if d.startswith("_takedown_stage_")]
+    assert tables._manifest_pending(out, "test") == {"shards": [0, 1]}
+    # a DIFFERENT request: only the id the crash left in place
+    left = [d for d in ids if d in shard_of()]
+    assert len(left) == 1
+    man = export_token_shards_takedown(spark, out, left)
+    man, jobs = jobs_in_group(spark, "token-takedown-manifest",
+                              man.collect)
+    assert jobs == 0                   # driver rows, no re-aggregation
+    got = {r.shard: (r.n_bins, r.n_docs, r.n_tokens) for r in man}
+    assert got == full() == stamped()
+    assert tables._manifest_pending(out, "test") is None
+    assert not set(shard_of()) & set(ids)
+    assert [d for d in os.listdir(out) if d.startswith("_takedown_")] \
+        == []                          # the crashed attempt's staging
+
+    # a STALE stamp left by a delta that crashed between its append
+    # and its re-stamp: a takedown touching another shard must not
+    # keep the delta's shards' stamped rows
+    def no_stamp(*a, **k):
+        raise RuntimeError("injected crash before the stamp")
+
+    monkeypatch.setattr(tables, "_stamp_manifest", no_stamp)
+    with pytest.raises(RuntimeError, match="injected"):
+        export_token_shards_delta(
+            spark.createDataFrame(
+                [(7, "ab ab c"), (8, "c c a"), (9, "b a b"),
+                 (10, "a a c")], "doc_id long, text string"),
+            out, merges, generation="g2")
+    monkeypatch.undo()
+    assert tables._manifest_pending(out, "test") == {"shards": None}
+    where = shard_of()
+    assert stamped() != full()
+    grown = {where[d] for d in (7, 8, 9, 10)}
+    target = min(d for d, sh in where.items() if sh not in grown)
+    man = export_token_shards_takedown(spark, out, [target]).collect()
+    got = {r.shard: (r.n_bins, r.n_docs, r.n_tokens) for r in man}
+    assert got == full() == stamped()
+    assert tables._manifest_pending(out, "test") is None
 
 
 def test_token_takedown_through_pointer_backend(spark, tmp_path):

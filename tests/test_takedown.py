@@ -26,6 +26,7 @@ from georiva_spark.plans.recipes.corpus import (
 from georiva_spark.sources import commit
 from georiva_spark.sources.tables import (export_token_shards,
                                           read_token_shards)
+from georiva_spark.testing import jobs_in_group
 
 MERGES = [("a", "b"), ("ab", "c")]
 SCHEMA = "doc_id long, text string, lang string, source string"
@@ -87,18 +88,6 @@ def _card(spark, eng):
             for r in eng.catalog._grid_loader(it).collect()}
 
 
-def _jobs(spark, group, fn):
-    """(fn(), the Spark jobs it ran), counted in job group ``group``."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _drop(spark, table, suffixes):
     for s in suffixes:
         spark.sql(f"DROP TABLE IF EXISTS {table}_{s}")
@@ -148,10 +137,11 @@ def test_takedown_reaches_every_surface(spark, tmp_path):
                                    n_centroids=2, train_iters=1)
 
         ids = [1, 11]
-        audit, jobs = _jobs(spark, "takedown-all-legs", lambda: td.takedown(
-            spark, ids, minhash_indexes=[mh], hamming_indexes=[hm],
-            ivf_indexes=[iv], token_layouts=[lay],
-            corpus=(corp, eng), audit_dir=audit_dir))
+        audit, jobs = jobs_in_group(
+            spark, "takedown-all-legs", lambda: td.takedown(
+                spark, ids, minhash_indexes=[mh], hamming_indexes=[hm],
+                ivf_indexes=[iv], token_layouts=[lay],
+                corpus=(corp, eng), audit_dir=audit_dir))
         # the request's job budget: the token leg re-aggregates only
         # its affected shards and the audit sums driver rows — a leg
         # that starts to scale with its surface moves this count
@@ -239,7 +229,7 @@ def test_corpus_takedown_crash_window_recovers_via_intent(spark,
     assert spark.read.parquet(corp).where("doc_id = 12").count() == 0
     assert _card(spark, eng) == card0             # stale: still has fr
     tok = commit.read_token_json(
-        commit.intent_path(corp, td.request_digest([12])))
+        td._intent_path(corp, td.request_digest([12])))
     assert tok["shards"] == ["s1"] and tok["completed"] is False
 
     res = td.corpus_takedown(spark, corp, eng, [12])
@@ -248,7 +238,7 @@ def test_corpus_takedown_crash_window_recovers_via_intent(spark,
     assert ("fr", "web") not in card
     assert card[("en", "books")] == card0[("en", "books")]
     tok = commit.read_token_json(
-        commit.intent_path(corp, td.request_digest([12])))
+        td._intent_path(corp, td.request_digest([12])))
     assert tok["completed"] is True
 
 

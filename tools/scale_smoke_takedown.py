@@ -42,6 +42,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 from pyspark.sql import functions as F
 
 from georiva_spark.session import get_spark
+from georiva_spark.testing import jobs_in_group
 
 L = 50
 V = 50_000
@@ -70,18 +71,6 @@ def corpus(spark, n: int):
         .alias("source"),
         F.concat(F.lit("shard-"),
                  (base % N_SHARDS).cast("string")).alias("shard"))
-
-
-def _in_job_group(spark, group: str, fn):
-    """(fn(), the number of Spark jobs it ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def main(n: int = 2_000_000) -> None:
@@ -164,7 +153,7 @@ def main(n: int = 2_000_000) -> None:
                     for f in os.listdir(p) if f.endswith(".parquet"))
 
         t0 = time.time()
-        aud, jobs = _in_job_group(spark, "smoke-takedown", lambda: takedown(
+        aud, jobs = jobs_in_group(spark, "smoke-takedown", lambda: takedown(
             spark, ids, corpus=(corp, eng), token_layouts=[lay],
             audit_dir=audit))
         td_s = time.time() - t0
@@ -208,19 +197,30 @@ def main(n: int = 2_000_000) -> None:
             corpus(spark, n).drop("shard"), lay4, MERGES,
             context_len=512, num_shards=4 * 64,
             extra_alphabet="abcdefghijklmnopqrstuvwxyz0123456789 ")
+        # at most a quarter of a 256-shard directory's docs, so no
+        # file empties: an emptied file costs one more write job
+        per_shard = max(1, min(100, n // (4 * 256)))
         ids2 = [r.d for k in (0, 1) for r in
                 read_token_shards(spark, lay4, shard=k)
-                .select(F.explode("doc_ids").alias("d")).limit(100)
-                .collect()]
+                .select(F.explode("doc_ids").alias("d"))
+                .limit(per_shard).collect()]
         leg = {}
         for name, p in (("64 shards", lay), ("256 shards", lay4)):
             t0 = time.time()
-            man, leg[name] = _in_job_group(
+            man, leg[name] = jobs_in_group(
                 spark, f"smoke-token-leg-{len(leg)}",
                 lambda p=p: export_token_shards_takedown(spark, p, ids2))
             print(f"TOKEN LEG ({len(ids2)} ids -> 2 shards) on "
                   f"{name}: {time.time() - t0:.1f}s, {leg[name]} Spark "
                   f"jobs, {sum(r.n_bins for r in man.collect())} bins")
+            # the one step that must see every file: list the root and
+            # scan each file's doc_ids (rerun here; the ids are gone)
+            t0 = time.time()
+            spark.read.parquet(p).where(F.arrays_overlap(
+                "doc_ids", F.array(*[F.lit(i).cast("long")
+                                     for i in ids2]))).count()
+            print(f"  of which the affected scan alone: "
+                  f"{time.time() - t0:.1f}s")
         assert len(set(leg.values())) == 1, leg
 
         # r13 retention leg: EXPIRE one whole shard (250k docs) —
